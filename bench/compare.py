@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Replay of the round driver's DuckDB oracle compare.
 
-Usage: python3 /tmp/compare.py <verify_outdir> <sf_dir>
+Usage: python3 bench/compare.py <verify_outdir> <sf_dir>   # from the root of a checkout
 Reads <outdir>/oracle_sql.json, creates one DuckDB view per parquet table in
 <sf_dir>, runs each oracle SQL, and compares (sorted columns + rows, exact
 values) against the Spark parquet under <outdir>/<name>/.

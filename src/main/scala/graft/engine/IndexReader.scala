@@ -87,6 +87,25 @@ final case class IndexReader(
   def dfOf(terms: Seq[String]): Map[String, Long] =
     termMeta(terms).map { case (t, (d, _)) => t -> d }
 
+  /** Newest-wins read of the given terms from one per-layer relation
+    * (`_.index` or `_.segments`): every present term is read from exactly
+    * its winning layer ([[termMeta]]), with the bucket IN filter pruning to
+    * the terms' bucket directories/batches and the term IN predicate pushed
+    * into the scan. One `(layer, rows)` pair per layer that wins at least
+    * one term, in ascending ordinal order; absent terms read nothing.
+    */
+  def newestWins(terms: Seq[String], relation: IndexLayer => DataFrame): Seq[(IndexLayer, DataFrame)] =
+    termMeta(terms).groupBy(_._2._2).toSeq.sortBy(_._1).map { case (ord, ts) =>
+      val layer = layers(ord)
+      val layerTerms = ts.keys.toSeq
+      // bucket(term) must equal the build-side pmod(xxhash64(term), B):
+      // TermHash evaluates Spark's own XxHash64Function driver-side (no job).
+      val buckets = layerTerms.map(TermHash.bucket(_, stats.numBuckets)).distinct
+      layer -> relation(layer)
+        .filter(col("bucket").isin(buckets: _*))
+        .filter(col("term").isin(layerTerms: _*))
+    }
+
   // repo-scope key -> lazily-built broadcast scope probe. A bare
   // TrieMap.getOrElseUpdate may evaluate the thunk on BOTH racing threads
   // (the same hazard IndexReader.open guards with openLock) — the loser's
@@ -370,12 +389,17 @@ object IndexReader {
   private def pinDocs(docs: DataFrame): DataFrame =
     persistPartitioned(docs.repartition(col("doc_id")).sortWithinPartitions("doc_id"))
 
-  /** Pin a segments layer hash-partitioned by `salt` (every row of a salt
-    * shard in exactly one cached partition — the invariant the single-layer
-    * WAND mapPartitions route relies on: one task sees ALL of a (salt,
-    * query)'s term rows, so shard runs stay docId-disjoint) and sorted by
-    * (salt, bucket, term) so the in-memory batch min/max stats keep the
-    * per-query bucket/term filters prunable.
+  /** Pin a segments layer hash-partitioned by `salt` and sorted by (salt,
+    * bucket, term), so the in-memory batch min/max stats keep the per-query
+    * bucket/term filters prunable.
+    *
+    * Alignment invariant the WAND route relies on: every layer of one root
+    * is pinned here inside the same [[open]], with the same salt hash
+    * partitioner and the same partition count, and doc salting does not
+    * depend on the layer. So cached partition i of EVERY layer holds the
+    * same salt shards, and zipping the layers' partitions positionally
+    * gives one task ALL of a (salt, query)'s term rows across layers —
+    * shard runs stay docId-disjoint with no exchange.
     */
   private def pinSegments(segs: DataFrame): DataFrame =
     persistPartitioned(

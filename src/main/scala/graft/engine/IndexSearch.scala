@@ -87,7 +87,7 @@ object IndexSearch {
     * the disjunctive and conjunctive plans.
     *
     * Layer-aware: each term reads exactly its newest-wins layer's row
-    * ([[IndexReader.termMeta]]), so a layered (incrementally-updated) root
+    * ([[IndexReader.newestWins]]), so a layered (incrementally-updated) root
     * serves the same plan as a single-layer one. Decode routes through the
     * executor-local [[PostingCache]] (block-lazy handles memoized per
     * (build, layer, term)): a hot term's ~10^5-posting list is varint-
@@ -113,19 +113,10 @@ object IndexSearch {
       spark: SparkSession, reader: IndexReader,
       terms: Seq[String], wanted: Option[Array[Long]]): DataFrame = {
     import spark.implicits._
-    val stats = reader.stats
-    val meta = reader.termMeta(terms) // term -> (df, winning layer ordinal)
     val tag = reader.cacheTag
-    val parts = meta.groupBy(_._2._2).toSeq.sortBy(_._1).map { case (ord, ts) =>
-      val layer = reader.layers(ord)
-      val layerTerms = ts.keys.toSeq
-      // bucket(term) must equal the build-side pmod(xxhash64(term), B):
-      // TermHash evaluates Spark's own XxHash64Function driver-side (no job).
-      val buckets = layerTerms.map(graft.index.TermHash.bucket(_, stats.numBuckets)).distinct
-      layer.index
-        .filter(col("bucket").isin(buckets: _*))
-        .filter(col("term").isin(layerTerms: _*))
-        .select("term", "df", "postings", "dls", "block_dir")
+    val parts = reader.newestWins(terms, _.index).map { case (layer, slice) =>
+      val ord = layer.ordinal
+      slice.select("term", "df", "postings", "dls", "block_dir")
         .as[(String, Long, Array[Byte], Array[Byte], Array[Byte])]
         .mapPartitions { it =>
           it.flatMap { case (term, df, p, d, dir) =>

@@ -66,11 +66,12 @@ object Wand {
     * [[graft.index.Incremental]]) so pruning stays SOUND while exact
     * scoring uses the current avgdl. Compaction resets scales to 1.
     *
-    * Query-time parallelism is `numSalts × |queries|` — each (salt shard,
-    * query) pair is one independent WAND run (round 1 keyed by salt alone,
-    * welding query parallelism to a build-time constant). Doc-salting is
-    * layer-independent, so a doc stays in one salt shard across layers and
-    * shard runs remain docId-disjoint. Decoded postings are memoized per
+    * Single-layer and layered roots take the SAME exchange-free candidate
+    * route: the winning layers' salt-pinned segments are zipped partition
+    * by partition and each (salt shard, query) pair is one independent WAND
+    * run inside mapPartitions. Doc-salting is layer-independent, so a doc
+    * stays in one salt shard across layers and shard runs remain
+    * docId-disjoint. Decoded postings are memoized per
     * (build, layer, salt, term) in the executor-local [[PostingCache]], so
     * a steady-state query stream decodes each hot sub-list once, not per
     * query. Bucket lists and per-term df come from driver-side hashing
@@ -223,10 +224,6 @@ object Wand {
     }
 
     val meta = metaAll.view.filterKeys(wandQs.flatMap(_.terms).toSet).toMap
-    val dfMap: Map[String, Long] = meta.map { case (t, (d, _)) => t -> d }
-
-    val qByIdLocal = wandQs.map(q => q.queryId -> q).toMap
-    val cacheTag = reader.cacheTag
 
     // docs key columns for the ranking tail; a BLOOM scope's rare false
     // positives are removed HERE, exactly (the repo predicate re-checks
@@ -266,109 +263,59 @@ object Wand {
     // the shard tasks ship the broadcast, not the reader
     val scopeFn: Long => Boolean = scope.map(_.fn).getOrElse((_: Long) => true)
 
-    val candidates: DataFrame = if (reader.layers.size == 1) {
-      // SINGLE-LAYER route (r6): the reader pins each segments layer
-      // hash-partitioned by salt, so ALL of a (salt, query)'s term rows
-      // live in one cached partition — the per-(salt, query) WAND runs can
-      // execute inside mapPartitions with ZERO exchange, instead of
-      // shipping every query's encoded posting blobs through a groupByKey
-      // shuffle plus its extra stage round-trips (measured: the multi-term
-      // serve queries were stage-latency-bound, not CPU-bound). Shard runs
-      // stay docId-disjoint because hash partitioning puts every row of a
-      // salt in exactly one partition. Layered roots keep the groupByKey
-      // shape below — a query's terms can resolve to different layers,
-      // whose cached partitions don't align.
-      val layer = reader.layers.head
-      val layerTerms = meta.keys.toSeq
-      val buckets = layerTerms.map(graft.index.TermHash.bucket(_, stats.numBuckets)).distinct
-      val qLocal: Array[(String, Int, Array[String])] =
-        wandQs.map(q => (q.queryId, q.k, q.terms.distinct.toArray)).toArray
-      val ord = layer.ordinal
-      val scale = layer.boundScale
-      val dfMapL = dfMap
-      val tagL = cacheTag
-      val nL = n
-      val avgdlL = avgdl
-      val metricsL = metrics
-      layer.segments
-        .filter(col("bucket").isin(buckets: _*))
-        .filter(col("term").isin(layerTerms: _*))
-        .select("salt", "term", "df", "postings", "dls", "block_max", "block_dir")
-        .as[(Int, String, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte])]
-        .mapPartitions { it =>
-          val bySalt = scala.collection.mutable.LinkedHashMap
-            .empty[Int, scala.collection.mutable.HashMap[String, TermList]]
-          it.foreach { case (salt, t, segDf, p, d, bm, dir) =>
-            val blocks = PostingCache.open(s"$tagL#L$ord", salt, t, segDf, p, d, dir)
-            val scaled = if (scale == 1.0) bm.toArray else bm.iterator.map(_ * scale).toArray
-            bySalt.getOrElseUpdate(salt, scala.collection.mutable.HashMap.empty)
-              .put(t, TermList(t, Postings.idf(dfMapL(t), nL), blocks, scaled))
-          }
-          bySalt.iterator.flatMap { case (_, byTerm) =>
-            qLocal.iterator.flatMap { case (qid, k, terms) =>
-              val lists = terms.flatMap(byTerm.get).toSeq
-              if (lists.isEmpty) Iterator.empty
-              else {
-                val decodedBefore =
-                  if (metricsL.isDefined) lists.iterator.map(_.blocks.decodedBlocks.toLong).sum else 0L
-                val counters = new WandCounters
-                val res = wandShardTopK(lists, k, avgdlL, counters, scopeFn)
-                metricsL.foreach { m =>
-                  m.candidates.add(counters.evaluated)
-                  m.blockSkips.add(counters.skips)
-                  m.blocksDecoded.add(lists.iterator.map(_.blocks.decodedBlocks.toLong).sum - decodedBefore)
-                }
-                res.iterator.map { case (docId, score) => (qid, k, docId, score) }
+    // ONE candidate route for any layer count: every (salt shard, query)
+    // WAND run executes inside mapPartitions with ZERO exchange — shuffling
+    // the encoded posting blobs made multi-term queries stage-latency-bound.
+    // Each query term is read from its newest-wins layer, and the winning
+    // layers are zipped partition by partition: the reader pins every
+    // layer's segments with the same salt partitioner
+    // ([[IndexReader.pinSegments]]), so partition i of each layer holds the
+    // same salt shards and one task sees ALL of a (salt, query)'s term rows.
+    // zipPartitions throws if the partition counts ever differ; a union that
+    // fell back to concatenating partitions would instead split a shard's
+    // terms across tasks and silently break every cross-layer score sum.
+    // Per-term (layer ordinal, bound scale, idf) comes from a driver-built
+    // map, so the rows carry nothing extra.
+    val termInfo: Map[String, (Int, Double, Double)] = meta.map { case (t, (df, ord)) =>
+      t -> ((ord, reader.layers(ord).boundScale, Postings.idf(df, n)))
+    }
+    val qLocal: Array[(String, Int, Array[String])] =
+      wandQs.map(q => (q.queryId, q.k, q.terms.distinct.toArray)).toArray
+    val tag = reader.cacheTag
+    val candidates: DataFrame = reader.newestWins(meta.keys.toSeq, _.segments)
+      .map { case (_, slice) =>
+        slice.select("salt", "term", "df", "postings", "dls", "block_max", "block_dir")
+          .as[(Int, String, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte])].rdd
+      }
+      .reduce((a, b) => a.zipPartitions(b)(_ ++ _))
+      .mapPartitions { it =>
+        val bySalt = mutable.LinkedHashMap.empty[Int, mutable.HashMap[String, TermList]]
+        it.foreach { case (salt, t, segDf, p, d, bm, dir) =>
+          val (ord, scale, idf) = termInfo(t)
+          val blocks = PostingCache.open(s"$tag#L$ord", salt, t, segDf, p, d, dir)
+          val scaled = if (scale == 1.0) bm.toArray else bm.iterator.map(_ * scale).toArray
+          bySalt.getOrElseUpdate(salt, mutable.HashMap.empty).put(t, TermList(t, idf, blocks, scaled))
+        }
+        bySalt.iterator.flatMap { case (_, byTerm) =>
+          qLocal.iterator.flatMap { case (qid, k, terms) =>
+            val lists = terms.flatMap(byTerm.get).toSeq
+            if (lists.isEmpty) Iterator.empty
+            else {
+              val decodedBefore =
+                if (metrics.isDefined) lists.iterator.map(_.blocks.decodedBlocks.toLong).sum else 0L
+              val counters = new WandCounters
+              val res = wandShardTopK(lists, k, avgdl, counters, scopeFn)
+              metrics.foreach { m =>
+                m.candidates.add(counters.evaluated)
+                m.blockSkips.add(counters.skips)
+                m.blocksDecoded.add(lists.iterator.map(_.blocks.decodedBlocks.toLong).sum - decodedBefore)
               }
+              res.iterator.map { case (docId, score) => (qid, k, docId, score) }
             }
           }
         }
-        .toDF("query_id", "k", "doc_id", "score")
-    } else {
-      // segments are partitioned by (salt, bucket): the bucket IN filter
-      // prunes to |query-term buckets| directories per salt, and the term IN
-      // predicate pushes into the parquet scan. The broadcast query-term join
-      // fans each segment row out to the queries that use its term; grouping
-      // by (salt, query) then gives every WAND run its own task slot.
-      val qTerms = wandQs.flatMap(q => q.terms.distinct.map(t => (q.queryId, t)))
-        .toDF("query_id", "term")
-      val segParts = meta.groupBy(_._2._2).toSeq.sortBy(_._1).map { case (ord, ts) =>
-        val layer = reader.layers(ord)
-        val layerTerms = ts.keys.toSeq
-        val buckets = layerTerms.map(graft.index.TermHash.bucket(_, stats.numBuckets)).distinct
-        layer.segments
-          .filter(col("bucket").isin(buckets: _*))
-          .filter(col("term").isin(layerTerms: _*))
-          .join(broadcast(qTerms), "term")
-          .select(col("salt"), col("query_id"), col("term"), col("df"),
-            col("postings"), col("dls"), col("block_max"), col("block_dir"),
-            lit(ord).as("layer_ord"), lit(layer.boundScale).as("bound_scale"))
       }
-      val segs = segParts.reduce(_ unionByName _)
-        .as[(Int, String, String, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte], Int, Double)]
-
-      segs
-        .groupByKey(r => (r._1, r._2))
-        .flatMapGroups { (key: (Int, String), rows: Iterator[(Int, String, String, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte], Int, Double)]) =>
-          val (salt, queryId) = key
-          val q = qByIdLocal(queryId)
-          val lists = rows.map { case (_, _, t, segDf, p, d, bm, dir, ord, scale) =>
-            val blocks = PostingCache.open(s"$cacheTag#L$ord", salt, t, segDf, p, d, dir)
-            val scaled = if (scale == 1.0) bm.toArray else bm.iterator.map(_ * scale).toArray
-            TermList(t, Postings.idf(dfMap(t), n), blocks, scaled)
-          }.toSeq
-          val decodedBefore = if (metrics.isDefined) lists.iterator.map(_.blocks.decodedBlocks.toLong).sum else 0L
-          val counters = new WandCounters
-          val res = wandShardTopK(lists, q.k, avgdl, counters, scopeFn)
-          metrics.foreach { m =>
-            m.candidates.add(counters.evaluated)
-            m.blockSkips.add(counters.skips)
-            m.blocksDecoded.add(lists.iterator.map(_.blocks.decodedBlocks.toLong).sum - decodedBefore)
-          }
-          res.map { case (docId, score) => (queryId, q.k, docId, score) }
-        }
-        .toDF("query_id", "k", "doc_id", "score")
-    }
+      .toDF("query_id", "k", "doc_id", "score")
 
     // Candidate sets are threshold-pruned (≤ k + ε-ties per shard per
     // query; hybrid ≤ FastK + Σ df_rare) — BROADCAST them against the

@@ -159,6 +159,54 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
       decodeCounts(spark.read.parquet(fullPaths.indexDir)))
   }
 
+  test("3-layer root: terms winning in three layers zip into one WAND shard run, identical to naive") {
+    // base: 30 short docs, every third carries "uno due tre"; add 1 re-lists
+    // "due" (its merged list moves to layer 1), add 2 re-lists "tre" (layer
+    // 2), "uno" stays base-only (layer 0). Base docs i%3==0 match through
+    // all three layers, so their score sums across the zipped partitions.
+    // Both adds are long docs: avgdl grows twice, so layers 0 and 1 both
+    // serve with rescaled bounds.
+    val base = (0 until 30).map { i =>
+      val trio = if (i % 3 == 0) " uno due tre" else ""
+      ("repo-3", f"base$i%02d.go", "c0ffee000000", "go", s"common alpha$i$trio")
+    }
+    def longDocs(tag: String, word: String) = (0 until 10).map { i =>
+      val filler = (0 until 16).map(j => s"pad${(i + j) % 9}").mkString(" ")
+      ("repo-3", f"$tag$i%02d.go", "c0ffee000000", "go",
+        s"common $filler" + (if (i % 2 == 0) s" $word $word" else ""))
+    }
+    val add1 = longDocs("addone", "due")
+    val add2 = longDocs("addtwo", "tre")
+    val p0 = IndexPaths(s"$root/tri-0")
+    val p1 = IndexPaths(s"$root/tri-1")
+    val p2 = IndexPaths(s"$root/tri-2")
+    IndexBuilder.build(spark, corpusOf(base), p0, buildArgs = "layered-spec-tri")
+    Incremental.addBatch(spark, p0, corpusOf(base ++ add1), p1)
+    Incremental.addBatch(spark, p1, corpusOf(base ++ add1 ++ add2), p2)
+
+    val reader = IndexReader.get(spark, p2)
+    assert(reader.layers.size === 3)
+    assert(reader.layers(0).boundScale > 1.0 && reader.layers(1).boundScale > 1.0)
+    val meta = reader.termMeta(Seq("uno", "due", "tre"))
+    assert(meta("uno")._2 === 0 && meta("due")._2 === 1 && meta("tre")._2 === 2)
+
+    val tri = Seq(Query("t1", Seq("uno", "due", "tre"), 8), Query("t2", Seq("due", "common"), 12))
+    val triDf = {
+      val s = spark
+      import s.implicits._
+      tri.flatMap(q => q.terms.map(t => (q.queryId, t, q.k))).toDF("query_id", "term", "k")
+    }
+    val naive = rows(graft.engine.NaiveSearch.topK(spark, corpusOf(base ++ add1 ++ add2), triDf))
+    // the top hits of t1 are base docs that match through all three layers
+    assert(naive.filter(_._1 == "t1").take(3).forall(r => r._4.startsWith("base")), naive)
+
+    val m = QueryMetrics(spark)
+    assert(rows(Wand.topKAt(spark, p2, tri, Some(m))) === naive)
+    assert(m.candidates.value > 0, "no candidates counted")
+    assert(m.blocksDecoded.value > 0, "cold pass decoded no blocks")
+    assert(rows(IndexSearch.topKAt(spark, p2, triDf)) === naive)
+  }
+
   test("addBatchCompacting bounds the layer count and keeps query identity") {
     val basePaths = IndexPaths(s"$root/pol-base")
     IndexBuilder.build(spark, corpusOf(baseDocs), basePaths, buildArgs = "policy-base")

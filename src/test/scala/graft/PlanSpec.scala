@@ -156,6 +156,45 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally graft.engine.Wand.ForceWandRoute = false
   }
 
+  test("layered WAND takes the exchange-free route: no groupByKey, no hash exchange under the candidate broadcast") {
+    import graft.index.{Incremental, IndexBuilder, IndexPaths}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val s = spark
+    import s.implicits._
+    def corpus(docs: Seq[(String, String)]) =
+      docs.map { case (path, content) => ("repo-p", path, "c0ffee000000", "go", content) }
+        .toDF("repo", "path", "commit", "lang", "content")
+    // "basetail" stays base-only (wins layer 0); "common" is re-listed by
+    // the delta (wins layer 1) — the query's terms win in BOTH layers
+    val base = (0 until 20).map(i => (f"base$i%02d.go", s"common alpha$i" + (if (i % 2 == 0) " basetail" else "")))
+    val delta = (0 until 10).map(i => (f"delta$i%02d.go", s"common common gamma$i"))
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-layered").toString
+    val basePaths = IndexPaths(s"$root/base")
+    val outPaths = IndexPaths(s"$root/out")
+    IndexBuilder.build(spark, corpus(base), basePaths, buildArgs = "plan-spec-layered")
+    Incremental.addBatch(spark, basePaths, corpus(base ++ delta), outPaths)
+    val reader = graft.engine.IndexReader.get(spark, outPaths)
+    val meta = reader.termMeta(Seq("basetail", "common"))
+    assert(reader.layers.size === 2 && meta("basetail")._2 === 0 && meta("common")._2 === 1)
+
+    val df = graft.engine.Wand.topKAt(spark, outPaths,
+      Seq(graft.model.Query("x", Seq("basetail", "common"), 5)))
+    val p = plan(df)
+    assert(!p.contains("AppendColumns") && !p.contains("MapGroups"),
+      s"layered WAND still groups by (salt, query):\n$p")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val broadcasts = helper.collect(df.queryExecution.executedPlan) { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.nonEmpty, s"ranking tail lost its candidate broadcast:\n$p")
+    broadcasts.foreach { b =>
+      assert(helper.collect(b.child) { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"hash exchange on the candidate side of the ranking tail:\n$p")
+    }
+    assert(df.count() === 5L)
+    graft.engine.IndexReader.invalidate(outPaths.root)
+    Bench.deleteTree(root)
+  }
+
   test("incremental merge is a SortMergeJoin (full_outer on term)") {
     // build tiny base + delta through the public path and inspect the plan
     // indirectly: hint("merge") + full_outer on 1-row-per-term sides must
