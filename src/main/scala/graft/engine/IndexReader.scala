@@ -2,6 +2,7 @@ package graft.engine
 
 import graft.index.{IndexBuilder, IndexPaths, IndexStats, Snapshots, TermHash}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -29,16 +30,18 @@ final case class IndexLayer(
 /** A resident handle on one index root — the engine analog of the
   * reference API server holding its Dgraph connection pool open across
   * requests (`pkg/database/relationship/dgraph.go:25-35`): all layers of
-  * the current snapshot, salted segments, and the docs-sidecar union are
-  * loaded once and kept persisted, so per-query work is pruning + decode +
-  * score, not parquet directory listing.
+  * the current snapshot, their salted segments, and one [[DocKeyShard]] per
+  * salt (the natural doc keys the ranking tail needs) are loaded once and
+  * kept persisted, so per-query work is pruning + decode + score, not
+  * parquet directory listing.
   *
   * Layered roots (incremental adds, [[graft.index.Incremental.addBatch]])
   * are served directly: term metadata resolves newest-wins per term, the
-  * query paths read exactly one layer's row per term, and docs are the
+  * query paths read exactly one layer's row per term, and `docs` is the
   * union of the disjoint per-layer sidecars — the reference's
   * query-over-live-store behavior (`dgraph.go:62-92`, `FindNode` serves
-  * whatever has been upserted).
+  * whatever has been upserted). `docs` itself is NOT pinned: only the scope
+  * probe reads it, once per distinct scope.
   *
   * At 10^12-doc scale you would pin only the term metadata and let posting
   * blocks stream from storage; at bench scale the whole index fits and the
@@ -46,8 +49,11 @@ final case class IndexLayer(
   */
 final case class IndexReader(
     paths: IndexPaths, stats: IndexStats, snapshotVersion: Int,
-    layers: Seq[IndexLayer], docs: DataFrame, cacheTag: String,
+    layers: Seq[IndexLayer], docs: DataFrame, keys: RDD[DocKeyShard], cacheTag: String,
     fast: Option[DataFrame]) {
+
+  /** True once the session this reader was opened in has stopped. */
+  def stopped: Boolean = keys.sparkContext.isStopped
 
   // term → (df, winning layer ordinal); df == 0 → absent in every layer
   private val termCache = TrieMap.empty[String, (Long, Int)]
@@ -208,8 +214,9 @@ final case class IndexReader(
     *    broadcast like dimension tables);
     *  - larger -> a broadcast Bloom filter (fpp [[IndexReader.ScopeBloomFpp]]):
     *    no false negatives, so every in-scope doc is still evaluated; the
-    *    rare false positive is removed EXACTLY in the ranking tail (the
-    *    docs join re-filters by repo). The residual risk is only that an FP
+    *    rare false positive is removed EXACTLY in the ranking tail
+    *    ([[ShardTail.select]] re-checks the doc's repo from its key shard
+    *    against the scope). The residual risk is only that an FP
     *    transiently occupies a shard-heap slot and lifts that shard's prune
     *    threshold past a boundary true hit — probability ≈ fpp × evaluated
     *    candidates per query, the standard bloom-scoping tradeoff at corpus
@@ -303,7 +310,7 @@ object IndexReader {
 
   /** False-positive rate of the bloom scope probe — at 1e-6, an FP among a
     * query's ~10^4 evaluated candidates is a ~1% event, and each FP is still
-    * removed exactly in the ranking tail's repo re-filter.
+    * removed exactly by the ranking tail's repo re-check.
     */
   val ScopeBloomFpp: Double = 1e-6
 
@@ -320,9 +327,7 @@ object IndexReader {
 
   def get(spark: SparkSession, paths: IndexPaths): IndexReader = {
     val key = (System.identityHashCode(spark), paths.root)
-    cache.get(key).foreach { r =>
-      if (r.docs.sparkSession.sparkContext.isStopped) cache.remove(key)
-    }
+    cache.get(key).foreach { r => if (r.stopped) cache.remove(key) }
     cache.get(key).getOrElse(openLock.synchronized {
       cache.getOrElseUpdate(key, open(spark, paths))
     })
@@ -354,14 +359,14 @@ object IndexReader {
           val idx = spark.read.schema(IndexBuilder.IndexSchema)
             .parquet(snap.indexDirs(i)).persist(StorageLevel.MEMORY_AND_DISK)
           val seg = pinSegments(spark.read.schema(IndexBuilder.SegmentsSchema)
-            .parquet(snap.segmentsDirs(i)))
+            .parquet(snap.segmentsDirs(i)), stats.numSalts)
           IndexLayer(i, snap.indexDirs(i), layerStats.avgdl,
             math.max(1.0, stats.avgdl / layerStats.avgdl), idx, seg)
         }
-        val docs = pinDocs(snap.docsDirs
+        val docs = snap.docsDirs
           .map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
-          .reduce(_ unionByName _))
-        IndexReader(paths, stats, snap.version, layers, docs,
+          .reduce(_ unionByName _)
+        IndexReader(paths, stats, snap.version, layers, docs, pinKeys(docs, stats.numSalts),
           cacheTag(paths, stats, snap.version),
           fastFor(spark, Some(snap.indexDirs.last)))
 
@@ -369,70 +374,83 @@ object IndexReader {
         val stats = IndexBuilder.open(paths)
         val idx = spark.read.parquet(paths.indexDir).persist(StorageLevel.MEMORY_AND_DISK)
         val seg = pinSegments(
-          spark.read.schema(IndexBuilder.SegmentsSchema).parquet(paths.segmentsDir))
-        val docs = pinDocs(spark.read.schema(IndexBuilder.DocsSchema).parquet(paths.docsDir))
+          spark.read.schema(IndexBuilder.SegmentsSchema).parquet(paths.segmentsDir), stats.numSalts)
+        val docs = spark.read.schema(IndexBuilder.DocsSchema).parquet(paths.docsDir)
         IndexReader(paths, stats, 0,
           Seq(IndexLayer(0, paths.indexDir, stats.avgdl, 1.0, idx, seg)),
-          docs, cacheTag(paths, stats, 0), fastFor(spark, Some(paths.indexDir)))
+          docs, pinKeys(docs, stats.numSalts), cacheTag(paths, stats, 0),
+          fastFor(spark, Some(paths.indexDir)))
     }
 
-  /** Pin the docs sidecar hash-partitioned AND sorted by `doc_id` (guide
-    * §2.4: two operations keyed the same way share one exchange — a cached
-    * partitioning persists across jobs like a bucketed table). The
-    * full-materialization index paths join per-query candidate scores to
-    * this relation on `doc_id`; with a scan-partitioned cache every query
-    * re-exchanged AND re-sorted the corpus-sized side, which was the
-    * dominant fixed cost of [[IndexSearch.topKAt]] (r6 measurement:
-    * ~0.4 s/query at sf0.1×32). The one-time shuffle+sort here is paid at
-    * reader open (the serving steady state the resident reader models).
-    */
-  private def pinDocs(docs: DataFrame): DataFrame =
-    persistPartitioned(docs.repartition(col("doc_id")).sortWithinPartitions("doc_id"))
-
-  /** Pin a segments layer hash-partitioned by `salt` and sorted by (salt,
-    * bucket, term), so the in-memory batch min/max stats keep the per-query
-    * bucket/term filters prunable.
+  /** Pin a segments layer with partition i holding exactly salt i
+    * (`repartitionById`), sorted by (bucket, term) so the in-memory batch
+    * min/max stats keep the per-query bucket/term filters prunable. A hash
+    * repartition on `salt` would scatter salts over partitions unevenly
+    * (4 salts hashed to partitions 3, 3, 2, 3) and serialize shard runs
+    * that should run in parallel.
     *
-    * Alignment invariant the WAND route relies on: every layer of one root
-    * is pinned here inside the same [[open]], with the same salt hash
-    * partitioner and the same partition count, and doc salting does not
-    * depend on the layer. So cached partition i of EVERY layer holds the
-    * same salt shards, and zipping the layers' partitions positionally
-    * gives one task ALL of a (salt, query)'s term rows across layers —
-    * shard runs stay docId-disjoint with no exchange.
+    * Alignment invariant the WAND route relies on: partition i == salt i in
+    * EVERY layer of the root and in the key shards ([[pinKeys]]), and doc
+    * salting does not depend on the layer. So zipping the layers' and the
+    * key shards' partitions positionally gives one task ALL of a (salt,
+    * query)'s term rows across layers plus the shard's doc keys — shard
+    * runs stay docId-disjoint with no exchange.
     */
-  private def pinSegments(segs: DataFrame): DataFrame =
+  private def pinSegments(segs: DataFrame, numSalts: Int): DataFrame =
     persistPartitioned(
-      segs.repartition(col("salt")).sortWithinPartitions("salt", "bucket", "term"))
+      segs.repartitionById(numSalts, col("salt")).sortWithinPartitions("bucket", "term"))
+
+  /** Pin the natural doc keys as one [[DocKeyShard]] per salt, partition
+    * i == salt i (see [[pinSegments]]): a sorted doc_id array plus UTF-8 key
+    * bytes, built once from the docs union at the first query. The
+    * ranking tail looks candidates up here inside the shard task, so no
+    * request joins against the corpus-sized docs relation.
+    */
+  private def pinKeys(docs: DataFrame, numSalts: Int): RDD[DocKeyShard] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // planned with AQE off: under AQE `.rdd` would run the exchange now,
+    // and open() must stay free of Spark jobs
+    val rows = withoutAqe(spark) {
+      docs.select("doc_id", "repo", "path", "commit")
+        .repartitionById(numSalts, TermHash.saltCol(col("doc_id"), numSalts))
+        .as[(Long, String, String, String)].rdd
+    }
+    rows.mapPartitionsWithIndex((salt, it) => Iterator(DocKeyShard.build(salt, numSalts, it)),
+      preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** Persist with the partitioning/ordering STATICALLY visible to consumers.
     * Under AQE (Spark 4 default) a cached query compiles as an
     * `AdaptiveSparkPlan` whose output partitioning consumers cannot trust,
-    * so every downstream join re-exchanges AND re-sorts the cached side —
-    * exactly the per-query cost the pin exists to remove. The cached plan is
-    * captured at `persist()` time, so AQE is toggled off around just that
-    * call: the CACHE BUILD of a reader-pinned relation is a single
-    * deliberate exchange+sort that needs no adaptivity, while every query
-    * over it still runs with AQE on. (Verified against
-    * `plans/r06/bm25_index_topk_after.txt`: the docs side of the keys join
-    * is a bare InMemoryTableScan, no Exchange, no Sort.)
+    * so every downstream consumer re-exchanges the cached side — exactly
+    * the per-query cost the pin exists to remove. The cached plan is
+    * captured at `persist()` time, so AQE is off around just that call
+    * ([[withoutAqe]]): the CACHE BUILD of a reader-pinned relation is a
+    * single deliberate exchange+sort that needs no adaptivity, while every
+    * query over it still runs with AQE on.
+    */
+  private[graft] def persistPartitioned(df: DataFrame): DataFrame =
+    withoutAqe(df.sparkSession)(df.persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** Run `f` (a persist or an RDD conversion: plan capture, no job) with
+    * AQE disabled on the session.
     *
-    * Concurrency: the whole toggle-persist-restore runs under one global
-    * lock — two unsynchronized callers could otherwise interleave their
+    * Concurrency: the whole toggle-run-restore runs under one global lock —
+    * two unsynchronized callers could otherwise interleave their
     * read-prev/set/restore and leave AQE disabled for the session (thread A
     * reads "true"/sets false, thread B reads "false", A restores "true",
-    * B "restores" false). persist() registers the cache without running a
-    * job, so the critical section is cheap. A query PLANNED by an unrelated
-    * thread inside the window still compiles without AQE — correct,
-    * marginally less adaptive, and bounded to the pin call.
+    * B "restores" false). `f` runs no job, so the critical section is
+    * cheap. A query PLANNED by an unrelated thread inside the window still
+    * compiles without AQE — correct, marginally less adaptive, and bounded
+    * to the call.
     */
   private val pinLock = new Object
 
-  private[graft] def persistPartitioned(df: DataFrame): DataFrame = pinLock.synchronized {
-    val spark = df.sparkSession
+  private def withoutAqe[A](spark: SparkSession)(f: => A): A = pinLock.synchronized {
     val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.persist(StorageLevel.MEMORY_AND_DISK)
+    try f
     finally prev match {
       case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
       case None => spark.conf.unset("spark.sql.adaptive.enabled")
@@ -476,14 +494,15 @@ object IndexReader {
   }
 
   /** Drop cached readers for a root (used after rebuilds that invalidate it),
-    * across all sessions, plus their decoded-postings cache entries.
+    * across all sessions: every pin (index, segments, key shards, fast
+    * sidecar) is released, plus the decoded-postings cache entries.
     */
   def invalidate(root: String): Unit = {
     cache.keys.filter(_._2 == root).foreach { k =>
       cache.remove(k).foreach { r =>
-        if (!r.docs.sparkSession.sparkContext.isStopped) {
+        if (!r.stopped) {
           r.layers.foreach { l => l.index.unpersist(); l.segments.unpersist() }
-          r.docs.unpersist()
+          r.keys.unpersist(blocking = false)
           r.fast.foreach(_.unpersist())
         }
         // scope probes are broadcasts, not persisted plans: RELEASE (not

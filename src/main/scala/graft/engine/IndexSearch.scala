@@ -2,7 +2,7 @@ package graft.engine
 
 import graft.index.{IndexBuilder, Postings}
 import graft.score.BM25
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Query execution over the built inverted index — the engine analog of the
@@ -26,37 +26,16 @@ object IndexSearch {
   }
 
   /** Same, against an already-built (complete) index. `repoScope` restricts
-    * scoring to docs of the given repos (the reference's
+    * the result to docs of the given repos (the reference's
     * `allow_external_links`-style query-time filter, README.md:41): the
-    * predicate lands on the docs-sidecar side of the join BEFORE the
-    * ranking tail, so the emitted top-k is the scope's own top-k.
+    * shard tail drops out-of-scope docs BEFORE selecting each shard's top
+    * k, so the emitted top-k is the scope's own top-k. The result is local:
+    * the plan has run when this returns.
     */
   def topKAt(spark: SparkSession, paths: graft.index.IndexPaths, queries: DataFrame,
       repoScope: Option[Seq[String]] = None): DataFrame = {
     val reader = IndexReader.get(spark, paths)
-    val stats = reader.stats
-    // ONE exchange keyed the way the docs join needs it (guide §2.4): the
-    // explicit doc_id repartition satisfies both the score aggregation
-    // (doc_id ⊂ its grouping keys ⇒ clustered) and the subsequent join
-    // against the reader's doc_id-pinned docs cache — the previous shape
-    // exchanged the decoded rows on (query_id, k, doc_id) AND re-exchanged
-    // + re-sorted the corpus-sized docs side on every query.
-    val scored = decodedForQueries(spark, reader, queries)
-      .join(broadcast(queries.select("query_id", "term", "k")), "term")
-      .repartition(col("doc_id"))
-      .groupBy("query_id", "k", "doc_id")
-      .agg(sum(BM25.score(col("tf"), col("df"), col("dl"),
-        lit(stats.nDocs), lit(stats.avgdl))).as("score"))
-    val docs = scopedDocs(reader, repoScope)
-    NaiveSearch.rankByKeys(scored.join(docs, "doc_id"))
-  }
-
-  /** Docs-sidecar key columns, optionally repo-scoped (scoping BEFORE the
-    * rank tail — the inner join drops out-of-scope docs pre-ranking).
-    */
-  private def scopedDocs(reader: IndexReader, repoScope: Option[Seq[String]]): DataFrame = {
-    val base = reader.docs.select("doc_id", "repo", "path", "commit")
-    repoScope.fold(base)(rs => base.filter(col("repo").isin(rs.distinct: _*)))
+    ShardTail.rank(reader, scoredAt(reader, queries), repoScope)
   }
 
   /** Conjunctive (AND) top-k — SURVEY.md §2.7 posting-list intersection,
@@ -69,22 +48,40 @@ object IndexSearch {
   def topKAndAt(spark: SparkSession, paths: graft.index.IndexPaths, queries: DataFrame,
       repoScope: Option[Seq[String]] = None): DataFrame = {
     val reader = IndexReader.get(spark, paths)
-    val stats = reader.stats
-    val scored = decodedForQueries(spark, reader, queries)
-      .join(broadcast(queries.select("query_id", "term", "k", "n_terms")), "term")
-      .repartition(col("doc_id")) // same one-exchange shape as [[topKAt]]
-      .groupBy("query_id", "k", "n_terms", "doc_id")
-      .agg(sum(BM25.score(col("tf"), col("df"), col("dl"),
-        lit(stats.nDocs), lit(stats.avgdl))).as("score"),
-        count(lit(1)).as("n_matched"))
-      .filter(col("n_matched") === col("n_terms"))
-    val docs = scopedDocs(reader, repoScope)
-    NaiveSearch.rankByKeys(scored.join(docs, "doc_id"))
+    ShardTail.rank(reader, scoredAndAt(reader, queries), repoScope)
   }
 
-  /** Bucket-pruned scan + decode of the query terms' posting lists:
-    * one row per (term, doc) with (df, tf, dl) — the shared front half of
-    * the disjunctive and conjunctive plans.
+  /** `(query_id, k, doc_id, salt, score)` per (query, matching doc), with
+    * partition i holding exactly salt i: ONE exchange, `repartitionById` on
+    * the doc's salt, which also clusters the score aggregation (salt is a
+    * grouping key, so no second exchange) and lines the rows up with the
+    * reader's key shards for [[ShardTail.rank]].
+    */
+  private[graft] def scoredAt(reader: IndexReader, queries: DataFrame): DataFrame =
+    bySalt(reader, queries.select("query_id", "term", "k"))
+      .groupBy("query_id", "k", "doc_id", "salt")
+      .agg(sum(score(reader)).as("score"))
+
+  /** [[scoredAt]] for the conjunctive plan: only docs holding every term. */
+  private[graft] def scoredAndAt(reader: IndexReader, queries: DataFrame): DataFrame =
+    bySalt(reader, queries.select("query_id", "term", "k", "n_terms"))
+      .groupBy("query_id", "k", "n_terms", "doc_id", "salt")
+      .agg(sum(score(reader)).as("score"), count(lit(1)).as("n_matched"))
+      .filter(col("n_matched") === col("n_terms"))
+
+  private def score(reader: IndexReader): Column =
+    BM25.score(col("tf"), col("df"), col("dl"), lit(reader.stats.nDocs), lit(reader.stats.avgdl))
+
+  private def bySalt(reader: IndexReader, queryTerms: DataFrame): DataFrame = {
+    val numSalts = reader.stats.numSalts
+    decodedForQueries(reader, queryTerms)
+      .join(broadcast(queryTerms), "term")
+      .withColumn("salt", graft.index.TermHash.saltCol(col("doc_id"), numSalts))
+      .repartitionById(numSalts, col("salt"))
+  }
+
+  /** Bucket-pruned scan + decode of the query terms' posting lists into
+    * `(term, df, doc_id, tf, dl)` rows, one per (term, doc).
     *
     * Layer-aware: each term reads exactly its newest-wins layer's row
     * ([[IndexReader.newestWins]]), so a layered (incrementally-updated) root
@@ -95,37 +92,19 @@ object IndexSearch {
     * round-2 hot-term p99 (9.1 s driver-measured vs 2.0 s WAND on the same
     * query; the fix makes steady-state index-path decode cache-resident).
     */
-  private def decodedForQueries(spark: SparkSession, reader: IndexReader, queries: DataFrame): DataFrame = {
-    import spark.implicits._
-    val terms = queries.select("term").distinct().as[String].collect().toSeq
-    decodedTermRows(spark, reader, terms, None)
-  }
-
-  /** Bucket-pruned scan + decode of the given terms' posting lists into
-    * `(term, df, doc_id, tf, dl)` rows — the shared decode front end of the
-    * index paths and the hybrid fast path. `wanted` (sorted docIds)
-    * restricts the EMITTED rows executor-side (binary search per posting,
-    * applied inside the decode flatMap) — the decode itself stays
-    * cache-resident either way; the filter removes the row-explosion +
-    * join + aggregation cost downstream.
-    */
-  private[engine] def decodedTermRows(
-      spark: SparkSession, reader: IndexReader,
-      terms: Seq[String], wanted: Option[Array[Long]]): DataFrame = {
+  private def decodedForQueries(reader: IndexReader, queries: DataFrame): DataFrame = {
+    val spark = queries.sparkSession
     import spark.implicits._
     val tag = reader.cacheTag
+    val terms = queries.select("term").distinct().as[String].collect().toSeq
     val parts = reader.newestWins(terms, _.index).map { case (layer, slice) =>
       val ord = layer.ordinal
       slice.select("term", "df", "postings", "dls", "block_dir")
         .as[(String, Long, Array[Byte], Array[Byte], Array[Byte])]
         .mapPartitions { it =>
           it.flatMap { case (term, df, p, d, dir) =>
-            val blocks = Postings.iterAll(PostingCache.open(s"$tag#L$ord", -1, term, df, p, d, dir))
-            val rows = blocks.map { case (id, tf, dl) => (term, df, id, tf, dl) }
-            wanted match {
-              case Some(ids) => rows.filter(r => java.util.Arrays.binarySearch(ids, r._3) >= 0)
-              case None => rows
-            }
+            Postings.iterAll(PostingCache.open(s"$tag#L$ord", -1, term, df, p, d, dir))
+              .map { case (id, tf, dl) => (term, df, id, tf, dl) }
           }
         }
         .toDF("term", "df", "doc_id", "tf", "dl")

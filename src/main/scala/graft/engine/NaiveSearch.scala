@@ -86,8 +86,9 @@ object NaiveSearch {
     rankByKeys(scored.join(c.select("doc_id", "repo", "path", "commit"), "doc_id"))
   }
 
-  /** Shared ranking tail: input must have (query_id, k, repo, path, commit,
-    * score); emits the pinned oracle output shape.
+  /** The naive plan's ranking tail (the index routes rank in their salt
+    * shards instead, [[ShardTail]]): input must have (query_id, k, repo,
+    * path, commit, score); emits the pinned oracle output shape.
     *
     * Scale shape: a k-bounded [[TopKAggExprs]] heap aggregate with map-side
     * partial aggregation — NOT a `Window.partitionBy(query_id)`, which would
@@ -96,29 +97,18 @@ object NaiveSearch {
     * aggregate's pinned (score_r desc, repo/path/commit asc) order, which is
     * exactly the oracle's `row_number()` order.
     */
-  def rankByKeys(scoredWithKeys: DataFrame): DataFrame =
-    sortedTail(rankByKeysUnsorted(scoredWithKeys))
-
-  /** The ranking aggregate WITHOUT the output-edge sort — for callers that
-    * union more final-shaped rows in before sorting ([[Wand.topKAt]]'s
-    * driver-local fast rows), so the tail pays exactly ONE single-partition
-    * sort, not one per union arm.
-    */
-  private[graft] def rankByKeysUnsorted(scoredWithKeys: DataFrame): DataFrame = {
+  def rankByKeys(scoredWithKeys: DataFrame): DataFrame = {
     val hits = scoredWithKeys
       .groupBy("query_id")
       .agg(TopKAggExprs.topK(col("k"), BM25.quantize(col("score")),
         struct(col("repo"), col("path"), col("commit"))).as("hits"))
+    // output-edge total order over ≤ Σ k rows: a single-partition sort gives
+    // the same order as `orderBy` WITHOUT the range partitioner's sampling
+    // job + exchange
     hits
       .select(col("query_id"), posexplode(col("hits")))
       .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
         col("col.repo"), col("col.path"), col("col.commit"), col("col.score_r"))
+      .coalesce(1).sortWithinPartitions("query_id", "rank")
   }
-
-  /** Output-edge total order over a final-shaped (≤ Σ k rows) result: a
-    * single-partition sort gives the same order as `orderBy` WITHOUT the
-    * range partitioner's per-query sampling job + exchange.
-    */
-  private[graft] def sortedTail(ranked: DataFrame): DataFrame =
-    ranked.coalesce(1).sortWithinPartitions("query_id", "rank")
 }

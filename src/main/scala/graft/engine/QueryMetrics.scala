@@ -31,6 +31,9 @@ import org.apache.spark.util.LongAccumulator
   *    (the 404-with-null-results analog — no route runs for them); the four
   *    counters sum to the batch size, so per-route QPS denominators never
   *    silently exclude 404s.
+  *  - `tailRows`: ranked rows the shard tasks shipped to the driver's
+  *    merge ([[ShardTail]]) — at most k per (salt shard, query), so ≤
+  *    numSalts·k per query however many candidates tie.
   */
 final case class QueryMetrics(
     candidates: LongAccumulator,
@@ -39,7 +42,8 @@ final case class QueryMetrics(
     routedFast: LongAccumulator,
     routedHybrid: LongAccumulator,
     routedWand: LongAccumulator,
-    routedAbsent: LongAccumulator) extends Serializable {
+    routedAbsent: LongAccumulator,
+    tailRows: LongAccumulator) extends Serializable {
 
   def snapshot: Map[String, Long] = Map(
     "candidates_evaluated" -> candidates.value,
@@ -48,7 +52,8 @@ final case class QueryMetrics(
     "routed_fast" -> routedFast.value,
     "routed_hybrid" -> routedHybrid.value,
     "routed_wand" -> routedWand.value,
-    "routed_absent" -> routedAbsent.value)
+    "routed_absent" -> routedAbsent.value,
+    "tail_rows" -> tailRows.value)
 }
 
 object QueryMetrics {
@@ -59,7 +64,8 @@ object QueryMetrics {
     spark.sparkContext.longAccumulator("graft.query.routedFast"),
     spark.sparkContext.longAccumulator("graft.query.routedHybrid"),
     spark.sparkContext.longAccumulator("graft.query.routedWand"),
-    spark.sparkContext.longAccumulator("graft.query.routedAbsent"))
+    spark.sparkContext.longAccumulator("graft.query.routedAbsent"),
+    spark.sparkContext.longAccumulator("graft.query.tailRows"))
 }
 
 /** Executor-local mutable counters for one WAND shard run (summed into the

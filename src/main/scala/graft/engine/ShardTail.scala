@@ -1,0 +1,163 @@
+package graft.engine
+
+import graft.index.TermHash
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Arrays
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+
+/** The natural doc keys `(repo, path, commit)` of ONE salt shard, compact:
+  * a sorted `doc_id` array plus every key field as UTF-8 bytes in one byte
+  * array, field `f` of doc `i` at `bytes[offsets(3i+f), offsets(3i+f+1))`.
+  * Bytes, not `java.lang.String`: unsigned byte order IS Spark's
+  * `UTF8String` order (and DuckDB's), while UTF-16 `String.compareTo`
+  * disagrees with it above the BMP.
+  */
+final class DocKeyShard private (
+    val salt: Int, ids: Array[Long], bytes: Array[Byte], offsets: Array[Int]) extends Serializable {
+
+  def size: Int = ids.length
+  def docId(i: Int): Long = ids(i)
+
+  /** Position of `docId` in this shard, or a negative number if it has no
+    * key row.
+    */
+  def indexOf(docId: Long): Int = Arrays.binarySearch(ids, docId)
+
+  /** Key field `f` (0 repo, 1 path, 2 commit) of the doc at position `i`. */
+  def field(i: Int, f: Int): Array[Byte] =
+    Arrays.copyOfRange(bytes, offsets(3 * i + f), offsets(3 * i + f + 1))
+
+  /** Throws unless a row of salt `rowSalt` belongs in this shard: a row in
+    * the wrong partition would find no key here and vanish silently.
+    */
+  def requireSalt(rowSalt: Int): Unit =
+    if (rowSalt != salt) throw new IllegalStateException(
+      s"salt $rowSalt row in the partition of salt shard $salt: shard pins are misaligned")
+}
+
+object DocKeyShard {
+
+  /** The shard of salt `salt` from its `(doc_id, repo, path, commit)` rows;
+    * throws on a row that belongs to another salt.
+    */
+  def build(salt: Int, numSalts: Int, rows: Iterator[(Long, String, String, String)]): DocKeyShard = {
+    val sorted = rows.map { case (id, repo, path, commit) =>
+      if (TermHash.salt(id, numSalts) != salt) throw new IllegalStateException(
+        s"doc $id (salt ${TermHash.salt(id, numSalts)}) in the partition of salt $salt")
+      (id, Array(repo, path, commit).map(_.getBytes(UTF_8)))
+    }.toArray.sortBy(_._1)
+    val offsets = new Array[Int](3 * sorted.length + 1)
+    val out = new java.io.ByteArrayOutputStream()
+    var o = 0
+    sorted.iterator.flatMap(_._2).foreach { b => out.write(b); offsets(o + 1) = offsets(o) + b.length; o += 1 }
+    new DocKeyShard(salt, sorted.map(_._1), out.toByteArray, offsets)
+  }
+}
+
+/** One ranked candidate of a (salt shard, query) run, keys as UTF-8 bytes. */
+final case class TailRow(
+    queryId: String, k: Int, scoreR: Double,
+    repo: Array[Byte], path: Array[Byte], commit: Array[Byte])
+
+/** The ranking tail shared by every index route (WAND, hybrid, the index
+  * and AND plans): top-k per query in the pinned final order — quantized
+  * score descending, then repo/path/commit ascending by unsigned UTF-8
+  * bytes, which is Spark's `UTF8String` order and DuckDB's `ORDER BY`.
+  *
+  * Two halves, no exchange between them:
+  *  - inside the task that owns salt shard `s` ([[select]]): each query's
+  *    candidates of that shard get their keys from the shard's
+  *    [[DocKeyShard]], and at most k leave the task. A shard can break
+  *    score ties itself because it holds the keys, so an all-ties query
+  *    ships ≤ numSalts·k rows, not its whole tie class;
+  *  - on the driver ([[finish]]): the ≤ numSalts·k rows per query merge
+  *    into the final top k, ranks are assigned, and the result is a local
+  *    DataFrame (collecting it runs no Spark job).
+  *
+  * The global top k is contained in the union of the shards' top k under
+  * the same total order, so the merge is exact.
+  */
+object ShardTail {
+
+  /** The final total order (best first). */
+  val order: Ordering[TailRow] = new Ordering[TailRow] {
+    override def compare(a: TailRow, b: TailRow): Int = {
+      var c = java.lang.Double.compare(b.scoreR, a.scoreR)
+      if (c == 0) c = Arrays.compareUnsigned(a.repo, b.repo)
+      if (c == 0) c = Arrays.compareUnsigned(a.path, b.path)
+      if (c == 0) c = Arrays.compareUnsigned(a.commit, b.commit)
+      c
+    }
+  }
+
+  /** Key-scope filter for the tail: the repos as UTF-8 bytes. */
+  def repoBytes(repos: Seq[String]): Array[Array[Byte]] = repos.distinct.map(_.getBytes(UTF_8)).toArray
+
+  /** The ≤ k best of one (salt shard, query) run's `(doc_id, raw score)`
+    * candidates. A candidate with no key row in the shard is dropped (the
+    * docs inner-join semantics), as is one whose repo is outside `repos`
+    * (a Bloom scope probe's false positive, or the index plans' scope).
+    */
+  def select(shard: DocKeyShard, queryId: String, k: Int, candidates: Iterable[(Long, Double)],
+      repos: Option[Array[Array[Byte]]]): Array[TailRow] = {
+    val rows = mutable.ArrayBuffer.empty[TailRow]
+    candidates.foreach { case (doc, score) =>
+      val i = shard.indexOf(doc)
+      if (i >= 0) {
+        val repo = shard.field(i, 0)
+        if (repos.forall(_.exists(Arrays.equals(_, repo))))
+          rows += TailRow(queryId, k, graft.score.BM25.quantize(score), repo, shard.field(i, 1), shard.field(i, 2))
+      }
+    }
+    rows.sorted(order).take(k).toArray
+  }
+
+  /** Driver half: top k per query over the shard rows, ranks 1..k, plus the
+    * already-final `fast` rows, as `(query_id, rank, repo, path, commit,
+    * score_r)` sorted by (query_id, rank). Query ids compare as UTF-8 bytes
+    * too, the order a Spark sort on the column gives.
+    */
+  def finish(spark: SparkSession, rows: Seq[TailRow],
+      fast: Seq[(String, Int, String, String, String, Double)]): DataFrame = {
+    import spark.implicits._
+    def str(b: Array[Byte]) = new String(b, UTF_8)
+    val ranked = rows.groupBy(_.queryId).map { case (q, rs) =>
+      q -> rs.sorted(order).take(rs.head.k).zipWithIndex.map { case (r, i) =>
+        (q, i + 1, str(r.repo), str(r.path), str(r.commit), r.scoreR)
+      }
+    }
+    val byQuery = ranked ++ fast.groupBy(_._1)
+    byQuery.keys.toSeq.sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+      .flatMap(byQuery)
+      .toDF("query_id", "rank", "repo", "path", "commit", "score_r")
+  }
+
+  /** Both halves over a scored relation `(query_id, k, doc_id, score,
+    * salt)` whose partition i holds exactly salt i (the index and AND
+    * plans): the rows zip with the reader's key shards, one task per salt.
+    */
+  def rank(reader: IndexReader, scored: DataFrame, repoScope: Option[Seq[String]]): DataFrame = {
+    val spark = scored.sparkSession
+    import spark.implicits._
+    val repos = repoScope.map(repoBytes)
+    val scoredRdd = scored.select("query_id", "k", "doc_id", "score", "salt")
+      .as[(String, Int, Long, Double, Int)].rdd
+    // no query term in the index: the optimizer folds the plan to an empty
+    // relation with no partitions, and there is nothing to rank
+    if (scoredRdd.getNumPartitions == 0) return finish(spark, Nil, Nil)
+    val rows = scoredRdd
+      .zipPartitions(reader.keys) { (it, shards) =>
+        val shard = shards.next()
+        val byQuery = mutable.LinkedHashMap.empty[(String, Int), mutable.ArrayBuffer[(Long, Double)]]
+        it.foreach { case (q, k, doc, score, salt) =>
+          shard.requireSalt(salt)
+          byQuery.getOrElseUpdate((q, k), mutable.ArrayBuffer.empty) += ((doc, score))
+        }
+        byQuery.iterator.flatMap { case ((q, k), cands) => select(shard, q, k, cands, repos) }
+      }
+      .collect()
+    finish(spark, rows.toSeq, Nil)
+  }
+}

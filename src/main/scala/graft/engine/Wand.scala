@@ -3,7 +3,6 @@ package graft.engine
 import graft.index.{IndexBuilder, Postings}
 import graft.model.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 /** Block-max WAND top-k (SURVEY.md §2.6 T5, north rule) — sharded for
@@ -13,8 +12,9 @@ import scala.collection.mutable
   *    the unit of parallelism: each (salt shard) runs a classic single-node
   *    block-max WAND over its sub-postings for every query, keeping a k-heap
   *    and skipping blocks whose upper bound can't reach the heap threshold;
-  *  - shard-local top-k candidates (k + ε-ties) union → the global ranking
-  *    tail re-ranks with the pinned (quantized score, natural key) order.
+  *  - each shard ranks its k + ε-tie candidates in the pinned (quantized
+  *    score, natural key) order and ships at most k ([[ShardTail]]); the
+  *    driver merges the shards' rows into the global top k.
   *
   * Global top-k ⊆ union of shard top-ks, so rank identity with the naive
   * plan is structural, not statistical. The ε slack ([[Eps]]) keeps any doc
@@ -30,17 +30,6 @@ object Wand {
 
   /** Threshold slack ≥ 2× the 1e-6 score-quantization grid (see class doc). */
   val Eps: Double = 1e-5
-
-  /** Hybrid-route guard: a query is hybrid-eligible only while the SUM of
-    * its rare terms' dfs stays under this bound — each rare list is
-    * < [[graft.index.IndexBuilder.FastMinDf]] postings by definition, but a
-    * many-rare-term query could otherwise funnel an unbounded total through
-    * the driver collect. Overflow routes to WAND (identical results, no
-    * driver materialization). A `var` so specs can exercise the fallback at
-    * tiny sf (where no real query set reaches 32 k rare postings);
-    * production value is the default.
-    */
-  @volatile var HybridMaxRarePostings: Long = 32768L
 
   /** When true, every query takes the full WAND route (fast/hybrid
     * disabled) — results are identical by construction (FastPathSpec pins
@@ -66,17 +55,22 @@ object Wand {
     * [[graft.index.Incremental]]) so pruning stays SOUND while exact
     * scoring uses the current avgdl. Compaction resets scales to 1.
     *
-    * Single-layer and layered roots take the SAME exchange-free candidate
-    * route: the winning layers' salt-pinned segments are zipped partition
-    * by partition and each (salt shard, query) pair is one independent WAND
-    * run inside mapPartitions. Doc-salting is layer-independent, so a doc
-    * stays in one salt shard across layers and shard runs remain
-    * docId-disjoint. Decoded postings are memoized per
-    * (build, layer, salt, term) in the executor-local [[PostingCache]], so
-    * a steady-state query stream decodes each hot sub-list once, not per
-    * query. Bucket lists and per-term df come from driver-side hashing
-    * ([[graft.index.TermHash]]) and the reader's term-metadata cache — zero
-    * Spark jobs of per-query planning overhead after warmup.
+    * Every WAND and hybrid query of the batch runs in ONE Spark job with no
+    * exchange: the winning layers' salt-pinned segments and the reader's
+    * key shards are zipped partition by partition (partition i == salt i,
+    * [[IndexReader.pinSegments]]), and each (salt shard, query) pair is one
+    * independent WAND run inside the task, ranked there by
+    * [[ShardTail.select]] to at most k finished rows. The driver merges
+    * those with the fast-route rows and returns a LOCAL result, so the
+    * shard job has run by the time this returns and collecting the result
+    * runs no further job. Doc-salting is layer-independent, so a doc stays
+    * in one salt shard across layers and shard runs remain docId-disjoint.
+    * Decoded postings are memoized per (build, layer, salt, term) in the
+    * executor-local [[PostingCache]], so a steady-state query stream
+    * decodes each hot sub-list once, not per query. Bucket lists and
+    * per-term df come from driver-side hashing ([[graft.index.TermHash]])
+    * and the reader's term-metadata cache — zero Spark jobs of per-query
+    * planning overhead after warmup.
     */
   def topKAt(
       spark: SparkSession,
@@ -96,9 +90,9 @@ object Wand {
     // probe ([[IndexReader.scopeProbe]]): an exact sorted docId array for
     // selective scopes (the dimension-table case), a Bloom filter once the
     // scope outgrows broadcast-array size — no false negatives, and the
-    // ranking tail's docs join re-filters the rare FP exactly. Bounds stay
-    // sound either way: block maxima upper-bound every doc, a fortiori the
-    // scoped subset.
+    // shard tail re-checks the rare FP's repo exactly. Bounds stay sound
+    // either way: block maxima upper-bound every doc, a fortiori the scoped
+    // subset.
     val scope = repoScope.map(reader.scopeProbe)
 
     val n = stats.nDocs
@@ -112,28 +106,24 @@ object Wand {
     //  - `single`: one present term, fast-listed → serve the prefix
     //    directly (driver-local rows, zero index jobs). O(k).
     //  - `hybrid`: ≥2 present terms of which EXACTLY ONE is fast-listed
-    //    (the others have df < FastMinDf by definition) → candidates =
-    //    prefix(hot) ∪ full(rare terms). SOUND: any doc outside the union
-    //    contains ONLY the hot term and sits outside its prefix, so all
-    //    FastK prefix docs precede it in the final total order (their
-    //    totals only grow with rare-term contributions) — it cannot reach
-    //    the top k ≤ FastK. Exact scores come from decoding the hot list
-    //    RESTRICTED to the candidate set (executor-side binary-search
-    //    filter, no full row explosion) plus the full rare lists.
-    //    This serves the classic "rare identifier + common keyword" query
-    //    in O(k + Σ df_rare) instead of O(N).
+    //    (the others have df < FastMinDf by definition) → a WAND run whose
+    //    scope is prefix(hot) ∪ the shard's rare-list docs. SOUND: any doc
+    //    outside the union contains ONLY the hot term and sits outside its
+    //    prefix, so all FastK prefix docs precede it in the final total
+    //    order (their totals only grow with rare-term contributions) — it
+    //    cannot reach the top k ≤ FastK. This serves the classic "rare
+    //    identifier + common keyword" query in O(k + Σ df_rare) scored
+    //    candidates instead of O(N), in the same shard job as WAND.
     //  - `wand`: everything else — scoped queries, k > FastK, and queries
     //    with 2+ fast-listed terms (a doc containing several hot terms
     //    could outrank both prefixes, so prefix unions are unsound there).
     //
-    // The hybrid and WAND paths score with the SAME BM25.score Column
-    // expression and feed the same ranking tail; the fast-single path scores
-    // on the driver with [[Postings.idf]]/[[Postings.tfNorm]] scalars, which
-    // MUST mirror BM25.score's Column tree op-for-op (the bit-equality
-    // contract is documented and spec-pinned at the mirror in [[Postings]] —
-    // change one side only and fast-route rank identity silently breaks).
-    // Rank identity across routes is then by construction, and the shared
-    // oracle pins it.
+    // The hybrid and WAND runs score with [[Postings.idf]]/[[Postings.tfNorm]],
+    // like the fast-single path; those scalars MUST mirror BM25.score's
+    // Column tree op-for-op (the bit-equality contract is documented and
+    // spec-pinned at the mirror in [[Postings]] — change one side only and
+    // rank identity with the naive plan silently breaks). Rank identity
+    // across routes is then by construction, and the shared oracle pins it.
     val fastK = graft.index.IndexBuilder.FastK
     val metaAll = reader.termMeta(querySet.flatMap(_.terms).distinct)
     def presentOf(q: Query): Seq[String] = q.terms.distinct.filter(metaAll.contains)
@@ -149,26 +139,15 @@ object Wand {
       else Nil
     val (fastSingleQs, rest) = querySet.partition(q =>
       presentOf(q).size == 1 && fastOf(q).size == 1)
-    // hybrid also requires the rare side to be driver-collectable: each rare
-    // list is < FastMinDf postings BY DEFINITION (a bigger term would be
-    // fast-listed), but a query with MANY rare terms could still funnel an
-    // unbounded total through the driver — enforce Σ df_rare ≤
-    // [[HybridMaxRarePostings]] up front (dfs are driver-resident metadata,
-    // zero jobs) and route the overflow to WAND, so the bound is a guard,
-    // not an emergent property.
-    val (hybridQs, wandQs) = rest.partition { q =>
-      presentOf(q).size >= 2 && fastOf(q).size == 1 && {
-        val hot = fastOf(q).head
-        presentOf(q).filterNot(_ == hot).map(t => metaAll(t)._1).sum <= HybridMaxRarePostings
-      }
-    }
+    val (hybridQs, wandQs) = rest.partition(q => presentOf(q).size >= 2 && fastOf(q).size == 1)
+    val (absentQs, shardWandQs) = wandQs.partition(q => presentOf(q).isEmpty)
     metrics.foreach { m =>
       m.routedFast.add(fastSingleQs.size.toLong)
       m.routedHybrid.add(hybridQs.size.toLong)
-      m.routedWand.add(wandQs.count(q => presentOf(q).nonEmpty).toLong)
+      m.routedWand.add(shardWandQs.size.toLong)
       // all-terms-absent queries run NO route (404 analog, zero result rows);
       // counted separately so the four counters sum to the batch size
-      m.routedAbsent.add(wandQs.count(q => presentOf(q).isEmpty).toLong)
+      m.routedAbsent.add(absentQs.size.toLong)
     }
 
     // FAST SINGLE — entirely driver-local, ZERO Spark jobs (v7): the stored
@@ -189,145 +168,92 @@ object Wand {
             graft.score.BM25.quantize(raw))
         }
       }
-    def fastLocalDf: Option[DataFrame] =
-      if (fastSingleQs.isEmpty) None
-      else Some(fastLocal.sortBy(r => (r._1, r._2))
-        .toDF("query_id", "rank", "repo", "path", "commit", "score_r"))
 
-    val hybridCand: Option[DataFrame] = if (hybridQs.isEmpty) None else {
-      // ONE decode pass collects every hybrid query's rare lists (terms
-      // deduplicated across queries): a batch of H hybrid queries pays one
-      // bounded collect, not H serial jobs at plan-build time (round-4
-      // advice). Total rows ≤ Σ per-query caps — driver-bounded by the
-      // HybridMaxRarePostings guard above.
-      val rareTerms = hybridQs.flatMap { q =>
-        presentOf(q).filterNot(_ == fastOf(q).head)
-      }.distinct
-      val rareByTerm = IndexSearch.decodedTermRows(spark, reader, rareTerms, None)
-        .as[(String, Long, Long, Int, Long)].collect().groupBy(_._1)
-      Some(hybridQs.map { q =>
-        val present = presentOf(q)
-        val hot = fastOf(q).head
-        val rare = present.filterNot(_ == hot)
-        val rareLocal = rare.flatMap(t => rareByTerm.getOrElse(t, Array.empty[(String, Long, Long, Int, Long)]).toSeq)
-        val prefixIds = reader.fastList(hot).get.ids
-        val wanted = (prefixIds ++ rareLocal.map(_._3)).distinct.sorted
-        metrics.foreach(_.candidates.add(wanted.length.toLong))
-        val hotRows = IndexSearch.decodedTermRows(spark, reader, Seq(hot), Some(wanted))
-        hotRows.unionByName(rareLocal.toDF("term", "df", "doc_id", "tf", "dl"))
-          .select(lit(q.queryId).as("query_id"), lit(q.k).as("k"), col("doc_id"),
-            graft.score.BM25.score(col("tf"), col("df"), col("dl"),
-              lit(n), lit(avgdl)).as("s"))
-          .groupBy("query_id", "k", "doc_id")
-          .agg(sum(col("s")).as("score"))
-      }.reduce(_ unionByName _))
-    }
-
-    val meta = metaAll.view.filterKeys(wandQs.flatMap(_.terms).toSet).toMap
-
-    // docs key columns for the ranking tail; a BLOOM scope's rare false
-    // positives are removed HERE, exactly (the repo predicate re-checks
-    // membership the probe only approximated)
-    def docKeys: DataFrame = {
-      val base = reader.docs.select("doc_id", "repo", "path", "commit")
-      (scope, repoScope) match {
-        case (Some(pr), Some(rs)) if !pr.exact => base.filter(col("repo").isin(rs.distinct: _*))
-        case _ => base
-      }
-    }
-    // attach the driver-local fast rows (already final-shaped) to the
-    // UNSORTED ranked result, then apply the output-edge total order ONCE
-    // (queryIds are disjoint across routes by partition; rankByKeys' own
-    // sorted form would pay a second single-partition sort on every mixed
-    // batch). Output is ≤ Σk rows — a single-partition sort, not orderBy
-    // (whose range partitioner runs a sampling job per query).
-    def withFast(rankedUnsorted: DataFrame): DataFrame =
-      NaiveSearch.sortedTail(fastLocalDf match {
-        case Some(f) => rankedUnsorted.unionByName(f)
-        case None => rankedUnsorted
-      })
-
-    val nonWand: Seq[DataFrame] = hybridCand.toSeq
-    if (meta.isEmpty && nonWand.isEmpty)
-      // only fast-single and/or all-terms-absent queries remain: answer from
-      // the driver — a LocalTableScan collect is ZERO Spark jobs (absent
-      // terms are the 404-with-null-results analog and emit nothing)
-      return fastLocalDf.getOrElse(
-        spark.emptyDataset[(String, Int, String, String, String, Double)]
-          .toDF("query_id", "rank", "repo", "path", "commit", "score_r"))
-    if (meta.isEmpty)
-      return withFast(NaiveSearch.rankByKeysUnsorted(
-        docKeys.join(broadcast(nonWand.reduce(_ unionByName _)), "doc_id")))
+    val shardQs: Array[ShardQuery] = (hybridQs.map { q =>
+      val hot = fastOf(q).head
+      ShardQuery(q.queryId, q.k, presentOf(q).toArray, hot, reader.fastList(hot).get.ids.sorted)
+    } ++ shardWandQs.map(q => ShardQuery(q.queryId, q.k, presentOf(q).toArray, null, null))).toArray
+    // only fast-single and/or all-terms-absent queries: answer from the
+    // driver with ZERO Spark jobs (absent terms are the 404-with-null-results
+    // analog and emit nothing)
+    if (shardQs.isEmpty) return ShardTail.finish(spark, Nil, fastLocal)
 
     // membership closure captures only the broadcast handle (probe.fn), so
-    // the shard tasks ship the broadcast, not the reader
+    // the shard tasks ship the broadcast, not the reader; a Bloom probe's
+    // false positives are dropped by the shard tail's repo re-check
     val scopeFn: Long => Boolean = scope.map(_.fn).getOrElse((_: Long) => true)
+    val repoCheck = repoScope.filter(_ => scope.exists(!_.exact)).map(ShardTail.repoBytes)
 
-    // ONE candidate route for any layer count: every (salt shard, query)
-    // WAND run executes inside mapPartitions with ZERO exchange — shuffling
-    // the encoded posting blobs made multi-term queries stage-latency-bound.
     // Each query term is read from its newest-wins layer, and the winning
-    // layers are zipped partition by partition: the reader pins every
-    // layer's segments with the same salt partitioner
-    // ([[IndexReader.pinSegments]]), so partition i of each layer holds the
-    // same salt shards and one task sees ALL of a (salt, query)'s term rows.
-    // zipPartitions throws if the partition counts ever differ; a union that
-    // fell back to concatenating partitions would instead split a shard's
-    // terms across tasks and silently break every cross-layer score sum.
+    // layers plus the key shards are zipped partition by partition: the
+    // reader pins every layer's segments and the key shards with partition
+    // i == salt i ([[IndexReader.pinSegments]]), so one task sees ALL of a
+    // (salt, query)'s term rows and the doc keys of that salt.
+    // zipPartitions throws if the partition counts ever differ, and every
+    // row's salt is checked against its task's shard, so misalignment fails
+    // loudly instead of splitting a shard's terms across tasks.
     // Per-term (layer ordinal, bound scale, idf) comes from a driver-built
     // map, so the rows carry nothing extra.
+    val meta = metaAll.view.filterKeys(shardQs.flatMap(_.terms).toSet).toMap
     val termInfo: Map[String, (Int, Double, Double)] = meta.map { case (t, (df, ord)) =>
       t -> ((ord, reader.layers(ord).boundScale, Postings.idf(df, n)))
     }
-    val qLocal: Array[(String, Int, Array[String])] =
-      wandQs.map(q => (q.queryId, q.k, q.terms.distinct.toArray)).toArray
     val tag = reader.cacheTag
-    val candidates: DataFrame = reader.newestWins(meta.keys.toSeq, _.segments)
+    val rows = reader.newestWins(meta.keys.toSeq, _.segments)
       .map { case (_, slice) =>
         slice.select("salt", "term", "df", "postings", "dls", "block_max", "block_dir")
           .as[(Int, String, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte])].rdd
       }
       .reduce((a, b) => a.zipPartitions(b)(_ ++ _))
-      .mapPartitions { it =>
-        val bySalt = mutable.LinkedHashMap.empty[Int, mutable.HashMap[String, TermList]]
+      .zipPartitions(reader.keys) { (it, shards) =>
+        val shard = shards.next()
+        val byTerm = mutable.HashMap.empty[String, TermList]
         it.foreach { case (salt, t, segDf, p, d, bm, dir) =>
+          shard.requireSalt(salt)
           val (ord, scale, idf) = termInfo(t)
           val blocks = PostingCache.open(s"$tag#L$ord", salt, t, segDf, p, d, dir)
           val scaled = if (scale == 1.0) bm.toArray else bm.iterator.map(_ * scale).toArray
-          bySalt.getOrElseUpdate(salt, mutable.HashMap.empty).put(t, TermList(t, idf, blocks, scaled))
+          byTerm.put(t, TermList(t, idf, blocks, scaled))
         }
-        bySalt.iterator.flatMap { case (_, byTerm) =>
-          qLocal.iterator.flatMap { case (qid, k, terms) =>
-            val lists = terms.flatMap(byTerm.get).toSeq
-            if (lists.isEmpty) Iterator.empty
-            else {
-              val decodedBefore =
-                if (metrics.isDefined) lists.iterator.map(_.blocks.decodedBlocks.toLong).sum else 0L
-              val counters = new WandCounters
-              val res = wandShardTopK(lists, k, avgdl, counters, scopeFn)
-              metrics.foreach { m =>
-                m.candidates.add(counters.evaluated)
-                m.blockSkips.add(counters.skips)
-                m.blocksDecoded.add(lists.iterator.map(_.blocks.decodedBlocks.toLong).sum - decodedBefore)
-              }
-              res.iterator.map { case (docId, score) => (qid, k, docId, score) }
+        shardQs.iterator.flatMap { q =>
+          val lists = q.terms.flatMap(byTerm.get).toSeq
+          if (lists.isEmpty) Iterator.empty
+          else {
+            val decodedBefore =
+              if (metrics.isDefined) lists.iterator.map(_.blocks.decodedBlocks.toLong).sum else 0L
+            val counters = new WandCounters
+            val inScope = if (q.hot == null) scopeFn else q.hybridScope(lists)
+            val hits = ShardTail.select(shard, q.queryId, q.k,
+              wandShardTopK(lists, q.k, avgdl, counters, inScope), repoCheck)
+            metrics.foreach { m =>
+              m.candidates.add(counters.evaluated)
+              m.blockSkips.add(counters.skips)
+              m.blocksDecoded.add(lists.iterator.map(_.blocks.decodedBlocks.toLong).sum - decodedBefore)
+              m.tailRows.add(hits.length.toLong)
             }
+            hits.iterator
           }
         }
       }
-      .toDF("query_id", "k", "doc_id", "score")
+      .collect()
+    ShardTail.finish(spark, rows.toSeq, fastLocal)
+  }
 
-    // Candidate sets are threshold-pruned (≤ k + ε-ties per shard per
-    // query; hybrid ≤ FastK + Σ df_rare) — BROADCAST them against the
-    // corpus-sized docs sidecar. Without the hint the initial plan is an
-    // SMJ whose docs-side hash shuffle (N rows) materializes as an AQE
-    // stage on EVERY query before AQE converts the join to broadcast
-    // anyway; the hint makes the docs side a plain in-memory columnar
-    // scan with no exchange. On a degenerate all-ties corpus the tie set
-    // can grow large, but that is exactly the size AQE's runtime stats
-    // already chose to broadcast (BuildLeft) on the same input.
-    val allCand = (Seq(candidates) ++ nonWand).reduce(_ unionByName _)
-    withFast(NaiveSearch.rankByKeysUnsorted(docKeys.join(broadcast(allCand), "doc_id")))
+  /** One query of the shard job. `hot` and `prefix` (the hot term's fast
+    * prefix ids, sorted) are set for a hybrid query, null for WAND.
+    */
+  private[engine] final case class ShardQuery(queryId: String, k: Int, terms: Array[String], hot: String, prefix: Array[Long]) {
+
+    /** Hybrid candidate membership in one shard: the prefix ids plus every
+      * doc of the shard's rare lists.
+      */
+    def hybridScope(lists: Seq[TermList]): Long => Boolean = {
+      val ids = (prefix.iterator ++ lists.iterator.filter(_.term != hot).flatMap { tl =>
+        Iterator.range(0, tl.blocks.count).map(tl.blocks.id)
+      }).toArray
+      java.util.Arrays.sort(ids)
+      d => java.util.Arrays.binarySearch(ids, d) >= 0
+    }
   }
 
   /** One term's shard sub-postings, accessed block-lazily: the cursor's

@@ -412,7 +412,7 @@ object IndexBuilder {
       missing.foreach { s => deleteRecursively(Paths.get(s"${paths.segmentsDir}/salt=$s")) }
 
       val tfd = termFreqs
-        .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(numSalts)).cast("int"))
+        .withColumn("salt", TermHash.saltCol(col("doc_id"), numSalts))
         .filter(col("salt").isin(missing: _*))
 
       val t0 = System.nanoTime()

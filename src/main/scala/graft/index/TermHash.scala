@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.spark.sql.{Column, functions}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,9 +24,14 @@ object TermHash {
     (if (m < 0) m + n else m).toInt
   }
 
-  /** Spark SQL `pmod(xxhash64(docId), n)` for a LongType column, computed
-    * locally — the build's doc-salt function
-    * (`pmod(xxhash64(col("doc_id")), numSalts)`), used by the delta-layer
+  /** The doc-salt function as a Column: the salt shard of a `doc_id`
+    * column, `pmod(xxhash64(docId), n)`. Every doc-salted relation (the
+    * build's segments, the reader's key shards, the index plans' exchange)
+    * uses it, so a doc lands in the same shard everywhere.
+    */
+  def saltCol(docId: Column, n: Int): Column = functions.pmod(functions.xxhash64(docId), functions.lit(n)).cast("int")
+
+  /** [[saltCol]] computed locally for one doc id, used by the delta-layer
     * segments writer to split merged lists WITHOUT a Spark-side explode.
     */
   def salt(docId: Long, n: Int): Int = {

@@ -1,5 +1,6 @@
 package graft.tokenize
 
+import java.util.Locale
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,14 +24,14 @@ object Tokenizer {
   val SplitRegex: String = "[^a-z0-9_]+"
 
   /** Normalize one query/lookup term exactly like index-time tokens.
-    * Lowering consistency: every path lowers with the same semantics —
-    * Spark's `lower()`/UTF8String.toLowerCase take an ASCII fast path and
-    * fall back to java.lang.String.toLowerCase (default locale), which is
-    * exactly what the scan tokenizers call — so a non-default JVM locale
-    * shifts ALL paths together, never one side of a parity pair
-    * (TokenCountParitySpec exercises the non-ASCII lower-into-class cases).
+    * Lowering is pinned to `Locale.ROOT` here and in the scan tokenizers:
+    * under a Turkish default locale `"I".toLowerCase` is the dotless `ı`
+    * (not a token char), while [[TokenCount]]'s UTF8String lowering of
+    * ASCII content is locale-free — dl and the token count would split
+    * apart. (Spark's own non-ASCII lowering still follows the default
+    * locale; TokenCountParitySpec exercises the lower-into-class cases.)
     */
-  def normalizeTerm(t: String): String = t.toLowerCase
+  def normalizeTerm(t: String): String = t.toLowerCase(Locale.ROOT)
 
   /** Array-of-tokens column for a content column (empties filtered). */
   def tokensCol(content: Column): Column =
@@ -108,8 +109,8 @@ object Tokenizer {
           // to Pattern.split(SplitRegex) with empties dropped (splitting on
           // maximal separator runs partitions the string; the non-empty
           // pieces ARE the token runs), without the regex engine or the
-          // token-array materialization. Same Java toLowerCase as before.
-          val s = content.toLowerCase
+          // token-array materialization.
+          val s = content.toLowerCase(Locale.ROOT)
           val counts = new java.util.HashMap[String, Int]()
           var dl = 0L
           var i = 0
@@ -156,7 +157,7 @@ object Tokenizer {
         val byLen = needles.groupBy(_.length)
         val maxLen = if (needles.isEmpty) 0 else needles.map(_.length).max
         it.flatMap { case (docId, content) =>
-          val s = content.toLowerCase
+          val s = content.toLowerCase(Locale.ROOT)
           val counts = new Array[Int](needles.length)
           var dl = 0L
           var i = 0

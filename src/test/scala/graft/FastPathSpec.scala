@@ -168,41 +168,26 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dup.map(_.getInt(1)).toSeq === (1 to 5))
   }
 
-  test("hybrid cap: many-rare-term query exceeds the driver-collect bound, falls back to WAND") {
+  test("hybrid many-rare-term query: routes hybrid, matches naive, evaluates < df/2") {
+    // hybrid runs inside the shard job (prefix ∪ the shard's rare-list docs
+    // as the WAND scope), so nothing funnels through the driver and no
+    // Σ df_rare cap exists: a 15-term query still routes hybrid
     val reader = IndexReader.get(spark, paths)
     val rare = (0 until 14).map(i => s"cust_$i")
-    val dfs = reader.dfOf(rare)
-    val q = Query("cap", "func" +: rare, 10)
-    // at sf0.001 no realistic query reaches 32 k rare postings — lower the
-    // cap below the fixture's Σ df_rare to exercise the guard, restore after
-    val prev = Wand.HybridMaxRarePostings
-    Wand.HybridMaxRarePostings = dfs.values.sum - 1
-    try {
-      val m = QueryMetrics(spark)
-      val got = Wand.topKAt(spark, paths, Seq(q), Some(m)).collect()
-      // the route counters are driver-exact: the over-cap query must have
-      // been refused by the hybrid partition and WAND-routed (candidate
-      // counts can't discriminate — BMW pruning can make WAND evaluate
-      // FEWER docs than the hybrid union holds)
-      assert(m.routedWand.value === 1L && m.routedHybrid.value === 0L,
-        s"expected WAND fallback, routes = ${m.snapshot}")
-      val s2 = spark; import s2.implicits._
-      val want = NaiveSearch.topK(spark, graft.corpus.Corpus.corpus(spark, sfDir),
-        ("func" +: rare).map(t => ("cap", t, 10)).toDF("query_id", "term", "k")).collect()
-      def key(r: org.apache.spark.sql.Row) =
-        (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getString(4), r.getDouble(5))
-      assert(got.map(key).toSeq === want.map(key).toSeq,
-        "capped fallback diverged from the oracle plan")
-      // with the cap restored, the same query routes hybrid (bounded union)
-      Wand.HybridMaxRarePostings = prev
-      val m2 = QueryMetrics(spark)
-      val got2 = Wand.topKAt(spark, paths, Seq(q.copy(queryId = "cap2")), Some(m2)).collect()
-      assert(m2.routedHybrid.value === 1L && m2.routedWand.value === 0L,
-        s"hybrid route not re-engaged: routes = ${m2.snapshot}")
-      assert(got2.map(r => (r.getInt(1), r.getString(2), r.getString(3), r.getString(4), r.getDouble(5))).toSeq ===
-        got.map(r => (r.getInt(1), r.getString(2), r.getString(3), r.getString(4), r.getDouble(5))).toSeq,
-        "hybrid and WAND answers must be identical")
-    } finally Wand.HybridMaxRarePostings = prev
+    assert(reader.dfOf(rare).size === rare.size, "fixture: every cust_* term must be present")
+    val q = Query("many", "func" +: rare, 10)
+    val m = QueryMetrics(spark)
+    val got = Wand.topKAt(spark, paths, Seq(q), Some(m)).collect()
+    assert(m.routedHybrid.value === 1L && m.routedWand.value === 0L, s"routes = ${m.snapshot}")
+    val hotDf = reader.fastList("func").get.df
+    assert(m.candidates.value > 0L && m.candidates.value < hotDf / 2,
+      s"hybrid scope not applied: evaluated ${m.candidates.value} of df=$hotDf")
+    val s = spark; import s.implicits._
+    val want = NaiveSearch.topK(spark, graft.corpus.Corpus.corpus(spark, sfDir),
+      ("func" +: rare).map(t => ("many", t, 10)).toDF("query_id", "term", "k")).collect()
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getString(4), r.getDouble(5))
+    assert(got.map(key).toSeq === want.map(key).toSeq, "hybrid answer diverged from the oracle plan")
   }
 
   test("layered root: addBatch re-ranks the sidecar, fast route engages at the new avgdl") {

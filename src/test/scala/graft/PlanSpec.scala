@@ -37,6 +37,29 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** `f`'s result, the Spark jobs it started and the shuffle bytes its
+    * tasks wrote plus read.
+    */
+  private def sparkWork[A](f: => A): (A, Int, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = Option(te.taskMetrics).foreach { m =>
+        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      (a, jobs.get, bytes.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   test("index cold scan: term filter pushed down + bucket partitions pruned") {
     import org.apache.spark.sql.functions._
     val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
@@ -53,7 +76,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("index hot path: query runs against the resident cached reader") {
     val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
-    val p = plan(graft.engine.IndexSearch.topKAt(spark, paths, QuerySet.df(spark)))
+    // topKAt returns a local result (its shard job has already run), so the
+    // plan to inspect is the scored relation the shard tail consumes
+    val reader = graft.engine.IndexReader.get(spark, paths)
+    val p = plan(graft.engine.IndexSearch.scoredAt(reader, QuerySet.df(spark)))
     assert(p.contains("InMemoryTableScan") || p.contains("Scan In-memory"),
       s"hot query path does not use the cached index:\n$p")
   }
@@ -90,17 +116,23 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ranking tails use the bounded top-k aggregate, never a query-id window") {
     // a Window.partitionBy(query_id) funnels each query's whole candidate
-    // set through one task; the k-heap aggregate reduces map-side first
+    // set through one task; the k-heap aggregate reduces map-side first.
+    // The index routes rank inside their salt shards (ShardTail); their
+    // scored relations must stay window-free too.
     val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
-    val plans = Seq(
+    val reader = graft.engine.IndexReader.get(spark, paths)
+    val aggPlans = Seq(
       plan(graft.engine.NaiveSearch.topK(spark, Corpus.corpus(spark, sfDir), QuerySet.df(spark))),
-      plan(graft.engine.IndexSearch.topKAt(spark, paths, QuerySet.df(spark))),
-      plan(graft.engine.Wand.topKAt(spark, paths, QuerySet.all)),
       plan(graft.ops.Ann.bruteForceTopK(graft.ops.Ann.embeddings(spark, sfDir))),
       // IVF incl. k-means assignment + probe selection (max_by / TopK agg)
       plan(graft.ops.Ann.ivfTopK(graft.ops.Ann.embeddings(spark, sfDir))))
-    plans.foreach { p =>
+    val shardPlans = Seq(
+      plan(graft.engine.IndexSearch.scoredAt(reader, QuerySet.df(spark))),
+      plan(graft.engine.IndexSearch.scoredAndAt(reader, QuerySet.dfAnd(spark))))
+    aggPlans.foreach { p =>
       assert(p.contains("top_k_by_score"), s"ranking tail is not the top-k aggregate:\n$p")
+    }
+    (aggPlans ++ shardPlans).foreach { p =>
       assert(!p.contains("RunningWindowFunction") && !p.contains("Window ["),
         s"query ranking still uses a window:\n$p")
     }
@@ -117,15 +149,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("scoped search keeps the top-k aggregate tail and broadcasts only query terms") {
-    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
-    val p = plan(graft.engine.Wand.topKAt(spark, paths, QuerySet.all,
-      repoScope = Some(QuerySet.scopeRepos)))
-    assert(p.contains("top_k_by_score"), s"scoped tail lost the top-k aggregate:\n$p")
-    assert(!p.contains("RunningWindowFunction") && !p.contains("Window ["),
-      s"scoped ranking uses a window:\n$p")
-  }
-
   test("LSH dedup verify joins candidates to shingles (no corpus-wide self-join recompute)") {
     // the verify stage must hash-join the candidate pair list against the
     // per-doc shingle sets; a second full shingle⋈shingle self-join would
@@ -140,26 +163,71 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"LSH verify recomputes the global shingle self-join:\n$p")
   }
 
-  test("serve ranking tail: candidates broadcast against docs, single-partition sort") {
+  /** Runs `run` once to warm the reader (term metadata, fast lists, scope
+    * probe, reader pins), then asserts the second, untagged run is one Spark
+    * job with no shuffle.
+    */
+  private def assertWarmOneJob(name: String)(run: String => Unit): Unit = {
+    run("-warm")
+    val (_, jobs, shuffleBytes) = sparkWork(run(""))
+    assert(jobs === 1, s"warm $name request ran $jobs Spark jobs")
+    assert(shuffleBytes === 0L, s"warm $name request shuffled $shuffleBytes bytes")
+  }
+
+  private def tagged(qs: Seq[graft.model.Query], tag: String) =
+    qs.map(q => q.copy(queryId = q.queryId + tag))
+
+  test("warm WAND request runs one Spark job, no shuffle") {
+    import graft.engine.Wand
     val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
-    graft.engine.Wand.ForceWandRoute = true
-    try {
-      val p = plan(graft.engine.Wand.topKAt(spark, paths, QuerySet.all))
-      // candidate sets are k + ε-ties bounded → they must be the broadcast
-      // side; without the hint the initial plan shuffles the corpus-sized
-      // docs sidecar on doc_id for an SMJ on EVERY query
-      assert(!p.contains("SortMergeJoin"), s"serve tail plans an SMJ against docs:\n$p")
-      // ≤ Σk output rows: a range-partitioned orderBy would run a sampling
-      // job + exchange per query for nothing
-      assert(!p.contains("rangepartitioning"), s"serve tail range-partitions its sort:\n$p")
-      assert(p.contains("Coalesce"), s"serve tail lost the single-partition sort:\n$p")
-    } finally graft.engine.Wand.ForceWandRoute = false
+    assertWarmOneJob("wand batch") { tag =>
+      Wand.ForceWandRoute = true
+      try Wand.topKAt(spark, paths, tagged(QuerySet.all, tag)).collect()
+      finally Wand.ForceWandRoute = false
+      ()
+    }
+  }
+
+  test("warm hybrid request runs one Spark job, no shuffle") {
+    import graft.engine.{QueryMetrics, Wand}
+    import graft.model.Query
+    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
+    val hybrid = Seq(Query("hyb", Seq("func", "handler_0_3"), 10))
+    assertWarmOneJob("hybrid") { tag =>
+      val m = QueryMetrics(spark)
+      Wand.topKAt(spark, paths, tagged(hybrid, tag), Some(m)).collect()
+      assert(m.routedHybrid.value === 1L, s"not routed hybrid: ${m.snapshot}")
+    }
+  }
+
+  test("warm scoped request runs one Spark job, no shuffle") {
+    import graft.engine.Wand
+    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
+    assertWarmOneJob("scoped") { tag =>
+      Wand.topKAt(spark, paths, tagged(QuerySet.all, tag), repoScope = Some(QuerySet.scopeRepos)).collect()
+      ()
+    }
+  }
+
+  test("conjunctive plan: one exchange, REPARTITION_BY_NUM on salt") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
+    val reader = graft.engine.IndexReader.get(spark, paths)
+    val scored = graft.engine.IndexSearch.scoredAndAt(reader, QuerySet.dfAnd(spark))
+    val partitions = scored.rdd.getNumPartitions // AQE: the final plan, stages run
+    val helper = new AdaptiveSparkPlanHelper {}
+    val exchanges = helper.collect(scored.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    val p = plan(scored)
+    assert(exchanges.size === 1, s"expected exactly one exchange:\n$p")
+    assert(exchanges.head.shuffleOrigin === REPARTITION_BY_NUM, s"exchange is not the salt repartition:\n$p")
+    assert(exchanges.head.outputPartitioning.numPartitions === reader.stats.numSalts)
+    assert(exchanges.head.outputPartitioning.toString.contains("salt"), s"exchange not keyed on salt:\n$p")
+    assert(partitions === reader.stats.numSalts, "AQE changed the salt partition count")
   }
 
   test("layered WAND takes the exchange-free route: no groupByKey, no hash exchange under the candidate broadcast") {
     import graft.index.{Incremental, IndexBuilder, IndexPaths}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     val s = spark
     import s.implicits._
     def corpus(docs: Seq[(String, String)]) =
@@ -178,19 +246,55 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val meta = reader.termMeta(Seq("basetail", "common"))
     assert(reader.layers.size === 2 && meta("basetail")._2 === 0 && meta("common")._2 === 1)
 
-    val df = graft.engine.Wand.topKAt(spark, outPaths,
-      Seq(graft.model.Query("x", Seq("basetail", "common"), 5)))
-    val p = plan(df)
-    assert(!p.contains("AppendColumns") && !p.contains("MapGroups"),
-      s"layered WAND still groups by (salt, query):\n$p")
-    val helper = new AdaptiveSparkPlanHelper {}
-    val broadcasts = helper.collect(df.queryExecution.executedPlan) { case b: BroadcastExchangeExec => b }
-    assert(broadcasts.nonEmpty, s"ranking tail lost its candidate broadcast:\n$p")
-    broadcasts.foreach { b =>
-      assert(helper.collect(b.child) { case e: ShuffleExchangeExec => e }.isEmpty,
-        s"hash exchange on the candidate side of the ranking tail:\n$p")
+    def query(id: String) = graft.engine.Wand.topKAt(spark, outPaths,
+      Seq(graft.model.Query(id, Seq("basetail", "common"), 5))).collect()
+    query("warm")
+    // a groupByKey((salt, query)) or any exchange would show as a second
+    // job or as shuffle bytes
+    val (rows, jobs, shuffleBytes) = sparkWork(query("x"))
+    assert(jobs === 1, s"warm layered WAND request ran $jobs Spark jobs")
+    assert(shuffleBytes === 0L, s"warm layered WAND request shuffled $shuffleBytes bytes")
+    assert(rows.length === 5)
+    graft.engine.IndexReader.invalidate(outPaths.root)
+    Bench.deleteTree(root)
+  }
+
+  test("pins align: partition i of segments and key shards holds only salt i") {
+    import graft.index.{Incremental, IndexBuilder, IndexPaths, TermHash}
+    val s = spark
+    import s.implicits._
+    def corpus(docs: Seq[String]) =
+      docs.map(path => ("repo-a", path, "c0ffee000000", "go", s"common $path"))
+        .toDF("repo", "path", "commit", "lang", "content")
+    val base = (0 until 40).map(i => f"base$i%02d")
+    val delta = (0 until 20).map(i => f"delta$i%02d")
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-align").toString
+    val basePaths = IndexPaths(s"$root/base")
+    val outPaths = IndexPaths(s"$root/out")
+    // 4 salts under 8 shuffle partitions: a hash repartition on salt would
+    // leave 8 partitions with salts scattered over them
+    IndexBuilder.build(spark, corpus(base), basePaths, numSalts = 4, numBuckets = 4,
+      buildArgs = "plan-spec-align")
+    Incremental.addBatch(spark, basePaths, corpus(base ++ delta), outPaths)
+    val reader = graft.engine.IndexReader.get(spark, outPaths)
+    assert(reader.layers.size === 2 && reader.stats.numSalts === 4)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "8")
+    reader.layers.foreach { l =>
+      val salts = l.segments.select("salt").as[Int].rdd
+      assert(salts.getNumPartitions === 4, s"layer ${l.ordinal} segments pinned into the wrong partition count")
+      val placed = salts.mapPartitionsWithIndex((i, it) => it.map(salt => (i, salt))).collect()
+      assert(placed.nonEmpty && placed.forall { case (i, salt) => i == salt },
+        s"layer ${l.ordinal}: (partition, salt) = ${placed.distinct.toSeq}")
     }
-    assert(df.count() === 5L)
+    assert(reader.keys.getNumPartitions === 4, "key shards pinned into the wrong partition count")
+    val shards = reader.keys.mapPartitionsWithIndex { (i, it) =>
+      it.map(sh => (i, sh.salt, (0 until sh.size).map(j => TermHash.salt(sh.docId(j), 4)).toSet, sh.size))
+    }.collect()
+    assert(shards.map(_._1).toSeq === (0 until 4), "one key shard per partition")
+    shards.foreach { case (i, salt, docSalts, _) =>
+      assert(salt === i && docSalts.forall(_ == i), s"partition $i: shard salt $salt, doc salts $docSalts")
+    }
+    assert(shards.map(_._4).sum === base.size + delta.size, "key shards lost or duplicated docs")
     graft.engine.IndexReader.invalidate(outPaths.root)
     Bench.deleteTree(root)
   }

@@ -61,7 +61,7 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("repo scope: WAND inner-loop filter == docs-join filter, and ranks are scope-local") {
     // two INDEPENDENT scope mechanisms must agree: the OR path rejects
     // candidates inside the WAND evaluation loop (broadcast docId set); the
-    // index path filters the docs join before the ranking tail
+    // index path drops out-of-scope repos in the shard tail before ranking
     val scope = QuerySet.scopeRepos
     val wand = SearchApi.search(spark, paths, Seq("func", "buffer"), 10, repoScope = Some(scope)).collect()
     val viaIndex = {
@@ -149,5 +149,7 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(keys.nonEmpty && keys.subsetOf(rare))
     // conjunction with an absent term is empty
     assert(SearchApi.search(spark, paths, Seq("func", "zzznotfound"), 10, conjunctive = true).count() === 0)
+    // no term in the index at all: nothing to score, still an empty result
+    assert(SearchApi.search(spark, paths, Seq("zzznotfound", "zzzalsonot"), 10, conjunctive = true).count() === 0)
   }
 }

@@ -101,6 +101,35 @@ class TokenCountParitySpec extends org.scalatest.funsuite.AnyFunSuite {
       assert(diff == 0L, s"$diff corpus rows disagree between tokenCountCol and size(tokensCol)")
     } finally spark.stop()
   }
+
+  test("Turkish default locale: dl == tokenCountCol on content with I") {
+    // tr lowers 'I' to the dotless U+0131, which is no token char; the
+    // UTF8String lowering behind tokenCountCol is locale-free on ASCII, so
+    // a default-locale scan tokenizer would split "fooIbar" in two
+    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val prev = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      import spark.implicits._
+      import org.apache.spark.sql.functions.col
+      import graft.tokenize.Tokenizer
+      val c = Seq((1L, "fooIbar"), (2L, "FILE_ID Ident"), (3L, "INIT(I, i)")).toDF("doc_id", "content")
+      val count = c.select(col("doc_id"), Tokenizer.tokenCountCol(col("content")).cast("long"))
+        .as[(Long, Long)].collect().toMap
+      val dl = Tokenizer.termFreqsWithDl(c).select("doc_id", "dl").as[(Long, Long)].collect().toMap
+      val dlRestricted = Tokenizer.termFreqsRestricted(c, Seq("foo", "fooibar", "file_id", "ident", "init", "i"))
+        .select("doc_id", "dl").as[(Long, Long)].collect().toMap
+      assert(dl === count, "termFreqsWithDl dl diverges from tokenCountCol")
+      assert(dlRestricted === count, "termFreqsRestricted dl diverges from tokenCountCol")
+      assert(Tokenizer.normalizeTerm("FILE_ID") === "file_id")
+    } finally {
+      java.util.Locale.setDefault(prev)
+      spark.stop()
+    }
+  }
 }
 
 /** r6: the needle-restricted tokenizer must equal the full tokenize +
