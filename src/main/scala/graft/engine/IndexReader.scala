@@ -37,11 +37,11 @@ final case class IndexLayer(
   *
   * Layered roots (incremental adds, [[graft.index.Incremental.addBatch]])
   * are served directly: term metadata resolves newest-wins per term, the
-  * query paths read exactly one layer's row per term, and `docs` is the
-  * union of the disjoint per-layer sidecars — the reference's
-  * query-over-live-store behavior (`dgraph.go:62-92`, `FindNode` serves
-  * whatever has been upserted). `docs` itself is NOT pinned: only the scope
-  * probe reads it, once per distinct scope.
+  * query paths read exactly one layer's row per term, and the key shards
+  * are built from the union of the disjoint per-layer docs sidecars — the
+  * reference's query-over-live-store behavior (`dgraph.go:62-92`,
+  * `FindNode` serves whatever has been upserted). The shards also answer
+  * repo scopes: no request reads the docs sidecars.
   *
   * At 10^12-doc scale you would pin only the term metadata and let posting
   * blocks stream from storage; at bench scale the whole index fits and the
@@ -49,7 +49,7 @@ final case class IndexLayer(
   */
 final case class IndexReader(
     paths: IndexPaths, stats: IndexStats, snapshotVersion: Int,
-    layers: Seq[IndexLayer], docs: DataFrame, keys: RDD[DocKeyShard], cacheTag: String,
+    layers: Seq[IndexLayer], keys: RDD[DocKeyShard], cacheTag: String,
     fast: Option[DataFrame]) {
 
   /** True once the session this reader was opened in has stopped. */
@@ -112,27 +112,6 @@ final case class IndexReader(
         .filter(col("term").isin(layerTerms: _*))
     }
 
-  // repo-scope key -> lazily-built broadcast scope probe. A bare
-  // TrieMap.getOrElseUpdate may evaluate the thunk on BOTH racing threads
-  // (the same hazard IndexReader.open guards with openLock) — the loser's
-  // scope scan would be a duplicate Spark job and its broadcast would
-  // linger un-released until GC, since invalidate() only releases probes
-  // that won the cache slot. PER-KEY cells (not one global lock): probe
-  // construction runs a driver-blocking Spark job, and a single monitor
-  // held across it would serialize cold probes for UNRELATED scopes.
-  // getOrElseUpdate may still race two Cell ALLOCATIONS, but a Cell is
-  // side-effect-free until its lazy body is forced, and both racers force
-  // the one cell that won the slot — exactly one scan, one broadcast.
-  private[engine] final class ProbeCell(thunk: () => ScopeProbe) {
-    @volatile private var built = false
-    lazy val probe: ScopeProbe = { val p = thunk(); built = true; p }
-    /** The probe iff some caller already forced it — invalidate() must not
-      * BUILD probes just to release them.
-      */
-    def ifBuilt: Option[ScopeProbe] = if (built) Some(probe) else None
-  }
-  private[engine] val scopeCache = TrieMap.empty[String, ProbeCell]
-
   // term -> its fast-list row, or None (no fast list / absent term)
   private val fastCache = TrieMap.empty[String, Option[FastList]]
   // serializes COLD batched prefetches only (see prefetchFastLists)
@@ -175,12 +154,11 @@ final case class IndexReader(
     case Some(f) =>
       // cold-only lock (warm batches return on the contains-check without
       // touching it): two concurrent cold batches would otherwise both
-      // compute `missing` and both run the probe job — the same
-      // check-then-act hazard the scope-probe cells guard against. One
-      // monitor is fine HERE because all prefetches probe the same shared
-      // sidecar (there is no unrelated-key work to serialize, unlike
-      // scopes), and the loser's re-check inside the lock sees the winner's
-      // cache fills and probes only what is still missing.
+      // compute `missing` and both run the probe job (check-then-act). One
+      // monitor is fine because all prefetches probe the same shared
+      // sidecar (there is no unrelated-key work to serialize), and the
+      // loser's re-check inside the lock sees the winner's cache fills and
+      // probes only what is still missing.
       if (terms.distinct.forall(fastCache.contains)) return
       fastPrefetchLock.synchronized {
         val missing = terms.distinct.filterNot(fastCache.contains)
@@ -203,46 +181,6 @@ final case class IndexReader(
         }
       }
   }
-
-  /** Membership structure for the query-scoped corpus restriction, cached
-    * per reader + scope key (the one docs-sidecar scan it costs runs once
-    * per distinct scope, then scoped queries plan with zero extra jobs).
-    *
-    * Two regimes, chosen by measured scope size:
-    *  - up to [[IndexReader.scopeExactMax]] docs -> a broadcast SORTED docId
-    *    array, binary search per candidate: EXACT (selective scopes
-    *    broadcast like dimension tables);
-    *  - larger -> a broadcast Bloom filter (fpp [[IndexReader.ScopeBloomFpp]]):
-    *    no false negatives, so every in-scope doc is still evaluated; the
-    *    rare false positive is removed EXACTLY in the ranking tail
-    *    ([[ShardTail.select]] re-checks the doc's repo from its key shard
-    *    against the scope). The residual risk is only that an FP
-    *    transiently occupies a shard-heap slot and lifts that shard's prune
-    *    threshold past a boundary true hit — probability ≈ fpp × evaluated
-    *    candidates per query, the standard bloom-scoping tradeoff at corpus
-    *    sizes where an id-array broadcast (8 B/doc) stops fitting.
-    */
-  def scopeProbe(repos: Seq[String]): ScopeProbe = {
-    val key = repos.distinct.sorted.mkString("\u0000")
-    scopeCache.getOrElseUpdate(key, new ProbeCell(() => {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val scoped = docs.filter(col("repo").isin(repos.distinct: _*)).select("doc_id")
-      // regime probe and id fetch in ONE job: collect up to exactMax+1 ids —
-      // overflow (the rare huge-scope regime) is the only case that pays the
-      // extra count() the bloom sizing needs. A separate count()-then-collect
-      // would scan the docs sidecar twice for every common selective scope.
-      val exactMax = math.min(IndexReader.scopeExactMax, (Int.MaxValue - 8).toLong).toInt
-      val ids = scoped.limit(exactMax + 1).as[Long].collect()
-      if (ids.length <= exactMax) {
-        java.util.Arrays.sort(ids)
-        ExactScope(spark.sparkContext.broadcast(ids))
-      } else {
-        BloomScope(spark.sparkContext.broadcast(
-          scoped.stat.bloomFilter("doc_id", scoped.count(), IndexReader.ScopeBloomFpp)))
-      }
-    })).probe
-  }
 }
 
 /** One term's driver-resident impact-ordered prefix (v7 fast sidecar):
@@ -252,67 +190,7 @@ final case class FastList(
     df: Long, ids: Array[Long], tfs: Array[Int], dls: Array[Long],
     repos: Array[String], paths: Array[String], commits: Array[String])
 
-/** Executor-shippable scope membership probe (see [[IndexReader.scopeProbe]]).
-  * `exact` tells the ranking tail whether an FP re-filter is needed.
-  */
-sealed trait ScopeProbe extends Serializable {
-  def exact: Boolean
-  /** A serializable membership function (built so the closure captures the
-    * broadcast handle, not the whole probe).
-    */
-  def fn: Long => Boolean
-  /** Drop the probe's executor-side broadcast blocks WITHOUT invalidating
-    * the broadcast: in-flight scoped queries (serve-while-mutating is the
-    * advertised steady state) keep working — a task that lost its executor
-    * copy re-fetches from the driver. `destroy()` here would make their
-    * retries throw "Attempted to use Broadcast after it was destroyed".
-    * Final destruction is the ContextCleaner's, once the last driver
-    * reference (the scopeCache entry) is dropped.
-    */
-  def release(): Unit
-}
-
-final case class ExactScope(
-    ids: org.apache.spark.broadcast.Broadcast[Array[Long]]) extends ScopeProbe {
-  override def exact: Boolean = true
-  override def fn: Long => Boolean = {
-    val bc = ids
-    d => java.util.Arrays.binarySearch(bc.value, d) >= 0
-  }
-  override def release(): Unit = ids.unpersist()
-}
-
-final case class BloomScope(
-    bloom: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]) extends ScopeProbe {
-  override def exact: Boolean = false
-  override def fn: Long => Boolean = {
-    val bc = bloom
-    d => bc.value.mightContainLong(d)
-  }
-  override def release(): Unit = bloom.unpersist()
-}
-
 object IndexReader {
-
-  /** Scope sizes up to this many docIds use the exact broadcast-array probe;
-    * larger scopes fall back to a Bloom filter (see [[IndexReader.scopeProbe]]).
-    * Default 4M ids = 32 MB broadcast — comfortably a "dimension table".
-    * A `var` (env-seeded) so specs can force the bloom regime at tiny sf;
-    * production tuning goes through `GRAFT_SCOPE_EXACT_MAX`.
-    */
-  @volatile var scopeExactMax: Long =
-    sys.env.get("GRAFT_SCOPE_EXACT_MAX").map { v =>
-      // fail with the cause named: a bare .toLong here would surface as an
-      // opaque ExceptionInInitializerError on the first IndexReader.get
-      v.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"GRAFT_SCOPE_EXACT_MAX must be an integer number of docIds, got '$v'"))
-    }.getOrElse(4L * 1024 * 1024)
-
-  /** False-positive rate of the bloom scope probe — at 1e-6, an FP among a
-    * query's ~10^4 evaluated candidates is a ~1% event, and each FP is still
-    * removed exactly by the ranking tail's repo re-check.
-    */
-  val ScopeBloomFpp: Double = 1e-6
 
   // keyed by (session identity, root): DataFrames are bound to the session
   // that created them. Entries for STOPPED sessions are evicted on access
@@ -366,7 +244,7 @@ object IndexReader {
         val docs = snap.docsDirs
           .map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
           .reduce(_ unionByName _)
-        IndexReader(paths, stats, snap.version, layers, docs, pinKeys(docs, stats.numSalts),
+        IndexReader(paths, stats, snap.version, layers, pinKeys(docs, stats.numSalts),
           cacheTag(paths, stats, snap.version),
           fastFor(spark, Some(snap.indexDirs.last)))
 
@@ -378,7 +256,7 @@ object IndexReader {
         val docs = spark.read.schema(IndexBuilder.DocsSchema).parquet(paths.docsDir)
         IndexReader(paths, stats, 0,
           Seq(IndexLayer(0, paths.indexDir, stats.avgdl, 1.0, idx, seg)),
-          docs, pinKeys(docs, stats.numSalts), cacheTag(paths, stats, 0),
+          pinKeys(docs, stats.numSalts), cacheTag(paths, stats, 0),
           fastFor(spark, Some(paths.indexDir)))
     }
 
@@ -403,8 +281,9 @@ object IndexReader {
   /** Pin the natural doc keys as one [[DocKeyShard]] per salt, partition
     * i == salt i (see [[pinSegments]]): a sorted doc_id array plus UTF-8 key
     * bytes, built once from the docs union at the first query. The
-    * ranking tail looks candidates up here inside the shard task, so no
-    * request joins against the corpus-sized docs relation.
+    * ranking tail looks candidates up here inside the shard task, and repo
+    * scopes are checked here too ([[DocKeyShard.repoIn]]), so no request
+    * joins against or scans the corpus-sized docs relation.
     */
   private def pinKeys(docs: DataFrame, numSalts: Int): RDD[DocKeyShard] = {
     val spark = docs.sparkSession
@@ -505,20 +384,6 @@ object IndexReader {
           r.keys.unpersist(blocking = false)
           r.fast.foreach(_.unpersist())
         }
-        // scope probes are broadcasts, not persisted plans: RELEASE (not
-        // destroy) them so a long-lived serving session with many distinct
-        // scopes does not accumulate executor broadcast blocks across
-        // rebuilds (round-4 advice), while scoped queries still in flight
-        // against the evicted reader keep working — unpersist leaves the
-        // broadcast re-fetchable from the driver, and clearing the cache
-        // below drops the last strong reference so the ContextCleaner
-        // finishes destruction once nothing holds the handle.
-        r.scopeCache.values.foreach { cell =>
-          // release only probes someone actually built — forcing an
-          // unevaluated cell here would run its scope scan just to drop it
-          cell.ifBuilt.foreach(p => try p.release() catch { case _: Exception => () })
-        }
-        r.scopeCache.clear()
       }
     }
     PostingCache.invalidatePrefix(root)

@@ -33,11 +33,11 @@ object SearchApi {
     *
     * `repoScope`: query-time corpus restriction to the given repos — the
     * engine analog of the reference's `allow_external_links` query scoping
-    * (`README.md:41`, external-host links excluded at query time). The
-    * predicate reaches the WAND candidate filter (OR path) / the shard
-    * tail's repo filter ahead of each shard's top-k (AND path), so results
-    * are the scope's own top-k, not a post-filtered global one. An empty
-    * scope list is a 400.
+    * (`README.md:41`, external-host links excluded at query time). Each salt
+    * shard task checks a candidate's repo against its key shard: inside the
+    * WAND evaluation loop (OR path) or in the shard tail ahead of the
+    * shard's top-k (AND path), so results are the scope's own top-k, not a
+    * post-filtered global one. An empty scope list is a 400.
     *
     * The returned DataFrame is local: the request's Spark work has run by
     * the time this returns, and collecting it runs no further job.

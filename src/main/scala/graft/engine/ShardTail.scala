@@ -29,6 +29,15 @@ final class DocKeyShard private (
   def field(i: Int, f: Int): Array[Byte] =
     Arrays.copyOfRange(bytes, offsets(3 * i + f), offsets(3 * i + f + 1))
 
+  /** True iff the repo of the doc at position `i` is one of `repos` (UTF-8
+    * bytes), compared in place.
+    */
+  def repoIn(i: Int, repos: Array[Array[Byte]]): Boolean = {
+    val from = offsets(3 * i)
+    val to = offsets(3 * i + 1)
+    repos.exists(r => Arrays.equals(bytes, from, to, r, 0, r.length))
+  }
+
   /** Throws unless a row of salt `rowSalt` belongs in this shard: a row in
     * the wrong partition would find no key here and vanish silently.
     */
@@ -92,24 +101,22 @@ object ShardTail {
     }
   }
 
-  /** Key-scope filter for the tail: the repos as UTF-8 bytes. */
+  /** A repo scope as UTF-8 bytes, for [[DocKeyShard.repoIn]]. */
   def repoBytes(repos: Seq[String]): Array[Array[Byte]] = repos.distinct.map(_.getBytes(UTF_8)).toArray
 
   /** The ≤ k best of one (salt shard, query) run's `(doc_id, raw score)`
     * candidates. A candidate with no key row in the shard is dropped (the
     * docs inner-join semantics), as is one whose repo is outside `repos`
-    * (a Bloom scope probe's false positive, or the index plans' scope).
+    * (the index and AND plans' scope; WAND applies its scope before this).
     */
   def select(shard: DocKeyShard, queryId: String, k: Int, candidates: Iterable[(Long, Double)],
       repos: Option[Array[Array[Byte]]]): Array[TailRow] = {
     val rows = mutable.ArrayBuffer.empty[TailRow]
     candidates.foreach { case (doc, score) =>
       val i = shard.indexOf(doc)
-      if (i >= 0) {
-        val repo = shard.field(i, 0)
-        if (repos.forall(_.exists(Arrays.equals(_, repo))))
-          rows += TailRow(queryId, k, graft.score.BM25.quantize(score), repo, shard.field(i, 1), shard.field(i, 2))
-      }
+      if (i >= 0 && repos.forall(shard.repoIn(i, _)))
+        rows += TailRow(queryId, k, graft.score.BM25.quantize(score),
+          shard.field(i, 0), shard.field(i, 1), shard.field(i, 2))
     }
     rows.sorted(order).take(k).toArray
   }

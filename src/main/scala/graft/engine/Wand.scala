@@ -86,14 +86,12 @@ object Wand {
     // `allow_external_links`-style filter, README.md:41): candidates outside
     // the scoped repos are rejected INSIDE the WAND evaluation loop — before
     // they can enter the heap — so the per-shard top-k is the top-k OF THE
-    // SCOPE, not a post-filtered global top-k. Membership is a broadcast
-    // probe ([[IndexReader.scopeProbe]]): an exact sorted docId array for
-    // selective scopes (the dimension-table case), a Bloom filter once the
-    // scope outgrows broadcast-array size — no false negatives, and the
-    // shard tail re-checks the rare FP's repo exactly. Bounds stay sound
-    // either way: block maxima upper-bound every doc, a fortiori the scoped
-    // subset.
-    val scope = repoScope.map(reader.scopeProbe)
+    // SCOPE, not a post-filtered global top-k. Membership is exact and
+    // answered inside the shard task from the key shard that already holds
+    // every doc's repo ([[DocKeyShard.repoIn]]): no driver job, no
+    // broadcast. Bounds stay sound: block maxima upper-bound every doc, a
+    // fortiori the scoped subset.
+    val repos = repoScope.map(ShardTail.repoBytes)
 
     val n = stats.nDocs
     val avgdl = stats.avgdl
@@ -130,11 +128,11 @@ object Wand {
     // warm the fast-list cache for the whole batch in ONE probe (the
     // per-term path pays one Spark job per cold term; termMeta above already
     // settled dfs, so known-rare terms are skipped without any job)
-    if (!ForceWandRoute && scope.isEmpty)
+    if (!ForceWandRoute && repoScope.isEmpty)
       reader.prefetchFastLists(
         querySet.filter(_.k <= fastK).flatMap(_.terms).distinct.filter(metaAll.contains))
     def fastOf(q: Query): Seq[String] =
-      if (!ForceWandRoute && scope.isEmpty && q.k <= fastK)
+      if (!ForceWandRoute && repoScope.isEmpty && q.k <= fastK)
         presentOf(q).filter(t => reader.fastList(t).isDefined)
       else Nil
     val (fastSingleQs, rest) = querySet.partition(q =>
@@ -178,12 +176,6 @@ object Wand {
     // analog and emit nothing)
     if (shardQs.isEmpty) return ShardTail.finish(spark, Nil, fastLocal)
 
-    // membership closure captures only the broadcast handle (probe.fn), so
-    // the shard tasks ship the broadcast, not the reader; a Bloom probe's
-    // false positives are dropped by the shard tail's repo re-check
-    val scopeFn: Long => Boolean = scope.map(_.fn).getOrElse((_: Long) => true)
-    val repoCheck = repoScope.filter(_ => scope.exists(!_.exact)).map(ShardTail.repoBytes)
-
     // Each query term is read from its newest-wins layer, and the winning
     // layers plus the key shards are zipped partition by partition: the
     // reader pins every layer's segments and the key shards with partition
@@ -207,6 +199,10 @@ object Wand {
       .reduce((a, b) => a.zipPartitions(b)(_ ++ _))
       .zipPartitions(reader.keys) { (it, shards) =>
         val shard = shards.next()
+        val scopeFn: Long => Boolean = repos match {
+          case None => _ => true
+          case Some(rs) => d => { val i = shard.indexOf(d); i >= 0 && shard.repoIn(i, rs) }
+        }
         val byTerm = mutable.HashMap.empty[String, TermList]
         it.foreach { case (salt, t, segDf, p, d, bm, dir) =>
           shard.requireSalt(salt)
@@ -224,7 +220,7 @@ object Wand {
             val counters = new WandCounters
             val inScope = if (q.hot == null) scopeFn else q.hybridScope(lists)
             val hits = ShardTail.select(shard, q.queryId, q.k,
-              wandShardTopK(lists, q.k, avgdl, counters, inScope), repoCheck)
+              wandShardTopK(lists, q.k, avgdl, counters, inScope), None)
             metrics.foreach { m =>
               m.candidates.add(counters.evaluated)
               m.blockSkips.add(counters.skips)

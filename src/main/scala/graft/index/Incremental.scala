@@ -109,20 +109,13 @@ object Incremental {
     // byte-equivalent content (all derivations are deterministic in the
     // fresh set + base), so the whole rewrite is skipped and only the
     // snapshot/stats publish runs (same end state, version bumped exactly as
-    // before). The fingerprint is order-independent (count + XOR of a
-    // full-row hash) and stored in the stats build_args at publish time;
+    // before). The fingerprint ([[fingerprint]]) is order-independent and
+    // stored in the stats build_args at publish time;
     // stats alone are NOT sufficient (two different batches could collide on
     // (nDocs, avgdl, totalTokens)). `index_incremental`'s replay=true entry
     // — the J1 idempotency exercise Verify pays every run — goes from a full
     // delta rewrite to anti-join + stats + fingerprint.
-    // \u0001 field separator in the row hash: a separator-less concat
-    // would let field-boundary shifts alias (("ab","c") vs ("a","bc")).
-    val fpRow = fresh
-      .select(xxhash64(concat_ws("\u0001",
-        col("repo"), col("path"), col("commit"), col("lang"), col("content"))).as("h"))
-      .agg(count(lit(1)), expr("bit_xor(h)")).head()
-    val freshFp = s"${fpRow.getLong(0)}:${if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)}"
-    val publishArgs = s"incremental over ${basePaths.root} fp=$freshFp"
+    val publishArgs = s"incremental over ${basePaths.root} fp=${fingerprint(fresh)}"
     // In-flight rewrite marker: an addBatch of a DIFFERENT batch that
     // crashed mid-rewrite leaves artifacts (e.g. an overwritten delta
     // index) that no longer correspond to the still-published stats and
@@ -174,6 +167,24 @@ object Incremental {
     // rewrite (if any) and publish both landed — clear the in-flight marker
     java.nio.file.Files.deleteIfExists(inflightMarker)
     newStats
+  }
+
+  /** Order-independent fingerprint of a batch's corpus rows: the count,
+    * the XOR and the exact (decimal) SUM of a row hash. XOR alone cancels
+    * equal pairs, so {A, A, B} and {C, C, B} would collide; the sum does
+    * not. The row hash takes each field as its own column plus a NULL flag:
+    * joining the fields into one string aliases rows whose values shift
+    * across a separator inside a value, or across a NULL field (which
+    * `concat_ws` skips).
+    */
+  private[graft] def fingerprint(rows: DataFrame): String = {
+    val fields = Seq("repo", "path", "commit", "lang", "content").map(col)
+    val h = xxhash64(fields.map(coalesce(_, lit(""))) ++ fields.map(_.isNull): _*)
+    val r = rows.select(h.as("h"))
+      .agg(count(lit(1)), expr("bit_xor(h)"), sum(col("h").cast("decimal(20,0)"))).head()
+    val xor = if (r.isNullAt(1)) 0L else r.getLong(1)
+    val total = if (r.isNullAt(2)) "0" else r.getDecimal(2).toPlainString
+    s"${r.getLong(0)}:$xor:$total"
   }
 
   /** The rewrite half of [[addBatch]] — delta postings, salted delta

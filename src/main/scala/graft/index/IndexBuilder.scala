@@ -279,6 +279,25 @@ object IndexBuilder {
     a
   }
 
+  private val HashAggFallback = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+  /** Run `f` (a posting build or merge) with ObjectHashAggregate's
+    * fallback-to-sort threshold raised to 10^7 groups, restoring the
+    * session's previous value after. Those aggregations hold ~10^4+ groups
+    * per task, far past the default 128; the hash path with the
+    * primitive-array buffer is both faster and bounded (total buffer memory
+    * == total postings).
+    */
+  private def withHashAggFallbackRaised[A](spark: SparkSession)(f: => A): A = {
+    val prev = spark.conf.getOption(HashAggFallback)
+    spark.conf.set(HashAggFallback, "10000000")
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(HashAggFallback, v)
+      case None => spark.conf.unset(HashAggFallback)
+    }
+  }
+
   // ---------- the build ----------
 
   /** Build (or resume) the index for a corpus. Returns the stats.
@@ -419,14 +438,8 @@ object IndexBuilder {
       // groupBy shuffles on (salt, term) with spark.sql.shuffle.partitions
       // tasks — hot terms are already spread across salts, and every core
       // gets work (an explicit repartition(numSalts) capped parallelism at
-      // numSalts tasks and left half the cluster idle). The posting build
-      // has ~10^4+ groups per task, far past ObjectHashAggregate's default
-      // 128-group fallback-to-sort threshold; the hash path with the
-      // primitive-array buffer is both faster and bounded (total buffer
-      // memory == total postings), so raise the threshold for this job.
-      val prevFallback = spark.conf.getOption("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-      spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      try phase("segments") {
+      // numSalts tasks and left half the cluster idle).
+      withHashAggFallbackRaised(spark)(phase("segments") {
         tfd
           .groupBy("salt", "term")
           .agg(PostingAggExprs.buildPostings(stats.avgdl, col("doc_id"), col("tf"), col("dl")).as("p"))
@@ -438,12 +451,7 @@ object IndexBuilder {
           // files; with it, exactly one file per partition dir
           .repartition(col("salt"), col("bucket"))
           .write.mode("append").partitionBy("salt", "bucket").parquet(paths.segmentsDir)
-      } finally {
-        prevFallback match {
-          case Some(v) => spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v)
-          case None => spark.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-        }
-      }
+      })
       val wallMs = (System.nanoTime() - t0) / 1000000
 
       // Per-salt manifests from read-back (validates what actually landed).
@@ -488,9 +496,7 @@ object IndexBuilder {
     }
     if (!Files.exists(Paths.get(s"${paths.indexDir}/_SUCCESS"))) {
       val segs = spark.read.parquet(paths.segmentsDir)
-      val prevFallback = spark.conf.getOption("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-      spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      try phase("merge") {
+      withHashAggFallbackRaised(spark)(phase("merge") {
         segs
           .groupBy("term")
           .agg(PostingAggExprs.mergePostings(stats.avgdl, col("postings"), col("dls")).as("p"))
@@ -499,12 +505,7 @@ object IndexBuilder {
             col("p.df"), col("p.sum_tf"), col("p.postings"), col("p.dls"), col("p.block_max"), col("p.block_dir"))
           .repartition(col("bucket"))
           .write.mode("overwrite").partitionBy("bucket").parquet(paths.indexDir)
-      } finally {
-        prevFallback match {
-          case Some(v) => spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v)
-          case None => spark.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-        }
-      }
+      })
     }
 
     // Impact-ordered fast lists (v6): one distributed pass extracts each

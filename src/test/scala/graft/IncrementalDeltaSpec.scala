@@ -125,7 +125,8 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
 /** r6: the replay no-op path — re-running the SAME addBatch(base → out) must
   * skip the delta rewrite (artifact files untouched, byte-identical) while
   * publishing a fresh snapshot version; a DIFFERENT batch over the same
-  * (base, out) pair must NOT be skipped (the fingerprint guard).
+  * (base, out) pair must NOT be skipped (the fingerprint guard), even one
+  * whose rows XOR to the same hash.
   */
 class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
     with org.scalatest.BeforeAndAfterAll {
@@ -196,5 +197,38 @@ class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
       .select("path").collect().map(_.getString(0)).toSet
     assert(docs == Set("a.go", "b.go", "c.go", "d.go"),
       s"different batch must rewrite the delta, got $docs")
+  }
+
+  test("replay fingerprint: a batch whose row hashes XOR like the last one is not a replay") {
+    // X and Y differ only in where a \u0001 sits (repo/path boundary), so a
+    // row hash over the \u0001-joined fields is the same for both and they
+    // cancel under XOR; X2/Y2 likewise. Both batches have 3 rows whose
+    // hashes XOR to h(B), and the same token counts, so the stats agree too
+    val s = spark
+    import s.implicits._
+    def batch(rows: (String, String, String)*) = (Seq(("repo-t", "a.go", "alpha beta gamma")) ++ rows)
+      .map { case (repo, path, content) => (repo, path, "c0ffee000000", "go", content) }
+      .toDF("repo", "path", "commit", "lang", "content")
+    val b = ("repo-t", "b.go", "seven eight")
+    val basePaths = IndexPaths(s"$root/fp-base")
+    val outPaths = IndexPaths(s"$root/fp-out")
+    IndexBuilder.build(spark, batch(), basePaths, buildArgs = "fp-base")
+    val s1 = Incremental.addBatch(spark, basePaths,
+      batch(("repo-t", "x\u0001x.go", "one two"), ("repo-t\u0001x", "x.go", "one two"), b), outPaths)
+    val s2 = Incremental.addBatch(spark, basePaths,
+      batch(("repo-t", "y\u0001y.go", "four five"), ("repo-t\u0001y", "y.go", "four five"), b), outPaths)
+    assert(s1 == s2, "fixture: both batches must give the same stats")
+    def served(term: String) = graft.engine.SearchApi.search(spark, outPaths, Seq(term), 10)
+      .select("path").collect().map(_.getString(0)).toSet
+    assert(served("four") == Set("y\u0001y.go", "y.go") && served("one").isEmpty,
+      "the second batch was skipped as a replay: the first one is still served")
+
+    // equal pairs and NULL shifts change the fingerprint too
+    def fp(rows: (String, String, String, String, String)*) =
+      Incremental.fingerprint(rows.toDF("repo", "path", "commit", "lang", "content"))
+    val (a, c) = (("r", "a.go", "c", "go", "x"), ("r", "c.go", "c", "go", "x"))
+    val other = ("r", "b.go", "c", "go", "y")
+    assert(fp(a, a, other) != fp(c, c, other))
+    assert(fp(("r", "p.go", "c", null, "x")) != fp(("r", "p.go", null, "c", "x")))
   }
 }

@@ -4,6 +4,7 @@ import graft.engine.{IndexReader, IndexSearch, QueryMetrics, Wand}
 import graft.index.{Incremental, IndexBuilder, IndexPaths, Snapshots}
 import graft.model.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,11 +47,12 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
   // direction without the rescale). Terms: "common" spans both layers (its
   // merged list lives in the DELTA layer), "basetail" is base-only (served
   // from the BASE layer with scaled bounds), "deltaword" is delta-only.
+  // Repo "repo-m" has docs in both layers (the scoped queries' scope).
   private def baseDocs: Seq[(String, String, String, String, String)] =
     (0 until 40).map { i =>
       val tail = if (i % 3 == 0) " basetail" else ""
       val mix = if (i % 4 == 0) " mix mix" else ""
-      ("repo-l", f"base$i%02d.go", "c0ffee000000", "go",
+      (if (i % 4 == 1) "repo-m" else "repo-l", f"base$i%02d.go", "c0ffee000000", "go",
         s"common alpha$i beta${i % 7}$tail$mix")
     }
 
@@ -59,7 +61,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dw = if (i % 2 == 0) " deltaword deltaword deltaword" else ""
       val mix = if (i % 5 == 0) " mix" else ""
       val filler = (0 until 24).map(j => s"pad${(i + j) % 11}").mkString(" ")
-      ("repo-l", f"delta$i%02d.go", "c0ffee000000", "go",
+      (if (i % 3 == 1) "repo-m" else "repo-l", f"delta$i%02d.go", "c0ffee000000", "go",
         s"common common $filler$dw$mix gamma$i")
     }
 
@@ -92,6 +94,17 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[(String, Int, String, String, String, Double)] =
     df.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2),
       r.getString(3), r.getString(4), r.getDouble(5))).toSeq.sortBy(t => (t._1, t._2))
+
+  /** The naive answers restricted to `scope`: scored over the whole corpus
+    * (scoping restricts candidates, not BM25 statistics), then ranked over
+    * the scope's docs only.
+    */
+  private def naiveScoped(corpus: DataFrame, scope: Seq[String]) = {
+    val c = graft.corpus.Corpus.withDocId(corpus)
+    rows(graft.engine.NaiveSearch.rankByKeys(graft.engine.NaiveSearch.scoreAll(c, queriesDf)
+      .join(c.select("doc_id", "repo", "path", "commit"), "doc_id")
+      .filter(col("repo").isin(scope: _*))))
+  }
 
   private def decodeCounts(df: DataFrame): Map[String, (Long, Long)] =
     df.select("term", "postings", "dls").collect().map { r =>
@@ -128,6 +141,14 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     assert(rows(IndexSearch.topKAt(spark, outPaths, queriesDf)) === naive)
     assert(rows(Wand.topKAt(spark, outPaths, queries)) === naive)
+
+    // scoped: the key shards hold the union of both layers' docs
+    val scope = Seq("repo-m")
+    val scoped = naiveScoped(corpusOf(all), scope)
+    assert(scoped.exists(_._4.startsWith("base")) && scoped.exists(_._4.startsWith("delta")),
+      s"fixture: scoped hits must come from both layers: $scoped")
+    assert(rows(Wand.topKAt(spark, outPaths, queries, repoScope = Some(scope))) === scoped)
+    assert(rows(IndexSearch.topKAt(spark, outPaths, queriesDf, Some(scope))) === scoped)
 
     // empty replay layer (no parquet files in its dirs) is servable, and
     // metrics accumulate on a cold WAND pass

@@ -163,9 +163,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"LSH verify recomputes the global shingle self-join:\n$p")
   }
 
-  /** Runs `run` once to warm the reader (term metadata, fast lists, scope
-    * probe, reader pins), then asserts the second, untagged run is one Spark
-    * job with no shuffle.
+  /** Runs `run` once to warm the reader (term metadata, fast lists, reader
+    * pins), then asserts the second, untagged run is one Spark job with no
+    * shuffle.
     */
   private def assertWarmOneJob(name: String)(run: String => Unit): Unit = {
     run("-warm")
@@ -207,6 +207,14 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       Wand.topKAt(spark, paths, tagged(QuerySet.all, tag), repoScope = Some(QuerySet.scopeRepos)).collect()
       ()
     }
+    // a scope this reader has never served costs no extra job: the repo
+    // check runs inside the shard job, against the key shards
+    val cold = Seq("repo-3")
+    val (rows, jobs, shuffleBytes) = sparkWork(
+      Wand.topKAt(spark, paths, tagged(QuerySet.all, "-cold"), repoScope = Some(cold)).collect())
+    assert(jobs === 1, s"request with a new scope ran $jobs Spark jobs")
+    assert(shuffleBytes === 0L, s"request with a new scope shuffled $shuffleBytes bytes")
+    assert(rows.nonEmpty && rows.forall(r => cold.contains(r.getString(2))), "rows outside the scope")
   }
 
   test("conjunctive plan: one exchange, REPARTITION_BY_NUM on salt") {

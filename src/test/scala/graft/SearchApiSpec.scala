@@ -58,10 +58,10 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.map(_.getInt(1)).toSeq === (1 to 5))
   }
 
-  test("repo scope: WAND inner-loop filter == docs-join filter, and ranks are scope-local") {
-    // two INDEPENDENT scope mechanisms must agree: the OR path rejects
-    // candidates inside the WAND evaluation loop (broadcast docId set); the
-    // index path drops out-of-scope repos in the shard tail before ranking
+  test("repo scope: WAND inner-loop filter == shard-tail filter, and ranks are scope-local") {
+    // two scope checks must agree: the OR path rejects candidates inside the
+    // WAND evaluation loop; the index path drops out-of-scope repos in the
+    // shard tail before ranking
     val scope = QuerySet.scopeRepos
     val wand = SearchApi.search(spark, paths, Seq("func", "buffer"), 10, repoScope = Some(scope)).collect()
     val viaIndex = {
@@ -74,51 +74,6 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(wand.nonEmpty && wand.forall(r => scope.contains(r.getString(2))),
       "scoped results must come from scoped repos only")
     assert(wand.map(_.getInt(1)).toSeq === (1 to wand.length), "ranks must be scope-local and gapless")
-  }
-
-  test("large scope bypasses the broadcast-array probe (Bloom regime); results identical") {
-    val scope = QuerySet.scopeRepos
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getInt(1), r.getString(2), r.getString(3), r.getString(4), r.getDouble(5))
-    val exact = SearchApi.search(spark, paths, Seq("func", "buffer"), 10,
-      repoScope = Some(scope)).collect()
-    val prev = graft.engine.IndexReader.scopeExactMax
-    // force every scope over the exact-probe bound; invalidate so the scope
-    // cache can't serve the already-built exact probe
-    graft.engine.IndexReader.scopeExactMax = 0L
-    graft.engine.IndexReader.invalidate(paths.root)
-    try {
-      val probe = graft.engine.IndexReader.get(spark, paths).scopeProbe(scope)
-      assert(!probe.exact, "scope above the exact bound must use the Bloom probe")
-      val bloom = SearchApi.search(spark, paths, Seq("func", "buffer"), 10,
-        repoScope = Some(scope)).collect()
-      assert(bloom.map(key).toSeq === exact.map(key).toSeq,
-        "Bloom-scoped results diverged from the exact-probe results")
-    } finally {
-      graft.engine.IndexReader.scopeExactMax = prev
-      graft.engine.IndexReader.invalidate(paths.root)
-    }
-  }
-
-  test("concurrent scope probes for one new scope build exactly one probe") {
-    // scopeProbe construction is lock-guarded: a bare TrieMap.getOrElseUpdate
-    // can run the thunk on BOTH racing threads, duplicating the scope-scan
-    // job and leaking the loser's broadcast (invalidate only releases probes
-    // that won the cache slot). Under the lock, both callers must observe
-    // the SAME probe instance.
-    val scope = QuerySet.scopeRepos
-    graft.engine.IndexReader.invalidate(paths.root)
-    val reader = graft.engine.IndexReader.get(spark, paths)
-    val start = new java.util.concurrent.CountDownLatch(1)
-    val probes = new java.util.concurrent.ConcurrentLinkedQueue[graft.engine.ScopeProbe]()
-    val threads = (1 to 2).map { _ =>
-      new Thread(() => { start.await(); probes.add(reader.scopeProbe(scope)) })
-    }
-    threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
-    val ps = probes.toArray(Array.empty[graft.engine.ScopeProbe])
-    assert(ps.length == 2 && (ps(0) eq ps(1)),
-      "racing scopeProbe calls built distinct probe instances")
-    graft.engine.IndexReader.invalidate(paths.root)
   }
 
   test("empty repo scope rejects (400 analog); scoping to an absent repo yields empty") {

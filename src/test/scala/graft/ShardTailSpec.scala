@@ -117,6 +117,7 @@ class ShardTailSpec extends AnyFunSuite with BeforeAndAfterAll {
       val before = sc.getPersistentRDDs.size
       val qs = Seq(Query("f", Seq("hot"), 5), Query("w", Seq("tie", "rare", "hot"), 5))
       Wand.topKAt(spark, paths, qs).collect()
+      Wand.topKAt(spark, paths, qs, repoScope = Some(Seq("repo-t"))).collect()
       IndexSearch.topKAt(spark, paths, queriesDf(qs).drop("n_terms")).collect()
       assert(IndexReader.get(spark, paths).keys.getStorageLevel.isValid, "key shards are not pinned")
       assert(sc.getPersistentRDDs.size > before, "the queries pinned nothing")
