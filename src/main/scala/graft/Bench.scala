@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.Corpus
-import graft.engine.{IndexSearch, NaiveSearch, QueryMetrics, SearchApi, Wand}
+import graft.engine.{NaiveSearch, QueryMetrics, SearchApi, Wand}
 import graft.index.{IndexBuilder, IndexPaths}
 import graft.queries.QuerySet
 import java.lang.management.ManagementFactory
@@ -19,14 +19,14 @@ import scala.jdk.CollectionConverters._
   *    [[SearchApi.search]] (validation + block-max WAND + collect), i.e.
   *    what a request to the engine actually pays.
   *  - query_wand_p50/p99: the SAME query set with the fast/hybrid routes
-  *    disabled ([[Wand.ForceWandRoute]]) — a true WAND-path measurement,
+  *    disabled ([[Wand.WandOnly]]) — a true WAND-path measurement,
   *    round-over-round comparable with the pre-fast-route rounds (a silent
   *    alias of query_serve_* would conflate routing wins with WAND wins).
-  *  - query_index_p50/p99: the full-materialization index path. This is the
-  *    ORACLE path (rank-identity cross-check vs DuckDB), not the serving
-  *    path — it decodes each query term's whole posting list into rows, so
-  *    its hot-term latency is postings-bound by design; reported as a
-  *    labeled diagnostic, not a serving claim.
+  *  - query_index_p50/p99: the exhaustive shard run ([[Wand.Exhaustive]]).
+  *    This is the unpruned reference path (rank-identity cross-check vs
+  *    DuckDB), not the serving path — it scores every doc of each query
+  *    term's posting list, so its hot-term latency is postings-bound by
+  *    design; reported as a labeled diagnostic, not a serving claim.
   *
   * Per-sample evidence (round-3 finding: the driver-run p99 was 10–50×
   * the repo-run p99 and a single aggregated percentile could not attribute
@@ -233,15 +233,12 @@ object Bench {
     // the 10-query set = 100 samples per path, so the reported p99 is the
     // 99th percentile (2nd-worst sample), not the max (round-2 finding:
     // at n=30 one sandbox disk burst DEFINED the p99).
-    val (_, tWarm) = time(IndexSearch.topKAt(spark, paths, QuerySet.df(spark)).count())
+    val (_, tWarm) = time(Wand.topKAt(spark, paths, QuerySet.all, mode = Wand.Exhaustive).count())
     System.err.println(s"[bench] index warm set done in $tWarm s")
     val reps = Config.benchReps
-    val indexLat = for { rep <- 1 to reps; q <- QuerySet.all } yield {
-      import spark.implicits._
-      val qdf = Seq(q).flatMap(x => x.terms.map(t => (x.queryId, t, x.k)))
-        .toDF("query_id", "term", "k")
-      log.sample("index", rep, q.queryId, None)(IndexSearch.topKAt(spark, paths, qdf).count(): Unit)
-    }
+    val indexLat = for { rep <- 1 to reps; q <- QuerySet.all } yield
+      log.sample("index", rep, q.queryId, None)(
+        Wand.topKAt(spark, paths, Seq(q), mode = Wand.Exhaustive).count(): Unit)
     System.err.println(s"[bench] index (oracle path) per-query done: ${indexLat.sum} s total")
 
     // THE SERVING PATH: SearchApi.search == validation + block-max WAND +
@@ -257,14 +254,11 @@ object Bench {
     // WAND-only leg: identical queries with the fast/hybrid routes disabled,
     // so query_wand_* keeps measuring the WAND path itself (comparable with
     // pre-fast-route rounds) instead of aliasing the routed serving pair.
-    Wand.ForceWandRoute = true
-    val wandLat = try {
-      val mW = QueryMetrics(spark)
-      Wand.topKAt(spark, paths, QuerySet.all).count() // warm the forced path
-      for { rep <- 1 to reps; q <- QuerySet.all } yield
-        log.sample("wand", rep, q.queryId, Some(mW))(
-          SearchApi.search(spark, paths, q.terms, q.k, conjunctive = false, Some(mW)).collect(): Unit)
-    } finally Wand.ForceWandRoute = false
+    val mW = QueryMetrics(spark)
+    Wand.topKAt(spark, paths, QuerySet.all, mode = Wand.WandOnly).count() // warm the WAND-only path
+    val wandLat = for { rep <- 1 to reps; q <- QuerySet.all } yield
+      log.sample("wand", rep, q.queryId, Some(mW))(
+        Wand.topKAt(spark, paths, Seq(q), Some(mW), mode = Wand.WandOnly).collect(): Unit)
     System.err.println(s"[bench] wand (forced) per-query done: ${wandLat.sum} s total")
     log.close()
 

@@ -172,18 +172,17 @@ object SparkEntry {
         .agg(sum("sum_tf").as("total_tokens"), sum("df").as("total_postings"))
     }),
 
-    // J5/S5: query through the global index (bucket-pruned scan + decode).
-    // Must be rank- and score-identical to bm25_naive_topk.
+    // J5/S5: query through the index, every matching doc scored (the
+    // exhaustive shard run, no pruning). Must be rank- and score-identical
+    // to bm25_naive_topk.
     "bm25_index_topk" -> ((s, dir) =>
-      graft.engine.IndexSearch.topK(s, dir, QuerySet.df(s))),
+      graft.engine.Wand.topK(s, dir, QuerySet.all, graft.engine.Wand.Exhaustive)),
 
-    // §2.7 conjunctive (AND) queries: posting-list intersection via the
-    // docId equi-join + count(*)==n_terms gate — the reference
+    // §2.7 conjunctive (AND) queries: posting-list intersection inside the
+    // salt shard (walk the shortest list, seek the others) — the reference
     // CheckPredicate analog (dgraph.go:130-145).
-    "bm25_and_topk" -> ((s, dir) => {
-      val (paths, _) = graft.index.IndexBuilder.ensure(s, dir)
-      graft.engine.IndexSearch.topKAndAt(s, paths, QuerySet.dfAnd(s))
-    }),
+    "bm25_and_topk" -> ((s, dir) =>
+      graft.engine.Wand.topK(s, dir, QuerySet.conjunctive, graft.engine.Wand.Conjunctive)),
 
     // T5: sharded block-max WAND. Same oracle as the naive plan.
     "bm25_wand_topk" -> ((s, dir) =>
@@ -214,7 +213,7 @@ object SparkEntry {
     // time, for every top-k hit (BASELINE.json input_hint).
     "sha256_invariant" -> ((s, dir) => {
       val (paths, _) = graft.index.IndexBuilder.ensure(s, dir)
-      val res = graft.engine.IndexSearch.topK(s, dir, QuerySet.df(s))
+      val res = graft.engine.Wand.topK(s, dir, QuerySet.all, graft.engine.Wand.Exhaustive)
       val docs = s.read.parquet(paths.docsDir)
         .select(col("repo"), col("path"), col("commit"), col("content_sha"))
       val src = Corpus.corpus(s, dir)
@@ -269,7 +268,7 @@ object SparkEntry {
     // results must equal the full-corpus oracle — same one as
     // bm25_index_topk, proving incremental == rebuild at the query surface.
     "bm25_incremental_topk" -> ((s, dir) =>
-      graft.engine.IndexSearch.topKAt(s, ensureIncr(s, dir), QuerySet.df(s))),
+      graft.engine.Wand.topKAt(s, ensureIncr(s, dir), QuerySet.all, mode = graft.engine.Wand.Exhaustive)),
 
     // Block-max WAND directly over the layered root: delta layers' salted
     // segments serve at full (salt × query) parallelism; base-layer bounds
@@ -371,7 +370,7 @@ object SparkEntry {
     // micrograde (floor(score_r·1e6 + 0.5) — score_r is already on that
     // grid) so JSON float formatting can't drift between engines.
     "bm25_nested_results" -> ((s, dir) => {
-      val flat = graft.engine.IndexSearch.topK(s, dir, QuerySet.df(s))
+      val flat = graft.engine.Wand.topK(s, dir, QuerySet.all, graft.engine.Wand.Exhaustive)
       flat
         .withColumn("score_micro", floor(col("score_r") * 1e6 + 0.5).cast("long"))
         .groupBy("query_id")

@@ -93,21 +93,20 @@ final case class IndexReader(
   def dfOf(terms: Seq[String]): Map[String, Long] =
     termMeta(terms).map { case (t, (d, _)) => t -> d }
 
-  /** Newest-wins read of the given terms from one per-layer relation
-    * (`_.index` or `_.segments`): every present term is read from exactly
-    * its winning layer ([[termMeta]]), with the bucket IN filter pruning to
+  /** Newest-wins read of the given terms' salted segments: every present
+    * term is read from exactly its winning layer ([[termMeta]]), with the bucket IN filter pruning to
     * the terms' bucket directories/batches and the term IN predicate pushed
     * into the scan. One `(layer, rows)` pair per layer that wins at least
     * one term, in ascending ordinal order; absent terms read nothing.
     */
-  def newestWins(terms: Seq[String], relation: IndexLayer => DataFrame): Seq[(IndexLayer, DataFrame)] =
+  def newestWins(terms: Seq[String]): Seq[(IndexLayer, DataFrame)] =
     termMeta(terms).groupBy(_._2._2).toSeq.sortBy(_._1).map { case (ord, ts) =>
       val layer = layers(ord)
       val layerTerms = ts.keys.toSeq
       // bucket(term) must equal the build-side pmod(xxhash64(term), B):
       // TermHash evaluates Spark's own XxHash64Function driver-side (no job).
       val buckets = layerTerms.map(TermHash.bucket(_, stats.numBuckets)).distinct
-      layer -> relation(layer)
+      layer -> layer.segments
         .filter(col("bucket").isin(buckets: _*))
         .filter(col("term").isin(layerTerms: _*))
     }

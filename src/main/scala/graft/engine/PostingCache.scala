@@ -10,7 +10,8 @@ import java.util.{LinkedHashMap => JLinkedHashMap}
   * Round 1 re-decoded every hot posting list on EVERY query (q01 "func" =
   * ~600k postings × 16 shards per call — the 73 s WAND p99 in BENCH_r01).
   * This memoizes block-lazy [[Postings.PostingsBlocks]] handles per
-  * (build, layer, salt, term): a block is decompressed at most once per
+  * (build, layer, salt, term), one per salt-shard sub-list the shard job
+  * ([[Wand.topKAt]]) reads: a block is decompressed at most once per
   * executor, and only if a query's cursor actually lands in it.
   *
   * STRIPED for service concurrency (round-2 finding: one global JVM lock
@@ -63,7 +64,9 @@ object PostingCache {
   private def stripeOf(key: String): Stripe =
     stripes(math.floorMod(key.hashCode, NumStripes))
 
-  /** Memoized block-lazy handle for one (build, layer, salt, term) sub-list. */
+  /** Memoized block-lazy handle for the sub-list of `term` in salt shard
+    * `salt` of one (build, layer).
+    */
   def open(tag: String, salt: Int, term: String, count: Long,
       postings: Array[Byte], dls: Array[Byte], blockDir: Array[Byte]): Postings.PostingsBlocks = {
     val key = s"$tag#$salt#$term"

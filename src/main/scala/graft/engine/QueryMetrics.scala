@@ -30,7 +30,8 @@ import org.apache.spark.util.LongAccumulator
   *    `routedAbsent` counts queries whose terms are ALL absent from the index
   *    (the 404-with-null-results analog — no route runs for them); the four
   *    counters sum to the batch size, so per-route QPS denominators never
-  *    silently exclude 404s.
+  *    silently exclude 404s. An AND query ([[Wand.Conjunctive]]) counts as
+  *    `routedWand`, or as `routedAbsent` when any of its terms is absent.
   *  - `tailRows`: ranked rows the shard tasks shipped to the driver's
   *    merge ([[ShardTail]]) — at most k per (salt shard, query), so ≤
   *    numSalts·k per query however many candidates tie.

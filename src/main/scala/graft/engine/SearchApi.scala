@@ -23,20 +23,18 @@ object SearchApi {
   /** Result-size clamp (the reference's display_depth default is 10). */
   val MaxK: Int = 1000
 
-  /** Validated ad-hoc search over a built index. `conjunctive = true`
-    * requires every term (§2.7 intersection); default is OR semantics,
-    * served by the block-max WAND path (rank-identical to the full-scoring
-    * plan — WandSpec + the shared oracle pin it — and the cheaper plan:
-    * block-lazy decode + heap-threshold skipping instead of full posting
-    * materialization; hot terms route to the v6 impact-ordered fast lists,
-    * see [[Wand.topKAt]]).
+  /** Validated ad-hoc search over a built index, one [[Wand.topKAt]] call.
+    * Default is OR semantics, routed per query ([[Wand.Routed]]: hot terms
+    * to the v6 impact-ordered fast lists, else hybrid or block-max WAND,
+    * all rank-identical to the full-scoring plan — WandSpec + the shared
+    * oracle pin it). `conjunctive = true` requires every term (§2.7
+    * intersection, [[Wand.Conjunctive]]) in the same shard job.
     *
     * `repoScope`: query-time corpus restriction to the given repos — the
     * engine analog of the reference's `allow_external_links` query scoping
     * (`README.md:41`, external-host links excluded at query time). Each salt
-    * shard task checks a candidate's repo against its key shard: inside the
-    * WAND evaluation loop (OR path) or in the shard tail ahead of the
-    * shard's top-k (AND path), so results are the scope's own top-k, not a
+    * shard task checks a candidate's repo against its key shard inside the
+    * WAND evaluation loop, so results are the scope's own top-k, not a
     * post-filtered global one. An empty scope list is a 400.
     *
     * The returned DataFrame is local: the request's Spark work has run by
@@ -59,15 +57,8 @@ object SearchApi {
     if (repoScope.exists(_.isEmpty))
       throw new IllegalArgumentException("search: empty repo scope (400 analog; omit the scope to search all)")
     val kk = math.min(k, MaxK)
-    import spark.implicits._
-    val distinct = terms.distinct
-    if (conjunctive) {
-      val q = distinct.map(t => ("adhoc", t, kk, distinct.size))
-        .toDF("query_id", "term", "k", "n_terms")
-      IndexSearch.topKAndAt(spark, paths, q, repoScope)
-    } else {
-      Wand.topKAt(spark, paths, Seq(graft.model.Query("adhoc", distinct, kk)), metrics, repoScope)
-    }
+    Wand.topKAt(spark, paths, Seq(graft.model.Query("adhoc", terms.distinct, kk)), metrics, repoScope,
+      if (conjunctive) Wand.Conjunctive else Wand.Routed)
   }
 
   /** One search request, EXECUTED, with per-request observability — the
@@ -88,12 +79,7 @@ object SearchApi {
     val rows = search(spark, paths, terms, k, conjunctive, Some(m)).collect()
     val latencyMs = (System.nanoTime() - t0) / 1000000
     val reqId = java.lang.Long.toHexString(graft.index.TermHash.xxhash64(terms.mkString(" ") + t0))
-    // the conjunctive path ([[IndexSearch.topKAndAt]]) is not wired into the
-    // WAND counters — OMIT the counter fields there rather than log a
-    // measured-looking zero (round-3 advice: 0 must mean "counted zero",
-    // never "not instrumented")
-    val stats = (if (conjunctive) Map.empty[String, Long] else m.snapshot) ++
-      Map("latency_ms" -> latencyMs, "n_results" -> rows.length.toLong)
+    val stats = m.snapshot ++ Map("latency_ms" -> latencyMs, "n_results" -> rows.length.toLong)
     val kv = stats.toSeq.sortBy(_._1).map { case (key, v) => s""""$key":$v""" }.mkString(",")
     System.err.println(
       s"""{"graft_request":"$reqId","terms":${terms.size},"k":$k,"conjunctive":$conjunctive,$kv}""")

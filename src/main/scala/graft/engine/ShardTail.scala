@@ -70,8 +70,8 @@ final case class TailRow(
     queryId: String, k: Int, scoreR: Double,
     repo: Array[Byte], path: Array[Byte], commit: Array[Byte])
 
-/** The ranking tail shared by every index route (WAND, hybrid, the index
-  * and AND plans): top-k per query in the pinned final order — quantized
+/** The ranking tail of every shard query ([[Wand.topKAt]], in each of its
+  * modes): top-k per query in the pinned final order — quantized
   * score descending, then repo/path/commit ascending by unsigned UTF-8
   * bytes, which is Spark's `UTF8String` order and DuckDB's `ORDER BY`.
   *
@@ -106,15 +106,13 @@ object ShardTail {
 
   /** The ≤ k best of one (salt shard, query) run's `(doc_id, raw score)`
     * candidates. A candidate with no key row in the shard is dropped (the
-    * docs inner-join semantics), as is one whose repo is outside `repos`
-    * (the index and AND plans' scope; WAND applies its scope before this).
+    * docs inner-join semantics); the repo scope was applied in the run.
     */
-  def select(shard: DocKeyShard, queryId: String, k: Int, candidates: Iterable[(Long, Double)],
-      repos: Option[Array[Array[Byte]]]): Array[TailRow] = {
+  def select(shard: DocKeyShard, queryId: String, k: Int, candidates: Iterable[(Long, Double)]): Array[TailRow] = {
     val rows = mutable.ArrayBuffer.empty[TailRow]
     candidates.foreach { case (doc, score) =>
       val i = shard.indexOf(doc)
-      if (i >= 0 && repos.forall(shard.repoIn(i, _)))
+      if (i >= 0)
         rows += TailRow(queryId, k, graft.score.BM25.quantize(score),
           shard.field(i, 0), shard.field(i, 1), shard.field(i, 2))
     }
@@ -139,32 +137,5 @@ object ShardTail {
     byQuery.keys.toSeq.sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
       .flatMap(byQuery)
       .toDF("query_id", "rank", "repo", "path", "commit", "score_r")
-  }
-
-  /** Both halves over a scored relation `(query_id, k, doc_id, score,
-    * salt)` whose partition i holds exactly salt i (the index and AND
-    * plans): the rows zip with the reader's key shards, one task per salt.
-    */
-  def rank(reader: IndexReader, scored: DataFrame, repoScope: Option[Seq[String]]): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val repos = repoScope.map(repoBytes)
-    val scoredRdd = scored.select("query_id", "k", "doc_id", "score", "salt")
-      .as[(String, Int, Long, Double, Int)].rdd
-    // no query term in the index: the optimizer folds the plan to an empty
-    // relation with no partitions, and there is nothing to rank
-    if (scoredRdd.getNumPartitions == 0) return finish(spark, Nil, Nil)
-    val rows = scoredRdd
-      .zipPartitions(reader.keys) { (it, shards) =>
-        val shard = shards.next()
-        val byQuery = mutable.LinkedHashMap.empty[(String, Int), mutable.ArrayBuffer[(Long, Double)]]
-        it.foreach { case (q, k, doc, score, salt) =>
-          shard.requireSalt(salt)
-          byQuery.getOrElseUpdate((q, k), mutable.ArrayBuffer.empty) += ((doc, score))
-        }
-        byQuery.iterator.flatMap { case ((q, k), cands) => select(shard, q, k, cands, repos) }
-      }
-      .collect()
-    finish(spark, rows.toSeq, Nil)
   }
 }

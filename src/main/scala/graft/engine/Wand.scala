@@ -31,20 +31,39 @@ object Wand {
   /** Threshold slack ≥ 2× the 1e-6 score-quantization grid (see class doc). */
   val Eps: Double = 1e-5
 
-  /** When true, every query takes the full WAND route (fast/hybrid
-    * disabled) — results are identical by construction (FastPathSpec pins
-    * it); the bench sets this for its `query_wand_*` leg so that key keeps
-    * measuring the WAND path itself round-over-round instead of silently
-    * becoming an alias of the routed serving path.
+  /** How [[topKAt]] serves a batch. Every mode runs the same shard job;
+    * results of [[Routed]], [[WandOnly]] and [[Exhaustive]] are identical
+    * by construction.
     */
-  @volatile var ForceWandRoute: Boolean = false
+  sealed trait Mode extends Serializable
+
+  /** Per query, the cheapest exact route: fast prefix, hybrid or WAND. */
+  case object Routed extends Mode
+
+  /** WAND for every query, fast and hybrid off: keeps a measurement of the
+    * WAND path itself (the bench's `query_wand_*` leg) from becoming an
+    * alias of the routed serving path.
+    */
+  case object WandOnly extends Mode
+
+  /** The index plan: every doc holding a query term is scored (no pivot
+    * pruning, no block skips), in WAND's summation order. The unpruned
+    * reference the pruned routes are checked against.
+    */
+  case object Exhaustive extends Mode
+
+  /** AND (§2.7 intersection, the reference's `CheckPredicate` analog,
+    * `dgraph.go:130-145`): only docs holding every query term. A query
+    * with an absent term runs nothing (routed absent).
+    */
+  case object Conjunctive extends Mode
 
   /** `(query_id, rank, repo, path, commit, score_r)` — rank-identical to
     * [[NaiveSearch.topK]] on every query.
     */
-  def topK(spark: SparkSession, sfDir: String, querySet: Seq[Query]): DataFrame = {
+  def topK(spark: SparkSession, sfDir: String, querySet: Seq[Query], mode: Mode = Routed): DataFrame = {
     val (paths, _) = IndexBuilder.ensure(spark, sfDir)
-    topKAt(spark, paths, querySet)
+    topKAt(spark, paths, querySet, mode = mode)
   }
 
   /** Same, against an already-built (complete) index — single-layer or
@@ -55,7 +74,9 @@ object Wand {
     * [[graft.index.Incremental]]) so pruning stays SOUND while exact
     * scoring uses the current avgdl. Compaction resets scales to 1.
     *
-    * Every WAND and hybrid query of the batch runs in ONE Spark job with no
+    * `mode` ([[Mode]]) picks how queries are served: routed per query
+    * (the default), WAND only, exhaustive, or conjunctive. Every shard
+    * query of the batch, whatever the mode, runs in ONE Spark job with no
     * exchange: the winning layers' salt-pinned segments and the reader's
     * key shards are zipped partition by partition (partition i == salt i,
     * [[IndexReader.pinSegments]]), and each (salt shard, query) pair is one
@@ -77,7 +98,8 @@ object Wand {
       paths: graft.index.IndexPaths,
       querySet: Seq[Query],
       metrics: Option[QueryMetrics] = None,
-      repoScope: Option[Seq[String]] = None): DataFrame = {
+      repoScope: Option[Seq[String]] = None,
+      mode: Mode = Routed): DataFrame = {
     import spark.implicits._
     val reader = IndexReader.get(spark, paths)
     val stats = reader.stats
@@ -116,6 +138,9 @@ object Wand {
     //    with 2+ fast-listed terms (a doc containing several hot terms
     //    could outrank both prefixes, so prefix unions are unsound there).
     //
+    // Only [[Routed]] takes the fast and hybrid routes; every other mode
+    // sends each query with a present term to the shard job.
+    //
     // The hybrid and WAND runs score with [[Postings.idf]]/[[Postings.tfNorm]],
     // like the fast-single path; those scalars MUST mirror BM25.score's
     // Column tree op-for-op (the bit-equality contract is documented and
@@ -125,20 +150,22 @@ object Wand {
     val fastK = graft.index.IndexBuilder.FastK
     val metaAll = reader.termMeta(querySet.flatMap(_.terms).distinct)
     def presentOf(q: Query): Seq[String] = q.terms.distinct.filter(metaAll.contains)
+    val routed = mode == Routed && repoScope.isEmpty
     // warm the fast-list cache for the whole batch in ONE probe (the
     // per-term path pays one Spark job per cold term; termMeta above already
     // settled dfs, so known-rare terms are skipped without any job)
-    if (!ForceWandRoute && repoScope.isEmpty)
+    if (routed)
       reader.prefetchFastLists(
         querySet.filter(_.k <= fastK).flatMap(_.terms).distinct.filter(metaAll.contains))
     def fastOf(q: Query): Seq[String] =
-      if (!ForceWandRoute && repoScope.isEmpty && q.k <= fastK)
-        presentOf(q).filter(t => reader.fastList(t).isDefined)
+      if (routed && q.k <= fastK) presentOf(q).filter(t => reader.fastList(t).isDefined)
       else Nil
     val (fastSingleQs, rest) = querySet.partition(q =>
       presentOf(q).size == 1 && fastOf(q).size == 1)
     val (hybridQs, wandQs) = rest.partition(q => presentOf(q).size >= 2 && fastOf(q).size == 1)
-    val (absentQs, shardWandQs) = wandQs.partition(q => presentOf(q).isEmpty)
+    // an AND query with any absent term matches nothing
+    val (absentQs, shardWandQs) = wandQs.partition(q => presentOf(q).isEmpty ||
+      (mode == Conjunctive && presentOf(q).size < q.terms.distinct.size))
     metrics.foreach { m =>
       m.routedFast.add(fastSingleQs.size.toLong)
       m.routedHybrid.add(hybridQs.size.toLong)
@@ -191,7 +218,8 @@ object Wand {
       t -> ((ord, reader.layers(ord).boundScale, Postings.idf(df, n)))
     }
     val tag = reader.cacheTag
-    val rows = reader.newestWins(meta.keys.toSeq, _.segments)
+    val prune = mode != Exhaustive
+    val rows = reader.newestWins(meta.keys.toSeq)
       .map { case (_, slice) =>
         slice.select("salt", "term", "df", "postings", "dls", "block_max", "block_dir")
           .as[(Int, String, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte])].rdd
@@ -213,14 +241,18 @@ object Wand {
         }
         shardQs.iterator.flatMap { q =>
           val lists = q.terms.flatMap(byTerm.get).toSeq
-          if (lists.isEmpty) Iterator.empty
+          // AND: a term with no sub-list here leaves this shard no match
+          if (lists.isEmpty || (mode == Conjunctive && lists.size < q.terms.length)) Iterator.empty
           else {
             val decodedBefore =
               if (metrics.isDefined) lists.iterator.map(_.blocks.decodedBlocks.toLong).sum else 0L
             val counters = new WandCounters
-            val inScope = if (q.hot == null) scopeFn else q.hybridScope(lists)
+            val inScope =
+              if (q.hot != null) q.hybridScope(lists)
+              else if (mode == Conjunctive) { val all = inAll(lists); (d: Long) => all(d) && scopeFn(d) }
+              else scopeFn
             val hits = ShardTail.select(shard, q.queryId, q.k,
-              wandShardTopK(lists, q.k, avgdl, counters, inScope), None)
+              wandShardTopK(lists, q.k, avgdl, counters, inScope, prune))
             metrics.foreach { m =>
               m.candidates.add(counters.evaluated)
               m.blockSkips.add(counters.skips)
@@ -251,6 +283,32 @@ object Wand {
       d => java.util.Arrays.binarySearch(ids, d) >= 0
     }
   }
+
+  /** AND membership in one shard: the docs present in every list. Walks
+    * the shortest list and seeks the others block-lazily, so blocks of the
+    * longer lists that hold no doc of the shortest are never decoded.
+    * Block maxima bound every doc, a fortiori the intersection, so WAND's
+    * pruning stays sound under this scope.
+    */
+  def inAll(lists: Seq[TermList]): Long => Boolean =
+    if (lists.size <= 1) _ => true
+    else {
+      val byCount = lists.map(_.blocks).sortBy(_.count)
+      val shortest = byCount.head
+      val others = byCount.tail.toArray
+      val pos = new Array[Int](others.length)
+      val ids = Iterator.range(0, shortest.count).map(shortest.id).filter { d =>
+        var i = 0
+        var all = true
+        while (all && i < others.length) {
+          pos(i) = others(i).seek(pos(i), d)
+          all = pos(i) < others(i).count && others(i).id(pos(i)) == d
+          i += 1
+        }
+        all
+      }.toArray
+      d => java.util.Arrays.binarySearch(ids, d) >= 0
+    }
 
   /** One term's shard sub-postings, accessed block-lazily: the cursor's
     * seeks route through the block directory ([[Postings.PostingsBlocks]]),
@@ -306,14 +364,13 @@ object Wand {
     */
   private def singleListTopK(
       tl: TermList, k: Int, avgdl: Double,
-      counters: WandCounters, inScope: Long => Boolean): Seq[(Long, Double)] = {
+      counters: WandCounters, inScope: Long => Boolean, prune: Boolean): Seq[(Long, Double)] = {
     val b = tl.blocks
     val heap = new ScoreHeap(k)
     val evaluated = mutable.ArrayBuffer.empty[(Long, Double)]
     var pos = 0
     while (pos < b.count) {
-      val thr = heap.threshold
-      if (tl.blockUpper(pos) < thr) {
+      if (prune && tl.blockUpper(pos) < heap.threshold) {
         // the whole current block is bounded under the threshold — hop to
         // the next block start without decoding (the directory knows it)
         if (counters != null) counters.skips += 1
@@ -340,14 +397,18 @@ object Wand {
   /** Classic block-max WAND over block-lazy shard sub-postings.
     * Returns every doc whose exact score ≥ (k-th best − [[Eps]]).
     * `counters` (optional) collects evaluated-doc and BMW-skip counts for
-    * [[QueryMetrics]].
+    * [[QueryMetrics]]. With `prune = false` ([[Exhaustive]]) pivot
+    * selection and block skips compare against −∞, so every in-scope doc
+    * is scored, in the same summation order; the heap threshold still
+    * filters what is returned.
     */
   def wandShardTopK(
       lists: Seq[TermList], k: Int, avgdl: Double,
       counters: WandCounters = null,
-      inScope: Long => Boolean = _ => true): Seq[(Long, Double)] = {
+      inScope: Long => Boolean = _ => true,
+      prune: Boolean = true): Seq[(Long, Double)] = {
     if (lists.isEmpty || k <= 0) return Nil
-    if (lists.size == 1) return singleListTopK(lists.head, k, avgdl, counters, inScope)
+    if (lists.size == 1) return singleListTopK(lists.head, k, avgdl, counters, inScope, prune)
     final class Cursor(val tl: TermList) { var pos: Int = 0
       def doc: Long = tl.blocks.id(pos)
       def done: Boolean = pos >= tl.blocks.count
@@ -361,6 +422,8 @@ object Wand {
     val evaluated = mutable.ArrayBuffer.empty[(Long, Double)]
 
     def threshold: Double = heap.threshold
+    // what pivot selection and block skips compare against
+    def bound: Double = if (prune) heap.threshold else Double.NegativeInfinity
 
     // active-cursor maintenance in place (r6): the loop previously allocated
     // a filterNot array + a sortBy array + boxed comparator calls PER
@@ -396,7 +459,7 @@ object Wand {
       var i = 0
       while (i < nActive && p < 0) {
         acc += sorted(i).tl.maxScore
-        if (acc >= threshold) p = i
+        if (acc >= bound) p = i
         i += 1
       }
       if (p < 0) return finishTies(evaluated, threshold)
@@ -410,7 +473,7 @@ object Wand {
         while (j < nActive && (j <= p || sorted(j).doc == pivotDoc)) {
           blockUb += sorted(j).tl.blockUpper(sorted(j).pos); j += 1
         }
-        if (blockUb >= threshold) {
+        if (blockUb >= bound) {
           if (inScope(pivotDoc)) {
             if (counters != null) counters.evaluated += 1
             var score = 0.0

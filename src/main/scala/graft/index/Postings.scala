@@ -69,8 +69,8 @@ object Postings {
     EncodedPostings(term, docIds.length.toLong, sumTf, bytes, dlBuf.toArray, bm, dir.toArray)
   }
 
-  /** Decode to (docIds, tfs, dls) — the full-materialization path (index
-    * scoring, stats recounts). WAND uses [[PostingsBlocks]] instead.
+  /** Decode to (docIds, tfs, dls) — the full-materialization path (stats
+    * recounts, merges). Serving uses [[PostingsBlocks]] instead.
     */
   def decode(postings: Array[Byte], dls: Array[Byte]): (Array[Long], Array[Int], Array[Long]) = {
     val (docIds, tfs) = Varint.decode(postings)
@@ -80,13 +80,6 @@ object Postings {
     while (i < out.length) { out(i) = r.readUnsigned(); i += 1 }
     (docIds, tfs, out)
   }
-
-  /** Iterate a block-lazy handle as (docId, tf, dl) rows — the full-scoring
-    * index path's decode loop; blocks materialize once per executor via
-    * [[graft.engine.PostingCache]] and are reused across queries.
-    */
-  def iterAll(b: PostingsBlocks): Iterator[(Long, Int, Long)] =
-    Iterator.range(0, b.count).map(i => (b.id(i), b.tf(i), b.dl(i)))
 
   /** EXACT top-k-by-score candidate set of one encoded posting list: every
     * posting whose QUANTIZED score (`BM25.quantize(idf × tfNorm)` at the

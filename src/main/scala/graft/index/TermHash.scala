@@ -26,7 +26,7 @@ object TermHash {
 
   /** The doc-salt function as a Column: the salt shard of a `doc_id`
     * column, `pmod(xxhash64(docId), n)`. Every doc-salted relation (the
-    * build's segments, the reader's key shards, the index plans' exchange)
+    * build's segments, the reader's key shards)
     * uses it, so a doc lands in the same shard everywhere.
     */
   def saltCol(docId: Column, n: Int): Column = functions.pmod(functions.xxhash64(docId), functions.lit(n)).cast("int")

@@ -80,6 +80,8 @@ object Varint {
         // compare, don't subtract: ids span the full Long range, so the gap
         // of a straddling pair overflows — the encoded gap is mod-2^64 and
         // decode's `prev + gap` wraps back to the exact id
+        if (docIds(i) == prev) throw new IllegalArgumentException(
+          s"duplicate doc_id $prev at $i: two input rows share one (repo, path, commit) key")
         require(docIds(i) > prev, s"postings not strictly sorted at $i")
         writeUnsigned(buf, docIds(i) - prev)
       }

@@ -62,15 +62,6 @@ object QuerySet {
       .toDF("query_id", "term", "k")
   }
 
-  /** Conjunctive rows (query_id, term, k, n_terms) — n_terms is the
-    * intersection arity the AND plan matches against.
-    */
-  def dfAnd(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    conjunctive.flatMap(q => q.terms.distinct.map(t => (q.queryId, t, q.k, q.terms.distinct.size)))
-      .toDF("query_id", "term", "k", "n_terms")
-  }
-
   /** Same rows as a DuckDB `VALUES` list for [[graft.corpus.OracleSql]]. */
   def duckValues: String =
     all.flatMap(q => q.terms.map(t => s"('${q.queryId}','$t',${q.k})")).mkString(",")

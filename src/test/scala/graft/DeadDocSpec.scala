@@ -48,8 +48,8 @@ class DeadDocSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deadId = docs.keySet // sanity
     val postings = sp.read.parquet(paths.indexDir).select("term").as[String].collect()
     assert(postings.nonEmpty && !postings.exists(_.isEmpty))
-    val hits = graft.engine.IndexSearch.topKAt(sp, paths,
-      Seq(("q1", "bravo", 10)).toDF("query_id", "term", "k"))
+    val hits = graft.engine.Wand.topKAt(sp, paths, Seq(graft.model.Query("q1", Seq("bravo"), 10)),
+      mode = graft.engine.Wand.Exhaustive)
       .select("path").as[String].collect()
     assert(hits.sorted.toSeq == Seq("a.go", "b.go"))
     assert(!hits.contains("dead.bin"))

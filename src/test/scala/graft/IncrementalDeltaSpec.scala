@@ -119,6 +119,15 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.schema(IndexBuilder.IndexSchema).parquet(out2.indexDir).count() === 0)
     assert(decodeCounts(Incremental.readMergedIndex(spark, out2.root)) === full)
     assert(Snapshots.read(out2.root).get.version === 3)
+
+    // 5. a batch with two rows of one (repo, path, commit) key: the error
+    // that reaches the caller, through Spark's wrapping, names the fault
+    val dup = intercept[Exception](Incremental.addBatch(spark, basePaths,
+      corpusOf(base ++ Seq(doc("e.go", "beta zeta"), doc("e.go", "beta eta"))), IndexPaths(s"$root/dup")))
+    val messages = Iterator.iterate[Throwable](dup)(_.getCause).takeWhile(_ != null)
+      .flatMap(e => Option(e.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("duplicate doc_id") &&
+      m.contains("two input rows share one (repo, path, commit) key")), messages.mkString("\n"))
   }
 }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{IndexReader, IndexSearch, QueryMetrics, Wand}
+import graft.engine.{IndexReader, QueryMetrics, Wand}
 import graft.index.{Incremental, IndexBuilder, IndexPaths, Snapshots}
 import graft.model.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Query serving OVER the layered (incremental) index — the round-3
   * flagship: an LSM index you can't query is half an LSM index. Pins:
   *
-  *  1. IndexSearch and WAND over a layered snapshot root are rank- AND
+  *  1. the exhaustive run and WAND over a layered snapshot root are rank- AND
   *     score-identical to the naive full-scoring plan on the full corpus
   *     (the reference serves queries over whatever has been upserted,
   *     `pkg/database/relationship/dgraph.go:62-92`);
@@ -139,7 +139,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // newest-wins df is the FULL merged df for cross-layer terms
     assert(meta("common")._1 === 60L)
 
-    assert(rows(IndexSearch.topKAt(spark, outPaths, queriesDf)) === naive)
+    assert(rows(Wand.topKAt(spark, outPaths, queries, mode = Wand.Exhaustive)) === naive)
     assert(rows(Wand.topKAt(spark, outPaths, queries)) === naive)
 
     // scoped: the key shards hold the union of both layers' docs
@@ -148,7 +148,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scoped.exists(_._4.startsWith("base")) && scoped.exists(_._4.startsWith("delta")),
       s"fixture: scoped hits must come from both layers: $scoped")
     assert(rows(Wand.topKAt(spark, outPaths, queries, repoScope = Some(scope))) === scoped)
-    assert(rows(IndexSearch.topKAt(spark, outPaths, queriesDf, Some(scope))) === scoped)
+    assert(rows(Wand.topKAt(spark, outPaths, queries, repoScope = Some(scope), mode = Wand.Exhaustive)) === scoped)
 
     // empty replay layer (no parquet files in its dirs) is servable, and
     // metrics accumulate on a cold WAND pass
@@ -171,7 +171,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "compacted snapshot still references the base layer")
     val cReader = IndexReader.get(spark, outPaths)
     assert(cReader.layers.size === 1 && cReader.newest.boundScale === 1.0)
-    assert(rows(IndexSearch.topKAt(spark, outPaths, queriesDf)) === naive)
+    assert(rows(Wand.topKAt(spark, outPaths, queries, mode = Wand.Exhaustive)) === naive)
     assert(rows(Wand.topKAt(spark, outPaths, queries)) === naive)
 
     val fullPaths = IndexPaths(s"$root/full")
@@ -225,7 +225,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(Wand.topKAt(spark, p2, tri, Some(m))) === naive)
     assert(m.candidates.value > 0, "no candidates counted")
     assert(m.blocksDecoded.value > 0, "cold pass decoded no blocks")
-    assert(rows(IndexSearch.topKAt(spark, p2, triDf)) === naive)
+    assert(rows(Wand.topKAt(spark, p2, tri, mode = Wand.Exhaustive)) === naive)
   }
 
   test("addBatchCompacting bounds the layer count and keeps query identity") {

@@ -74,16 +74,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("PartitionFilters") && p.contains("bucket"), s"no bucket pruning:\n$p")
   }
 
-  test("index hot path: query runs against the resident cached reader") {
-    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
-    // topKAt returns a local result (its shard job has already run), so the
-    // plan to inspect is the scored relation the shard tail consumes
-    val reader = graft.engine.IndexReader.get(spark, paths)
-    val p = plan(graft.engine.IndexSearch.scoredAt(reader, QuerySet.df(spark)))
-    assert(p.contains("InMemoryTableScan") || p.contains("Scan In-memory"),
-      s"hot query path does not use the cached index:\n$p")
-  }
-
   test("naive BM25: query set joins are broadcast, not shuffled") {
     val p = plan(graft.engine.NaiveSearch.topK(spark, Corpus.corpus(spark, sfDir), QuerySet.df(spark)))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join in naive plan:\n$p")
@@ -117,22 +107,14 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ranking tails use the bounded top-k aggregate, never a query-id window") {
     // a Window.partitionBy(query_id) funnels each query's whole candidate
     // set through one task; the k-heap aggregate reduces map-side first.
-    // The index routes rank inside their salt shards (ShardTail); their
-    // scored relations must stay window-free too.
-    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
-    val reader = graft.engine.IndexReader.get(spark, paths)
+    // The index routes rank inside their salt shards (ShardTail).
     val aggPlans = Seq(
       plan(graft.engine.NaiveSearch.topK(spark, Corpus.corpus(spark, sfDir), QuerySet.df(spark))),
       plan(graft.ops.Ann.bruteForceTopK(graft.ops.Ann.embeddings(spark, sfDir))),
       // IVF incl. k-means assignment + probe selection (max_by / TopK agg)
       plan(graft.ops.Ann.ivfTopK(graft.ops.Ann.embeddings(spark, sfDir))))
-    val shardPlans = Seq(
-      plan(graft.engine.IndexSearch.scoredAt(reader, QuerySet.df(spark))),
-      plan(graft.engine.IndexSearch.scoredAndAt(reader, QuerySet.dfAnd(spark))))
     aggPlans.foreach { p =>
       assert(p.contains("top_k_by_score"), s"ranking tail is not the top-k aggregate:\n$p")
-    }
-    (aggPlans ++ shardPlans).foreach { p =>
       assert(!p.contains("RunningWindowFunction") && !p.contains("Window ["),
         s"query ranking still uses a window:\n$p")
     }
@@ -181,10 +163,31 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.engine.Wand
     val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
     assertWarmOneJob("wand batch") { tag =>
-      Wand.ForceWandRoute = true
-      try Wand.topKAt(spark, paths, tagged(QuerySet.all, tag)).collect()
-      finally Wand.ForceWandRoute = false
+      Wand.topKAt(spark, paths, tagged(QuerySet.all, tag), mode = Wand.WandOnly).collect()
       ()
+    }
+  }
+
+  test("warm index request runs one Spark job, no shuffle") {
+    import graft.engine.Wand
+    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
+    assertWarmOneJob("index batch") { tag =>
+      Wand.topKAt(spark, paths, tagged(QuerySet.all, tag), mode = Wand.Exhaustive).collect()
+      ()
+    }
+  }
+
+  test("warm AND request runs one Spark job, no shuffle") {
+    import graft.engine.{QueryMetrics, Wand}
+    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
+    // qa5 has an absent term: counted absent, no shard work
+    assertWarmOneJob("AND batch") { tag =>
+      val m = QueryMetrics(spark)
+      val rows = Wand.topKAt(spark, paths, tagged(QuerySet.conjunctive, tag), Some(m),
+        mode = Wand.Conjunctive).collect()
+      assert(m.routedAbsent.value >= 1L && m.routedWand.value + m.routedAbsent.value === 5L,
+        s"routes: ${m.snapshot}")
+      assert(rows.nonEmpty && !rows.exists(_.getString(0).startsWith("qa5")), "qa5 must match nothing")
     }
   }
 
@@ -215,23 +218,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs === 1, s"request with a new scope ran $jobs Spark jobs")
     assert(shuffleBytes === 0L, s"request with a new scope shuffled $shuffleBytes bytes")
     assert(rows.nonEmpty && rows.forall(r => cold.contains(r.getString(2))), "rows outside the scope")
-  }
-
-  test("conjunctive plan: one exchange, REPARTITION_BY_NUM on salt") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-    val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
-    val reader = graft.engine.IndexReader.get(spark, paths)
-    val scored = graft.engine.IndexSearch.scoredAndAt(reader, QuerySet.dfAnd(spark))
-    val partitions = scored.rdd.getNumPartitions // AQE: the final plan, stages run
-    val helper = new AdaptiveSparkPlanHelper {}
-    val exchanges = helper.collect(scored.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
-    val p = plan(scored)
-    assert(exchanges.size === 1, s"expected exactly one exchange:\n$p")
-    assert(exchanges.head.shuffleOrigin === REPARTITION_BY_NUM, s"exchange is not the salt repartition:\n$p")
-    assert(exchanges.head.outputPartitioning.numPartitions === reader.stats.numSalts)
-    assert(exchanges.head.outputPartitioning.toString.contains("salt"), s"exchange not keyed on salt:\n$p")
-    assert(partitions === reader.stats.numSalts, "AQE changed the salt partition count")
   }
 
   test("layered WAND takes the exchange-free route: no groupByKey, no hash exchange under the candidate broadcast") {

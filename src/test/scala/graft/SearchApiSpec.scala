@@ -59,16 +59,13 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("repo scope: WAND inner-loop filter == shard-tail filter, and ranks are scope-local") {
-    // two scope checks must agree: the OR path rejects candidates inside the
-    // WAND evaluation loop; the index path drops out-of-scope repos in the
-    // shard tail before ranking
+    // the pruned WAND run and the exhaustive (unpruned) run both reject
+    // out-of-scope candidates in the evaluation loop, ahead of the shard's
+    // top-k; they must agree on the scope's own top-k
     val scope = QuerySet.scopeRepos
     val wand = SearchApi.search(spark, paths, Seq("func", "buffer"), 10, repoScope = Some(scope)).collect()
-    val viaIndex = {
-      val s = spark; import s.implicits._
-      val q = Seq(("adhoc", "func", 10), ("adhoc", "buffer", 10)).toDF("query_id", "term", "k")
-      graft.engine.IndexSearch.topKAt(spark, paths, q, Some(scope)).collect()
-    }
+    val viaIndex = graft.engine.Wand.topKAt(spark, paths, Seq(graft.model.Query("adhoc", Seq("func", "buffer"), 10)),
+      repoScope = Some(scope), mode = graft.engine.Wand.Exhaustive).collect()
     assert(wand.map(r => (r.getInt(1), r.getString(2), r.getString(3), r.getString(4))).toSeq ===
       viaIndex.map(r => (r.getInt(1), r.getString(2), r.getString(3), r.getString(4))).toSeq)
     assert(wand.nonEmpty && wand.forall(r => scope.contains(r.getString(2))),
@@ -92,6 +89,11 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hot term at sf0.001 spans multiple blocks: a WARM rerun decodes none
     val (_, warm) = SearchApi.searchMetered(spark, paths, Seq("func", "buffer"), 5)
     assert(warm("blocks_decoded") === 0L, s"warm rerun re-decoded blocks: $warm")
+    // AND requests meter like every other route
+    val (andRows, and) = SearchApi.searchMetered(spark, paths, Seq("func", "buffer"), 5, conjunctive = true)
+    assert(andRows.length === 5)
+    assert(and.get("candidates_evaluated").exists(_ > 0L) && and.get("routed_wand").contains(1L),
+      s"AND request not metered: $and")
   }
 
   test("conjunctive search returns only docs containing every term") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{IndexReader, IndexSearch, NaiveSearch, QueryMetrics, Wand}
+import graft.engine.{IndexReader, NaiveSearch, QueryMetrics, Wand}
 import graft.index.{Incremental, IndexBuilder, IndexPaths}
 import graft.model.Query
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -50,7 +50,7 @@ class ShardTailSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def queriesDf(qs: Seq[Query]): DataFrame = {
     val s = spark
     import s.implicits._
-    qs.flatMap(q => q.terms.map(t => (q.queryId, t, q.k, q.terms.size))).toDF("query_id", "term", "k", "n_terms")
+    qs.flatMap(q => q.terms.map(t => (q.queryId, t, q.k))).toDF("query_id", "term", "k")
   }
 
   private def rows(df: DataFrame): Seq[(String, Int, String, String, String, Double)] =
@@ -79,7 +79,7 @@ class ShardTailSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wandQ = Query("w", Seq("rare"), 10)
     val hybridQ = Query("h", Seq("hot", "rare"), 10)
     val naive = rows(NaiveSearch.topK(spark, corpusOf(orderRows),
-      queriesDf(Seq(wandQ, hybridQ)).drop("n_terms")))
+      queriesDf(Seq(wandQ, hybridQ))))
     assert(naive.filter(_._1 == "w").map(_._4) === utf8)
 
     val m = QueryMetrics(spark)
@@ -87,9 +87,9 @@ class ShardTailSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.routedWand.value === 1L && m.routedHybrid.value === 1L, s"routes = ${m.snapshot}")
     assert(served === naive)
 
-    val and = rows(IndexSearch.topKAndAt(spark, orderPaths, queriesDf(Seq(hybridQ))))
+    val and = rows(Wand.topKAt(spark, orderPaths, Seq(hybridQ), mode = Wand.Conjunctive))
     assert(and === naive.filter(_._1 == "h").take(tiePaths.size))
-    assert(rows(IndexSearch.topKAt(spark, orderPaths, queriesDf(Seq(wandQ, hybridQ)).drop("n_terms"))) === naive)
+    assert(rows(Wand.topKAt(spark, orderPaths, Seq(wandQ, hybridQ), mode = Wand.Exhaustive)) === naive)
   }
 
   test("heavy ties: each salt shard ships at most k rows") {
@@ -99,7 +99,7 @@ class ShardTailSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.routedWand.value === 1L)
     assert(m.candidates.value === tieRows.size.toLong, "fixture: every doc must tie")
     assert(m.tailRows.value <= numSalts * q.k, s"shards shipped ${m.tailRows.value} rows for k=${q.k}")
-    val naive = rows(NaiveSearch.topK(spark, corpusOf(tieRows), queriesDf(Seq(q)).drop("n_terms")))
+    val naive = rows(NaiveSearch.topK(spark, corpusOf(tieRows), queriesDf(Seq(q))))
     assert(served === naive)
     assert(served.map(_._4) === tieRows.map(_._1).take(3))
   }
@@ -112,13 +112,14 @@ class ShardTailSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the layered root's base layer IS the ties root's index: a reader still
     // open on it would share (and lose) those cache entries
     IndexReader.invalidate(tiePathsRoot.root)
-    Seq(orderPaths, layered).foreach { paths =>
+    Seq(orderPaths -> Seq("hot", "rare"), layered -> Seq("tie", "hot")).foreach { case (paths, andTerms) =>
       IndexReader.invalidate(paths.root)
       val before = sc.getPersistentRDDs.size
       val qs = Seq(Query("f", Seq("hot"), 5), Query("w", Seq("tie", "rare", "hot"), 5))
       Wand.topKAt(spark, paths, qs).collect()
       Wand.topKAt(spark, paths, qs, repoScope = Some(Seq("repo-t"))).collect()
-      IndexSearch.topKAt(spark, paths, queriesDf(qs).drop("n_terms")).collect()
+      Wand.topKAt(spark, paths, qs, mode = Wand.Exhaustive).collect()
+      assert(Wand.topKAt(spark, paths, Seq(Query("a", andTerms, 5)), mode = Wand.Conjunctive).count() > 0)
       assert(IndexReader.get(spark, paths).keys.getStorageLevel.isValid, "key shards are not pinned")
       assert(sc.getPersistentRDDs.size > before, "the queries pinned nothing")
       IndexReader.invalidate(paths.root)

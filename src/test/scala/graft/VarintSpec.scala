@@ -37,9 +37,16 @@ class VarintSpec extends AnyFunSuite {
   }
 
   test("rejects unsorted postings") {
-    intercept[IllegalArgumentException] {
+    val descending = intercept[IllegalArgumentException] {
       Varint.encode(Array(5L, 3L), Array(1, 1))
     }
+    assert(descending.getMessage.contains("not strictly sorted at 1"))
+    // an equal id is two input rows of one doc: the error names that fault
+    val duplicate = intercept[IllegalArgumentException] {
+      Varint.encode(Array(3L, 5L, 5L), Array(1, 1, 1))
+    }
+    assert(duplicate.getMessage.startsWith("duplicate doc_id 5 at 2:"), duplicate.getMessage)
+    assert(duplicate.getMessage.contains("share one (repo, path, commit) key"))
   }
 
   test("property (seed-pinned): encode∘decode = id on sorted random postings") {

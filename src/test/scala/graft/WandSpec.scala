@@ -33,9 +33,19 @@ class WandSpec extends AnyFunSuite {
       e.blockMax)
   }
 
-  private def check(lists: Seq[Wand.TermList], k: Int, avgdl: Double): Unit = {
-    val got = Wand.wandShardTopK(lists, k, avgdl).toMap
-    val want = bruteForce(lists, avgdl)
+  /** `prune = false` must score every doc of the lists; `conjunctive`
+    * restricts the run to [[Wand.inAll]] and the brute force to the docs
+    * present in every list.
+    */
+  private def check(lists: Seq[Wand.TermList], k: Int, avgdl: Double,
+      prune: Boolean = true, conjunctive: Boolean = false): Unit = {
+    val counters = new graft.engine.WandCounters
+    val inScope = if (conjunctive) Wand.inAll(lists) else (_: Long) => true
+    val got = Wand.wandShardTopK(lists, k, avgdl, counters, inScope, prune).toMap
+    val docSets = lists.map(tl => (0 until tl.blocks.count).map(tl.blocks.id).toSet)
+    val inEvery = docSets.reduce(_ intersect _)
+    val want = bruteForce(lists, avgdl).filter { case (d, _) => !conjunctive || inEvery(d) }
+    if (!prune) assert(counters.evaluated === want.size.toLong, "unpruned run skipped docs")
     val topk = want.toSeq.sortBy { case (d, s) => (-s, d) }.take(k)
     // every true top-k doc must be present with its exact score
     topk.foreach { case (doc, s) =>
@@ -73,7 +83,10 @@ class WandSpec extends AnyFunSuite {
           .map(d => (d, 1 + rnd.nextInt(5), 5L + rnd.nextInt(60)))
         mkList(s"t$t", 0.1 + rnd.nextDouble() * 3, docs, avgdl)
       }
-      check(lists, k = 1 + rnd.nextInt(20), avgdl = avgdl)
+      val k = 1 + rnd.nextInt(20)
+      check(lists, k, avgdl)
+      check(lists, k, avgdl, prune = false)
+      check(lists, k, avgdl, conjunctive = true)
     }
   }
 
