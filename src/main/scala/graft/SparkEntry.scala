@@ -315,7 +315,7 @@ object SparkEntry {
         graft.index.Incremental.addBatch(s, r1, full, r2)
       }
       val snap = graft.index.Snapshots.read(r2.root).get
-      require(snap.indexDirs.size == 3, s"chain must be 3 layers, got ${snap.indexDirs.size}")
+      require(snap.layers.size == 3, s"chain must be 3 layers, got ${snap.layers.size}")
       // per-doc ingest provenance (v5): the 3-layer root's docs union must
       // carry one distinct batch_id per ingest batch (StartUrl analog)
       val batchIds = graft.index.Incremental.readMergedDocs(s, r2.root)
@@ -339,20 +339,19 @@ object SparkEntry {
       // build_args as `src=[...]`, so stats-collision across different
       // contents cannot serve a stale compacted layer. A replayed source
       // (content unchanged, version bumped) keeps the existing layer.
-      val srcSnap = graft.index.Snapshots.read(out.root)
-      val srcStats = srcSnap.flatMap(sn => graft.index.IndexBuilder.readStatsFile(sn.statsPath))
-      val srcArgs = srcSnap.flatMap(sn => graft.index.IndexBuilder.readJsonString(
-        java.nio.file.Paths.get(sn.statsPath), "build_args")).getOrElse("")
-      val cSnap = graft.index.Snapshots.read(cRoot)
-      val cStats = cSnap.flatMap(sn => graft.index.IndexBuilder.readStatsFile(sn.statsPath))
-      val cArgs = cSnap.flatMap(sn => graft.index.IndexBuilder.readJsonString(
-        java.nio.file.Paths.get(sn.statsPath), "build_args")).getOrElse("")
+      def newest(root: String) = graft.index.Snapshots.read(root).map(_.layers.last)
+      def args(root: String) = newest(root).flatMap(l => graft.index.IndexBuilder.readJsonString(
+        java.nio.file.Paths.get(l.statsPath), "build_args")).getOrElse("")
+      val srcStats = newest(out.root).flatMap(graft.index.IndexBuilder.readStats)
+      val srcArgs = args(out.root)
+      val cStats = newest(cRoot).flatMap(graft.index.IndexBuilder.readStats)
+      val cArgs = args(cRoot)
       if (cStats.isEmpty || cStats != srcStats || !cArgs.endsWith(s"src=[$srcArgs]"))
         graft.index.Incremental.compact(s, out.root, Some(cRoot))
       val snap = graft.index.Snapshots.read(cRoot).get
-      require(snap.indexDirs.size == 1, "compacted root must be single-layer")
+      require(snap.layers.size == 1, "compacted root must be single-layer")
       decodeRecount(s,
-        s.read.schema(graft.index.IndexBuilder.IndexSchema).parquet(snap.indexDirs.head))
+        s.read.schema(graft.index.IndexBuilder.IndexSchema).parquet(snap.layers.head.indexDir))
     }),
 
     // ST1/ST2: streamed tokenize+tf must equal the batch aggregation.

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.index.{IndexBuilder, IndexPaths, IndexStats, Snapshots, TermHash}
+import graft.index.{Incremental, IndexBuilder, IndexPaths, IndexStats, Snapshots, TermHash}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,30 +18,33 @@ import scala.collection.concurrent.TrieMap
   * soundness factor `max(1, avgdl_current / avgdl)` (see
   * [[graft.index.Incremental]] for the monotonicity proof) — exact layers
   * (the newest, or any compacted root) have scale 1.0.
+  *
+  * `segments` is the layer's one pinned relation: every route reads it, and
+  * so does [[IndexReader.termMeta]].
   */
 final case class IndexLayer(
     ordinal: Int,
-    indexDir: String,
+    paths: IndexPaths,
     avgdl: Double,
     boundScale: Double,
-    index: DataFrame,
     segments: DataFrame)
 
-/** A resident handle on one index root — the engine analog of the
-  * reference API server holding its Dgraph connection pool open across
-  * requests (`pkg/database/relationship/dgraph.go:25-35`): all layers of
-  * the current snapshot, their salted segments, and one [[DocKeyShard]] per
-  * salt (the natural doc keys the ranking tail needs) are loaded once and
-  * kept persisted, so per-query work is pruning + decode + score, not
-  * parquet directory listing.
+/** A resident handle on one published index root — the engine analog of
+  * the reference API server holding its Dgraph connection pool open across
+  * requests (`pkg/database/relationship/dgraph.go:25-35`): the layers of
+  * the current snapshot ([[Snapshots.open]]), one pinned salted-segments
+  * relation per layer, and one [[DocKeyShard]] per salt (the natural doc
+  * keys the ranking tail needs) are loaded once and kept persisted, so
+  * per-query work is pruning + decode + score, not parquet directory
+  * listing. A root without a published snapshot is refused.
   *
   * Layered roots (incremental adds, [[graft.index.Incremental.addBatch]])
-  * are served directly: term metadata resolves newest-wins per term, the
-  * query paths read exactly one layer's row per term, and the key shards
-  * are built from the union of the disjoint per-layer docs sidecars — the
-  * reference's query-over-live-store behavior (`dgraph.go:62-92`,
-  * `FindNode` serves whatever has been upserted). The shards also answer
-  * repo scopes: no request reads the docs sidecars.
+  * are served directly: term metadata resolves newest-wins per term from
+  * the segments, the query paths read exactly one layer's rows per term,
+  * and the key shards are built from the union of the disjoint per-layer
+  * docs sidecars — the reference's query-over-live-store behavior
+  * (`dgraph.go:62-92`, `FindNode` serves whatever has been upserted). The
+  * shards also answer repo scopes: no request reads the docs sidecars.
   *
   * At 10^12-doc scale you would pin only the term metadata and let posting
   * blocks stream from storage; at bench scale the whole index fits and the
@@ -62,27 +65,30 @@ final case class IndexReader(
   def newest: IndexLayer = layers.last
 
   /** Per-term metadata for query planning: global df (idf is a per-term
-    * constant over the WHOLE corpus — the newest layer's row for a term
-    * already merges all older postings of that term) plus the ordinal of
-    * the winning (newest-containing) layer. Driver-cached per reader:
-    * each distinct term costs one bucket-pruned scan per probed layer
-    * ONCE; later queries on the same terms run ZERO Spark jobs here.
-    * Absent terms cache as df=0 and are omitted (the 404 analog).
+    * constant over the WHOLE corpus) plus the ordinal of the winning
+    * (newest-containing) layer. Read from the layers' pinned segments,
+    * newest first, summing a term's salt rows on the driver. That sum is the
+    * full df: a layer holding a term holds its FULL merged list, split by
+    * salt (the build salts every list; an add re-salts each delta term's
+    * merged base ∪ delta list). Driver-cached per reader: each distinct
+    * term costs one bucket-pruned scan per probed layer ONCE; later queries
+    * on the same terms run ZERO Spark jobs here. Absent terms cache as
+    * df=0 and are omitted (the 404 analog).
     */
   def termMeta(terms: Seq[String]): Map[String, (Long, Int)] = {
     var missing = terms.distinct.filterNot(termCache.contains)
     var li = layers.length - 1
     while (li >= 0 && missing.nonEmpty) {
       val layer = layers(li)
-      import layer.index.sparkSession.implicits._
+      import layer.segments.sparkSession.implicits._
       val buckets = missing.map(TermHash.bucket(_, stats.numBuckets)).distinct
-      val found = layer.index
+      val found = layer.segments
         .filter(col("bucket").isin(buckets: _*))
         .filter(col("term").isin(missing: _*))
         .select("term", "df").as[(String, Long)].collect()
+        .groupMapReduce(_._1)(_._2)(_ + _)
       found.foreach { case (t, d) => termCache.put(t, (d, layer.ordinal)) }
-      val seen = found.map(_._1).toSet
-      missing = missing.filterNot(seen)
+      missing = missing.filterNot(found.contains)
       li -= 1
     }
     missing.foreach(termCache.put(_, (0L, -1)))
@@ -210,54 +216,26 @@ object IndexReader {
     })
   }
 
-  /** Open a root: snapshot metadata when present (its presence is the
-    * completeness watermark for layered roots — a snapshot is only ever
-    * published on completion), else the strict manifest-counting
-    * [[IndexBuilder.open]] for legacy single-layer roots.
+  /** Open a published root ([[Snapshots.open]] checks it): one pinned
+    * segments relation per layer, the key shards over the layers' docs
+    * union, and the newest layer's fast sidecar. Pins are lazy: no Spark
+    * job runs here.
     */
-  private def open(spark: SparkSession, paths: IndexPaths): IndexReader =
-    Snapshots.read(paths.root) match {
-      case Some(snap) =>
-        if (snap.segmentsDirs.size != snap.indexDirs.size ||
-            snap.statsPaths.size != snap.indexDirs.size)
-          throw new IllegalStateException(
-            s"snapshot v${snap.version} at ${paths.root} lacks aligned per-layer segments/stats " +
-              s"(pre-v${IndexBuilder.FormatVersion} metadata?) — rebuild the root")
-        val stats = IndexBuilder.readStatsFile(snap.statsPath).getOrElse(
-          throw new IllegalStateException(s"missing stats at ${snap.statsPath}"))
-        if (stats.version != IndexBuilder.FormatVersion)
-          throw new IllegalStateException(
-            s"index at ${paths.root} has format v${stats.version}, reader needs v${IndexBuilder.FormatVersion}")
-        val layers = snap.indexDirs.indices.map { i =>
-          val layerStats = IndexBuilder.readStatsFile(snap.statsPaths(i)).getOrElse(
-            throw new IllegalStateException(s"missing layer stats at ${snap.statsPaths(i)}"))
-          // explicit schemas: an EMPTY delta layer (replayed batch) has no
-          // parquet files to infer from
-          val idx = spark.read.schema(IndexBuilder.IndexSchema)
-            .parquet(snap.indexDirs(i)).persist(StorageLevel.MEMORY_AND_DISK)
-          val seg = pinSegments(spark.read.schema(IndexBuilder.SegmentsSchema)
-            .parquet(snap.segmentsDirs(i)), stats.numSalts)
-          IndexLayer(i, snap.indexDirs(i), layerStats.avgdl,
-            math.max(1.0, stats.avgdl / layerStats.avgdl), idx, seg)
-        }
-        val docs = snap.docsDirs
-          .map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
-          .reduce(_ unionByName _)
-        IndexReader(paths, stats, snap.version, layers, pinKeys(docs, stats.numSalts),
-          cacheTag(paths, stats, snap.version),
-          fastFor(spark, Some(snap.indexDirs.last)))
-
-      case None =>
-        val stats = IndexBuilder.open(paths)
-        val idx = spark.read.parquet(paths.indexDir).persist(StorageLevel.MEMORY_AND_DISK)
-        val seg = pinSegments(
-          spark.read.schema(IndexBuilder.SegmentsSchema).parquet(paths.segmentsDir), stats.numSalts)
-        val docs = spark.read.schema(IndexBuilder.DocsSchema).parquet(paths.docsDir)
-        IndexReader(paths, stats, 0,
-          Seq(IndexLayer(0, paths.indexDir, stats.avgdl, 1.0, idx, seg)),
-          pinKeys(docs, stats.numSalts), cacheTag(paths, stats, 0),
-          fastFor(spark, Some(paths.indexDir)))
+  private def open(spark: SparkSession, paths: IndexPaths): IndexReader = {
+    val root = Snapshots.open(paths.root)
+    val stats = root.stats
+    val layers = root.layers.zipWithIndex.map { case ((layer, layerStats), i) =>
+      // explicit schema: an EMPTY delta layer (replayed batch) has no
+      // parquet files to infer from
+      val seg = pinSegments(spark.read.schema(IndexBuilder.SegmentsSchema)
+        .parquet(layer.segmentsDir), stats.numSalts)
+      IndexLayer(i, layer, layerStats.avgdl, math.max(1.0, stats.avgdl / layerStats.avgdl), seg)
     }
+    val newest = root.snapshot.layers.last
+    IndexReader(paths, stats, root.snapshot.version, layers,
+      pinKeys(Incremental.mergedDocs(spark, root.snapshot.layers), stats.numSalts),
+      cacheTag(paths, newest, stats, root.snapshot.version), fastFor(spark, newest))
+  }
 
   /** Pin a segments layer with partition i holding exactly salt i
     * (`repartitionById`), sorted by (bucket, term) so the in-memory batch
@@ -335,26 +313,23 @@ object IndexReader {
     }
   }
 
-  /** Fast sidecar beside the NEWEST layer's index dir. v7 invariant: every
-    * publish path writes (or rebuilds) the sidecar next to the newest index
-    * dir at the CURRENT stats — full build and compact via
+  /** The NEWEST layer's fast sidecar. v7 invariant: every publish path
+    * writes (or rebuilds) the newest layer's sidecar at the CURRENT stats —
+    * full build and compact via
     * [[IndexBuilder.buildPostingsPhases]], incremental adds via the
     * [[graft.index.Incremental.addBatch]] whole-sidecar re-rank (tfNorm
     * ORDER is not avgdl-stable, so prefixes ranked at an older avgdl must
     * never be served). Absent `_SUCCESS` (a pre-v7 or hand-assembled root)
     * disables the fast route rather than serving a stale order.
     */
-  private def fastFor(spark: SparkSession, newestIndexDir: Option[String]): Option[DataFrame] =
-    newestIndexDir.flatMap { idx =>
-      val dir = graft.index.IndexPaths.fastDirFor(idx)
-      if (Files.exists(Paths.get(s"$dir/_SUCCESS")))
-        Some(spark.read.schema(IndexBuilder.FastSchema).parquet(dir)
-          .persist(StorageLevel.MEMORY_AND_DISK))
-      else None
-    }
+  private def fastFor(spark: SparkSession, newest: IndexPaths): Option[DataFrame] =
+    if (Files.exists(Paths.get(s"${newest.fastDir}/_SUCCESS")))
+      Some(spark.read.schema(IndexBuilder.FastSchema).parquet(newest.fastDir)
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    else None
 
   /** [[PostingCache]] key prefix: root + snapshot version + full build
-    * stats + the stats file's write-time nonce, so ANY rebuild — including
+    * stats + the newest layer's stats-file write-time nonce, so ANY rebuild — including
     * a same-stats rebuild under different salting — changes the key and a
     * multi-executor cluster can never serve stale decoded sub-lists.
     * The nonce is a random UUID written INTO the stats JSON at build time
@@ -363,8 +338,8 @@ object IndexReader {
     * mtime remains the fallback for pre-nonce stats files.
     * Driver-side [[invalidate]] is best-effort on top, not load-bearing.
     */
-  private def cacheTag(paths: IndexPaths, stats: IndexStats, snapVersion: Int): String = {
-    val p = Paths.get(paths.statsPath)
+  private def cacheTag(paths: IndexPaths, newest: IndexPaths, stats: IndexStats, snapVersion: Int): String = {
+    val p = Paths.get(newest.statsPath)
     val nonce = IndexBuilder.readJsonString(p, "nonce").getOrElse(
       if (Files.exists(p)) Files.getLastModifiedTime(p).toMillis.toString else "0")
     s"${paths.root}@v$snapVersion:${stats.nDocs}:${stats.totalTokens}:" +
@@ -372,14 +347,14 @@ object IndexReader {
   }
 
   /** Drop cached readers for a root (used after rebuilds that invalidate it),
-    * across all sessions: every pin (index, segments, key shards, fast
-    * sidecar) is released, plus the decoded-postings cache entries.
+    * across all sessions: every pin (segments, key shards, fast sidecar)
+    * is released, plus the decoded-postings cache entries.
     */
   def invalidate(root: String): Unit = {
     cache.keys.filter(_._2 == root).foreach { k =>
       cache.remove(k).foreach { r =>
         if (!r.stopped) {
-          r.layers.foreach { l => l.index.unpersist(); l.segments.unpersist() }
+          r.layers.foreach(_.segments.unpersist())
           r.keys.unpersist(blocking = false)
           r.fast.foreach(_.unpersist())
         }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - unknown term             → EMPTY result, not an error (the reference
   *                               returns 404 with `results: null` for an
   *                               unreachable root, `api/http.go:87-91`)
-  *  - serving an incomplete index already throws from
-  *    [[graft.index.IndexBuilder.open]] (the 503 analog).
+  *  - serving a root without a published snapshot already throws from
+  *    [[graft.index.Snapshots.open]] (the 503 analog).
   */
 object SearchApi {
 

@@ -20,10 +20,13 @@ import scala.jdk.CollectionConverters._
   * Delta layout (LSM-style, the 100 TB shape): untouched base terms are
   * REFERENCED through the snapshot metadata ([[Snapshots]]), never decoded,
   * re-encoded, or rewritten — a 0.1% delta costs a delta-sized write, not a
-  * full-index rewrite. The output root holds only the merged delta-term
-  * rows + the fresh docs sidecar + a snapshot whose layer list is
-  * `base layers ++ [delta]`; readers resolve newest-wins per term
-  * ([[readMergedIndex]]) and union per doc ([[readMergedDocs]]).
+  * full-index rewrite. The output root is itself one layer (an
+  * [[IndexPaths]] root: the merged delta-term rows, their salted segments,
+  * the fresh docs sidecar, edges, fast sidecar, stats) plus a snapshot whose
+  * layer roots are `base layers ++ [out]`; readers resolve newest-wins per
+  * term ([[readMergedIndex]]) and union per doc ([[readMergedDocs]]). Every
+  * entry point opens its source through [[Snapshots.open]], so only a
+  * published root can be added to, compacted or read merged.
   *
   * Stats semantics: nDocs/avgdl count TOKEN-BEARING docs only, matching
   * [[IndexBuilder]] (zero-token docs get a lineage row with dl=0 but no
@@ -53,33 +56,13 @@ object Incremental {
       newCorpus: DataFrame,
       outPaths: IndexPaths): IndexStats = {
     def phase[A](name: String)(f: => A): A = IndexBuilder.phase(name, tag = "add")(f)
-    // a snapshot is only ever published on completion, so its presence is
-    // the completeness watermark for layered roots (delta outputs have no
-    // salt manifests of their own); legacy single-layer roots fall back to
-    // the strict manifest-counting open().
-    val baseLayers = Snapshots.read(basePaths.root).getOrElse {
-      IndexBuilder.open(basePaths)
-      Snapshot(1, Seq(basePaths.indexDir), Seq(basePaths.docsDir),
-        Seq(basePaths.segmentsDir), Seq(basePaths.statsPath), basePaths.statsPath, None)
-    }
-    // fail fast on a pre-v4 or malformed base BEFORE any expensive phase:
-    // a snapshot without aligned per-layer segments/stats would merge fine
-    // but publish a root no reader can ever open
-    if (baseLayers.segmentsDirs.size != baseLayers.indexDirs.size ||
-        baseLayers.statsPaths.size != baseLayers.indexDirs.size)
-      throw new IllegalStateException(
-        s"addBatch: base snapshot v${baseLayers.version} at ${basePaths.root} lacks aligned " +
-          s"per-layer segments/stats (pre-v${IndexBuilder.FormatVersion} metadata?) — rebuild the base")
-    val baseStats = IndexBuilder.readStatsFile(baseLayers.statsPath).getOrElse(
-      throw new IllegalStateException(s"missing stats at ${baseLayers.statsPath}"))
-    if (baseStats.version != IndexBuilder.FormatVersion)
-      throw new IllegalStateException(
-        s"addBatch: base at ${basePaths.root} has format v${baseStats.version}, " +
-          s"need v${IndexBuilder.FormatVersion} — rebuild the base")
+    // fails fast, BEFORE any expensive phase, on an unpublished or
+    // stale-format base
+    val base = Snapshots.open(basePaths.root)
+    val baseStats = base.stats
+    val layers = base.snapshot.layers :+ outPaths
 
-    val baseDocs = baseLayers.docsDirs
-      .map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
-      .reduce(_ unionByName _)
+    val baseDocs = mergedDocs(spark, base.snapshot.layers)
     val existingIds = baseDocs.select("doc_id")
     val incoming = Corpus.withDocId(newCorpus)
     // J1: insert iff absent — idempotent replays, like the reference's
@@ -126,23 +109,19 @@ object Incremental {
     // the self-healing path).
     val inflightMarker = java.nio.file.Paths.get(s"${outPaths.root}/add-inflight.json")
     val replayNoOp = !java.nio.file.Files.exists(inflightMarker) &&
-      Snapshots.read(outPaths.root).exists { prev =>
-      prev.indexDirs == (baseLayers.indexDirs :+ outPaths.indexDir) &&
-        prev.docsDirs == (baseLayers.docsDirs :+ outPaths.docsDir) &&
-        prev.segmentsDirs == (baseLayers.segmentsDirs :+ outPaths.segmentsDir) &&
-        IndexBuilder.readStatsFile(prev.statsPath).contains(newStats) &&
-        IndexBuilder.readJsonString(
-          java.nio.file.Paths.get(prev.statsPath), "build_args").contains(publishArgs)
-    } && Seq(outPaths.indexDir, outPaths.segmentsDir, outPaths.docsDir,
-      outPaths.edgesDir, outPaths.fastDir)
-      .forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/_SUCCESS")))
+      Snapshots.read(outPaths.root).exists(_.layers == layers) &&
+      IndexBuilder.readStats(outPaths).contains(newStats) &&
+      IndexBuilder.readJsonString(
+        java.nio.file.Paths.get(outPaths.statsPath), "build_args").contains(publishArgs) &&
+      Seq(outPaths.indexDir, outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir, outPaths.fastDir)
+        .forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/_SUCCESS")))
     if (replayNoOp) {
       System.err.println(s"[add] replay no-op: ${outPaths.root} already carries this batch ($publishArgs)")
       fresh.unpersist(); tf.unpersist()
     } else {
       java.nio.file.Files.createDirectories(inflightMarker.getParent)
       java.nio.file.Files.writeString(inflightMarker, "in-flight: " + publishArgs)
-      addBatchRewrite(spark, baseLayers, basePaths, outPaths, fresh, tf, newStats)
+      addBatchRewrite(spark, base, basePaths, outPaths, fresh, tf, newStats)
     }
 
     // persist stats + the layered snapshot: the merged table is openable
@@ -152,16 +131,9 @@ object Incremental {
     // published at the out root: republishing (e.g. replaying an add onto a
     // root that was since compacted) must never move the hint BACKWARDS to
     // an older view
-    val outVersion = math.max(baseLayers.version,
+    val outVersion = math.max(base.snapshot.version,
       Snapshots.currentVersion(outPaths.root).getOrElse(0)) + 1
-    Snapshots.write(outPaths.root, Snapshot(
-      outVersion,
-      baseLayers.indexDirs :+ outPaths.indexDir,
-      baseLayers.docsDirs :+ outPaths.docsDir,
-      baseLayers.segmentsDirs :+ outPaths.segmentsDir,
-      baseLayers.statsPaths :+ outPaths.statsPath,
-      outPaths.statsPath,
-      Some(basePaths.root)))
+    Snapshots.write(outPaths.root, Snapshot(outVersion, layers, Some(basePaths.root)))
     // a new snapshot invalidates any resident reader on this root
     graft.engine.IndexReader.invalidate(outPaths.root)
     // rewrite (if any) and publish both landed — clear the in-flight marker
@@ -193,7 +165,7 @@ object Incremental {
     */
   private def addBatchRewrite(
       spark: SparkSession,
-      baseLayers: Snapshot,
+      base: PublishedRoot,
       basePaths: IndexPaths,
       outPaths: IndexPaths,
       fresh: DataFrame,
@@ -209,7 +181,7 @@ object Incremental {
 
     // base rows for DELTA TERMS ONLY: newest layer wins per term, then the
     // left_semi restriction keeps untouched terms out of the merge entirely.
-    val baseCurrent = currentIndex(spark, baseLayers)
+    val baseCurrent = currentIndex(spark, base.snapshot.layers)
     val existing = baseCurrent
       .join(delta.select("term"), Seq("term"), "left_semi")
       .select(col("term"), col("postings").as("postings_a"), col("dls").as("dls_a"))
@@ -291,9 +263,7 @@ object Incremental {
     // postings' newest-wins per term. A batch that adds nothing writes a
     // valid EMPTY layer (schema-pinned read).
     phase("edges-write") {
-      val baseNodes = LinkIndex.nodesOf(baseLayers.docsDirs
-        .map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
-        .reduce(_ unionByName _))
+      val baseNodes = LinkIndex.nodesOf(mergedDocs(spark, base.snapshot.layers))
       val freshNodes = LinkIndex.nodesOf(
         spark.read.schema(IndexBuilder.DocsSchema).parquet(outPaths.docsDir))
       LinkIndex.writeEdges(spark,
@@ -312,12 +282,7 @@ object Incremental {
     // next compact fell back to full WAND at O(df≈N) with no block skips —
     // the exact pathology the fast lists exist to kill, in what is the
     // steady state at 100 TB.
-    val layeredView = Snapshot(
-      0, baseLayers.indexDirs :+ outPaths.indexDir,
-      baseLayers.docsDirs :+ outPaths.docsDir,
-      baseLayers.segmentsDirs :+ outPaths.segmentsDir,
-      baseLayers.statsPaths :+ outPaths.statsPath,
-      outPaths.statsPath, None)
+    val layers = base.snapshot.layers :+ outPaths
     // Staged swap, NOT an in-place rebuild: on a non-no-op replay (same
     // batch path, changed content) the live snapshot's newest layer
     // references THIS fastDir, so deleting it for the duration of the
@@ -337,12 +302,9 @@ object Incremental {
     // upper-bounds every row's scale (delta-layer rows are encoded at
     // newStats.avgdl, scale 1); same soundness argument as the WAND
     // reader's boundScale
-    val fastBoundScale = (1.0 +: baseLayers.statsPaths.flatMap(p =>
-      IndexBuilder.readStatsFile(p).map(ls => newStats.avgdl / ls.avgdl))).max
+    val fastBoundScale = (1.0 +: base.layers.map(newStats.avgdl / _._2.avgdl)).max
     IndexBuilder.buildFastSidecar(
-      spark, currentIndex(spark, layeredView),
-      layeredView.docsDirs.map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
-        .reduce(_ unionByName _),
+      spark, currentIndex(spark, layers), mergedDocs(spark, layers),
       newStats, fastStage.toString, boundScale = fastBoundScale)
     IndexBuilder.deleteRecursively(fastFinal)
     java.nio.file.Files.move(fastStage, fastFinal,
@@ -363,8 +325,7 @@ object Incremental {
       outPaths: IndexPaths,
       maxLayers: Int = 8): IndexStats = {
     val stats = addBatch(spark, basePaths, newCorpus, outPaths)
-    val snap = Snapshots.read(outPaths.root).get
-    if (snap.indexDirs.size > maxLayers) compact(spark, outPaths.root)
+    if (Snapshots.read(outPaths.root).get.layers.size > maxLayers) compact(spark, outPaths.root)
     stats
   }
 
@@ -384,22 +345,11 @@ object Incremental {
     * `toRoot = Some(r)` the compacted table is published as a NEW v1 root.
     */
   def compact(spark: SparkSession, root: String, toRoot: Option[String] = None): IndexStats = {
-    val snap = Snapshots.read(root).getOrElse(
-      throw new IllegalStateException(s"compact: no snapshot metadata at $root"))
-    val stats = IndexBuilder.readStatsFile(snap.statsPath).getOrElse(
-      throw new IllegalStateException(s"compact: missing stats at ${snap.statsPath}"))
-    // fail fast BEFORE deleting dirs or publishing (mirrors addBatch): a
-    // pre-v4 root would otherwise compact into a snapshot whose stats still
-    // carry the legacy version — published, then rejected by every reader
-    if (snap.segmentsDirs.size != snap.indexDirs.size ||
-        snap.statsPaths.size != snap.indexDirs.size)
-      throw new IllegalStateException(
-        s"compact: snapshot v${snap.version} at $root lacks aligned per-layer segments/stats " +
-          s"(pre-v${IndexBuilder.FormatVersion} metadata?) — rebuild the root")
-    if (stats.version != IndexBuilder.FormatVersion)
-      throw new IllegalStateException(
-        s"compact: root $root has format v${stats.version}, " +
-          s"need v${IndexBuilder.FormatVersion} — rebuild the root")
+    // fails fast, BEFORE deleting dirs or publishing, on an unpublished or
+    // stale-format root
+    val src = Snapshots.open(root)
+    val snap = src.snapshot
+    val stats = src.stats
 
     val (inner, publishRoot, publishVersion) = toRoot match {
       case Some(r) => (IndexPaths(r), r, 1)
@@ -410,9 +360,7 @@ object Incremental {
 
     // docs union: per-layer docId sets are disjoint (J1), content_sha,
     // cust, and dl=0 lineage rows carry over unchanged.
-    snap.docsDirs.map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
-      .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(inner.docsDir)
+    mergedDocs(spark, snap.layers).write.mode("overwrite").parquet(inner.docsDir)
 
     // edges fold back to ONE exact layer, like everything else compaction
     // touches (re-derived whole from the compacted sidecar — a metadata job)
@@ -425,7 +373,7 @@ object Incremental {
     // decode is distributed (one task per index row group), then the shared
     // salted-segments + merge phases re-encode everything at stats.avgdl.
     import spark.implicits._
-    val tfd = currentIndex(spark, snap)
+    val tfd = currentIndex(spark, snap.layers)
       .select("term", "postings", "dls")
       .as[(String, Array[Byte], Array[Byte])]
       .flatMap { case (term, p, d) =>
@@ -441,42 +389,40 @@ object Incremental {
     // stats alone can collide across different contents (same insufficiency
     // the addBatch replay fingerprint closes)
     val srcArgs = IndexBuilder.readJsonString(
-      java.nio.file.Paths.get(snap.statsPath), "build_args").getOrElse("")
+      java.nio.file.Paths.get(snap.layers.last.statsPath), "build_args").getOrElse("")
     IndexBuilder.writeStatsJson(inner.statsPath, stats,
       s"compact v$publishVersion of $root src=[$srcArgs]")
-    Snapshots.write(publishRoot, Snapshot(
-      publishVersion, Seq(inner.indexDir), Seq(inner.docsDir), Seq(inner.segmentsDir),
-      Seq(inner.statsPath), inner.statsPath, snap.parentRoot))
+    Snapshots.write(publishRoot, Snapshot(publishVersion, Seq(inner), snap.parentRoot))
     graft.engine.IndexReader.invalidate(publishRoot)
     stats
   }
 
-  /** Newest-wins-per-term view over a snapshot's index layers. Schema is
-    * pinned explicitly: an empty delta layer (replayed batch) has no
+  /** Newest-wins-per-term view over index layers (oldest → newest). Schema
+    * is pinned explicitly: an empty delta layer (replayed batch) has no
     * parquet files to infer from.
     */
-  private def currentIndex(spark: SparkSession, snap: Snapshot): DataFrame =
-    snap.indexDirs.map(d => spark.read.schema(IndexBuilder.IndexSchema).parquet(d))
+  private def currentIndex(spark: SparkSession, layers: Seq[IndexPaths]): DataFrame =
+    layers.map(l => spark.read.schema(IndexBuilder.IndexSchema).parquet(l.indexDir))
       .reduceRight((older, newer) => // keep newer's row for shared terms
         older.join(newer.select("term"), Seq("term"), "left_anti").unionByName(newer))
 
-  /** The logical merged index at `root` (term, df, sum_tf, postings, dls,
-    * block_max, bucket): newest layer wins per term. Untouched base FILES
-    * are read as-is — never rewritten by [[addBatch]].
-    */
-  def readMergedIndex(spark: SparkSession, root: String): DataFrame = {
-    val snap = Snapshots.read(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot metadata at $root"))
-    currentIndex(spark, snap)
-  }
-
-  /** The logical docs sidecar at `root`: union of disjoint per-layer docs. */
-  def readMergedDocs(spark: SparkSession, root: String): DataFrame = {
-    val snap = Snapshots.read(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot metadata at $root"))
-    snap.docsDirs.map(d => spark.read.schema(IndexBuilder.DocsSchema).parquet(d))
+  /** Union of the layers' docs sidecars (disjoint docId sets, J1). */
+  private[graft] def mergedDocs(spark: SparkSession, layers: Seq[IndexPaths]): DataFrame =
+    layers.map(l => spark.read.schema(IndexBuilder.DocsSchema).parquet(l.docsDir))
       .reduce(_ unionByName _)
-  }
+
+  /** The logical merged index at the published `root` (term, df, sum_tf,
+    * postings, dls, block_max, bucket): newest layer wins per term.
+    * Untouched base FILES are read as-is — never rewritten by [[addBatch]].
+    */
+  def readMergedIndex(spark: SparkSession, root: String): DataFrame =
+    currentIndex(spark, Snapshots.open(root).snapshot.layers)
+
+  /** The logical docs sidecar at the published `root`: union of disjoint
+    * per-layer docs.
+    */
+  def readMergedDocs(spark: SparkSession, root: String): DataFrame =
+    mergedDocs(spark, Snapshots.open(root).snapshot.layers)
 
   /** Merge two (possibly null) encoded posting lists into sorted parallel
     * arrays — disjoint docId sets (J1 guarantees it), classic 2-way merge.

@@ -10,7 +10,9 @@ import scala.jdk.CollectionConverters._
 /** Global corpus statistics captured at build time. */
 final case class IndexStats(version: Int, nDocs: Long, avgdl: Double, totalTokens: Long, numSalts: Int, numBuckets: Int)
 
-/** On-disk layout of one built index. */
+/** On-disk layout of one built index — one layer of a snapshot
+  * ([[Snapshot]]): every artifact is a fixed child of `root`.
+  */
 final case class IndexPaths(root: String) {
   val segmentsDir: String = s"$root/segments"   // (term, df, sum_tf, postings, dls, block_max) partitioned by salt
   val indexDir: String = s"$root/index"         // globally merged, partitioned by term-hash bucket
@@ -19,20 +21,6 @@ final case class IndexPaths(root: String) {
   val edgesDir: String = s"$root/edges"         // stored link graph (src_id, dst_id), layered newest-wins per src (v7)
   val manifestsDir: String = s"$root/manifests" // one JSON per salt partition (the checkpoint unit)
   val statsPath: String = s"$root/stats.json"
-}
-
-object IndexPaths {
-  /** The fast sidecar of the layer whose global index lives at `indexDir`
-    * (snapshots record index dirs only; `fast` is always its sibling).
-    */
-  def fastDirFor(indexDir: String): String =
-    indexDir.stripSuffix("/").stripSuffix("index") + "fast"
-
-  /** The stored-edges artifact of the layer whose global index lives at
-    * `indexDir` (sibling of `index`, like `fast`).
-    */
-  def edgesDirFor(indexDir: String): String =
-    indexDir.stripSuffix("/").stripSuffix("index") + "edges"
 }
 
 /** The index build pipeline — SURVEY.md §3.2's engine equivalent of the
@@ -84,8 +72,12 @@ object IndexBuilder {
     * from raw content per traversal); (c) layered roots rebuild the fast
     * sidecar at the new avgdl on every addBatch, so hot-term queries stay
     * O(k) between compactions.
+    * v8: snapshot metadata v3 lists each layer's root (`layer_roots`); a
+    * layer's index, segments, docs, fast and edges dirs and stats are the
+    * fixed children of its root ([[IndexPaths]]), and a root without a
+    * published snapshot is not complete.
     */
-  val FormatVersion: Int = 7
+  val FormatVersion: Int = 8
 
   /** Fast-list prefix length: single-term queries with k ≤ FastK are
     * served from the impact-ordered prefix (Anh & Moffat-style impact
@@ -212,10 +204,8 @@ object IndexBuilder {
     m.findFirstMatchIn(txt).map(_.group(1))
   }
 
-  def readStats(paths: IndexPaths): Option[IndexStats] = readStatsFile(paths.statsPath)
-
-  def readStatsFile(statsPath: String): Option[IndexStats] = {
-    val p = Paths.get(statsPath)
+  def readStats(paths: IndexPaths): Option[IndexStats] = {
+    val p = Paths.get(paths.statsPath)
     for {
       v <- readJsonNumber(p, "version")
       n <- readJsonNumber(p, "n_docs")
@@ -239,17 +229,20 @@ object IndexBuilder {
   }
 
   /** A build is complete iff stats exist at the current format version,
-    * every salt has its manifest, and the v7 sidecar artifacts (fast
-    * prefixes, stored edges) are published — the completeness watermark
-    * (ST5). Each build phase is individually `_SUCCESS`-guarded, so a root
-    * failing only the sidecar checks re-runs [[build]] cheaply: completed
-    * phases no-op and only the missing artifacts are produced.
+    * every salt has its manifest, the v7 sidecar artifacts (fast prefixes,
+    * stored edges) are written, and a snapshot is published — the one
+    * completeness watermark (ST5): complete and published mean the same
+    * thing. Each build phase is individually `_SUCCESS`-guarded, so a root
+    * failing only some checks (a crash between the stats write and the
+    * snapshot publish included) re-runs [[build]] cheaply: completed phases
+    * no-op and only the missing artifacts and the publish are produced.
     */
   def isComplete(paths: IndexPaths, numSalts: Int = DefaultNumSalts): Boolean =
     readStats(paths).exists(s => s.version == FormatVersion && s.numSalts == numSalts) &&
       completedSalts(paths) == (0 until numSalts).toSet &&
       Files.exists(Paths.get(s"${paths.fastDir}/_SUCCESS")) &&
-      Files.exists(Paths.get(s"${paths.edgesDir}/_SUCCESS"))
+      Files.exists(Paths.get(s"${paths.edgesDir}/_SUCCESS")) &&
+      Snapshots.read(paths.root).isDefined
 
   /** The ONE recursive-delete helper — Bench.deleteTree and the streaming
     * changelog cleanup delegate here (single source of truth for
@@ -405,9 +398,8 @@ object IndexBuilder {
     writeStatsJson(paths.statsPath, stats, buildArgs)
     // Iceberg-style snapshot: a full build is a single-layer v1 table;
     // incremental adds append delta layers on top (Snapshots/Incremental).
-    Snapshots.write(paths.root, Snapshot(
-      1, Seq(paths.indexDir), Seq(paths.docsDir), Seq(paths.segmentsDir),
-      Seq(paths.statsPath), paths.statsPath, None))
+    // Published last: until it lands, the root is not complete.
+    Snapshots.write(paths.root, Snapshot(1, Seq(paths), None))
     stats
   }
 
@@ -613,7 +605,8 @@ object IndexBuilder {
     if (!isComplete(paths, numSalts)) {
       val missing = (0 until numSalts).toSet -- completedSalts(paths)
       throw new IllegalStateException(
-        s"index at ${paths.root} incomplete: missing salt manifests ${missing.toSeq.sorted.mkString(",")}")
+        s"index at ${paths.root} incomplete: missing salt manifests [${missing.toSeq.sorted.mkString(",")}], " +
+          s"snapshot published: ${Snapshots.read(paths.root).isDefined}")
     }
     readStats(paths).get
   }

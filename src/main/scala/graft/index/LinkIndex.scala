@@ -130,20 +130,13 @@ object LinkIndex {
   def readLayerEdges(spark: SparkSession, edgesDir: String): DataFrame =
     spark.read.schema(EdgesSchema).parquet(edgesDir)
 
-  /** The logical edge relation at `root`: newest layer wins per `src_id`
-    * (the same resolution shape as the postings' newest-wins-per-term).
-    * Layer list comes from the snapshot's index dirs — `edges` is always
-    * the sibling artifact ([[IndexPaths.edgesDirFor]]); single-layer roots
-    * without snapshot metadata read `root/edges` directly.
+  /** The logical edge relation at the published `root`: newest layer wins
+    * per `src_id` (the same resolution shape as the postings'
+    * newest-wins-per-term), over each layer's [[IndexPaths.edgesDir]].
     */
   def readMergedEdges(spark: SparkSession, root: String): DataFrame =
-    Snapshots.read(root) match {
-      case Some(snap) =>
-        snap.indexDirs
-          .map(d => readLayerEdges(spark, IndexPaths.edgesDirFor(d)))
-          .reduceRight((older, newer) =>
-            older.join(newer.select("src_id"), Seq("src_id"), "left_anti").unionByName(newer))
-      case None =>
-        readLayerEdges(spark, IndexPaths(root).edgesDir)
-    }
+    Snapshots.open(root).snapshot.layers
+      .map(l => readLayerEdges(spark, l.edgesDir))
+      .reduceRight((older, newer) =>
+        older.join(newer.select("src_id"), Seq("src_id"), "left_anti").unionByName(newer))
 }

@@ -8,20 +8,27 @@ import java.nio.file.{Files, Paths}
   * and a `version-hint.text` pointing at the current one — the same
   * current-snapshot protocol Iceberg's HadoopCatalog uses.
   *
-  * A snapshot lists the LAYERED data directories that make up the logical
-  * table: a full build is one layer; an incremental add appends a delta
-  * layer on top of its parent's layers (LSM-style), so un-merged base files
-  * are referenced, never rewritten. Readers resolve a root to its layer
-  * list and apply newest-wins per term / union per doc.
+  * A snapshot is the ordered list of the table's LSM layers, oldest →
+  * newest, and each layer is a whole build root ([[IndexPaths]]: its index,
+  * segments, docs, fast and edges dirs and its stats). A full build is one
+  * layer; an incremental add appends its delta root to its parent's layers,
+  * so un-merged base files are referenced, never rewritten. The current
+  * stats are the newest layer's. Readers apply newest-wins per term / union
+  * per doc over the layers.
   */
 final case class Snapshot(
     version: Int,
-    indexDirs: Seq[String],    // oldest → newest; newest wins per term
-    docsDirs: Seq[String],     // disjoint docId sets; union
-    segmentsDirs: Seq[String], // per layer, aligned with indexDirs: salted shards for WAND
-    statsPaths: Seq[String],   // per layer, aligned: each layer's encode-time stats (avgdl)
-    statsPath: String,         // CURRENT stats (the newest layer's)
+    layers: Seq[IndexPaths], // oldest → newest; newest wins per term, docs union
     parentRoot: Option[String])
+
+/** A published root as [[Snapshots.open]] returns it: the snapshot, and
+  * each of its layers with the stats that layer was encoded at.
+  */
+final case class PublishedRoot(snapshot: Snapshot, layers: Seq[(IndexPaths, IndexStats)]) {
+
+  /** The current stats: the newest layer's. */
+  def stats: IndexStats = layers.last._2
+}
 
 object Snapshots {
 
@@ -41,8 +48,6 @@ object Snapshots {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def jarr(xs: Seq[String]): String = xs.map(jstr).mkString("[", ", ", "]")
-
   def metadataDir(root: String): String = s"$root/metadata"
 
   /** Atomically publish a snapshot and move the version hint to it. */
@@ -50,12 +55,8 @@ object Snapshots {
     val dir = Paths.get(metadataDir(root))
     Files.createDirectories(dir)
     val body =
-      s"""{"format_version": 2, "snapshot_version": ${snap.version},
-         | "index_dirs": ${jarr(snap.indexDirs)},
-         | "docs_dirs": ${jarr(snap.docsDirs)},
-         | "segments_dirs": ${jarr(snap.segmentsDirs)},
-         | "stats_paths": ${jarr(snap.statsPaths)},
-         | "stats_path": ${jstr(snap.statsPath)},
+      s"""{"format_version": 3, "snapshot_version": ${snap.version},
+         | "layer_roots": ${snap.layers.map(l => jstr(l.root)).mkString("[", ", ", "]")},
          | "parent_root": ${snap.parentRoot.map(jstr).getOrElse("null")}}""".stripMargin
     atomicWrite(dir.resolve(s"v${snap.version}.metadata.json"), body)
     atomicWrite(dir.resolve("version-hint.text"), snap.version.toString)
@@ -76,12 +77,38 @@ object Snapshots {
       .flatMap(inner => "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(inner).map(_.group(1)))
   }
 
+  /** The current snapshot as published, unchecked; None before the first
+    * publish. Serving and adding go through [[open]].
+    */
   def read(root: String): Option[Snapshot] =
     currentVersion(root).map { v =>
       val txt = Files.readString(Paths.get(metadataDir(root), s"v$v.metadata.json"))
       val parent = "\"parent_root\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map(_.group(1))
-      val stats = "\"stats_path\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map(_.group(1)).get
-      Snapshot(v, readArr(txt, "index_dirs"), readArr(txt, "docs_dirs"),
-        readArr(txt, "segments_dirs"), readArr(txt, "stats_paths"), stats, parent)
+      Snapshot(v, readArr(txt, "layer_roots").map(IndexPaths(_)), parent)
     }
+
+  /** Open the published root at `root`: its snapshot plus every layer's
+    * stats. The one check of a snapshot, shared by the reader, the add, the
+    * compaction and the merged reads. Publishing is the last step of a
+    * build, an add and a compaction, so a root without a snapshot is
+    * unfinished and is refused (the 503 analog), as is a snapshot that
+    * lists no layer roots (older metadata) or a layer whose stats are
+    * missing or at another [[IndexBuilder.FormatVersion]].
+    */
+  def open(root: String): PublishedRoot = {
+    val snap = read(root).getOrElse(
+      throw new IllegalStateException(s"no published snapshot at $root: the build or add is unfinished"))
+    if (snap.layers.isEmpty)
+      throw new IllegalStateException(
+        s"snapshot v${snap.version} at $root lists no layer roots (older metadata?) — rebuild the root")
+    PublishedRoot(snap, snap.layers.map { layer =>
+      val stats = IndexBuilder.readStats(layer).getOrElse(
+        throw new IllegalStateException(s"missing stats at ${layer.statsPath}"))
+      if (stats.version != IndexBuilder.FormatVersion)
+        throw new IllegalStateException(
+          s"layer ${layer.root} of $root has format v${stats.version}, " +
+            s"need v${IndexBuilder.FormatVersion} — rebuild the root")
+      layer -> stats
+    })
+  }
 }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the reference's `/search?url=U&depth=D` queries (`pkg/query/query.go`).
   * Covers: hot term (df≈N), medium, 2/3-term OR, rare (df=1), absent term,
   * hot+rare mix, k=1, and k larger than needed. Deterministic: terms come
-  * from the synthesis vocab, `handler_0_1` exists at every sf (l_orderkey
-  * starts at 0, l_linenumber at 1).
+  * from the synthesis vocab. The rare identifier `handler_1_3` is exactly
+  * one lineitem row with a matching order at sf0.001, sf0.01 and sf0.1
+  * (checked with DuckDB on the test data).
   */
 object QuerySet {
 
@@ -16,9 +17,9 @@ object QuerySet {
     Query("q01", Seq("func"), 10),            // hot: in every doc
     Query("q02", Seq("buffer"), 10),          // medium (KwA)
     Query("q03", Seq("parser", "vector"), 10),// 2-term OR
-    Query("q04", Seq("handler_0_1"), 10),     // rare identifier
+    Query("q04", Seq("handler_1_3"), 10),     // rare identifier
     Query("q05", Seq("zzznotfound"), 10),     // absent -> empty result (the reference 404 analog)
-    Query("q06", Seq("func", "handler_0_1"), 10), // hot + rare
+    Query("q06", Seq("func", "handler_1_3"), 10), // hot + rare
     Query("q07", Seq("alpha"), 1),            // k = 1
     Query("q08", Seq("codec", "scan", "stream"), 15), // 3-term
     Query("q09", Seq("cust_7"), 10),          // orders-derived term (join materiality)
@@ -33,7 +34,7 @@ object QuerySet {
   val conjunctive: Seq[Query] = Seq(
     Query("qa1", Seq("func", "buffer"), 10),
     Query("qa2", Seq("parser", "vector"), 10),
-    Query("qa3", Seq("func", "handler_0_1"), 10),
+    Query("qa3", Seq("func", "handler_1_3"), 10),
     Query("qa4", Seq("codec", "scan", "stream"), 15),
     Query("qa5", Seq("func", "zzznotfound"), 10))
 

@@ -1,10 +1,10 @@
 package graft
 
 import graft.engine.{IndexReader, NaiveSearch, QueryMetrics, Wand}
-import graft.index.{IndexBuilder, Postings}
+import graft.index.{Incremental, IndexBuilder, IndexPaths, Postings}
 import graft.model.Query
 import graft.queries.QuerySet
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,6 +33,26 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** A 2-layer root: a build over the 80 % base slice, then `addBatch`
+    * with the full corpus. Built once, on first use.
+    */
+  private lazy val layered: IndexPaths = {
+    val root = "target/graft-index/test-fast-layered"
+    Bench.deleteTree(root)
+    val basePaths = IndexPaths(s"$root/base")
+    val outPaths = IndexPaths(s"$root/out")
+    val full = graft.corpus.Corpus.corpus(spark, sfDir)
+    IndexBuilder.build(spark, graft.corpus.Corpus.baseSlice(full), basePaths,
+      buildArgs = "fast-layered-base")
+    Incremental.addBatch(spark, basePaths, full, outPaths)
+    outPaths
+  }
+
+  /** True when `df`'s plan is in the session's cache. */
+  private def cached(df: DataFrame): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
 
   test("hot term has an impact-ordered prefix; rare/absent terms do not") {
     val reader = IndexReader.get(spark, paths)
@@ -196,14 +216,8 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the sidecar is whole-re-ranked at the post-add stats by addBatch
     // (tfNorm order is not avgdl-stable, so the base build's prefixes
     // cannot be reused)
-    val root = "target/graft-index/test-fast-layered"
-    Bench.deleteTree(root)
-    val basePaths = graft.index.IndexPaths(s"$root/base")
-    val outPaths = graft.index.IndexPaths(s"$root/out")
+    val outPaths = layered
     val full = graft.corpus.Corpus.corpus(spark, sfDir)
-    IndexBuilder.build(spark, graft.corpus.Corpus.baseSlice(full), basePaths,
-      buildArgs = "fast-layered-base")
-    graft.index.Incremental.addBatch(spark, basePaths, full, outPaths)
     val reader = IndexReader.get(spark, outPaths)
     assert(reader.layers.size === 2, "fixture must be a genuinely layered root")
     val m = QueryMetrics(spark)
@@ -220,6 +234,28 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
       (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getString(4), r.getDouble(5))
     assert(got.map(key).toSeq === want.map(key).toSeq,
       "layered fast serve diverged from the full-corpus oracle plan")
+  }
+
+  test("layered reader pins one relation per layer: no index/ relation cached after every route") {
+    // termMeta reads df from the pinned segments, so the global index/ of
+    // a layer is never pinned; the segments are (positive control)
+    val reader = IndexReader.get(spark, layered)
+    assert(reader.layers.size === 2)
+    val m = QueryMetrics(spark)
+    Wand.topKAt(spark, layered, Seq(
+      Query("pin-fast", Seq("func"), 10),
+      Query("pin-hybrid", Seq("func", "handler_0_3"), 10),
+      Query("pin-wand", Seq("handler_0_3", "handler_1_3"), 10),
+      Query("pin-absent", Seq("zzznotfound"), 10)), Some(m)).collect()
+    Wand.topKAt(spark, layered, Seq(Query("pin-and", Seq("func", "buffer"), 10)), Some(m),
+      mode = Wand.Conjunctive).collect()
+    assert(m.routedFast.value === 1L && m.routedHybrid.value === 1L &&
+      m.routedWand.value === 2L && m.routedAbsent.value === 1L, s"routes: ${m.snapshot}")
+    reader.layers.foreach { l =>
+      assert(cached(l.segments), s"layer ${l.ordinal}: segments not pinned")
+      val index = spark.read.schema(IndexBuilder.IndexSchema).parquet(l.paths.indexDir)
+      assert(!cached(index), s"layer ${l.ordinal}: index/ relation is pinned")
+    }
   }
 
   test("k > FastK falls back to the exact path (and still matches naive)") {

@@ -1,7 +1,8 @@
 package graft
 
 import graft.corpus.Corpus
-import graft.index.{IndexBuilder, IndexPaths, Postings}
+import graft.engine.IndexReader
+import graft.index.{Incremental, IndexBuilder, IndexPaths, Postings, Snapshots}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -44,6 +45,12 @@ class IndexResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .sortBy(_._1).toSeq
   }
 
+  /** Every file and dir under the segments, with file mtimes. */
+  private def segmentListing(paths: IndexPaths): Map[String, Long] =
+    Files.walk(Paths.get(paths.segmentsDir)).iterator().asScala
+      .map(p => p.toString -> (if (Files.isRegularFile(p)) Files.getLastModifiedTime(p).toMillis else 0L))
+      .toMap
+
   private def deleteTree(p: String): Unit = {
     val path = Paths.get(p)
     if (Files.exists(path))
@@ -76,16 +83,41 @@ class IndexResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Files.readString(Paths.get(s"${pA.manifestsDir}/salt-0.json")) == untouchedBefore)
 
     // idempotent rerun: completed build → no segment file changes at all
-    val listing = Files.walk(Paths.get(pA.segmentsDir)).iterator().asScala
-      .map(p => p.toString -> (if (Files.isRegularFile(p)) Files.getLastModifiedTime(p).toMillis else 0L))
-      .toMap
+    val listing = segmentListing(pA)
     IndexBuilder.build(spark, corpus, pA)
-    val listing2 = Files.walk(Paths.get(pA.segmentsDir)).iterator().asScala
-      .map(p => p.toString -> (if (Files.isRegularFile(p)) Files.getLastModifiedTime(p).toMillis else 0L))
-      .toMap
-    assert(listing2 == listing, "completed build rewrote segment files")
+    assert(segmentListing(pA) == listing, "completed build rewrote segment files")
 
     deleteTree(rootA)
+  }
+
+  test("one watermark: a root without a published snapshot is refused, and the next build re-publishes it") {
+    val s = spark
+    import s.implicits._
+    val corpus = (0 until 30).map(i => ("repo-w", f"w$i%02d.go", "c0ffee000000", "go", s"common word$i"))
+      .toDF("repo", "path", "commit", "lang", "content")
+    val root = Files.createTempDirectory("graft-watermark").toString
+    val p = IndexPaths(root)
+    IndexBuilder.build(spark, corpus, p, numSalts = 4, numBuckets = 4)
+    assert(IndexBuilder.isComplete(p, numSalts = 4))
+
+    // the state a crash between the stats write and the snapshot publish
+    // leaves: every artifact and the stats on disk, no snapshot
+    deleteTree(Snapshots.metadataDir(root))
+    assert(IndexBuilder.readStats(p).isDefined)
+    assert(!IndexBuilder.isComplete(p, numSalts = 4), "an unpublished root counts as complete")
+    intercept[IllegalStateException](IndexReader.get(spark, p))
+    intercept[IllegalStateException](
+      Incremental.addBatch(spark, p, corpus, IndexPaths(s"$root/add")))
+
+    // every phase is a _SUCCESS no-op: the rerun only re-publishes
+    val listing = segmentListing(p)
+    IndexBuilder.build(spark, corpus, p, numSalts = 4, numBuckets = 4)
+    assert(IndexBuilder.isComplete(p, numSalts = 4))
+    assert(Snapshots.read(root).map(_.layers) === Some(Seq(p)))
+    assert(segmentListing(p) == listing, "re-publish rewrote segment files")
+    assert(IndexReader.get(spark, p).layers.size === 1)
+    IndexReader.invalidate(root)
+    deleteTree(root)
   }
 
   test("cross-format resume wipes stale artifacts instead of re-stamping them") {

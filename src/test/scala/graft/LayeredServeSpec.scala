@@ -166,8 +166,8 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     Incremental.compact(spark, outPaths.root)
     val snap = Snapshots.read(outPaths.root).get
     assert(snap.version === 3)
-    assert(snap.indexDirs.size === 1 && snap.segmentsDirs.size === 1)
-    assert(!snap.indexDirs.contains(basePaths.indexDir),
+    assert(snap.layers.size === 1)
+    assert(!snap.layers.contains(basePaths),
       "compacted snapshot still references the base layer")
     val cReader = IndexReader.get(spark, outPaths)
     assert(cReader.layers.size === 1 && cReader.newest.boundScale === 1.0)
@@ -176,7 +176,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val fullPaths = IndexPaths(s"$root/full")
     IndexBuilder.build(spark, corpusOf(all), fullPaths, buildArgs = "layered-spec-full")
-    assert(decodeCounts(cReader.newest.index) ===
+    assert(decodeCounts(spark.read.parquet(cReader.newest.paths.indexDir)) ===
       decodeCounts(spark.read.parquet(fullPaths.indexDir)))
   }
 
@@ -210,6 +210,12 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(reader.layers(0).boundScale > 1.0 && reader.layers(1).boundScale > 1.0)
     val meta = reader.termMeta(Seq("uno", "due", "tre"))
     assert(meta("uno")._2 === 0 && meta("due")._2 === 1 && meta("tre")._2 === 2)
+    // df summed over the winning layer's salt rows == a full build's df
+    val pf = IndexPaths(s"$root/tri-full")
+    IndexBuilder.build(spark, corpusOf(base ++ add1 ++ add2), pf, buildArgs = "layered-spec-tri-full")
+    val fullDf = spark.read.parquet(pf.indexDir).filter(col("term").isin("uno", "due", "tre"))
+      .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(fullDf.size === 3 && meta.map { case (t, (df, _)) => t -> df } === fullDf)
 
     val tri = Seq(Query("t1", Seq("uno", "due", "tre"), 8), Query("t2", Seq("due", "common"), 12))
     val triDf = {
@@ -234,11 +240,11 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // first add: 2 layers ≤ maxLayers=2 → stays layered
     val o1 = IndexPaths(s"$root/pol-1")
     Incremental.addBatchCompacting(spark, basePaths, corpusOf(baseDocs ++ deltaDocs.take(10)), o1, maxLayers = 2)
-    assert(Snapshots.read(o1.root).get.indexDirs.size === 2)
+    assert(Snapshots.read(o1.root).get.layers.size === 2)
     // second add: would be 3 layers > maxLayers → auto-compacts to 1
     val o2 = IndexPaths(s"$root/pol-2")
     Incremental.addBatchCompacting(spark, o1, corpusOf(baseDocs ++ deltaDocs), o2, maxLayers = 2)
-    assert(Snapshots.read(o2.root).get.indexDirs.size === 1)
+    assert(Snapshots.read(o2.root).get.layers.size === 1)
     val naive = rows(graft.engine.NaiveSearch.topK(spark, corpusOf(baseDocs ++ deltaDocs), queriesDf))
     assert(rows(Wand.topKAt(spark, o2, queries)) === naive)
   }

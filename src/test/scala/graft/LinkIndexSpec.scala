@@ -118,7 +118,7 @@ class LinkIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cRoot = s"$root/compacted"
     Incremental.compact(spark, outPaths.root, Some(cRoot))
     val snap = Snapshots.read(cRoot).get
-    assert(snap.indexDirs.size === 1)
+    assert(snap.layers.size === 1)
     val got = pathEdges(LinkIndex.readMergedEdges(spark, cRoot), cRoot)
     assert(got === Set(
       "m0/b.go" -> "m1/a.go", "m1/b.go" -> "m2/a.go",

@@ -146,7 +146,7 @@ class TokenizerRestrictedSpec extends org.scalatest.funsuite.AnyFunSuite {
       val c = graft.corpus.Corpus.withDocId(graft.corpus.Corpus.corpus(spark, "/root/testdata/sf0.001"))
       // hot, medium, rare, absent, and a prefix of a real token ("func" vs
       // "fun") to catch length/compare bugs
-      val wanted = Seq("func", "buffer", "handler_0_1", "zzznotfound", "fun", "cust_7")
+      val wanted = Seq("func", "buffer", "handler_1_3", "zzznotfound", "fun", "cust_7")
       val full = graft.tokenize.Tokenizer.termFreqsWithDl(c)
         .filter(col("term").isin(wanted: _*))
         .select("doc_id", "term", "tf", "dl")
