@@ -13,7 +13,6 @@ import org.apache.spark.sql.SparkSession
   * | `SPARK_GRAFT_CPUS`          | 4  | local[n] width + shuffle partitions |
   * | `SPARK_GRAFT_BENCH_REPS`    | 10 | per-query latency reps (×10 queries = samples) |
   * | `GRAFT_SPARK_LOCAL`         | /tmp | spark.local.dir (tmpfs for scaling legs) |
-  * | `GRAFT_MAX_CACHED_POSTINGS` | 16Mi | executor posting-cache budget (entries) |
   * | `SPARK_DRIVER_MEM`          | (build.sbt) | forked JVM heap — read by build.sbt, listed for completeness |
   *
   * Index-shape constants (numSalts=16, numBuckets=32, BlockSize=128, BM25
@@ -32,9 +31,6 @@ object Config {
   def benchReps: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "10").toInt
 
   def sparkLocalDir: String = sys.env.getOrElse("GRAFT_SPARK_LOCAL", "/tmp")
-
-  def maxCachedPostings: Long =
-    sys.env.get("GRAFT_MAX_CACHED_POSTINGS").map(_.toLong).getOrElse(16L * 1024 * 1024)
 
   /** The mains' shared session shape: local[cpus], shuffle partitions =
     * cores (never the 200 default — 32 threads with 200 partitions is 6

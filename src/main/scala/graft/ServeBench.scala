@@ -12,10 +12,10 @@ import org.apache.spark.sql.SparkSession
   * all inside one Spark app (Spark schedules concurrent jobs from separate
   * threads). Reports QPS and cross-thread latency percentiles.
   *
-  * What it exercises that the per-query bench cannot: the striped
-  * [[graft.engine.PostingCache]] under real hit contention, concurrent
-  * (salt × query) task scheduling, and the per-reader term-metadata cache
-  * under parallel access.
+  * What it exercises that the per-query bench cannot: the decoded-block
+  * memo of the pinned [[graft.engine.SegmentShard]]s under real hit
+  * contention, concurrent (salt × query) task scheduling, and the
+  * per-reader term-metadata cache under parallel access.
   */
 object ServeBench {
 

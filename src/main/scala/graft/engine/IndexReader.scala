@@ -19,41 +19,43 @@ import scala.collection.concurrent.TrieMap
   * [[graft.index.Incremental]] for the monotonicity proof) — exact layers
   * (the newest, or any compacted root) have scale 1.0.
   *
-  * `segments` is the layer's one pinned relation: every route reads it, and
-  * so does [[IndexReader.termMeta]].
+  * `shards` is the layer's one pin: its salted segments as one
+  * [[SegmentShard]] per salt, partition i == salt i. Every route looks its
+  * terms up there, and so does [[IndexReader.termMeta]].
   */
 final case class IndexLayer(
     ordinal: Int,
     paths: IndexPaths,
     avgdl: Double,
     boundScale: Double,
-    segments: DataFrame)
+    shards: RDD[SegmentShard])
 
 /** A resident handle on one published index root — the engine analog of
   * the reference API server holding its Dgraph connection pool open across
   * requests (`pkg/database/relationship/dgraph.go:25-35`): the layers of
-  * the current snapshot ([[Snapshots.open]]), one pinned salted-segments
-  * relation per layer, and one [[DocKeyShard]] per salt (the natural doc
-  * keys the ranking tail needs) are loaded once and kept persisted, so
-  * per-query work is pruning + decode + score, not parquet directory
-  * listing. A root without a published snapshot is refused.
+  * the current snapshot ([[Snapshots.open]]), one [[SegmentShard]] per
+  * (layer, salt) and one [[DocKeyShard]] per salt (the natural doc keys
+  * the ranking tail needs) are loaded once and kept persisted, so
+  * per-query work is pruning + decode + score: a request looks its terms
+  * up in pinned objects and plans no DataFrame. A root without a
+  * published snapshot is refused.
   *
   * Layered roots (incremental adds, [[graft.index.Incremental.addBatch]])
   * are served directly: term metadata resolves newest-wins per term from
-  * the segments, the query paths read exactly one layer's rows per term,
-  * and the key shards are built from the union of the disjoint per-layer
-  * docs sidecars — the reference's query-over-live-store behavior
-  * (`dgraph.go:62-92`, `FindNode` serves whatever has been upserted). The
-  * shards also answer repo scopes: no request reads the docs sidecars.
+  * the segment shards, the query paths read exactly one layer's sub-lists
+  * per term, and the key shards are built from the union of the disjoint
+  * per-layer docs sidecars — the reference's query-over-live-store
+  * behavior (`dgraph.go:62-92`, `FindNode` serves whatever has been
+  * upserted). The key shards also answer repo scopes: no request reads the
+  * docs sidecars.
   *
   * At 10^12-doc scale you would pin only the term metadata and let posting
   * blocks stream from storage; at bench scale the whole index fits and the
-  * cache models the steady-state service.
+  * pins model the steady-state service.
   */
 final case class IndexReader(
     paths: IndexPaths, stats: IndexStats, snapshotVersion: Int,
-    layers: Seq[IndexLayer], keys: RDD[DocKeyShard], cacheTag: String,
-    fast: Option[DataFrame]) {
+    layers: Seq[IndexLayer], keys: RDD[DocKeyShard], fast: Option[DataFrame]) {
 
   /** True once the session this reader was opened in has stopped. */
   def stopped: Boolean = keys.sparkContext.isStopped
@@ -66,27 +68,24 @@ final case class IndexReader(
 
   /** Per-term metadata for query planning: global df (idf is a per-term
     * constant over the WHOLE corpus) plus the ordinal of the winning
-    * (newest-containing) layer. Read from the layers' pinned segments,
-    * newest first, summing a term's salt rows on the driver. That sum is the
-    * full df: a layer holding a term holds its FULL merged list, split by
-    * salt (the build salts every list; an add re-salts each delta term's
-    * merged base ∪ delta list). Driver-cached per reader: each distinct
-    * term costs one bucket-pruned scan per probed layer ONCE; later queries
-    * on the same terms run ZERO Spark jobs here. Absent terms cache as
-    * df=0 and are omitted (the 404 analog).
+    * (newest-containing) layer. Read from the layers' segment shards,
+    * newest first, summing a term's salt sub-list counts on the driver.
+    * That sum is the full df: a layer holding a term holds its FULL merged
+    * list, split by salt (the build salts every list; an add re-salts each
+    * delta term's merged base ∪ delta list). Driver-cached per reader: each
+    * distinct term costs one lookup job per probed layer ONCE; later
+    * queries on the same terms run ZERO Spark jobs here. Absent terms cache
+    * as df=0 and are omitted (the 404 analog).
     */
   def termMeta(terms: Seq[String]): Map[String, (Long, Int)] = {
     var missing = terms.distinct.filterNot(termCache.contains)
     var li = layers.length - 1
     while (li >= 0 && missing.nonEmpty) {
       val layer = layers(li)
-      import layer.segments.sparkSession.implicits._
-      val buckets = missing.map(TermHash.bucket(_, stats.numBuckets)).distinct
-      val found = layer.segments
-        .filter(col("bucket").isin(buckets: _*))
-        .filter(col("term").isin(missing: _*))
-        .select("term", "df").as[(String, Long)].collect()
-        .groupMapReduce(_._1)(_._2)(_ + _)
+      val probe = missing
+      val found = layer.shards.mapPartitions(_.flatMap { sh =>
+        probe.iterator.map(t => t -> sh.indexOf(t)).collect { case (t, i) if i >= 0 => t -> sh.count(i) }
+      }).collect().groupMapReduce(_._1)(_._2)(_ + _)
       found.foreach { case (t, d) => termCache.put(t, (d, layer.ordinal)) }
       missing = missing.filterNot(found.contains)
       li -= 1
@@ -98,24 +97,6 @@ final case class IndexReader(
   /** Global df per term (present terms only). */
   def dfOf(terms: Seq[String]): Map[String, Long] =
     termMeta(terms).map { case (t, (d, _)) => t -> d }
-
-  /** Newest-wins read of the given terms' salted segments: every present
-    * term is read from exactly its winning layer ([[termMeta]]), with the bucket IN filter pruning to
-    * the terms' bucket directories/batches and the term IN predicate pushed
-    * into the scan. One `(layer, rows)` pair per layer that wins at least
-    * one term, in ascending ordinal order; absent terms read nothing.
-    */
-  def newestWins(terms: Seq[String]): Seq[(IndexLayer, DataFrame)] =
-    termMeta(terms).groupBy(_._2._2).toSeq.sortBy(_._1).map { case (ord, ts) =>
-      val layer = layers(ord)
-      val layerTerms = ts.keys.toSeq
-      // bucket(term) must equal the build-side pmod(xxhash64(term), B):
-      // TermHash evaluates Spark's own XxHash64Function driver-side (no job).
-      val buckets = layerTerms.map(TermHash.bucket(_, stats.numBuckets)).distinct
-      layer -> layer.segments
-        .filter(col("bucket").isin(buckets: _*))
-        .filter(col("term").isin(layerTerms: _*))
-    }
 
   // term -> its fast-list row, or None (no fast list / absent term)
   private val fastCache = TrieMap.empty[String, Option[FastList]]
@@ -202,7 +183,7 @@ object IndexReader {
   // (sequential suites in one JVM must not alias a dead session's plans).
   private val cache = TrieMap.empty[(Int, String), IndexReader]
   // guards open(): TrieMap.getOrElseUpdate may evaluate the thunk on BOTH
-  // racing threads, and the loser's persisted layer DataFrames would leak
+  // racing threads, and the loser's persisted layer shards would leak
   // executor storage memory for the session's lifetime (round-3 advice).
   // open() itself is metadata reads + LAZY persists (no Spark jobs), so a
   // single lock adds no contention worth striping.
@@ -216,10 +197,9 @@ object IndexReader {
     })
   }
 
-  /** Open a published root ([[Snapshots.open]] checks it): one pinned
-    * segments relation per layer, the key shards over the layers' docs
-    * union, and the newest layer's fast sidecar. Pins are lazy: no Spark
-    * job runs here.
+  /** Open a published root ([[Snapshots.open]] checks it): the segment
+    * shards of every layer, the key shards over the layers' docs union, and
+    * the newest layer's fast sidecar. Pins are lazy: no Spark job runs here.
     */
   private def open(spark: SparkSession, paths: IndexPaths): IndexReader = {
     val root = Snapshots.open(paths.root)
@@ -227,36 +207,44 @@ object IndexReader {
     val layers = root.layers.zipWithIndex.map { case ((layer, layerStats), i) =>
       // explicit schema: an EMPTY delta layer (replayed batch) has no
       // parquet files to infer from
-      val seg = pinSegments(spark.read.schema(IndexBuilder.SegmentsSchema)
+      val shards = pinShards(spark.read.schema(IndexBuilder.SegmentsSchema)
         .parquet(layer.segmentsDir), stats.numSalts)
-      IndexLayer(i, layer, layerStats.avgdl, math.max(1.0, stats.avgdl / layerStats.avgdl), seg)
+      IndexLayer(i, layer, layerStats.avgdl, math.max(1.0, stats.avgdl / layerStats.avgdl), shards)
     }
     val newest = root.snapshot.layers.last
     IndexReader(paths, stats, root.snapshot.version, layers,
       pinKeys(Incremental.mergedDocs(spark, root.snapshot.layers), stats.numSalts),
-      cacheTag(paths, newest, stats, root.snapshot.version), fastFor(spark, newest))
+      fastFor(spark, newest))
   }
 
-  /** Pin a segments layer with partition i holding exactly salt i
-    * (`repartitionById`), sorted by (bucket, term) so the in-memory batch
-    * min/max stats keep the per-query bucket/term filters prunable. A hash
-    * repartition on `salt` would scatter salts over partitions unevenly
-    * (4 salts hashed to partitions 3, 3, 2, 3) and serialize shard runs
-    * that should run in parallel.
+  /** Pin a segments layer as one [[SegmentShard]] per salt, partition i
+    * holding exactly salt i (`repartitionById`; a hash repartition on
+    * `salt` would scatter salts over partitions unevenly — 4 salts hashed
+    * to partitions 3, 3, 2, 3 — and serialize shard runs that should run in
+    * parallel).
     *
-    * Alignment invariant the WAND route relies on: partition i == salt i in
+    * Alignment invariant the shard job relies on: partition i == salt i in
     * EVERY layer of the root and in the key shards ([[pinKeys]]), and doc
     * salting does not depend on the layer. So zipping the layers' and the
     * key shards' partitions positionally gives one task ALL of a (salt,
-    * query)'s term rows across layers plus the shard's doc keys — shard
+    * query)'s sub-lists across layers plus the shard's doc keys — shard
     * runs stay docId-disjoint with no exchange.
     */
-  private def pinSegments(segs: DataFrame, numSalts: Int): DataFrame =
-    persistPartitioned(
-      segs.repartitionById(numSalts, col("salt")).sortWithinPartitions("bucket", "term"))
+  private def pinShards(segs: DataFrame, numSalts: Int): RDD[SegmentShard] = {
+    import segs.sparkSession.implicits._
+    // planned with AQE off: under AQE `.rdd` would run the exchange now,
+    // and open() must stay free of Spark jobs
+    val rows = withoutAqe(segs.sparkSession) {
+      segs.select("salt", "term", "df", "postings", "dls", "block_max", "block_dir")
+        .repartitionById(numSalts, col("salt"))
+        .as[SegmentShard.Row].rdd
+    }
+    rows.mapPartitionsWithIndex((salt, it) => Iterator(SegmentShard.build(salt, it)),
+      preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** Pin the natural doc keys as one [[DocKeyShard]] per salt, partition
-    * i == salt i (see [[pinSegments]]): a sorted doc_id array plus UTF-8 key
+    * i == salt i (see [[pinShards]]): a sorted doc_id array plus UTF-8 key
     * bytes, built once from the docs union at the first query. The
     * ranking tail looks candidates up here inside the shard task, and repo
     * scopes are checked here too ([[DocKeyShard.repoIn]]), so no request
@@ -282,7 +270,7 @@ object IndexReader {
     * so every downstream consumer re-exchanges the cached side — exactly
     * the per-query cost the pin exists to remove. The cached plan is
     * captured at `persist()` time, so AQE is off around just that call
-    * ([[withoutAqe]]): the CACHE BUILD of a reader-pinned relation is a
+    * ([[withoutAqe]]): the CACHE BUILD of a pinned relation is a
     * single deliberate exchange+sort that needs no adaptivity, while every
     * query over it still runs with AQE on.
     */
@@ -328,38 +316,19 @@ object IndexReader {
         .persist(StorageLevel.MEMORY_AND_DISK))
     else None
 
-  /** [[PostingCache]] key prefix: root + snapshot version + full build
-    * stats + the newest layer's stats-file write-time nonce, so ANY rebuild — including
-    * a same-stats rebuild under different salting — changes the key and a
-    * multi-executor cluster can never serve stale decoded sub-lists.
-    * The nonce is a random UUID written INTO the stats JSON at build time
-    * ([[IndexBuilder.writeStatsJson]]): unlike the previous mtime-millis
-    * nonce, two rebuilds landing in the same millisecond still differ; file
-    * mtime remains the fallback for pre-nonce stats files.
-    * Driver-side [[invalidate]] is best-effort on top, not load-bearing.
-    */
-  private def cacheTag(paths: IndexPaths, newest: IndexPaths, stats: IndexStats, snapVersion: Int): String = {
-    val p = Paths.get(newest.statsPath)
-    val nonce = IndexBuilder.readJsonString(p, "nonce").getOrElse(
-      if (Files.exists(p)) Files.getLastModifiedTime(p).toMillis.toString else "0")
-    s"${paths.root}@v$snapVersion:${stats.nDocs}:${stats.totalTokens}:" +
-      s"${stats.numSalts}:${stats.numBuckets}:$nonce"
-  }
-
   /** Drop cached readers for a root (used after rebuilds that invalidate it),
-    * across all sessions: every pin (segments, key shards, fast sidecar)
-    * is released, plus the decoded-postings cache entries.
+    * across all sessions: every pin (segment shards with their decoded
+    * blocks, key shards, fast sidecar) is released.
     */
   def invalidate(root: String): Unit = {
     cache.keys.filter(_._2 == root).foreach { k =>
       cache.remove(k).foreach { r =>
         if (!r.stopped) {
-          r.layers.foreach(_.segments.unpersist())
+          r.layers.foreach(_.shards.unpersist(blocking = false))
           r.keys.unpersist(blocking = false)
           r.fast.foreach(_.unpersist())
         }
       }
     }
-    PostingCache.invalidatePrefix(root)
   }
 }

@@ -11,10 +11,10 @@ import org.apache.spark.util.LongAccumulator
   * server sees them as named accumulators per stage.
   *
   *  - `candidates`: docs fully scored (WAND pivot evaluations)
-  *  - `blocksDecoded`: posting blocks decompressed INTO THE SHARED
-  *    executor cache during this run (0 on a cache-warm rerun — the
-  *    block-cache hit-rate signal). Attribution is process-wide: the
-  *    handles live in [[PostingCache]], so when two concurrent queries
+  *  - `blocksDecoded`: posting blocks decompressed INTO THE PINNED
+  *    segment shards during this run (0 on a warm rerun — the block-memo
+  *    hit-rate signal). Attribution is per pin: the handles live in
+  *    [[SegmentShard]]s shared by every task, so when two concurrent queries
   *    overlap on a term, a block either of them forced may be attributed
   *    to whichever snapshotted the handle around its decode — the SUM
   *    across queries still equals total decode work, which is what the

@@ -68,7 +68,7 @@ object Wand {
 
   /** Same, against an already-built (complete) index — single-layer or
     * LAYERED (an [[graft.index.Incremental]] snapshot root): each query term
-    * reads its newest-wins layer's salted segments, and non-newest layers'
+    * reads its newest-wins layer's segment shards, and non-newest layers'
     * block-max bounds are multiplied by the layer's `boundScale =
     * max(1, avgdl_now / avgdl_layer)` (monotonicity bound, see
     * [[graft.index.Incremental]]) so pruning stays SOUND while exact
@@ -77,21 +77,21 @@ object Wand {
     * `mode` ([[Mode]]) picks how queries are served: routed per query
     * (the default), WAND only, exhaustive, or conjunctive. Every shard
     * query of the batch, whatever the mode, runs in ONE Spark job with no
-    * exchange: the winning layers' salt-pinned segments and the reader's
-    * key shards are zipped partition by partition (partition i == salt i,
-    * [[IndexReader.pinSegments]]), and each (salt shard, query) pair is one
-    * independent WAND run inside the task, ranked there by
+    * exchange and no Dataset: the winning layers' pinned
+    * [[SegmentShard]] RDDs and the reader's key shards are zipped partition
+    * by partition (partition i == salt i), each task looks every query term
+    * up in its winning layer's shard, and each (salt shard, query) pair is
+    * one independent WAND run inside the task, ranked there by
     * [[ShardTail.select]] to at most k finished rows. The driver merges
     * those with the fast-route rows and returns a LOCAL result, so the
     * shard job has run by the time this returns and collecting the result
     * runs no further job. Doc-salting is layer-independent, so a doc stays
     * in one salt shard across layers and shard runs remain docId-disjoint.
-    * Decoded postings are memoized per (build, layer, salt, term) in the
-    * executor-local [[PostingCache]], so a steady-state query stream
-    * decodes each hot sub-list once, not per query. Bucket lists and
-    * per-term df come from driver-side hashing ([[graft.index.TermHash]])
-    * and the reader's term-metadata cache — zero Spark jobs of per-query
-    * planning overhead after warmup.
+    * Decoded postings are memoized in the shard that holds them
+    * ([[SegmentShard.blocks]]), so a steady-state query stream decodes each
+    * hot sub-list once per pin, not per query. Per-term df and the winning
+    * layer come from the reader's term-metadata cache — after warmup a
+    * request plans nothing but the shard job.
     */
   def topKAt(
       spark: SparkSession,
@@ -100,7 +100,6 @@ object Wand {
       metrics: Option[QueryMetrics] = None,
       repoScope: Option[Seq[String]] = None,
       mode: Mode = Routed): DataFrame = {
-    import spark.implicits._
     val reader = IndexReader.get(spark, paths)
     val stats = reader.stats
 
@@ -204,40 +203,39 @@ object Wand {
     if (shardQs.isEmpty) return ShardTail.finish(spark, Nil, fastLocal)
 
     // Each query term is read from its newest-wins layer, and the winning
-    // layers plus the key shards are zipped partition by partition: the
-    // reader pins every layer's segments and the key shards with partition
-    // i == salt i ([[IndexReader.pinSegments]]), so one task sees ALL of a
-    // (salt, query)'s term rows and the doc keys of that salt.
-    // zipPartitions throws if the partition counts ever differ, and every
-    // row's salt is checked against its task's shard, so misalignment fails
-    // loudly instead of splitting a shard's terms across tasks.
-    // Per-term (layer ordinal, bound scale, idf) comes from a driver-built
-    // map, so the rows carry nothing extra.
-    val meta = metaAll.view.filterKeys(shardQs.flatMap(_.terms).toSet).toMap
-    val termInfo: Map[String, (Int, Double, Double)] = meta.map { case (t, (df, ord)) =>
+    // layers' segment shards plus the key shards are zipped partition by
+    // partition: the reader pins them all with partition i == salt i, so one
+    // task sees ALL of a (salt, query)'s sub-lists and the doc keys of that
+    // salt. zipPartitions throws if the partition counts ever differ, and
+    // each segment shard's salt is checked against the key shard's, so
+    // misalignment fails loudly instead of splitting a shard's terms across
+    // tasks. Per-term (winning layer, bound scale, idf) comes from a
+    // driver-built map.
+    val termInfo: Map[String, (Int, Double, Double)] = shardQs.flatMap(_.terms).distinct.map { t =>
+      val (df, ord) = metaAll(t)
       t -> ((ord, reader.layers(ord).boundScale, Postings.idf(df, n)))
-    }
-    val tag = reader.cacheTag
+    }.toMap
+    val ords = termInfo.values.map(_._1).toSeq.distinct.sorted
+    val slot = ords.zipWithIndex.toMap
     val prune = mode != Exhaustive
-    val rows = reader.newestWins(meta.keys.toSeq)
-      .map { case (_, slice) =>
-        slice.select("salt", "term", "df", "postings", "dls", "block_max", "block_dir")
-          .as[(Int, String, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte])].rdd
-      }
+    val rows = ords.map(reader.layers(_).shards)
       .reduce((a, b) => a.zipPartitions(b)(_ ++ _))
-      .zipPartitions(reader.keys) { (it, shards) =>
+      .zipPartitions(reader.keys) { (segs, shards) =>
         val shard = shards.next()
+        val layerShards = segs.toArray
+        layerShards.foreach(s => shard.requireSalt(s.salt))
         val scopeFn: Long => Boolean = repos match {
           case None => _ => true
           case Some(rs) => d => { val i = shard.indexOf(d); i >= 0 && shard.repoIn(i, rs) }
         }
         val byTerm = mutable.HashMap.empty[String, TermList]
-        it.foreach { case (salt, t, segDf, p, d, bm, dir) =>
-          shard.requireSalt(salt)
-          val (ord, scale, idf) = termInfo(t)
-          val blocks = PostingCache.open(s"$tag#L$ord", salt, t, segDf, p, d, dir)
-          val scaled = if (scale == 1.0) bm.toArray else bm.iterator.map(_ * scale).toArray
-          byTerm.put(t, TermList(t, idf, blocks, scaled))
+        termInfo.foreach { case (t, (ord, scale, idf)) =>
+          val seg = layerShards(slot(ord))
+          val i = seg.indexOf(t)
+          if (i >= 0) {
+            val bm = seg.blockMax(i)
+            byTerm.put(t, TermList(t, idf, seg.blocks(i), if (scale == 1.0) bm else bm.map(_ * scale)))
+          }
         }
         shardQs.iterator.flatMap { q =>
           val lists = q.terms.flatMap(byTerm.get).toSeq

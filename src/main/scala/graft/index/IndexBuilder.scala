@@ -584,9 +584,10 @@ object IndexBuilder {
   }
 
   /** Persist an [[IndexStats]] JSON (shared by full build + incremental).
-    * The random `nonce` uniquifies every (re)build for the executor-side
-    * posting-cache tag ([[graft.engine.IndexReader]]): two rebuilds with
-    * identical stats can never alias each other's decoded postings.
+    * The random `nonce` uniquifies every (re)build: two rebuilds with
+    * identical stats still carry different nonces, so anything keyed by a
+    * layer's nonce (such as a pin shared across readers) can never alias
+    * one build's decoded postings to another's.
     */
   def writeStatsJson(path: String, stats: IndexStats, buildArgs: String): Unit =
     writeJson(path, Seq(

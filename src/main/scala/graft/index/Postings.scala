@@ -205,8 +205,9 @@ object Postings {
     * 10^12 docs a hot term's shard sub-list is millions of postings; a
     * query whose heap threshold rises quickly touches a handful of blocks.
     *
-    * Thread-safe: block decode is synchronized (rare; instances are shared
-    * through [[graft.engine.PostingCache]]).
+    * Thread-safe: block decode is synchronized (rare; one instance per
+    * sub-list is shared by every task of a pin through
+    * [[graft.engine.SegmentShard.blocks]]).
     */
   final class PostingsBlocks private (
       val count: Int,

@@ -4,7 +4,7 @@ import graft.engine.{IndexReader, NaiveSearch, QueryMetrics, Wand}
 import graft.index.{Incremental, IndexBuilder, IndexPaths, Postings}
 import graft.model.Query
 import graft.queries.QuerySet
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * evaluated every candidate with 0 skips). Pins: prefix existence +
   * boundary-tie capture, rank identity vs the naive oracle plan with the
   * fast route ENGAGED (candidate counter = prefix size, not df), and the
-  * fallbacks (rare term, absent term, k > FastK, scoped query).
+  * fallbacks (rare term, absent term, k > FastK, scoped query). Also:
+  * concurrent routed, WAND and AND requests on one reader, racing on the
+  * segment shards' first decodes, answer exactly as sequential ones.
   */
 class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -236,9 +238,9 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
       "layered fast serve diverged from the full-corpus oracle plan")
   }
 
-  test("layered reader pins one relation per layer: no index/ relation cached after every route") {
-    // termMeta reads df from the pinned segments, so the global index/ of
-    // a layer is never pinned; the segments are (positive control)
+  test("layered reader pins one shard RDD per layer: no segments/ or index/ relation cached after every route") {
+    // every route and termMeta read the layers' pinned segment shards, so
+    // no relation over a layer's segments/ or index/ is ever cached
     val reader = IndexReader.get(spark, layered)
     assert(reader.layers.size === 2)
     val m = QueryMetrics(spark)
@@ -251,11 +253,50 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
       mode = Wand.Conjunctive).collect()
     assert(m.routedFast.value === 1L && m.routedHybrid.value === 1L &&
       m.routedWand.value === 2L && m.routedAbsent.value === 1L, s"routes: ${m.snapshot}")
+    val persistent = spark.sparkContext.getPersistentRDDs
     reader.layers.foreach { l =>
-      assert(cached(l.segments), s"layer ${l.ordinal}: segments not pinned")
+      assert(persistent.contains(l.shards.id), s"layer ${l.ordinal}: segment shards not pinned")
+      val segments = spark.read.schema(IndexBuilder.SegmentsSchema).parquet(l.paths.segmentsDir)
+      assert(!cached(segments), s"layer ${l.ordinal}: segments/ relation is pinned")
       val index = spark.read.schema(IndexBuilder.IndexSchema).parquet(l.paths.indexDir)
       assert(!cached(index), s"layer ${l.ordinal}: index/ relation is pinned")
     }
+    // the reader's one cached relation is its fast sidecar
+    val entries = org.apache.spark.sql.GraftCacheBridge.cachedEntries(spark)
+    assert(reader.fast.isDefined)
+    IndexReader.invalidate(layered.root)
+    assert(entries - org.apache.spark.sql.GraftCacheBridge.cachedEntries(spark) === 1,
+      "the layered reader cached more than its fast sidecar")
+  }
+
+  test("8 concurrent request threads on one reader answer as sequential requests do") {
+    val hybrid = Seq(Query("hyb", Seq("func", "handler_0_3"), 10))
+    def batches(): Seq[Array[Row]] = Seq(
+      Wand.topKAt(spark, paths, QuerySet.all, mode = Wand.WandOnly).collect(),
+      Wand.topKAt(spark, paths, hybrid).collect(),
+      Wand.topKAt(spark, paths, QuerySet.conjunctive, mode = Wand.Conjunctive).collect())
+    val m = QueryMetrics(spark)
+    Wand.topKAt(spark, paths, hybrid, Some(m)).collect()
+    assert(m.routedHybrid.value === 1L, s"fixture: not routed hybrid: ${m.snapshot}")
+    val want = batches()
+    assert(want.forall(_.nonEmpty))
+    // a fresh reader with its term metadata and fast lists warm but no
+    // block decoded yet, so the threads race on the shards' first decodes
+    IndexReader.invalidate(paths.root)
+    val reader = IndexReader.get(spark, paths)
+    val terms = (QuerySet.all ++ QuerySet.conjunctive ++ hybrid).flatMap(_.terms).distinct
+    reader.termMeta(terms)
+    reader.prefetchFastLists(terms)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = (0 until 8).map { _ =>
+      new Thread(() => {
+        try (0 until 3).foreach { _ =>
+          batches().zip(want).foreach { case (got, w) => assert(got.toSeq === w.toSeq) }
+        } catch { case t: Throwable => errors.add(t) }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errors.isEmpty, s"a concurrent request diverged: ${Option(errors.peek()).map(_.toString)}")
   }
 
   test("k > FastK falls back to the exact path (and still matches naive)") {

@@ -234,6 +234,28 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(Wand.topKAt(spark, p2, tri, mode = Wand.Exhaustive)) === naive)
   }
 
+  test("cold termMeta runs one job per probed layer over the segment shards, and no SQL") {
+    val basePaths = IndexPaths(s"$root/jobs-base")
+    val outPaths = IndexPaths(s"$root/jobs-out")
+    IndexBuilder.build(spark, corpusOf(baseDocs), basePaths, buildArgs = "layered-spec-jobs")
+    Incremental.addBatch(spark, basePaths, corpusOf(baseDocs ++ deltaDocs), outPaths)
+    val reader = IndexReader.get(spark, outPaths)
+    assert(reader.layers.size === 2)
+    reader.termMeta(Seq("common")) // builds the pins
+    // gamma3 is delta-only: found in the newest layer, one layer probed
+    val (newestOnly, newestJobs, _, newestSql) = SparkWork(spark)(reader.termMeta(Seq("gamma3")))
+    assert(newestOnly("gamma3") === ((1L, 1)))
+    assert(newestJobs === 1, s"one probed layer ran $newestJobs jobs")
+    // alpha7 is base-only and nosuch is absent: both layers probed
+    val (both, bothJobs, _, bothSql) = SparkWork(spark)(reader.termMeta(Seq("alpha7", "gamma5", "nosuch")))
+    assert(both.keySet === Set("alpha7", "gamma5") && both("alpha7") === ((1L, 0)))
+    assert(bothJobs === 2, s"two probed layers ran $bothJobs jobs")
+    assert(newestSql + bothSql === 0, "a termMeta lookup ran a SQL execution")
+    // warm: no job at all
+    assert(SparkWork(spark)(reader.termMeta(Seq("gamma3", "alpha7", "nosuch")))._2 === 0)
+    IndexReader.invalidate(outPaths.root)
+  }
+
   test("addBatchCompacting bounds the layer count and keeps query identity") {
     val basePaths = IndexPaths(s"$root/pol-base")
     IndexBuilder.build(spark, corpusOf(baseDocs), basePaths, buildArgs = "policy-base")

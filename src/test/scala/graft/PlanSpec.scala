@@ -37,28 +37,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  /** `f`'s result, the Spark jobs it started and the shuffle bytes its
-    * tasks wrote plus read.
-    */
-  private def sparkWork[A](f: => A): (A, Int, Long) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = Option(te.taskMetrics).foreach { m =>
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead); ()
-      }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val a = f
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      (a, jobs.get, bytes.get)
-    } finally sc.removeSparkListener(l)
-  }
+  private def sparkWork[A](f: => A): (A, Int, Long, Int) = SparkWork(spark)(f)
 
   test("index cold scan: term filter pushed down + bucket partitions pruned") {
     import org.apache.spark.sql.functions._
@@ -147,13 +126,15 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Runs `run` once to warm the reader (term metadata, fast lists, reader
     * pins), then asserts the second, untagged run is one Spark job with no
-    * shuffle.
+    * shuffle, and that the job is a plain RDD job over the pins, not a
+    * Dataset action.
     */
   private def assertWarmOneJob(name: String)(run: String => Unit): Unit = {
     run("-warm")
-    val (_, jobs, shuffleBytes) = sparkWork(run(""))
+    val (_, jobs, shuffleBytes, sqlJobs) = sparkWork(run(""))
     assert(jobs === 1, s"warm $name request ran $jobs Spark jobs")
     assert(shuffleBytes === 0L, s"warm $name request shuffled $shuffleBytes bytes")
+    assert(sqlJobs === 0, s"warm $name request ran a SQL execution")
   }
 
   private def tagged(qs: Seq[graft.model.Query], tag: String) =
@@ -213,7 +194,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a scope this reader has never served costs no extra job: the repo
     // check runs inside the shard job, against the key shards
     val cold = Seq("repo-3")
-    val (rows, jobs, shuffleBytes) = sparkWork(
+    val (rows, jobs, shuffleBytes, _) = sparkWork(
       Wand.topKAt(spark, paths, tagged(QuerySet.all, "-cold"), repoScope = Some(cold)).collect())
     assert(jobs === 1, s"request with a new scope ran $jobs Spark jobs")
     assert(shuffleBytes === 0L, s"request with a new scope shuffled $shuffleBytes bytes")
@@ -245,7 +226,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     query("warm")
     // a groupByKey((salt, query)) or any exchange would show as a second
     // job or as shuffle bytes
-    val (rows, jobs, shuffleBytes) = sparkWork(query("x"))
+    val (rows, jobs, shuffleBytes, _) = sparkWork(query("x"))
     assert(jobs === 1, s"warm layered WAND request ran $jobs Spark jobs")
     assert(shuffleBytes === 0L, s"warm layered WAND request shuffled $shuffleBytes bytes")
     assert(rows.length === 5)
@@ -253,7 +234,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bench.deleteTree(root)
   }
 
-  test("pins align: partition i of segments and key shards holds only salt i") {
+  test("pins align: partition i of segment shards and key shards holds only salt i") {
     import graft.index.{Incremental, IndexBuilder, IndexPaths, TermHash}
     val s = spark
     import s.implicits._
@@ -274,11 +255,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(reader.layers.size === 2 && reader.stats.numSalts === 4)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "8")
     reader.layers.foreach { l =>
-      val salts = l.segments.select("salt").as[Int].rdd
-      assert(salts.getNumPartitions === 4, s"layer ${l.ordinal} segments pinned into the wrong partition count")
-      val placed = salts.mapPartitionsWithIndex((i, it) => it.map(salt => (i, salt))).collect()
-      assert(placed.nonEmpty && placed.forall { case (i, salt) => i == salt },
-        s"layer ${l.ordinal}: (partition, salt) = ${placed.distinct.toSeq}")
+      assert(l.shards.getNumPartitions === 4, s"layer ${l.ordinal} segments pinned into the wrong partition count")
+      val placed = l.shards.mapPartitionsWithIndex((i, it) => it.map(sh => (i, sh.salt, sh.size))).collect()
+      assert(placed.map(_._1).toSeq === (0 until 4) && placed.forall { case (i, salt, _) => i == salt },
+        s"layer ${l.ordinal}: (partition, salt, size) = ${placed.toSeq}")
+      val segRows = spark.read.schema(IndexBuilder.SegmentsSchema).parquet(l.paths.segmentsDir).count()
+      assert(placed.map(_._3.toLong).sum === segRows, s"layer ${l.ordinal}: shards lost or duplicated segments rows")
     }
     assert(reader.keys.getNumPartitions === 4, "key shards pinned into the wrong partition count")
     val shards = reader.keys.mapPartitionsWithIndex { (i, it) =>
