@@ -252,11 +252,11 @@ object SparkEntry {
     "mm_pgm_decode" -> ((s, dir) => graft.ops.Multimodal.decodePgmFeatures(s, dir)),
 
     // J1+J2: build on 80% of the corpus, then incrementally add the full
-    // corpus — anti-join keeps only the new 20%, sort-merge full_outer join
-    // merges ONLY delta-term postings into a delta layer (untouched base
-    // files are referenced through the snapshot, never rewritten). The
-    // layered read-back must equal the single-shot full build (oracle =
-    // full-corpus tf aggregate).
+    // corpus — anti-join keeps only the new 20%, which alone is indexed
+    // into a delta layer (base files are referenced through the snapshot,
+    // never rewritten). The layered read-back — the sort-merge full_outer
+    // merge of the layers — must equal the single-shot full build (oracle
+    // = full-corpus tf aggregate).
     "index_incremental" -> ((s, dir) => {
       val outPaths = ensureIncr(s, dir, replay = true)
       decodeRecount(s, graft.index.Incremental.readMergedIndex(s, outPaths.root))
@@ -264,7 +264,7 @@ object SparkEntry {
 
     // The layered root SERVED: the reference's query-over-live-store
     // behavior (FindNode works over whatever has been upserted,
-    // dgraph.go:62-92). Each query term reads its newest-wins layer's row;
+    // dgraph.go:62-92). Each query term reads every layer's list;
     // results must equal the full-corpus oracle — same one as
     // bm25_index_topk, proving incremental == rebuild at the query surface.
     "bm25_incremental_topk" -> ((s, dir) =>

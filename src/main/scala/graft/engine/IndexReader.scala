@@ -8,10 +8,9 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
 
-/** One layer of a (possibly layered) index root. `ordinal` is the position
-  * in snapshot order — HIGHER = NEWER, and a term's newest layer wins
-  * (LSM newest-wins; each layer's row for a term is the FULL merged posting
-  * list as of that layer, so exactly one layer is current per term).
+/** One layer of a (possibly layered) index root. Layers are doc-disjoint;
+  * a term's postings are the union of its layers' lists, each holding
+  * only that layer's docs.
   *
   * `avgdl` is the layer's encode-time average doc length: block-max bounds
   * inside the layer were computed on that grid. `boundScale` is the WAND
@@ -24,7 +23,6 @@ import scala.collection.concurrent.TrieMap
   * terms up there, and so does [[IndexReader.termMeta]].
   */
 final case class IndexLayer(
-    ordinal: Int,
     paths: IndexPaths,
     avgdl: Double,
     boundScale: Double,
@@ -41,10 +39,11 @@ final case class IndexLayer(
   * published snapshot is refused.
   *
   * Layered roots (incremental adds, [[graft.index.Incremental.addBatch]])
-  * are served directly: term metadata resolves newest-wins per term from
-  * the segment shards, the query paths read exactly one layer's sub-lists
-  * per term, and the key shards are built from the union of the disjoint
-  * per-layer docs sidecars — the reference's query-over-live-store
+  * are served directly. Layers are doc-disjoint; a term's postings are the
+  * union of its layers' lists, so its df is their summed counts and the
+  * query paths read every layer's sub-list of each term. The key shards
+  * are built from the union of the per-layer docs sidecars — the
+  * reference's query-over-live-store
   * behavior (`dgraph.go:62-92`, `FindNode` serves whatever has been
   * upserted). The key shards also answer repo scopes: no request reads the
   * docs sidecars.
@@ -60,43 +59,36 @@ final case class IndexReader(
   /** True once the session this reader was opened in has stopped. */
   def stopped: Boolean = keys.sparkContext.isStopped
 
-  // term → (df, winning layer ordinal); df == 0 → absent in every layer
-  private val termCache = TrieMap.empty[String, (Long, Int)]
+  // term → global df; 0 → absent in every layer
+  private val termCache = TrieMap.empty[String, Long]
 
   /** Newest layer (a single-layer root's only layer). */
   def newest: IndexLayer = layers.last
 
-  /** Per-term metadata for query planning: global df (idf is a per-term
-    * constant over the WHOLE corpus) plus the ordinal of the winning
-    * (newest-containing) layer. Read from the layers' segment shards,
-    * newest first, summing a term's salt sub-list counts on the driver.
-    * That sum is the full df: a layer holding a term holds its FULL merged
-    * list, split by salt (the build salts every list; an add re-salts each
-    * delta term's merged base ∪ delta list). Driver-cached per reader: each
-    * distinct term costs one lookup job per probed layer ONCE; later
+  /** Every layer's segment shards zipped partition by partition: partition
+    * i yields each layer's shard of salt i, oldest layer first. Both the
+    * shard job ([[Wand.topKAt]]) and [[termMeta]] run over it.
+    */
+  val shards: RDD[SegmentShard] = layers.map(_.shards).reduce((a, b) => a.zipPartitions(b)(_ ++ _))
+
+  /** Global df per term for query planning (idf is a per-term constant
+    * over the WHOLE corpus): one job over every layer's segment shards,
+    * summing the term's sub-list counts over salts and layers on the
+    * driver. Layers are doc-disjoint, so that sum is the df. Driver-cached
+    * per reader: each distinct term costs one lookup job ONCE; later
     * queries on the same terms run ZERO Spark jobs here. Absent terms cache
     * as df=0 and are omitted (the 404 analog).
     */
-  def termMeta(terms: Seq[String]): Map[String, (Long, Int)] = {
-    var missing = terms.distinct.filterNot(termCache.contains)
-    var li = layers.length - 1
-    while (li >= 0 && missing.nonEmpty) {
-      val layer = layers(li)
-      val probe = missing
-      val found = layer.shards.mapPartitions(_.flatMap { sh =>
-        probe.iterator.map(t => t -> sh.indexOf(t)).collect { case (t, i) if i >= 0 => t -> sh.count(i) }
+  def termMeta(terms: Seq[String]): Map[String, Long] = {
+    val missing = terms.distinct.filterNot(termCache.contains)
+    if (missing.nonEmpty) {
+      val found = shards.mapPartitions(_.flatMap { sh =>
+        missing.iterator.map(t => t -> sh.indexOf(t)).collect { case (t, i) if i >= 0 => t -> sh.count(i) }
       }).collect().groupMapReduce(_._1)(_._2)(_ + _)
-      found.foreach { case (t, d) => termCache.put(t, (d, layer.ordinal)) }
-      missing = missing.filterNot(found.contains)
-      li -= 1
+      missing.foreach(t => termCache.put(t, found.getOrElse(t, 0L)))
     }
-    missing.foreach(termCache.put(_, (0L, -1)))
-    terms.distinct.flatMap(t => termCache.get(t).filter(_._1 > 0).map(t -> _)).toMap
+    terms.distinct.flatMap(t => termCache.get(t).filter(_ > 0).map(t -> _)).toMap
   }
-
-  /** Global df per term (present terms only). */
-  def dfOf(terms: Seq[String]): Map[String, Long] =
-    termMeta(terms).map { case (t, (d, _)) => t -> d }
 
   // term -> its fast-list row, or None (no fast list / absent term)
   private val fastCache = TrieMap.empty[String, Option[FastList]]
@@ -149,7 +141,7 @@ final case class IndexReader(
       fastPrefetchLock.synchronized {
         val missing = terms.distinct.filterNot(fastCache.contains)
         val (knownRare, candidates) = missing.partition(t =>
-          termCache.get(t).exists(_._1 < IndexBuilder.FastMinDf))
+          termCache.get(t).exists(_ < IndexBuilder.FastMinDf))
         knownRare.foreach(fastCache.put(_, None))
         if (candidates.nonEmpty) {
           import f.sparkSession.implicits._
@@ -204,12 +196,12 @@ object IndexReader {
   private def open(spark: SparkSession, paths: IndexPaths): IndexReader = {
     val root = Snapshots.open(paths.root)
     val stats = root.stats
-    val layers = root.layers.zipWithIndex.map { case ((layer, layerStats), i) =>
+    val layers = root.layers.map { case (layer, layerStats) =>
       // explicit schema: an EMPTY delta layer (replayed batch) has no
       // parquet files to infer from
       val shards = pinShards(spark.read.schema(IndexBuilder.SegmentsSchema)
         .parquet(layer.segmentsDir), stats.numSalts)
-      IndexLayer(i, layer, layerStats.avgdl, math.max(1.0, stats.avgdl / layerStats.avgdl), shards)
+      IndexLayer(layer, layerStats.avgdl, math.max(1.0, stats.avgdl / layerStats.avgdl), shards)
     }
     val newest = root.snapshot.layers.last
     IndexReader(paths, stats, root.snapshot.version, layers,
@@ -226,9 +218,9 @@ object IndexReader {
     * Alignment invariant the shard job relies on: partition i == salt i in
     * EVERY layer of the root and in the key shards ([[pinKeys]]), and doc
     * salting does not depend on the layer. So zipping the layers' and the
-    * key shards' partitions positionally gives one task ALL of a (salt,
-    * query)'s sub-lists across layers plus the shard's doc keys — shard
-    * runs stay docId-disjoint with no exchange.
+    * key shards' partitions positionally ([[IndexReader.shards]]) gives one
+    * task ALL of a (salt, query)'s sub-lists across layers plus the shard's
+    * doc keys — shard runs stay docId-disjoint with no exchange.
     */
   private def pinShards(segs: DataFrame, numSalts: Int): RDD[SegmentShard] = {
     import segs.sparkSession.implicits._
@@ -302,9 +294,9 @@ object IndexReader {
   }
 
   /** The NEWEST layer's fast sidecar. v7 invariant: every publish path
-    * writes (or rebuilds) the newest layer's sidecar at the CURRENT stats —
-    * full build and compact via
-    * [[IndexBuilder.buildPostingsPhases]], incremental adds via the
+    * writes (or rebuilds) the newest layer's sidecar at the CURRENT stats
+    * from every layer's lists — full build and compact through
+    * `IndexBuilder.buildFastSidecar`, incremental adds through the
     * [[graft.index.Incremental.addBatch]] whole-sidecar re-rank (tfNorm
     * ORDER is not avgdl-stable, so prefixes ranked at an older avgdl must
     * never be served). Absent `_SUCCESS` (a pre-v7 or hand-assembled root)

@@ -67,20 +67,25 @@ object Wand {
   }
 
   /** Same, against an already-built (complete) index — single-layer or
-    * LAYERED (an [[graft.index.Incremental]] snapshot root): each query term
-    * reads its newest-wins layer's segment shards, and non-newest layers'
-    * block-max bounds are multiplied by the layer's `boundScale =
-    * max(1, avgdl_now / avgdl_layer)` (monotonicity bound, see
-    * [[graft.index.Incremental]]) so pruning stays SOUND while exact
-    * scoring uses the current avgdl. Compaction resets scales to 1.
+    * LAYERED (an [[graft.index.Incremental]] snapshot root). Layers are
+    * doc-disjoint; a term's postings are the union of its layers' lists, so
+    * each (term, layer) sub-list is its own WAND cursor, scored with the
+    * term's global idf. The cursors are ordered by term, then layer: a doc
+    * sits in at most one of a term's lists, so its score sums the same
+    * terms in the same order as on a single layer, and the summed cursor
+    * bounds stay sound. Older layers' block-max bounds are multiplied by
+    * the layer's `boundScale = max(1, avgdl_now / avgdl_layer)`
+    * (monotonicity bound, see [[graft.index.Incremental]]) so pruning stays
+    * SOUND while exact scoring uses the current avgdl. Compaction resets
+    * scales to 1.
     *
     * `mode` ([[Mode]]) picks how queries are served: routed per query
     * (the default), WAND only, exhaustive, or conjunctive. Every shard
     * query of the batch, whatever the mode, runs in ONE Spark job with no
-    * exchange and no Dataset: the winning layers' pinned
-    * [[SegmentShard]] RDDs and the reader's key shards are zipped partition
-    * by partition (partition i == salt i), each task looks every query term
-    * up in its winning layer's shard, and each (salt shard, query) pair is
+    * exchange and no Dataset: every layer's pinned [[SegmentShard]] RDD
+    * and the reader's key shards are zipped partition by partition
+    * (partition i == salt i), each task looks every query term up in each
+    * layer's shard, and each (salt shard, query) pair is
     * one independent WAND run inside the task, ranked there by
     * [[ShardTail.select]] to at most k finished rows. The driver merges
     * those with the fast-route rows and returns a LOCAL result, so the
@@ -89,9 +94,9 @@ object Wand {
     * in one salt shard across layers and shard runs remain docId-disjoint.
     * Decoded postings are memoized in the shard that holds them
     * ([[SegmentShard.blocks]]), so a steady-state query stream decodes each
-    * hot sub-list once per pin, not per query. Per-term df and the winning
-    * layer come from the reader's term-metadata cache — after warmup a
-    * request plans nothing but the shard job.
+    * hot sub-list once per pin, not per query. Per-term df comes from the
+    * reader's term-metadata cache — after warmup a request plans nothing
+    * but the shard job.
     */
   def topKAt(
       spark: SparkSession,
@@ -202,24 +207,18 @@ object Wand {
     // analog and emit nothing)
     if (shardQs.isEmpty) return ShardTail.finish(spark, Nil, fastLocal)
 
-    // Each query term is read from its newest-wins layer, and the winning
-    // layers' segment shards plus the key shards are zipped partition by
-    // partition: the reader pins them all with partition i == salt i, so one
-    // task sees ALL of a (salt, query)'s sub-lists and the doc keys of that
-    // salt. zipPartitions throws if the partition counts ever differ, and
-    // each segment shard's salt is checked against the key shard's, so
+    // Every layer's segment shards plus the key shards are zipped partition
+    // by partition: the reader pins them all with partition i == salt i, so
+    // one task sees ALL of a (salt, query)'s sub-lists and the doc keys of
+    // that salt. zipPartitions throws if the partition counts ever differ,
+    // and each segment shard's salt is checked against the key shard's, so
     // misalignment fails loudly instead of splitting a shard's terms across
-    // tasks. Per-term (winning layer, bound scale, idf) comes from a
-    // driver-built map.
-    val termInfo: Map[String, (Int, Double, Double)] = shardQs.flatMap(_.terms).distinct.map { t =>
-      val (df, ord) = metaAll(t)
-      t -> ((ord, reader.layers(ord).boundScale, Postings.idf(df, n)))
-    }.toMap
-    val ords = termInfo.values.map(_._1).toSeq.distinct.sorted
-    val slot = ords.zipWithIndex.toMap
+    // tasks. Per-term idf and per-layer bound scales come from the driver.
+    val idfs: Map[String, Double] =
+      shardQs.flatMap(_.terms).distinct.map(t => t -> Postings.idf(metaAll(t), n)).toMap
+    val scales = reader.layers.map(_.boundScale).toArray
     val prune = mode != Exhaustive
-    val rows = ords.map(reader.layers(_).shards)
-      .reduce((a, b) => a.zipPartitions(b)(_ ++ _))
+    val rows = reader.shards
       .zipPartitions(reader.keys) { (segs, shards) =>
         val shard = shards.next()
         val layerShards = segs.toArray
@@ -228,19 +227,22 @@ object Wand {
           case None => _ => true
           case Some(rs) => d => { val i = shard.indexOf(d); i >= 0 && shard.repoIn(i, rs) }
         }
-        val byTerm = mutable.HashMap.empty[String, TermList]
-        termInfo.foreach { case (t, (ord, scale, idf)) =>
-          val seg = layerShards(slot(ord))
-          val i = seg.indexOf(t)
-          if (i >= 0) {
-            val bm = seg.blockMax(i)
-            byTerm.put(t, TermList(t, idf, seg.blocks(i), if (scale == 1.0) bm else bm.map(_ * scale)))
+        // per term, its sub-list in each layer that holds one, oldest first
+        val byTerm = idfs.map { case (t, idf) =>
+          t -> layerShards.indices.flatMap { li =>
+            val seg = layerShards(li)
+            val i = seg.indexOf(t)
+            if (i < 0) None
+            else {
+              val bm = seg.blockMax(i)
+              Some(TermList(t, idf, seg.blocks(i), if (scales(li) == 1.0) bm else bm.map(_ * scales(li))))
+            }
           }
         }
         shardQs.iterator.flatMap { q =>
-          val lists = q.terms.flatMap(byTerm.get).toSeq
+          val lists = q.terms.toSeq.flatMap(byTerm(_))
           // AND: a term with no sub-list here leaves this shard no match
-          if (lists.isEmpty || (mode == Conjunctive && lists.size < q.terms.length)) Iterator.empty
+          if (lists.isEmpty || (mode == Conjunctive && q.terms.exists(byTerm(_).isEmpty))) Iterator.empty
           else {
             val decodedBefore =
               if (metrics.isDefined) lists.iterator.map(_.blocks.decodedBlocks.toLong).sum else 0L
@@ -282,31 +284,43 @@ object Wand {
     }
   }
 
-  /** AND membership in one shard: the docs present in every list. Walks
-    * the shortest list and seeks the others block-lazily, so blocks of the
-    * longer lists that hold no doc of the shortest are never decoded.
-    * Block maxima bound every doc, a fortiori the intersection, so WAND's
-    * pruning stays sound under this scope.
+  /** AND membership in one shard: the docs present in every query term.
+    * A term's postings are the union of its lists (one per layer), so a
+    * doc holds the term if any of them holds it. Walks the term with the
+    * fewest postings in doc order and seeks the other terms' lists
+    * block-lazily, so blocks that hold no doc of the shortest term are
+    * never decoded. Block maxima bound every doc, a fortiori the
+    * intersection, so WAND's pruning stays sound under this scope.
     */
-  def inAll(lists: Seq[TermList]): Long => Boolean =
-    if (lists.size <= 1) _ => true
+  def inAll(lists: Seq[TermList]): Long => Boolean = {
+    val terms = lists.groupBy(_.term).values.map(_.map(_.blocks).toArray).toArray
+      .sortBy(_.iterator.map(_.count.toLong).sum)
+    if (terms.length <= 1) _ => true
     else {
-      val byCount = lists.map(_.blocks).sortBy(_.count)
-      val shortest = byCount.head
-      val others = byCount.tail.toArray
-      val pos = new Array[Int](others.length)
-      val ids = Iterator.range(0, shortest.count).map(shortest.id).filter { d =>
+      val shortest = terms.head.flatMap(b => Iterator.range(0, b.count).map(b.id))
+      java.util.Arrays.sort(shortest)
+      val others = terms.tail
+      val pos = others.map(ls => new Array[Int](ls.length))
+      val ids = shortest.filter { d =>
         var i = 0
         var all = true
         while (all && i < others.length) {
-          pos(i) = others(i).seek(pos(i), d)
-          all = pos(i) < others(i).count && others(i).id(pos(i)) == d
+          val ls = others(i)
+          var any = false
+          var j = 0
+          while (!any && j < ls.length) {
+            pos(i)(j) = ls(j).seek(pos(i)(j), d)
+            any = pos(i)(j) < ls(j).count && ls(j).id(pos(i)(j)) == d
+            j += 1
+          }
+          all = any
           i += 1
         }
         all
-      }.toArray
+      }
       d => java.util.Arrays.binarySearch(ids, d) >= 0
     }
+  }
 
   /** One term's shard sub-postings, accessed block-lazily: the cursor's
     * seeks route through the block directory ([[Postings.PostingsBlocks]]),

@@ -4,7 +4,6 @@ import graft.corpus.Corpus
 import graft.tokenize.Tokenizer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** Incremental index maintenance — SURVEY.md §2.4 J1 + J2, the engine
   * analog of the reference's conditional upserts:
@@ -14,41 +13,44 @@ import scala.jdk.CollectionConverters._
   *    the already-indexed docIds: only genuinely new docs produce postings;
   *  - J2 `CheckOrCreatePredicate` (`dgraph.go:148-176`, merge edge into
   *    existing edge list) → a Catalyst-planned **sort-merge full_outer
-  *    join** on `term` (`hint("merge")`) — but ONLY between the delta's
-  *    terms and the base rows for those same terms (left_semi-restricted).
+  *    join** on `term` (`hint("merge")`), folded over the layers where a
+  *    merge is needed: the merged view ([[readMergedIndex]]) and
+  *    [[compact]].
   *
-  * Delta layout (LSM-style, the 100 TB shape): untouched base terms are
-  * REFERENCED through the snapshot metadata ([[Snapshots]]), never decoded,
-  * re-encoded, or rewritten — a 0.1% delta costs a delta-sized write, not a
-  * full-index rewrite. The output root is itself one layer (an
-  * [[IndexPaths]] root: the merged delta-term rows, their salted segments,
-  * the fresh docs sidecar, edges, fast sidecar, stats) plus a snapshot whose
-  * layer roots are `base layers ++ [out]`; readers resolve newest-wins per
-  * term ([[readMergedIndex]]) and union per doc ([[readMergedDocs]]). Every
-  * entry point opens its source through [[Snapshots.open]], so only a
-  * published root can be added to, compacted or read merged.
+  * Delta layout (LSM-style, like Lucene's append-only segments): an add
+  * indexes ONLY its fresh docs, through the same posting phases as the
+  * full build ([[IndexBuilder.buildPostingsPhases]]), into its own layer
+  * root (an [[IndexPaths]]: the fresh docs' salted segments and index,
+  * their docs sidecar and edges, the fast sidecar, the stats), and
+  * publishes a snapshot whose layer roots are `base layers ++ [out]`.
+  * Base files are referenced through the snapshot ([[Snapshots]]), never
+  * decoded, re-encoded or rewritten. Layers are doc-disjoint (J1): a
+  * term's postings are the union of its layers' lists, its df their sum,
+  * and the docs the union of the layers' sidecars ([[readMergedDocs]]).
+  * Every entry point opens its source through [[Snapshots.open]], so only
+  * a published root can be added to, compacted or read merged.
   *
   * Stats semantics: nDocs/avgdl count TOKEN-BEARING docs only, matching
   * [[IndexBuilder]] (zero-token docs get a lineage row with dl=0 but no
-  * postings — P7). Delta terms are re-encoded with the NEW avgdl, so their
-  * block-max bounds are exact, and the delta layer also gets SALTED
-  * SEGMENTS (same doc-salt function as the base build), so a layered root
-  * is directly WAND-servable at full (salt × query) parallelism. Untouched
-  * base terms keep block-max computed at the base avgdl; since the BM25
-  * tf-normalization is monotone increasing in avgdl, the layered WAND
-  * reader ([[graft.engine.Wand]]) scales base-layer bounds with
-  * `max(1, avgdl_new / avgdl_base)` — an upper bound because
-  * tfNorm(tf,dl,a')/tfNorm(tf,dl,a) ≤ a'/a for a' > a (the ratio is
-  * (C + X/a)/(C + X/a') with C = tf + k1(1−b) ≥ 0, maximized at C = 0).
-  * [[compact]] folds the layers back to one exact-bounds layer.
+  * postings — P7). The add's lists are encoded at the NEW avgdl, so their
+  * block-max bounds are exact, and they are salted with the same doc-salt
+  * function as the base build, so a layered root is directly WAND-servable
+  * at full (salt × query) parallelism. Older layers keep block-max computed
+  * at their own avgdl; since the BM25 tf-normalization is monotone
+  * increasing in avgdl, the layered WAND reader ([[graft.engine.Wand]])
+  * scales their bounds with `max(1, avgdl_new / avgdl_layer)` — an upper
+  * bound because tfNorm(tf,dl,a')/tfNorm(tf,dl,a) ≤ a'/a for a' > a (the
+  * ratio is (C + X/a)/(C + X/a') with C = tf + k1(1−b) ≥ 0, maximized at
+  * C = 0). [[compact]] folds the layers back to one exact-bounds layer.
   */
 object Incremental {
 
   /** Add `newCorpus` (which may overlap the already-indexed corpus) into
-    * the index at `basePaths`, writing ONLY the delta layer to `outPaths`
-    * and publishing a layered snapshot there. Returns the new stats.
-    * Idempotent: replaying the same batch yields an identical delta (J1
-    * filters previously-indexed docIds, including dl=0 lineage rows).
+    * the index at `basePaths`, writing ONLY the delta layer — the fresh
+    * docs — to `outPaths` and publishing a layered snapshot there. Returns
+    * the new stats. Idempotent: replaying the same batch yields an
+    * identical delta (J1 filters previously-indexed docIds, including dl=0
+    * lineage rows).
     */
   def addBatch(
       spark: SparkSession,
@@ -62,8 +64,7 @@ object Incremental {
     val baseStats = base.stats
     val layers = base.snapshot.layers :+ outPaths
 
-    val baseDocs = mergedDocs(spark, base.snapshot.layers)
-    val existingIds = baseDocs.select("doc_id")
+    val existingIds = mergedDocs(spark, base.snapshot.layers).select("doc_id")
     val incoming = Corpus.withDocId(newCorpus)
     // J1: insert iff absent — idempotent replays, like the reference's
     // @if(eq(len(page),0)) upsert guard. Includes dl=0 lineage rows, so a
@@ -73,17 +74,17 @@ object Incremental {
 
     val tf = Tokenizer.termFreqsWithDl(fresh)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dl = tf.select(col("doc_id"), col("dl")).distinct()
 
-    // new global stats over old ∪ fresh TOKEN-BEARING doc lengths — the
-    // docs sidecar also holds dl=0 lineage rows, which IndexBuilder's
-    // dl-derived stats never count (DeadDocSpec pins that invariant).
-    val oldDls = baseDocs.select(col("doc_id"), col("dl")).filter(col("dl") > 0)
-    val allDls = oldDls.union(dl)
-    val sRow = phase("stats")(
-      allDls.agg(count(lit(1)), avg(col("dl").cast("double")), sum("dl")).head())
-    val newStats = IndexStats(IndexBuilder.FormatVersion, sRow.getLong(0), sRow.getDouble(1),
-      sRow.getLong(2), baseStats.numSalts, baseStats.numBuckets)
+    // new global stats from the base stats plus the fresh docs alone: both
+    // count TOKEN-BEARING docs only (a fresh doc without tokens has no tf
+    // row; the docs sidecar's dl=0 lineage rows never count — DeadDocSpec),
+    // and avgdl = T / N is exactly the build's avg over integer dls
+    val sRow = phase("stats")(tf.select(col("doc_id"), col("dl")).distinct()
+      .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head())
+    val nDocs = baseStats.nDocs + sRow.getLong(0)
+    val totalTokens = baseStats.totalTokens + sRow.getLong(1)
+    val newStats = IndexStats(IndexBuilder.FormatVersion, nDocs, totalTokens.toDouble / nDocs,
+      totalTokens, baseStats.numSalts, baseStats.numBuckets)
 
     // Replay no-op detection (r6, VERDICT r5 #8): an addBatch is a pure
     // replay iff the published snapshot at the out root already records this
@@ -98,7 +99,7 @@ object Incremental {
     // (nDocs, avgdl, totalTokens)). `index_incremental`'s replay=true entry
     // — the J1 idempotency exercise Verify pays every run — goes from a full
     // delta rewrite to anti-join + stats + fingerprint.
-    val publishArgs = s"incremental over ${basePaths.root} fp=${fingerprint(fresh)}"
+    val publishArgs = s"incremental over ${Snapshots.relativize(outPaths.root, basePaths.root)} fp=${fingerprint(fresh)}"
     // In-flight rewrite marker: an addBatch of a DIFFERENT batch that
     // crashed mid-rewrite leaves artifacts (e.g. an overwritten delta
     // index) that no longer correspond to the still-published stats and
@@ -115,14 +116,14 @@ object Incremental {
         java.nio.file.Paths.get(outPaths.statsPath), "build_args").contains(publishArgs) &&
       Seq(outPaths.indexDir, outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir, outPaths.fastDir)
         .forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/_SUCCESS")))
-    if (replayNoOp) {
+    if (replayNoOp)
       System.err.println(s"[add] replay no-op: ${outPaths.root} already carries this batch ($publishArgs)")
-      fresh.unpersist(); tf.unpersist()
-    } else {
+    else {
       java.nio.file.Files.createDirectories(inflightMarker.getParent)
       java.nio.file.Files.writeString(inflightMarker, "in-flight: " + publishArgs)
-      addBatchRewrite(spark, base, basePaths, outPaths, fresh, tf, newStats)
+      addBatchRewrite(spark, base, basePaths, outPaths, fresh, tf, newStats, publishArgs)
     }
+    fresh.unpersist(); tf.unpersist()
 
     // persist stats + the layered snapshot: the merged table is openable
     // from outPaths alone.
@@ -159,9 +160,9 @@ object Incremental {
     s"${r.getLong(0)}:$xor:$total"
   }
 
-  /** The rewrite half of [[addBatch]] — delta postings, salted delta
-    * segments, docs/edges delta layers, and the fast-sidecar re-rank.
-    * Skipped entirely on a detected replay no-op.
+  /** The rewrite half of [[addBatch]] — the fresh docs' postings, docs
+    * and edges, and the fast-sidecar re-rank. Skipped entirely on a
+    * detected replay no-op.
     */
   private def addBatchRewrite(
       spark: SparkSession,
@@ -170,85 +171,27 @@ object Incremental {
       outPaths: IndexPaths,
       fresh: DataFrame,
       tf: DataFrame,
-      newStats: IndexStats): Unit = {
+      newStats: IndexStats,
+      buildArgs: String): Unit = {
     def phase[A](name: String)(f: => A): A = IndexBuilder.phase(name, tag = "add")(f)
-    // delta postings per term (small batch → single-level aggregation)
-    val delta = tf
-      .groupBy("term")
-      .agg(PostingAggExprs.buildPostings(newStats.avgdl, col("doc_id"), col("tf"), col("dl")).as("p"))
-      .select(col("term"), col("p.postings").as("postings_b"), col("p.dls").as("dls_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // base rows for DELTA TERMS ONLY: newest layer wins per term, then the
-    // left_semi restriction keeps untouched terms out of the merge entirely.
-    val baseCurrent = currentIndex(spark, base.snapshot.layers)
-    val existing = baseCurrent
-      .join(delta.select("term"), Seq("term"), "left_semi")
-      .select(col("term"), col("postings").as("postings_a"), col("dls").as("dls_a"))
-
-    // J2: sort-merge full_outer join on term; each side ≤1 row per term.
-    val merged = existing.hint("merge")
-      .join(delta, Seq("term"), "full_outer")
-
-    import spark.implicits._
-    val avgdl = newStats.avgdl
-    val out = merged
-      .select("term", "postings_a", "dls_a", "postings_b", "dls_b")
-      .as[(String, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-      .map { case (term, pa, da, pb, db) =>
-        val (ids, tfs, dls) = mergePair(pa, da, pb, db)
-        val e = Postings.encode(term, ids, tfs, dls, avgdl)
-        (term, e.df, e.sumTf, e.postings, e.dls, e.blockMax, e.blockDir)
-      }
-      .toDF("term", "df", "sum_tf", "postings", "dls", "block_max", "block_dir")
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(newStats.numBuckets)).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    phase("merge+index-write")(out.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(outPaths.indexDir))
-
-    // Salted delta-layer SEGMENTS — what makes the layered root servable by
-    // the sharded WAND at full (salt × query) parallelism: the merged
-    // per-term lists (base ∪ delta for delta terms) are re-salted with the
-    // SAME doc-salt function as the base build, so a given doc lands in the
-    // same salt shard in every layer and shards stay docId-disjoint.
-    // Split + encode happen INSIDE one flatMap (a stable partition of a
-    // sorted list by salt keeps each sub-list sorted): no exploded
-    // (term, doc)-row shuffle, no re-aggregation — the only exchange is the
-    // (salt, bucket) repartition that co-locates output files.
-    val numSalts = newStats.numSalts
-    phase("segments-write")(out.select("term", "postings", "dls")
-      .as[(String, Array[Byte], Array[Byte])]
-      .flatMap { case (term, p, d) =>
-        val (ids, tfs, ls) = Postings.decode(p, d)
-        val salts = Array.tabulate(ids.length)(i => TermHash.salt(ids(i), numSalts))
-        (0 until numSalts).iterator.flatMap { s =>
-          val n = { var c = 0; var i = 0; while (i < salts.length) { if (salts(i) == s) c += 1; i += 1 }; c }
-          if (n == 0) Iterator.empty
-          else {
-            val si = new Array[Long](n); val st = new Array[Int](n); val sl = new Array[Long](n)
-            var i = 0; var o = 0
-            while (i < salts.length) {
-              if (salts(i) == s) { si(o) = ids(i); st(o) = tfs(i); sl(o) = ls(i); o += 1 }
-              i += 1
-            }
-            val e = Postings.encode(term, si, st, sl, avgdl)
-            Iterator.single((s, term, e.df, e.sumTf, e.postings, e.dls, e.blockMax, e.blockDir))
-          }
-        }
-      }
-      .toDF("salt", "term", "df", "sum_tf", "postings", "dls", "block_max", "block_dir")
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(newStats.numBuckets)).cast("int"))
-      .repartition(col("salt"), col("bucket"))
-      .write.mode("overwrite").partitionBy("salt", "bucket").parquet(outPaths.segmentsDir))
+    // the fresh docs' (doc_id, term, tf, dl) rows through the build's own
+    // posting phases: salted segments, manifests and the layer's index. A
+    // batch written here before (a replaced batch) is cleared first, so
+    // every salt is rebuilt; the live fast sidecar is left to the staged
+    // swap below.
+    Seq(outPaths.segmentsDir, outPaths.manifestsDir, outPaths.indexDir)
+      .foreach(d => IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d)))
+    IndexBuilder.buildPostingsPhases(spark, tf, newStats, outPaths, buildArgs)
 
     // docs delta: fresh docs ONLY (base sidecar is referenced, not copied).
     // LEFT join: zero-token fresh docs keep their dl=0 lineage row — same
     // invariant as IndexBuilder's sidecar write (P7). batch_id stamps the
     // layer's ingest lineage (per-doc provenance, the reference's StartUrl
     // analog page.go:83) — deterministic per (base, out) pair, so a
-    // replayed batch reproduces the identical sidecar.
-    val batchId = s"add:${basePaths.root}->${outPaths.root}"
+    // replayed batch reproduces the identical sidecar, and, like the stats'
+    // build_args, free of where the tree lives.
+    val batchId = s"add:${Snapshots.relativize(outPaths.root, basePaths.root)}->" +
+      java.nio.file.Paths.get(outPaths.root).getFileName
     val dl = tf.select(col("doc_id"), col("dl")).distinct()
     phase("docs-write")(fresh.join(dl, Seq("doc_id"), "left")
       .select(col("doc_id"), col("repo"), col("path"), col("commit"), col("lang"),
@@ -259,9 +202,8 @@ object Incremental {
 
     // Stored link graph, delta layer (v7): fresh docs' edges + re-derived
     // edges for existing docs whose target's canonical provider this batch
-    // changed — readers resolve newest-wins per src_id, exactly like the
-    // postings' newest-wins per term. A batch that adds nothing writes a
-    // valid EMPTY layer (schema-pinned read).
+    // changed — readers resolve newest-wins per src_id. A batch that adds
+    // nothing writes a valid EMPTY layer (schema-pinned read).
     phase("edges-write") {
       val baseNodes = LinkIndex.nodesOf(mergedDocs(spark, base.snapshot.layers))
       val freshNodes = LinkIndex.nodesOf(
@@ -270,19 +212,16 @@ object Incremental {
         LinkIndex.deltaEdges(baseNodes, freshNodes), outPaths.edgesDir)
     }
 
-    fresh.unpersist(); tf.unpersist(); delta.unpersist(); out.unpersist()
-
     // v7: rebuild the impact-ordered fast sidecar for the LAYERED root at
-    // the NEW avgdl — whole-sidecar, not delta-touched-terms-only, because
-    // tfNorm ORDER is not avgdl-stable: every hot term's prefix ranking
-    // moves when avgdl moves, not just the terms this batch touched. Hot
-    // terms are few by definition (df ≥ FastMinDf), so the re-rank is the
-    // same small decode+TopK pass the full build pays (~5% of build wall).
-    // Without this, hot single-term queries between an addBatch and the
-    // next compact fell back to full WAND at O(df≈N) with no block skips —
-    // the exact pathology the fast lists exist to kill, in what is the
-    // steady state at 100 TB.
-    val layers = base.snapshot.layers :+ outPaths
+    // the NEW avgdl, from every layer's lists — whole-sidecar, not
+    // delta-touched-terms-only, because tfNorm ORDER is not avgdl-stable:
+    // every hot term's prefix ranking moves when avgdl moves, not just the
+    // terms this batch touched. Hot terms are few by definition (df ≥
+    // FastMinDf), so the re-rank is the same small decode+TopK pass the
+    // full build pays. Without this, hot single-term queries between an
+    // addBatch and the next compact fell back to full WAND at O(df≈N)
+    // with no block skips.
+    //
     // Staged swap, NOT an in-place rebuild: on a non-no-op replay (same
     // batch path, changed content) the live snapshot's newest layer
     // references THIS fastDir, so deleting it for the duration of the
@@ -290,22 +229,13 @@ object Incremental {
     // whole decode+TopK pass (and a crash inside would make that permanent
     // until the next publish). Build beside it, then two renames: the
     // no-sidecar window shrinks to the rename itself, and a crash inside
-    // that window degrades to the fast-route-off fallback ([[IndexReader]]
+    // that window degrades to the fast-route-off fallback ([[graft.engine.IndexReader]]
     // fastFor: no _SUCCESS → WAND route — never a stale order), self-healed
     // by the next add/compact.
     val fastFinal = java.nio.file.Paths.get(outPaths.fastDir)
     val fastStage = java.nio.file.Paths.get(outPaths.fastDir + ".next")
     IndexBuilder.deleteRecursively(fastStage)
-    // bound scale for the pruned selection: currentIndex rows may come
-    // from any base layer, whose block maxima were encoded at that
-    // layer's avgdl — the max per-layer `avgdl_new / avgdl_layer` ratio
-    // upper-bounds every row's scale (delta-layer rows are encoded at
-    // newStats.avgdl, scale 1); same soundness argument as the WAND
-    // reader's boundScale
-    val fastBoundScale = (1.0 +: base.layers.map(newStats.avgdl / _._2.avgdl)).max
-    IndexBuilder.buildFastSidecar(
-      spark, currentIndex(spark, layers), mergedDocs(spark, layers),
-      newStats, fastStage.toString, boundScale = fastBoundScale)
+    IndexBuilder.buildFastSidecar(spark, base.layers :+ (outPaths -> newStats), newStats, fastStage.toString)
     IndexBuilder.deleteRecursively(fastFinal)
     java.nio.file.Files.move(fastStage, fastFinal,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -313,10 +243,10 @@ object Incremental {
 
   /** [[addBatch]] + automatic LSM housekeeping: when the resulting snapshot
     * exceeds `maxLayers`, fold it back to one layer in place
-    * ([[compact]]) — queries never pay more than `maxLayers`-deep
-    * newest-wins resolution, the unbounded-chain failure mode of an
-    * append-only LSM. The compaction is crash-safe (snapshot-last: an
-    * interrupted compact leaves the previous version serving).
+    * ([[compact]]) — a query never reads more than `maxLayers` lists per
+    * term and salt, the unbounded-chain failure mode of an append-only
+    * LSM. The compaction is crash-safe (snapshot-last: an interrupted
+    * compact leaves the previous version serving).
     */
   def addBatchCompacting(
       spark: SparkSession,
@@ -330,19 +260,21 @@ object Incremental {
   }
 
   /** Compaction — fold a layered snapshot back to ONE layer, re-encoded at
-    * the CURRENT avgdl so WAND block-max bounds are exact again and queries
-    * stop paying per-layer newest-wins resolution (the LSM compaction the
-    * layered design promises; reference analog: Dgraph's periodic LSM
-    * compaction behind the live store, `pkg/database/relationship/dgraph.go`).
+    * the CURRENT avgdl so WAND block-max bounds are exact again and a query
+    * reads one list per term and salt (the LSM compaction the layered
+    * design promises; reference analog: Dgraph's periodic LSM compaction
+    * behind the live store, `pkg/database/relationship/dgraph.go`).
     *
-    * Reads the newest-wins merged view, rebuilds salted segments + global
+    * Decodes the J2-merged view ([[readMergedIndex]]: the sort-merge
+    * full_outer fold over the layers), rebuilds salted segments + global
     * index + manifests through the SAME phases as a from-scratch build
-    * ([[IndexBuilder.buildPostingsPhases]]), writes the docs union, and
-    * publishes a single-layer snapshot. With `toRoot = None` the snapshot is
-    * published in place at `root` (version+1, data under
-    * `root/compact-v<N>/`); old layer files become unreferenced (kept on
-    * disk — time travel / concurrent readers, Iceberg-style). With
-    * `toRoot = Some(r)` the compacted table is published as a NEW v1 root.
+    * ([[IndexBuilder.buildPostingsPhases]]), writes the docs union and the
+    * fast sidecar, and publishes a single-layer snapshot. With
+    * `toRoot = None` the snapshot is published in place at `root`
+    * (version+1, data under `root/compact-v<N>/`); old layer files become
+    * unreferenced (kept on disk — time travel / concurrent readers,
+    * Iceberg-style). With `toRoot = Some(r)` the compacted table is
+    * published as a NEW v1 root.
     */
   def compact(spark: SparkSession, root: String, toRoot: Option[String] = None): IndexStats = {
     // fails fast, BEFORE deleting dirs or publishing, on an unpublished or
@@ -355,7 +287,7 @@ object Incremental {
       case Some(r) => (IndexPaths(r), r, 1)
       case None => (IndexPaths(s"$root/compact-v${snap.version + 1}"), root, snap.version + 1)
     }
-    Seq(inner.indexDir, inner.segmentsDir, inner.docsDir, inner.manifestsDir, inner.edgesDir)
+    Seq(inner.indexDir, inner.segmentsDir, inner.docsDir, inner.manifestsDir, inner.edgesDir, inner.fastDir)
       .foreach(d => IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d)))
 
     // docs union: per-layer docId sets are disjoint (J1), content_sha,
@@ -369,11 +301,11 @@ object Incremental {
         spark.read.schema(IndexBuilder.DocsSchema).parquet(inner.docsDir))),
       inner.edgesDir)
 
-    // (doc_id, term, tf, dl) relation from the newest-wins merged index —
-    // decode is distributed (one task per index row group), then the shared
-    // salted-segments + merge phases re-encode everything at stats.avgdl.
+    // (doc_id, term, tf, dl) relation from the merged index — decode is
+    // distributed (one task per merged row group), then the shared posting
+    // phases re-encode everything at stats.avgdl.
     import spark.implicits._
-    val tfd = currentIndex(spark, snap.layers)
+    val tfd = mergedIndex(spark, src)
       .select("term", "postings", "dls")
       .as[(String, Array[Byte], Array[Byte])]
       .flatMap { case (term, p, d) =>
@@ -382,6 +314,7 @@ object Incremental {
       }
       .toDF("doc_id", "term", "tf", "dl")
     IndexBuilder.buildPostingsPhases(spark, tfd, stats, inner, s"compact v$publishVersion of $root")
+    IndexBuilder.buildFastSidecar(spark, Seq(inner -> stats), stats, inner.fastDir)
 
     // record the SOURCE's identity (its build_args carries the batch
     // fingerprint for incremental roots) so fixture-reuse guards can check
@@ -397,14 +330,31 @@ object Incremental {
     stats
   }
 
-  /** Newest-wins-per-term view over index layers (oldest → newest). Schema
-    * is pinned explicitly: an empty delta layer (replayed batch) has no
-    * parquet files to infer from.
+  /** The J2 merge over a published root's layers (oldest → newest): a
+    * fold of Catalyst-planned sort-merge full_outer joins on term
+    * (`hint("merge")`, at most one row per term on each side), whose rows
+    * [[mergePair]] merges — the layers are doc-disjoint — and re-encodes at
+    * the current avgdl. One layer is read as it is. The schema is pinned:
+    * an empty layer (replayed batch) has no parquet files to infer from.
     */
-  private def currentIndex(spark: SparkSession, layers: Seq[IndexPaths]): DataFrame =
-    layers.map(l => spark.read.schema(IndexBuilder.IndexSchema).parquet(l.indexDir))
-      .reduceRight((older, newer) => // keep newer's row for shared terms
-        older.join(newer.select("term"), Seq("term"), "left_anti").unionByName(newer))
+  private def mergedIndex(spark: SparkSession, root: PublishedRoot): DataFrame = {
+    import spark.implicits._
+    val avgdl = root.stats.avgdl
+    root.snapshot.layers
+      .map(l => spark.read.schema(IndexBuilder.IndexSchema).parquet(l.indexDir).drop("bucket"))
+      .reduceLeft { (older, newer) =>
+        older.select(col("term"), col("postings").as("pa"), col("dls").as("da")).hint("merge")
+          .join(newer.select(col("term"), col("postings").as("pb"), col("dls").as("db")), Seq("term"), "full_outer")
+          .as[(String, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
+          .map { case (term, pa, da, pb, db) =>
+            val (ids, tfs, dls) = mergePair(pa, da, pb, db)
+            val e = Postings.encode(term, ids, tfs, dls, avgdl)
+            (term, e.df, e.sumTf, e.postings, e.dls, e.blockMax, e.blockDir)
+          }
+          .toDF("term", "df", "sum_tf", "postings", "dls", "block_max", "block_dir")
+      }
+      .withColumn("bucket", pmod(xxhash64(col("term")), lit(root.stats.numBuckets)).cast("int"))
+  }
 
   /** Union of the layers' docs sidecars (disjoint docId sets, J1). */
   private[graft] def mergedDocs(spark: SparkSession, layers: Seq[IndexPaths]): DataFrame =
@@ -412,11 +362,12 @@ object Incremental {
       .reduce(_ unionByName _)
 
   /** The logical merged index at the published `root` (term, df, sum_tf,
-    * postings, dls, block_max, bucket): newest layer wins per term.
-    * Untouched base FILES are read as-is — never rewritten by [[addBatch]].
+    * postings, dls, block_max, block_dir, bucket): one row per term, the
+    * J2 merge of its layers' lists. Base FILES are read as they are — never
+    * rewritten by [[addBatch]].
     */
   def readMergedIndex(spark: SparkSession, root: String): DataFrame =
-    currentIndex(spark, Snapshots.open(root).snapshot.layers)
+    mergedIndex(spark, Snapshots.open(root))
 
   /** The logical docs sidecar at the published `root`: union of disjoint
     * per-layer docs.

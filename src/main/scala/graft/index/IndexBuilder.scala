@@ -15,7 +15,7 @@ final case class IndexStats(version: Int, nDocs: Long, avgdl: Double, totalToken
   */
 final case class IndexPaths(root: String) {
   val segmentsDir: String = s"$root/segments"   // (term, df, sum_tf, postings, dls, block_max) partitioned by salt
-  val indexDir: String = s"$root/index"         // globally merged, partitioned by term-hash bucket
+  val indexDir: String = s"$root/index"         // the layer's salts merged per term, partitioned by term-hash bucket
   val docsDir: String = s"$root/docs"           // (doc_id, repo, path, commit, lang, dl, content_sha, batch_id, cust)
   val fastDir: String = s"$root/fast"           // impact-ordered top-FastK prefixes of hot terms (v6)
   val edgesDir: String = s"$root/edges"         // stored link graph (src_id, dst_id), layered newest-wins per src (v7)
@@ -76,8 +76,16 @@ object IndexBuilder {
     * layer's index, segments, docs, fast and edges dirs and stats are the
     * fixed children of its root ([[IndexPaths]]), and a root without a
     * published snapshot is not complete.
+    * v9: every layer is append-only and layers are doc-disjoint: an add
+    * writes postings for its fresh docs only, through the build's posting
+    * phases, so a term's postings are the union of its layers' lists and
+    * its df is their sum. A v8 delta layer holds each delta term's full
+    * merged list, which a summed df would count twice, so v8 roots are
+    * refused and rebuilt. Snapshot metadata stores layer roots relative to
+    * the snapshot's root, and the fast sidecar stores each term's global
+    * df.
     */
-  val FormatVersion: Int = 8
+  val FormatVersion: Int = 9
 
   /** Fast-list prefix length: single-term queries with k ≤ FastK are
     * served from the impact-ordered prefix (Anh & Moffat-style impact
@@ -390,7 +398,12 @@ object IndexBuilder {
 
     // Salted segment build + global merge, resumable per salt — the
     // tokenizer feeds the salted groupBy directly, no intermediate persist.
+    // A rebuilt merge invalidates the fast lists ranked from it.
+    if (completedSalts(paths).size < numSalts || !Files.exists(Paths.get(s"${paths.indexDir}/_SUCCESS")))
+      deleteRecursively(Paths.get(paths.fastDir))
     buildPostingsPhases(spark, Tokenizer.termFreqsWithDl(c), stats, paths, buildArgs)
+    if (!Files.exists(Paths.get(s"${paths.fastDir}/_SUCCESS")))
+      buildFastSidecar(spark, Seq(paths -> stats), stats, paths.fastDir)
 
     if (persistCorpus) c.unpersist()
     // a (re)build invalidates any resident reader on this root
@@ -404,9 +417,12 @@ object IndexBuilder {
   }
 
   /** Salted segments + per-salt manifests + bucket-partitioned global merge
-    * from a `(doc_id, term, tf, dl)` relation — shared by the full build
-    * (tokenizer output) and [[Incremental.compact]] (decoded layered index).
-    * Resumable per salt; any rebuilt salt invalidates the previous merge.
+    * from a `(doc_id, term, tf, dl)` relation — the one posting-write path,
+    * shared by the full build (tokenizer output), [[Incremental.addBatch]]
+    * (the fresh docs' rows) and [[Incremental.compact]] (the decoded merged
+    * index). Resumable per salt; any rebuilt salt invalidates the previous
+    * merge. The fast sidecar is the caller's: an add must not touch the
+    * live one of a published layer.
     */
   private[index] def buildPostingsPhases(
       spark: SparkSession,
@@ -451,7 +467,7 @@ object IndexBuilder {
       // shard (the reference's @count index analog, dgraph.go:45) — at 100 TB
       // the ratio max_term_df/posting_count is the stop-list / extra-salting
       // trigger.
-      val perSalt = phase("manifests")(spark.read.parquet(paths.segmentsDir)
+      val perSalt = phase("manifests")(spark.read.schema(SegmentsSchema).parquet(paths.segmentsDir)
         .filter(col("salt").isin(missing: _*))
         .groupBy("salt")
         .agg(count(lit(1)).as("terms"), sum("sum_tf").as("tokens"), sum("df").as("postings"),
@@ -461,7 +477,7 @@ object IndexBuilder {
         val salt = r.getAs[Int]("salt")
         writeJson(s"${paths.manifestsDir}/salt-$salt.json", Seq(
           "partition_id" -> salt,
-          "segment_path" -> s"${paths.segmentsDir}/salt=$salt",
+          "segment_path" -> s"segments/salt=$salt",
           "term_count" -> r.getAs[Long]("terms"),
           "token_count" -> r.getAs[Long]("tokens"),
           "posting_count" -> r.getAs[Long]("postings"),
@@ -473,7 +489,7 @@ object IndexBuilder {
       val seen = perSalt.map(_.getAs[Int]("salt")).toSet
       missing.filterNot(seen).foreach { salt =>
         writeJson(s"${paths.manifestsDir}/salt-$salt.json", Seq(
-          "partition_id" -> salt, "segment_path" -> s"${paths.segmentsDir}/salt=$salt",
+          "partition_id" -> salt, "segment_path" -> s"segments/salt=$salt",
           "term_count" -> 0, "token_count" -> 0, "posting_count" -> 0,
           "build_args" -> buildArgs, "wall_clock_ms" -> wallMs))
       }
@@ -481,13 +497,10 @@ object IndexBuilder {
 
     // Global merge: per-salt sub-postings → one posting list per term,
     // bucket-partitioned by term hash for query-time partition pruning.
-    // Any rebuilt salt invalidates the previous merge (and the fast lists).
-    if (missing.nonEmpty) {
-      deleteRecursively(Paths.get(paths.indexDir))
-      deleteRecursively(Paths.get(paths.fastDir))
-    }
+    // Any rebuilt salt invalidates the previous merge.
+    if (missing.nonEmpty) deleteRecursively(Paths.get(paths.indexDir))
     if (!Files.exists(Paths.get(s"${paths.indexDir}/_SUCCESS"))) {
-      val segs = spark.read.parquet(paths.segmentsDir)
+      val segs = spark.read.schema(SegmentsSchema).parquet(paths.segmentsDir)
       withHashAggFallbackRaised(spark)(phase("merge") {
         segs
           .groupBy("term")
@@ -499,48 +512,53 @@ object IndexBuilder {
           .write.mode("overwrite").partitionBy("bucket").parquet(paths.indexDir)
       })
     }
-
-    // Impact-ordered fast lists (v6): one distributed pass extracts each
-    // hot term's top-[[FastK]] postings BY THE FINAL TOTAL ORDER —
-    // (quantized score desc, natural key asc), the same [[graft.engine.TopKAggExprs]]
-    // heap aggregate + the same BM25 Column expressions as every query
-    // path — so the stored prefix IS the term's final top-FastK, ties
-    // resolved identically by construction. (A raw-score boundary cut is
-    // NOT viable here: an ultra-hot term's idf ≈ ln(1 + 0.5/(N+0.5)) makes
-    // its whole score range narrower than any epsilon at large N — the
-    // tie-dominated case must be broken by natural keys, exactly like the
-    // final ranking.) Single-term queries then serve in O(k) instead of
-    // O(df): block-max pruning cannot fire on a flat score distribution,
-    // and at 10^12 docs an O(N) hot-term query is not servable.
-    if (!Files.exists(Paths.get(s"${paths.fastDir}/_SUCCESS")))
-      buildFastSidecar(spark,
-        spark.read.parquet(paths.indexDir),
-        spark.read.schema(DocsSchema).parquet(paths.docsDir),
-        stats, paths.fastDir)
   }
 
-  /** Build the impact-ordered fast sidecar from a CURRENT (newest-wins)
-    * index view + the full docs sidecar, ranked at `stats`' avgdl. Shared by
-    * the full build / compaction ([[buildPostingsPhases]]) and
-    * [[Incremental.addBatch]] — a layered root's sidecar is rebuilt whole at
-    * the new avgdl on every add (hot terms are few by definition, df ≥
-    * [[FastMinDf]]), so hot-term queries stay O(k) between compactions
-    * instead of degrading to full WAND while the root is layered. tfNorm
-    * ORDER is not avgdl-stable, which is exactly why the sidecar must be
-    * re-ranked whenever avgdl moves (the v6 reader simply refused layered
-    * roots; v7 keeps them fast).
+  /** Impact-ordered fast lists (v6): one distributed pass extracts each
+    * hot term's top-[[FastK]] postings BY THE FINAL TOTAL ORDER —
+    * (quantized score desc, natural key asc), the same [[graft.engine.TopKAggExprs]]
+    * heap aggregate + the same BM25 Column expressions as every query
+    * path — so the stored prefix IS the term's final top-FastK, ties
+    * resolved identically by construction. (A raw-score boundary cut is
+    * NOT viable here: an ultra-hot term's idf ≈ ln(1 + 0.5/(N+0.5)) makes
+    * its whole score range narrower than any epsilon at large N — the
+    * tie-dominated case must be broken by natural keys, exactly like the
+    * final ranking.) Single-term queries then serve in O(k) instead of
+    * O(df): block-max pruning cannot fire on a flat score distribution,
+    * and at 10^12 docs an O(N) hot-term query is not servable.
+    *
+    * `layers` are a root's layers with the stats each was encoded at; the
+    * sidecar is ranked at the current `stats`. The full build and
+    * compaction pass their one layer. [[Incremental.addBatch]] passes every
+    * layer and rebuilds the sidecar whole on each add: tfNorm ORDER is not
+    * avgdl-stable, so every hot term's prefix moves when avgdl moves. A
+    * term is hot when its global df — the sum over its doc-disjoint layer
+    * lists — reaches [[FastMinDf]]. Each of its lists contributes its own
+    * top candidates, scored with the global idf, and their union holds
+    * the term's top FastK.
     */
   private[index] def buildFastSidecar(
       spark: SparkSession,
-      currentIndex: DataFrame,
-      docs: DataFrame,
+      layers: Seq[(IndexPaths, IndexStats)],
       stats: IndexStats,
-      fastDir: String,
-      boundScale: Double = 1.0): Unit = {
+      fastDir: String): Unit = {
     import spark.implicits._
     val n = stats.nDocs
     val avgdl = stats.avgdl
     phase("fast-lists") {
+      // each layer's rows with its bound scale: block maxima encoded at an
+      // older (smaller) avgdl are widened by max(1, avgdl / layer avgdl)
+      // (tfNorm grows with avgdl; see [[Incremental]]'s monotonicity proof)
+      val rows = layers.map { case (l, ls) =>
+        spark.read.schema(IndexSchema).parquet(l.indexDir)
+          .withColumn("scale", lit(math.max(1.0, avgdl / ls.avgdl)))
+      }.reduce(_ unionByName _)
+      // one layer's df is the global df; over several layers, the hot
+      // terms' summed df (few rows) is broadcast back onto their lists
+      val withDf =
+        if (layers.size == 1) rows.filter(col("df") >= FastMinDf).withColumn("global_df", col("df"))
+        else rows.join(broadcast(rows.groupBy("term").agg(sum("df").as("global_df"))
+          .filter(col("global_df") >= FastMinDf)), "term")
       // Block-max-pruned candidate selection (r6, VERDICT r5 #2): instead of
       // full-decoding every hot list, emit only the postings whose quantized
       // score can still make (or tie) the term's top-FastK — blocks visited
@@ -548,21 +566,16 @@ object IndexBuilder {
       // bound WAND uses ([[Postings.topCandidatesByScore]]; exact, ties
       // included, no new metadata). The downstream docKeys join + key-asc
       // tiebreak heap then see candidate-sized input, not Σ df_hot rows.
-      // `boundScale` keeps the bound sound when currentIndex mixes layers
-      // encoded at older (smaller) avgdl (tfNorm grows with avgdl; see
-      // [[Incremental]]'s monotonicity proof).
       val fastK = FastK
-      val scale = boundScale
-      val hot = currentIndex
-        .filter(col("df") >= FastMinDf)
-        .select("term", "df", "postings", "dls", "block_max", "block_dir", "bucket")
-        .as[(String, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte], Int)]
-        .flatMap { case (term, df, p, d, bm, dir, bucket) =>
-          Postings.topCandidatesByScore(df, p, d, bm.toArray, dir, n, avgdl, fastK, scale)
+      val hot = withDf
+        .select("term", "df", "global_df", "postings", "dls", "block_max", "block_dir", "bucket", "scale")
+        .as[(String, Long, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte], Int, Double)]
+        .flatMap { case (term, count, df, p, d, bm, dir, bucket, scale) =>
+          Postings.topCandidatesByScore(count, p, d, bm.toArray, dir, df, n, avgdl, fastK, scale)
             .map { case (id, tf, dl) => (term, df, bucket, id, tf, dl) }
         }
         .toDF("term", "df", "bucket", "doc_id", "tf", "dl")
-      val docKeys = docs.select("doc_id", "repo", "path", "commit")
+      val docKeys = Incremental.mergedDocs(spark, layers.map(_._1)).select("doc_id", "repo", "path", "commit")
       val scoreR = graft.score.BM25.quantize(graft.score.BM25.score(
         col("tf"), col("df"), col("dl"), lit(n), lit(avgdl)))
       hot.join(docKeys, "doc_id")

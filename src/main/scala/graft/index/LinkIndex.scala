@@ -131,8 +131,8 @@ object LinkIndex {
     spark.read.schema(EdgesSchema).parquet(edgesDir)
 
   /** The logical edge relation at the published `root`: newest layer wins
-    * per `src_id` (the same resolution shape as the postings'
-    * newest-wins-per-term), over each layer's [[IndexPaths.edgesDir]].
+    * per `src_id`, over each layer's [[IndexPaths.edgesDir]] (an add
+    * re-derives the edges of existing docs whose target it changed).
     */
   def readMergedEdges(spark: SparkSession, root: String): DataFrame =
     Snapshots.open(root).snapshot.layers

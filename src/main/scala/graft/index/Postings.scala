@@ -92,6 +92,10 @@ object Postings {
     * bound cannot reach the current k-th best is skipped WITHOUT decoding
     * (pass 1) / emitting (pass 2). No new metadata, exact result.
     *
+    * `count` is the list's length and `df` the term's global df, which
+    * sets the idf: a layered root's term holds one list per layer, each
+    * shorter than the term's df.
+    *
     * `boundScale ≥ 1` widens the bound for lists whose block maxima were
     * encoded at an older (smaller) avgdl — the layered-root soundness factor
     * `max(1, avgdl_now / avgdl_layer)` (see [[Incremental]]); scoring itself
@@ -105,10 +109,10 @@ object Postings {
     */
   def topCandidatesByScore(
       count: Long, postings: Array[Byte], dls: Array[Byte], blockMax: Array[Double],
-      blockDir: Array[Byte], n: Long, avgdl: Double, k: Int,
+      blockDir: Array[Byte], df: Long, n: Long, avgdl: Double, k: Int,
       boundScale: Double = 1.0): Iterator[(Long, Int, Long)] = {
     val b = PostingsBlocks.fromEncoded(count, postings, dls, blockDir)
-    val idfV = idf(count, n)
+    val idfV = idf(df, n)
     val nb = b.nBlocks
     if (nb == 0 || k <= 0) return Iterator.empty
     val order = Array.range(0, nb).sortBy(i => -blockMax(i))

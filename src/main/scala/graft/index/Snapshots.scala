@@ -12,13 +12,18 @@ import java.nio.file.{Files, Paths}
   * newest, and each layer is a whole build root ([[IndexPaths]]: its index,
   * segments, docs, fast and edges dirs and its stats). A full build is one
   * layer; an incremental add appends its delta root to its parent's layers,
-  * so un-merged base files are referenced, never rewritten. The current
-  * stats are the newest layer's. Readers apply newest-wins per term / union
-  * per doc over the layers.
+  * so base files are referenced, never rewritten. Layers are doc-disjoint;
+  * a term's postings are the union of its layers' lists, and the docs are
+  * the union of the layers' sidecars. The current stats are the newest
+  * layer's.
+  *
+  * Layer roots and the parent root are stored relative to the snapshot's
+  * root, so the metadata does not depend on where the tree lives and a
+  * copied tree still opens.
   */
 final case class Snapshot(
     version: Int,
-    layers: Seq[IndexPaths], // oldest → newest; newest wins per term, docs union
+    layers: Seq[IndexPaths], // oldest → newest; doc-disjoint
     parentRoot: Option[String])
 
 /** A published root as [[Snapshots.open]] returns it: the snapshot, and
@@ -50,14 +55,24 @@ object Snapshots {
 
   def metadataDir(root: String): String = s"$root/metadata"
 
+  /** `path` relative to `root`, both made absolute and normalized: what a
+    * root stores about other roots, so its bytes do not depend on where
+    * the tree lives.
+    */
+  private[graft] def relativize(root: String, path: String): String = {
+    def abs(p: String) = Paths.get(p).toAbsolutePath.normalize
+    abs(root).relativize(abs(path)).toString
+  }
+
   /** Atomically publish a snapshot and move the version hint to it. */
   def write(root: String, snap: Snapshot): Unit = {
     val dir = Paths.get(metadataDir(root))
     Files.createDirectories(dir)
+    def rel(p: String): String = jstr(relativize(root, p))
     val body =
       s"""{"format_version": 3, "snapshot_version": ${snap.version},
-         | "layer_roots": ${snap.layers.map(l => jstr(l.root)).mkString("[", ", ", "]")},
-         | "parent_root": ${snap.parentRoot.map(jstr).getOrElse("null")}}""".stripMargin
+         | "layer_roots": ${snap.layers.map(l => rel(l.root)).mkString("[", ", ", "]")},
+         | "parent_root": ${snap.parentRoot.map(rel).getOrElse("null")}}""".stripMargin
     atomicWrite(dir.resolve(s"v${snap.version}.metadata.json"), body)
     atomicWrite(dir.resolve("version-hint.text"), snap.version.toString)
   }
@@ -78,13 +93,16 @@ object Snapshots {
   }
 
   /** The current snapshot as published, unchecked; None before the first
-    * publish. Serving and adding go through [[open]].
+    * publish. Serving and adding go through [[open]]. The stored roots are
+    * resolved against `root` and normalized, so they take `root`'s form
+    * (relative or absolute).
     */
   def read(root: String): Option[Snapshot] =
     currentVersion(root).map { v =>
       val txt = Files.readString(Paths.get(metadataDir(root), s"v$v.metadata.json"))
+      def resolve(p: String): String = Paths.get(root).resolve(p).normalize.toString
       val parent = "\"parent_root\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(txt).map(_.group(1))
-      Snapshot(v, readArr(txt, "layer_roots").map(IndexPaths(_)), parent)
+      Snapshot(v, readArr(txt, "layer_roots").map(p => IndexPaths(resolve(p))), parent.map(resolve))
     }
 
   /** Open the published root at `root`: its snapshot plus every layer's

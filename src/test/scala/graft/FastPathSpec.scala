@@ -196,7 +196,7 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Σ df_rare cap exists: a 15-term query still routes hybrid
     val reader = IndexReader.get(spark, paths)
     val rare = (0 until 14).map(i => s"cust_$i")
-    assert(reader.dfOf(rare).size === rare.size, "fixture: every cust_* term must be present")
+    assert(reader.termMeta(rare).size === rare.size, "fixture: every cust_* term must be present")
     val q = Query("many", "func" +: rare, 10)
     val m = QueryMetrics(spark)
     val got = Wand.topKAt(spark, paths, Seq(q), Some(m)).collect()
@@ -254,12 +254,12 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.routedFast.value === 1L && m.routedHybrid.value === 1L &&
       m.routedWand.value === 2L && m.routedAbsent.value === 1L, s"routes: ${m.snapshot}")
     val persistent = spark.sparkContext.getPersistentRDDs
-    reader.layers.foreach { l =>
-      assert(persistent.contains(l.shards.id), s"layer ${l.ordinal}: segment shards not pinned")
+    reader.layers.zipWithIndex.foreach { case (l, li) =>
+      assert(persistent.contains(l.shards.id), s"layer $li: segment shards not pinned")
       val segments = spark.read.schema(IndexBuilder.SegmentsSchema).parquet(l.paths.segmentsDir)
-      assert(!cached(segments), s"layer ${l.ordinal}: segments/ relation is pinned")
+      assert(!cached(segments), s"layer $li: segments/ relation is pinned")
       val index = spark.read.schema(IndexBuilder.IndexSchema).parquet(l.paths.indexDir)
-      assert(!cached(index), s"layer ${l.ordinal}: index/ relation is pinned")
+      assert(!cached(index), s"layer $li: index/ relation is pinned")
     }
     // the reader's one cached relation is its fast sidecar
     val entries = org.apache.spark.sql.GraftCacheBridge.cachedEntries(spark)

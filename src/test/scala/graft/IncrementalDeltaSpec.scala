@@ -11,13 +11,17 @@ import scala.jdk.CollectionConverters._
 /** Delta-layer invariants of the incremental add (SURVEY.md §2.4 J1/J2 +
   * the LSM layout):
   *
-  *  1. untouched base index FILES are byte-identical after an add — a
-  *     delta never rewrites, decodes, or re-encodes terms it doesn't touch;
-  *  2. the delta layer contains ONLY the delta's terms;
-  *  3. the layered read-back equals a from-scratch full build, including
-  *     stats over token-bearing docs only (dead docs excluded — P7);
+  *  1. base index FILES are byte-identical after an add — a delta never
+  *     rewrites, decodes, or re-encodes base postings;
+  *  2. the delta layer holds ONLY the fresh docs' postings: its terms, the
+  *     doc ids decoded from its segments and index, and its Σ df;
+  *  3. the layered read-back (the J2 merge) equals a from-scratch full
+  *     build, and the stats equal the full build's exactly (token-bearing
+  *     docs only, dead docs excluded — P7);
   *  4. replaying the same batch on the merged root is a no-op delta
-  *     (J1 idempotency, incl. zero-token docs' dl=0 lineage rows).
+  *     (J1 idempotency, incl. zero-token docs' dl=0 lineage rows);
+  *  5. a root whose layers record an older format is refused, and the
+  *     base rebuild plus a re-add serve it again.
   */
 class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -92,6 +96,22 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.getString(0)).toSet
     assert(deltaTerms === Set("beta", "epsilon"))
 
+    // 2b. ... and only the fresh docs' postings: every doc id decoded from
+    // its segments and its index is a fresh doc, and the segments' Σ df is
+    // the number of fresh (doc, term) pairs
+    val freshDocs = graft.corpus.Corpus.withDocId(corpusOf(add))
+      .filter(col("path").isin("c.go", "dead2.go"))
+    val freshIds = freshDocs.select("doc_id").collect().map(_.getLong(0)).toSet
+    def decodedIds(df: DataFrame): Seq[Long] = df.select("postings", "dls").collect().toSeq.flatMap { r =>
+      graft.index.Postings.decode(r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1))._1.toSeq
+    }
+    val segments = spark.read.schema(IndexBuilder.SegmentsSchema).parquet(outPaths.segmentsDir)
+    val index = spark.read.schema(IndexBuilder.IndexSchema).parquet(outPaths.indexDir)
+    assert(decodedIds(segments).nonEmpty && decodedIds(segments).forall(freshIds))
+    assert(decodedIds(index).nonEmpty && decodedIds(index).forall(freshIds))
+    assert(segments.agg(sum("df")).head().getLong(0) ===
+      graft.tokenize.Tokenizer.termFreqsWithDl(freshDocs).count())
+
     // 3a. merged view == from-scratch full build (decode-level equality)
     val fullPaths = IndexPaths(s"$root/full")
     IndexBuilder.build(spark, corpusOf((base ++ add).distinct), fullPaths, buildArgs = "delta-spec-full")
@@ -99,11 +119,11 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val full = decodeCounts(spark.read.parquet(fullPaths.indexDir))
     assert(merged === full)
 
-    // 3b. stats count token-bearing docs only (2 base + 1 fresh; dead docs excluded)
+    // 3b. stats count token-bearing docs only (2 base + 1 fresh; dead docs
+    // excluded), and equal the full build's exactly
     assert(stats.nDocs === 3)
     val fullStats = IndexBuilder.readStats(fullPaths).get
-    assert(stats.nDocs === fullStats.nDocs && stats.totalTokens === fullStats.totalTokens)
-    assert(math.abs(stats.avgdl - fullStats.avgdl) < 1e-12)
+    assert(stats.copy(version = 0) === fullStats.copy(version = 0))
 
     // 3c. fresh zero-token doc landed in the delta docs sidecar with dl=0
     val deadRows = spark.read.parquet(outPaths.docsDir)
@@ -128,6 +148,37 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
       .flatMap(e => Option(e.getMessage)).toSeq
     assert(messages.exists(m => m.contains("duplicate doc_id") &&
       m.contains("two input rows share one (repo, path, commit) key")), messages.mkString("\n"))
+  }
+
+  test("a layered root of an older format is refused, then rebuilt and served") {
+    // an older delta layer holds each delta term's whole merged list, which
+    // a summed df would count twice: every entry point must refuse it
+    val base = Seq(doc("a.go", "alpha beta"), doc("b.go", "beta gamma"))
+    val all = base ++ Seq(doc("c.go", "beta delta"))
+    val basePaths = IndexPaths(s"$root/old-base")
+    val outPaths = IndexPaths(s"$root/old-out")
+    IndexBuilder.build(spark, corpusOf(base), basePaths, buildArgs = "delta-spec-old")
+    Incremental.addBatch(spark, basePaths, corpusOf(all), outPaths)
+    val v = IndexBuilder.FormatVersion
+    Seq(basePaths, outPaths).foreach { l =>
+      val p = Paths.get(l.statsPath)
+      Files.writeString(p, Files.readString(p).replace(s""""version": $v""", s""""version": ${v - 1}"""))
+    }
+    graft.engine.IndexReader.invalidate(outPaths.root)
+    val refused = intercept[IllegalStateException](Snapshots.open(outPaths.root))
+    assert(refused.getMessage.contains(s"format v${v - 1}"), refused.getMessage)
+    intercept[IllegalStateException](graft.engine.IndexReader.get(spark, outPaths))
+    intercept[IllegalStateException](Incremental.addBatch(spark, outPaths, corpusOf(all), IndexPaths(s"$root/old-next")))
+    intercept[IllegalStateException](Incremental.compact(spark, outPaths.root))
+
+    // the build wipes and rebuilds the stale base; the add then rewrites
+    // the delta at the current format, and the root serves again
+    IndexBuilder.build(spark, corpusOf(base), basePaths, buildArgs = "delta-spec-old")
+    Incremental.addBatch(spark, basePaths, corpusOf(all), outPaths)
+    assert(Snapshots.open(outPaths.root).layers.forall(_._2.version == v))
+    val hits = graft.engine.SearchApi.search(spark, outPaths, Seq("beta"), 10)
+      .select("path").collect().map(_.getString(0)).toSet
+    assert(hits === Set("a.go", "b.go", "c.go"))
   }
 }
 
@@ -199,9 +250,18 @@ class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
     assert(mtimes2 == mtimes1, "replay no-op must not rewrite the delta index files")
 
     // a DIFFERENT batch over the same (base, out) pair must not be skipped —
-    // and the served content must reflect the new batch
+    // and the served content must reflect the new batch. The published
+    // layer keeps its fast sidecar through every phase of the rewrite: the
+    // new one is staged beside it and swapped in after the last phase
     val add2 = base ++ Seq("c.go" -> "zeta eta theta alpha", "d.go" -> "iota kappa")
-    Incremental.addBatch(spark, basePaths, corpusOf(add2), outPaths)
+    val fastSeen = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
+    val prevHook = IndexBuilder.phaseHook
+    IndexBuilder.phaseHook = (_, name, _) =>
+      fastSeen += name -> Files.exists(Paths.get(s"${outPaths.fastDir}/_SUCCESS"))
+    try Incremental.addBatch(spark, basePaths, corpusOf(add2), outPaths)
+    finally IndexBuilder.phaseHook = prevHook
+    assert(fastSeen.map(_._1).contains("segments") && fastSeen.forall(_._2),
+      s"the live fast sidecar was missing after a phase: $fastSeen")
     val docs = Incremental.readMergedDocs(spark, outPaths.root)
       .select("path").collect().map(_.getString(0)).toSet
     assert(docs == Set("a.go", "b.go", "c.go", "d.go"),

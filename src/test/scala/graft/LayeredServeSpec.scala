@@ -1,12 +1,14 @@
 package graft
 
-import graft.engine.{IndexReader, QueryMetrics, Wand}
+import graft.engine.{IndexReader, NaiveSearch, QueryMetrics, Wand}
 import graft.index.{Incremental, IndexBuilder, IndexPaths, Snapshots}
 import graft.model.Query
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Query serving OVER the layered (incremental) index — the round-3
   * flagship: an LSM index you can't query is half an LSM index. Pins:
@@ -23,7 +25,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  4. compaction folds the snapshot back to ONE layer with exact bounds
   *     (boundScale == 1), identical query results, and decode-level
   *     equality with a from-scratch rebuild;
-  *  5. per-query metrics (candidates / blocks decoded) populate.
+  *  5. per-query metrics (candidates / blocks decoded) populate;
+  *  6. a term hot only across layers gets a fast list ranked by its
+  *     global df;
+  *  7. snapshot metadata does not depend on where the tree lives.
   */
 class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -44,9 +49,10 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // base: 40 SHORT docs; delta: 20 LONG docs → avgdl roughly quadruples,
   // so base-layer block-max bounds are stale-LOW after the add (the unsound
-  // direction without the rescale). Terms: "common" spans both layers (its
-  // merged list lives in the DELTA layer), "basetail" is base-only (served
-  // from the BASE layer with scaled bounds), "deltaword" is delta-only.
+  // direction without the rescale). Terms: "common" has a list in both
+  // layers (each holding its own layer's docs), "basetail" is base-only
+  // (served from the BASE layer with scaled bounds), "deltaword" is
+  // delta-only.
   // Repo "repo-m" has docs in both layers (the scoped queries' scope).
   private def baseDocs: Seq[(String, String, String, String, String)] =
     (0 until 40).map { i =>
@@ -77,10 +83,10 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     Query("s3", Seq("mix", "common"), 7),
     Query("s4", Seq("basetail"), 25),  // k > df: full list, base layer only
     Query("s5", Seq("nosuch"), 10),
-    // CROSS-LAYER same-doc summation: "basetail" serves from the BASE
-    // layer, "common" from the DELTA layer, and base docs with i%3==0
-    // match both — their scores are correct only if the doc lands in the
-    // SAME salt shard in both layers (pins the delta-segments salt
+    // CROSS-LAYER summation: "basetail" serves from the BASE layer,
+    // "common" from both layers' lists, and delta docs score through the
+    // delta list only — the delta's docs are correct only if they land in
+    // the same salt shard as their keys (pins the delta-segments salt
     // function == the build's doc-salt function)
     Query("s6", Seq("basetail", "common"), 15))
 
@@ -106,6 +112,10 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("repo").isin(scope: _*))))
   }
 
+  /** The postings `layer` holds for `term`, summed over its salt shards. */
+  private def layerDf(layer: graft.engine.IndexLayer, term: String): Long =
+    layer.shards.map { sh => val i = sh.indexOf(term); if (i >= 0) sh.count(i) else 0L }.sum().toLong
+
   private def decodeCounts(df: DataFrame): Map[String, (Long, Long)] =
     df.select("term", "postings", "dls").collect().map { r =>
       val (ids, tfs, _) = graft.index.Postings.decode(
@@ -130,14 +140,12 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"base boundScale ${reader.layers(0).boundScale} — avgdl shift not captured")
     assert(reader.layers(1).boundScale === 1.0)
 
-    // term routing: base-only term → layer 0, merged/delta terms → layer 1
+    // df is the sum of a term's lists over the doc-disjoint layers; the
+    // delta layer holds only the delta's docs
     val meta = reader.termMeta(Seq("basetail", "common", "deltaword", "nosuch"))
-    assert(meta("basetail")._2 === 0)
-    assert(meta("common")._2 === 1)
-    assert(meta("deltaword")._2 === 1)
-    assert(!meta.contains("nosuch"))
-    // newest-wins df is the FULL merged df for cross-layer terms
-    assert(meta("common")._1 === 60L)
+    assert(meta === Map("basetail" -> 14L, "common" -> 60L, "deltaword" -> 10L))
+    assert(reader.layers.map(layerDf(_, "common")) === Seq(40L, 20L))
+    assert(reader.layers.map(layerDf(_, "basetail")) === Seq(14L, 0L))
 
     assert(rows(Wand.topKAt(spark, outPaths, queries, mode = Wand.Exhaustive)) === naive)
     assert(rows(Wand.topKAt(spark, outPaths, queries)) === naive)
@@ -181,10 +189,10 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("3-layer root: terms winning in three layers zip into one WAND shard run, identical to naive") {
-    // base: 30 short docs, every third carries "uno due tre"; add 1 re-lists
-    // "due" (its merged list moves to layer 1), add 2 re-lists "tre" (layer
-    // 2), "uno" stays base-only (layer 0). Base docs i%3==0 match through
-    // all three layers, so their score sums across the zipped partitions.
+    // base: 30 short docs, every third carries "uno due tre"; add 1 brings
+    // more "due" docs (a "due" list in layers 0 and 1), add 2 more "tre"
+    // docs (layers 0 and 2), "uno" stays base-only (layer 0). A query on
+    // all three reads sub-lists of all three layers in one zipped task.
     // Both adds are long docs: avgdl grows twice, so layers 0 and 1 both
     // serve with rescaled bounds.
     val base = (0 until 30).map { i =>
@@ -203,19 +211,22 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p2 = IndexPaths(s"$root/tri-2")
     IndexBuilder.build(spark, corpusOf(base), p0, buildArgs = "layered-spec-tri")
     Incremental.addBatch(spark, p0, corpusOf(base ++ add1), p1)
-    Incremental.addBatch(spark, p1, corpusOf(base ++ add1 ++ add2), p2)
+    val chainStats = Incremental.addBatch(spark, p1, corpusOf(base ++ add1 ++ add2), p2)
 
     val reader = IndexReader.get(spark, p2)
     assert(reader.layers.size === 3)
     assert(reader.layers(0).boundScale > 1.0 && reader.layers(1).boundScale > 1.0)
     val meta = reader.termMeta(Seq("uno", "due", "tre"))
-    assert(meta("uno")._2 === 0 && meta("due")._2 === 1 && meta("tre")._2 === 2)
-    // df summed over the winning layer's salt rows == a full build's df
+    assert(Seq("uno", "due", "tre").map(t => reader.layers.map(layerDf(_, t))) ===
+      Seq(Seq(10L, 0L, 0L), Seq(10L, 5L, 0L), Seq(10L, 0L, 5L)))
+    // df summed over every layer's salt rows == a full build's df, and the
+    // chain's stats (from base stats + fresh docs) == the full build's
     val pf = IndexPaths(s"$root/tri-full")
-    IndexBuilder.build(spark, corpusOf(base ++ add1 ++ add2), pf, buildArgs = "layered-spec-tri-full")
+    val fullStats = IndexBuilder.build(spark, corpusOf(base ++ add1 ++ add2), pf, buildArgs = "layered-spec-tri-full")
+    assert(chainStats.copy(version = 0) === fullStats.copy(version = 0))
     val fullDf = spark.read.parquet(pf.indexDir).filter(col("term").isin("uno", "due", "tre"))
       .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fullDf.size === 3 && meta.map { case (t, (df, _)) => t -> df } === fullDf)
+    assert(fullDf.size === 3 && meta === fullDf)
 
     val tri = Seq(Query("t1", Seq("uno", "due", "tre"), 8), Query("t2", Seq("due", "common"), 12))
     val triDf = {
@@ -234,7 +245,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(Wand.topKAt(spark, p2, tri, mode = Wand.Exhaustive)) === naive)
   }
 
-  test("cold termMeta runs one job per probed layer over the segment shards, and no SQL") {
+  test("cold termMeta runs one job over every layer's shards, and no SQL") {
     val basePaths = IndexPaths(s"$root/jobs-base")
     val outPaths = IndexPaths(s"$root/jobs-out")
     IndexBuilder.build(spark, corpusOf(baseDocs), basePaths, buildArgs = "layered-spec-jobs")
@@ -242,17 +253,20 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val reader = IndexReader.get(spark, outPaths)
     assert(reader.layers.size === 2)
     reader.termMeta(Seq("common")) // builds the pins
-    // gamma3 is delta-only: found in the newest layer, one layer probed
-    val (newestOnly, newestJobs, _, newestSql) = SparkWork(spark)(reader.termMeta(Seq("gamma3")))
-    assert(newestOnly("gamma3") === ((1L, 1)))
-    assert(newestJobs === 1, s"one probed layer ran $newestJobs jobs")
-    // alpha7 is base-only and nosuch is absent: both layers probed
-    val (both, bothJobs, _, bothSql) = SparkWork(spark)(reader.termMeta(Seq("alpha7", "gamma5", "nosuch")))
-    assert(both.keySet === Set("alpha7", "gamma5") && both("alpha7") === ((1L, 0)))
-    assert(bothJobs === 2, s"two probed layers ran $bothJobs jobs")
-    assert(newestSql + bothSql === 0, "a termMeta lookup ran a SQL execution")
+    // gamma3 is delta-only and alpha7 base-only: one job each
+    val (deltaOnly, deltaJobs, _, deltaSql) = SparkWork(spark)(reader.termMeta(Seq("gamma3")))
+    assert(deltaOnly === Map("gamma3" -> 1L))
+    assert(deltaJobs === 1, s"a delta-only term ran $deltaJobs jobs")
+    val (baseOnly, baseJobs, _, baseSql) = SparkWork(spark)(reader.termMeta(Seq("alpha7")))
+    assert(baseOnly === Map("alpha7" -> 1L))
+    assert(baseJobs === 1, s"a base-only term ran $baseJobs jobs")
+    // mix has lists in both layers (10 base + 4 delta docs), nosuch none
+    val (both, bothJobs, _, bothSql) = SparkWork(spark)(reader.termMeta(Seq("mix", "gamma5", "nosuch")))
+    assert(both === Map("mix" -> 14L, "gamma5" -> 1L))
+    assert(bothJobs === 1, s"a batch of terms ran $bothJobs jobs")
+    assert(deltaSql + baseSql + bothSql === 0, "a termMeta lookup ran a SQL execution")
     // warm: no job at all
-    assert(SparkWork(spark)(reader.termMeta(Seq("gamma3", "alpha7", "nosuch")))._2 === 0)
+    assert(SparkWork(spark)(reader.termMeta(Seq("gamma3", "alpha7", "mix", "nosuch")))._2 === 0)
     IndexReader.invalidate(outPaths.root)
   }
 
@@ -269,5 +283,81 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Snapshots.read(o2.root).get.layers.size === 1)
     val naive = rows(graft.engine.NaiveSearch.topK(spark, corpusOf(baseDocs ++ deltaDocs), queriesDf))
     assert(rows(Wand.topKAt(spark, o2, queries)) === naive)
+  }
+
+  test("fast sidecar of a layered root ranks by the global df: a term hot only across layers gets a prefix") {
+    // each layer's "hotw" list is below FastMinDf, their sum is above it;
+    // the delta's docs are longer, so the base layer's bounds are rescaled
+    val per = 2100
+    assert(per < IndexBuilder.FastMinDf && 2 * per >= IndexBuilder.FastMinDf)
+    val base = (0 until per).map(i =>
+      ("repo-h", f"hb$i%04d.go", "c0ffee000000", "go", ("hotw " * (1 + i % 3)) + s"hb$i"))
+    val delta = (0 until per).map(i =>
+      ("repo-h", f"hd$i%04d.go", "c0ffee000000", "go",
+        ("hotw " * (1 + i % 4)) + (0 until 1 + i % 9).map(j => s"pad$j").mkString(" ")))
+    val bp = IndexPaths(s"$root/hot-base")
+    val op = IndexPaths(s"$root/hot-out")
+    IndexBuilder.build(spark, corpusOf(base), bp, buildArgs = "layered-spec-hot")
+    assert(IndexReader.get(spark, bp).fastList("hotw").isEmpty, "fixture: hotw is hot in the base alone")
+    Incremental.addBatch(spark, bp, corpusOf(base ++ delta), op)
+    val reader = IndexReader.get(spark, op)
+    assert(reader.layers.map(layerDf(_, "hotw")) === Seq(per.toLong, per.toLong))
+    val fl = reader.fastList("hotw")
+    assert(fl.map(_.df) === Some(2L * per), "the fast list must carry the global df")
+
+    val q = Seq(Query("hot", Seq("hotw"), 20))
+    val qDf = {
+      val s = spark
+      import s.implicits._
+      Seq(("hot", "hotw", 20)).toDF("query_id", "term", "k")
+    }
+    val m = QueryMetrics(spark)
+    val got = rows(Wand.topKAt(spark, op, q, Some(m)))
+    assert(m.routedFast.value === 1L, s"routes: ${m.snapshot}")
+    assert(got === rows(NaiveSearch.topK(spark, corpusOf(base ++ delta), qDf)))
+    IndexReader.invalidate(bp.root)
+    IndexReader.invalidate(op.root)
+  }
+
+  private def copyTree(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    scala.util.Using.resource(Files.walk(src)) { s =>
+      s.iterator().asScala.foreach { p =>
+        val t = Paths.get(to).resolve(src.relativize(p))
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      }
+    }
+  }
+
+  test("snapshot metadata stores relative layer roots: equal sizes under two root paths, a copied tree serves") {
+    def buildAt(dir: String): Unit = {
+      IndexBuilder.build(spark, corpusOf(baseDocs), IndexPaths(s"$dir/base"), buildArgs = "layered-spec-rel")
+      Incremental.addBatch(spark, IndexPaths(s"$dir/base"), corpusOf(baseDocs ++ deltaDocs), IndexPaths(s"$dir/out"))
+    }
+    // the snapshot files and the stats (whose build_args carry the add's
+    // lineage) of both layers
+    def metadataSizes(dir: String): Map[String, Long] = Seq("base", "out").flatMap { layer =>
+      scala.util.Using.resource(Files.list(Paths.get(s"$dir/$layer/metadata"))) { s =>
+        s.iterator().asScala.map(p => s"$layer/${p.getFileName}" -> Files.size(p)).toList
+      } :+ (s"$layer/stats.json" -> Files.size(Paths.get(s"$dir/$layer/stats.json")))
+    }.toMap
+    def batchIds(dir: String): Set[String] = Incremental.readMergedDocs(spark, s"$dir/out")
+      .select("batch_id").distinct().collect().map(_.getString(0)).toSet
+    val short = s"$root/rel"
+    val long = s"$root/rel-under-a-much-longer-directory-name"
+    buildAt(short)
+    buildAt(long)
+    assert(metadataSizes(short).size === 6 && metadataSizes(short) === metadataSizes(long))
+    assert(batchIds(short) === batchIds(long))
+
+    // move the tree: the copy resolves its own layers and serves
+    val copy = s"$root/rel-copy"
+    copyTree(short, copy)
+    Bench.deleteTree(short)
+    val out = IndexPaths(s"$copy/out")
+    assert(Snapshots.read(out.root).get.layers === Seq(IndexPaths(s"$copy/base"), out))
+    val naive = rows(NaiveSearch.topK(spark, corpusOf(baseDocs ++ deltaDocs), queriesDf))
+    assert(rows(Wand.topKAt(spark, out, queries)) === naive)
+    IndexReader.invalidate(out.root)
   }
 }

@@ -208,8 +208,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     def corpus(docs: Seq[(String, String)]) =
       docs.map { case (path, content) => ("repo-p", path, "c0ffee000000", "go", content) }
         .toDF("repo", "path", "commit", "lang", "content")
-    // "basetail" stays base-only (wins layer 0); "common" is re-listed by
-    // the delta (wins layer 1) — the query's terms win in BOTH layers
+    // "basetail" is base-only; "common" has a list in BOTH layers, so the
+    // query reads sub-lists of both layers
     val base = (0 until 20).map(i => (f"base$i%02d.go", s"common alpha$i" + (if (i % 2 == 0) " basetail" else "")))
     val delta = (0 until 10).map(i => (f"delta$i%02d.go", s"common common gamma$i"))
     val root = java.nio.file.Files.createTempDirectory("graft-plan-layered").toString
@@ -219,7 +219,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     Incremental.addBatch(spark, basePaths, corpus(base ++ delta), outPaths)
     val reader = graft.engine.IndexReader.get(spark, outPaths)
     val meta = reader.termMeta(Seq("basetail", "common"))
-    assert(reader.layers.size === 2 && meta("basetail")._2 === 0 && meta("common")._2 === 1)
+    // df sums each term's lists over the doc-disjoint layers
+    assert(reader.layers.size === 2 && meta === Map("basetail" -> 10L, "common" -> 30L))
 
     def query(id: String) = graft.engine.Wand.topKAt(spark, outPaths,
       Seq(graft.model.Query(id, Seq("basetail", "common"), 5))).collect()
@@ -254,13 +255,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val reader = graft.engine.IndexReader.get(spark, outPaths)
     assert(reader.layers.size === 2 && reader.stats.numSalts === 4)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "8")
-    reader.layers.foreach { l =>
-      assert(l.shards.getNumPartitions === 4, s"layer ${l.ordinal} segments pinned into the wrong partition count")
+    reader.layers.zipWithIndex.foreach { case (l, li) =>
+      assert(l.shards.getNumPartitions === 4, s"layer $li segments pinned into the wrong partition count")
       val placed = l.shards.mapPartitionsWithIndex((i, it) => it.map(sh => (i, sh.salt, sh.size))).collect()
       assert(placed.map(_._1).toSeq === (0 until 4) && placed.forall { case (i, salt, _) => i == salt },
-        s"layer ${l.ordinal}: (partition, salt, size) = ${placed.toSeq}")
+        s"layer $li: (partition, salt, size) = ${placed.toSeq}")
       val segRows = spark.read.schema(IndexBuilder.SegmentsSchema).parquet(l.paths.segmentsDir).count()
-      assert(placed.map(_._3.toLong).sum === segRows, s"layer ${l.ordinal}: shards lost or duplicated segments rows")
+      assert(placed.map(_._3.toLong).sum === segRows, s"layer $li: shards lost or duplicated segments rows")
     }
     assert(reader.keys.getNumPartitions === 4, "key shards pinned into the wrong partition count")
     val shards = reader.keys.mapPartitionsWithIndex { (i, it) =>
@@ -276,14 +277,29 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("incremental merge is a SortMergeJoin (full_outer on term)") {
-    // build tiny base + delta through the public path and inspect the plan
-    // indirectly: hint("merge") + full_outer on 1-row-per-term sides must
-    // select SortMergeJoin in the executed plan.
-    val existing = spark.range(0, 1000).selectExpr("concat('t', id) AS term", "encode(concat('p', id), 'UTF-8') AS postings_a", "encode(concat('d', id), 'UTF-8') AS dls_a")
-    val delta = spark.range(500, 1500).selectExpr("concat('t', id) AS term", "encode(concat('p', id), 'UTF-8') AS postings_b", "encode(concat('d', id), 'UTF-8') AS dls_b")
-    val joined = existing.hint("merge").join(delta, Seq("term"), "full_outer")
-    val p = plan(joined)
-    assert(p.contains("SortMergeJoin"), s"merge hint did not yield SMJ:\n$p")
+    // the J2 merge lives in the merged view (and so in compaction): on a
+    // 2-layer root, the executed plan of Incremental.readMergedIndex must
+    // be a sort-merge full_outer join on term
+    import graft.index.{Incremental, IndexBuilder, IndexPaths}
+    val s = spark
+    import s.implicits._
+    def corpus(docs: Seq[(String, String)]) =
+      docs.map { case (path, content) => ("repo-p", path, "c0ffee000000", "go", content) }
+        .toDF("repo", "path", "commit", "lang", "content")
+    val base = (0 until 20).map(i => (f"base$i%02d.go", s"common alpha$i"))
+    val delta = (0 until 10).map(i => (f"delta$i%02d.go", s"common gamma$i"))
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-smj").toString
+    val basePaths = IndexPaths(s"$root/base")
+    val outPaths = IndexPaths(s"$root/out")
+    IndexBuilder.build(spark, corpus(base), basePaths, buildArgs = "plan-spec-smj")
+    Incremental.addBatch(spark, basePaths, corpus(base ++ delta), outPaths)
+    val merged = Incremental.readMergedIndex(spark, outPaths.root)
+    // collect runs this Dataset's own plan, so the executed plan is final
+    assert(merged.collect().length === 31, "merged view: one row per distinct term")
+    val p = merged.queryExecution.executedPlan.toString
+    assert(p.contains("SortMergeJoin") && p.contains("FullOuter"),
+      s"merged view is not a sort-merge full_outer join:\n$p")
+    Bench.deleteTree(root)
   }
 
   test("stored graph traversal scans the edges artifact, never the corpus source") {

@@ -26,7 +26,7 @@ class PostingsSelectSpec extends AnyFunSuite {
       n: Long, avgdl: Double, k: Int, encodeAvgdl: Double, scale: Double): Unit = {
     val e = Postings.encode("t", ids, tfs, dls, encodeAvgdl)
     val got = Postings.topCandidatesByScore(
-      ids.length.toLong, e.postings, e.dls, e.blockMax, e.blockDir, n, avgdl, k, scale).toSet
+      ids.length.toLong, e.postings, e.dls, e.blockMax, e.blockDir, ids.length.toLong, n, avgdl, k, scale).toSet
     val want = brute(ids, tfs, dls, n, avgdl, k)
     assert(got == want,
       s"selection mismatch: got ${got.size} want ${want.size} (k=$k, n=$n, avgdl=$avgdl)")

@@ -35,14 +35,16 @@ class WandSpec extends AnyFunSuite {
 
   /** `prune = false` must score every doc of the lists; `conjunctive`
     * restricts the run to [[Wand.inAll]] and the brute force to the docs
-    * present in every list.
+    * holding every term. A term may have several doc-disjoint lists (one
+    * per layer of a layered root): its postings are their union.
     */
   private def check(lists: Seq[Wand.TermList], k: Int, avgdl: Double,
       prune: Boolean = true, conjunctive: Boolean = false): Unit = {
     val counters = new graft.engine.WandCounters
     val inScope = if (conjunctive) Wand.inAll(lists) else (_: Long) => true
     val got = Wand.wandShardTopK(lists, k, avgdl, counters, inScope, prune).toMap
-    val docSets = lists.map(tl => (0 until tl.blocks.count).map(tl.blocks.id).toSet)
+    val docSets = lists.groupBy(_.term).values
+      .map(_.flatMap(tl => (0 until tl.blocks.count).map(tl.blocks.id)).toSet)
     val inEvery = docSets.reduce(_ intersect _)
     val want = bruteForce(lists, avgdl).filter { case (d, _) => !conjunctive || inEvery(d) }
     if (!prune) assert(counters.evaluated === want.size.toLong, "unpruned run skipped docs")
@@ -77,11 +79,17 @@ class WandSpec extends AnyFunSuite {
     (1 to 100).foreach { _ =>
       val avgdl = 10.0 + rnd.nextInt(50)
       val nTerms = 1 + rnd.nextInt(4)
-      val lists = (0 until nTerms).map { t =>
+      // each term's postings split over 2–3 doc-disjoint lists, ordered by
+      // term then list, the way a layered root holds one list per layer
+      val lists = (0 until nTerms).flatMap { t =>
         val nDocs = 1 + rnd.nextInt(400)
         val docs = Seq.fill(nDocs)(rnd.nextInt(1000).toLong).distinct
           .map(d => (d, 1 + rnd.nextInt(5), 5L + rnd.nextInt(60)))
-        mkList(s"t$t", 0.1 + rnd.nextDouble() * 3, docs, avgdl)
+        val idf = 0.1 + rnd.nextDouble() * 3
+        val parts = 2 + rnd.nextInt(2)
+        val owner = docs.map(_ => rnd.nextInt(parts))
+        (0 until parts).map(p => docs.zip(owner).collect { case (d, o) if o == p => d })
+          .filter(_.nonEmpty).map(mkList(s"t$t", idf, _, avgdl))
       }
       val k = 1 + rnd.nextInt(20)
       check(lists, k, avgdl)
