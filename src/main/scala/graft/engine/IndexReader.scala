@@ -20,7 +20,7 @@ import scala.collection.concurrent.TrieMap
   *
   * `shards` is the layer's one pin: its salted segments as one
   * [[SegmentShard]] per salt, partition i == salt i. Every route looks its
-  * terms up there, and so does [[IndexReader.termMeta]].
+  * terms up there, and the reader's term dictionary is loaded from it.
   */
 final case class IndexLayer(
     paths: IndexPaths,
@@ -38,6 +38,13 @@ final case class IndexLayer(
   * up in pinned objects and plans no DataFrame. A root without a
   * published snapshot is refused.
   *
+  * What a lookup needs lives on the driver: an exact [[TermDict]] of every
+  * term's global df and the newest layer's fast lists, both loaded once at
+  * the reader's first lookup ([[termMeta]], [[fastList]]). After that a
+  * fast or absent request runs no Spark job and every other request runs
+  * exactly one, the shard job ([[Wand.topKAt]]) — the reference's
+  * cache-or-404 lifecycle (`api/http.go:87-91`).
+  *
   * Layered roots (incremental adds, [[graft.index.Incremental.addBatch]])
   * are served directly. Layers are doc-disjoint; a term's postings are the
   * union of its layers' lists, so its df is their summed counts and the
@@ -53,120 +60,71 @@ final case class IndexLayer(
   * pins model the steady-state service.
   */
 final case class IndexReader(
-    paths: IndexPaths, stats: IndexStats, snapshotVersion: Int,
-    layers: Seq[IndexLayer], keys: RDD[DocKeyShard], fast: Option[DataFrame]) {
+    spark: SparkSession, paths: IndexPaths, stats: IndexStats, snapshotVersion: Int,
+    layers: Seq[IndexLayer], keys: RDD[DocKeyShard]) {
 
   /** True once the session this reader was opened in has stopped. */
-  def stopped: Boolean = keys.sparkContext.isStopped
-
-  // term → global df; 0 → absent in every layer
-  private val termCache = TrieMap.empty[String, Long]
+  def stopped: Boolean = spark.sparkContext.isStopped
 
   /** Newest layer (a single-layer root's only layer). */
   def newest: IndexLayer = layers.last
 
   /** Every layer's segment shards zipped partition by partition: partition
     * i yields each layer's shard of salt i, oldest layer first. Both the
-    * shard job ([[Wand.topKAt]]) and [[termMeta]] run over it.
+    * shard job ([[Wand.topKAt]]) and the dictionary load run over it.
     */
   val shards: RDD[SegmentShard] = layers.map(_.shards).reduce((a, b) => a.zipPartitions(b)(_ ++ _))
 
-  /** Global df per term for query planning (idf is a per-term constant
-    * over the WHOLE corpus): one job over every layer's segment shards,
-    * summing the term's sub-list counts over salts and layers on the
-    * driver. Layers are doc-disjoint, so that sum is the df. Driver-cached
-    * per reader: each distinct term costs one lookup job ONCE; later
-    * queries on the same terms run ZERO Spark jobs here. Absent terms cache
-    * as df=0 and are omitted (the 404 analog).
+  /** The term dictionary and the fast lists, loaded together at the first
+    * lookup: one job over [[shards]] (it also materializes the layer pins)
+    * returns each salt's terms and sub-list counts merged over its layers,
+    * and the driver merges the salts; then the newest layer's fast sidecar
+    * is read ([[IndexReader.fastFor]]). A lazy val, so concurrent first
+    * requests wait for one load rather than each running it.
     */
-  def termMeta(terms: Seq[String]): Map[String, Long] = {
-    val missing = terms.distinct.filterNot(termCache.contains)
-    if (missing.nonEmpty) {
-      val found = shards.mapPartitions(_.flatMap { sh =>
-        missing.iterator.map(t => t -> sh.indexOf(t)).collect { case (t, i) if i >= 0 => t -> sh.count(i) }
-      }).collect().groupMapReduce(_._1)(_._2)(_ + _)
-      missing.foreach(t => termCache.put(t, found.getOrElse(t, 0L)))
-    }
-    terms.distinct.flatMap(t => termCache.get(t).filter(_ > 0).map(t -> _)).toMap
+  private lazy val lookups: (TermDict, Map[String, FastList]) = {
+    val perSalt = shards.mapPartitions(it => Iterator(TermDict(it.flatMap(_.entries)))).collect()
+    (perSalt.reduce(TermDict.merge), IndexReader.fastFor(spark, newest.paths))
   }
 
-  // term -> its fast-list row, or None (no fast list / absent term)
-  private val fastCache = TrieMap.empty[String, Option[FastList]]
-  // serializes COLD batched prefetches only (see prefetchFastLists)
-  private val fastPrefetchLock = new Object
+  /** Global df per term for query planning (idf is a per-term constant
+    * over the WHOLE corpus), looked up in the driver [[TermDict]]. Layers
+    * are doc-disjoint, so a term's summed sub-list counts are its df.
+    * Only the reader's first lookup runs a job (the load); every later one
+    * runs none. Absent terms are omitted (the 404 analog).
+    */
+  def termMeta(terms: Seq[String]): Map[String, Long] =
+    terms.distinct.map(t => t -> termDict.df(t)).filter(_._2 > 0).toMap
+
+  /** The reader's term dictionary, loaded at its first lookup. */
+  def termDict: TermDict = lookups._1
 
   /** The impact-ordered top-k prefix of one term (`fast/` sidecar): parallel
     * arrays in the FINAL total order, v7 including the natural doc keys —
     * present only for hot terms (df ≥ [[IndexBuilder.FastMinDf]]). Layered
     * roots serve the sidecar rebuilt at the CURRENT avgdl by the last
-    * addBatch/compact. Driver-cached per reader: one bucket-pruned probe per
-    * distinct term, then zero Spark jobs (the prefix is
-    * [[IndexBuilder.FastK]]-sized — termMeta-sized, not postings-sized).
+    * addBatch/compact. A driver lookup: only the reader's first lookup runs
+    * a job (the load).
     */
-  def fastList(term: String): Option[FastList] =
-    fast match {
-      case None => None
-      case Some(f) =>
-        fastCache.getOrElseUpdate(term, {
-          import f.sparkSession.implicits._
-          f.filter(col("bucket") === TermHash.bucket(term, stats.numBuckets))
-            .filter(col("term") === term)
-            .select("df", "doc_ids", "tfs", "dls", "repos", "paths", "commits")
-            .as[(Long, Array[Long], Array[Int], Array[Long], Array[String], Array[String], Array[String])]
-            .collect().headOption
-            .map { case (df, ids, tfs, dls, repos, paths, commits) =>
-              FastList(df, ids, tfs, dls, repos, paths, commits)
-            }
-        })
-    }
+  def fastList(term: String): Option[FastList] = lookups._2.get(term)
 
-  /** Batched fast-list warmup for a query batch: ONE bucket-pruned probe
-    * covers every not-yet-cached term (the per-term [[fastList]] path costs
-    * one Spark job per cold term — a cold batch with T distinct hot terms
-    * would pay T serial jobs, this pays 1). Terms already known rare from
-    * [[termMeta]] (df < [[IndexBuilder.FastMinDf]]) cannot have fast lists
-    * by construction and are cached as absent with zero jobs.
+  /** Forces the load of the term dictionary and the fast lists, so the
+    * next request pays no load. `terms` is not needed: every fast list is
+    * loaded.
     */
-  def prefetchFastLists(terms: Seq[String]): Unit = fast match {
-    case None => ()
-    case Some(f) =>
-      // cold-only lock (warm batches return on the contains-check without
-      // touching it): two concurrent cold batches would otherwise both
-      // compute `missing` and both run the probe job (check-then-act). One
-      // monitor is fine because all prefetches probe the same shared
-      // sidecar (there is no unrelated-key work to serialize), and the
-      // loser's re-check inside the lock sees the winner's cache fills and
-      // probes only what is still missing.
-      if (terms.distinct.forall(fastCache.contains)) return
-      fastPrefetchLock.synchronized {
-        val missing = terms.distinct.filterNot(fastCache.contains)
-        val (knownRare, candidates) = missing.partition(t =>
-          termCache.get(t).exists(_ < IndexBuilder.FastMinDf))
-        knownRare.foreach(fastCache.put(_, None))
-        if (candidates.nonEmpty) {
-          import f.sparkSession.implicits._
-          val buckets = candidates.map(TermHash.bucket(_, stats.numBuckets)).distinct
-          val rows = f.filter(col("bucket").isin(buckets: _*))
-            .filter(col("term").isin(candidates: _*))
-            .select("term", "df", "doc_ids", "tfs", "dls", "repos", "paths", "commits")
-            .as[(String, Long, Array[Long], Array[Int], Array[Long], Array[String], Array[String], Array[String])]
-            .collect()
-          rows.foreach { case (t, df, ids, tfs, dls, repos, paths, commits) =>
-            fastCache.put(t, Some(FastList(df, ids, tfs, dls, repos, paths, commits)))
-          }
-          val found = rows.iterator.map(_._1).toSet
-          candidates.filterNot(found).foreach(fastCache.put(_, None))
-        }
-      }
-  }
+  def prefetchFastLists(terms: Seq[String]): Unit = { lookups; () }
 }
 
 /** One term's driver-resident impact-ordered prefix (v7 fast sidecar):
   * parallel arrays, already in the final (score_r desc, key asc) order.
+  * `sortedIds` is the prefix's ids in ascending order, the hybrid route's
+  * candidate scope.
   */
 final case class FastList(
     df: Long, ids: Array[Long], tfs: Array[Int], dls: Array[Long],
-    repos: Array[String], paths: Array[String], commits: Array[String])
+    repos: Array[String], paths: Array[String], commits: Array[String]) {
+  val sortedIds: Array[Long] = ids.sorted
+}
 
 object IndexReader {
 
@@ -190,8 +148,9 @@ object IndexReader {
   }
 
   /** Open a published root ([[Snapshots.open]] checks it): the segment
-    * shards of every layer, the key shards over the layers' docs union, and
-    * the newest layer's fast sidecar. Pins are lazy: no Spark job runs here.
+    * shards of every layer and the key shards over the layers' docs union.
+    * Pins are lazy, and so are the term dictionary and fast lists: no Spark
+    * job runs here.
     */
   private def open(spark: SparkSession, paths: IndexPaths): IndexReader = {
     val root = Snapshots.open(paths.root)
@@ -203,10 +162,8 @@ object IndexReader {
         .parquet(layer.segmentsDir), stats.numSalts)
       IndexLayer(layer, layerStats.avgdl, math.max(1.0, stats.avgdl / layerStats.avgdl), shards)
     }
-    val newest = root.snapshot.layers.last
-    IndexReader(paths, stats, root.snapshot.version, layers,
-      pinKeys(Incremental.mergedDocs(spark, root.snapshot.layers), stats.numSalts),
-      fastFor(spark, newest))
+    IndexReader(spark, paths, stats, root.snapshot.version, layers,
+      pinKeys(Incremental.mergedDocs(spark, root.snapshot.layers), stats.numSalts))
   }
 
   /** Pin a segments layer as one [[SegmentShard]] per salt, partition i
@@ -293,24 +250,32 @@ object IndexReader {
     }
   }
 
-  /** The NEWEST layer's fast sidecar. v7 invariant: every publish path
-    * writes (or rebuilds) the newest layer's sidecar at the CURRENT stats
-    * from every layer's lists — full build and compact through
-    * `IndexBuilder.buildFastSidecar`, incremental adds through the
-    * [[graft.index.Incremental.addBatch]] whole-sidecar re-rank (tfNorm
-    * ORDER is not avgdl-stable, so prefixes ranked at an older avgdl must
-    * never be served). Absent `_SUCCESS` (a pre-v7 or hand-assembled root)
-    * disables the fast route rather than serving a stale order.
+  /** The NEWEST layer's fast lists, read into a driver map by term. v7
+    * invariant: every publish path writes (or rebuilds) the newest layer's
+    * sidecar at the CURRENT stats from every layer's lists — full build and
+    * compact through `IndexBuilder.buildFastSidecar`, incremental adds
+    * through the [[graft.index.Incremental.addBatch]] whole-sidecar re-rank
+    * (tfNorm ORDER is not avgdl-stable, so prefixes ranked at an older
+    * avgdl must never be served). Absent `_SUCCESS` (a pre-v7 or
+    * hand-assembled root) disables the fast route rather than serving a
+    * stale order.
     */
-  private def fastFor(spark: SparkSession, newest: IndexPaths): Option[DataFrame] =
-    if (Files.exists(Paths.get(s"${newest.fastDir}/_SUCCESS")))
-      Some(spark.read.schema(IndexBuilder.FastSchema).parquet(newest.fastDir)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    else None
+  private def fastFor(spark: SparkSession, newest: IndexPaths): Map[String, FastList] =
+    if (!Files.exists(Paths.get(s"${newest.fastDir}/_SUCCESS"))) Map.empty
+    else {
+      import spark.implicits._
+      spark.read.schema(IndexBuilder.FastSchema).parquet(newest.fastDir)
+        .select("term", "df", "doc_ids", "tfs", "dls", "repos", "paths", "commits")
+        .as[(String, Long, Array[Long], Array[Int], Array[Long], Array[String], Array[String], Array[String])]
+        .collect()
+        .map { case (t, df, ids, tfs, dls, repos, paths, commits) =>
+          t -> FastList(df, ids, tfs, dls, repos, paths, commits)
+        }.toMap
+    }
 
   /** Drop cached readers for a root (used after rebuilds that invalidate it),
     * across all sessions: every pin (segment shards with their decoded
-    * blocks, key shards, fast sidecar) is released.
+    * blocks, key shards) is released.
     */
   def invalidate(root: String): Unit = {
     cache.keys.filter(_._2 == root).foreach { k =>
@@ -318,7 +283,6 @@ object IndexReader {
         if (!r.stopped) {
           r.layers.foreach(_.shards.unpersist(blocking = false))
           r.keys.unpersist(blocking = false)
-          r.fast.foreach(_.unpersist())
         }
       }
     }

@@ -34,6 +34,9 @@ final class SegmentShard private (
     */
   def indexOf(term: String): Int = Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
 
+  /** Every term of this shard with its sub-list's posting count. */
+  def entries: Iterator[(String, Long)] = terms.iterator.zip(counts.iterator)
+
   /** Posting count of the sub-list at position `i` (its segments `df`). */
   def count(i: Int): Long = counts(i)
 

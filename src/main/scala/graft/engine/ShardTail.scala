@@ -3,9 +3,11 @@ package graft.engine
 import graft.index.TermHash
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Arrays
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** The natural doc keys `(repo, path, commit)` of ONE salt shard, compact:
   * a sorted `doc_id` array plus every key field as UTF-8 bytes in one byte
@@ -119,14 +121,23 @@ object ShardTail {
     rows.sorted(order).take(k).toArray
   }
 
+  /** The result schema: the one `toDF` gives a Scala
+    * `(String, Int, String, String, String, Double)` tuple.
+    */
+  val ResultSchema: StructType = StructType(Seq(
+    StructField("query_id", StringType), StructField("rank", IntegerType, nullable = false),
+    StructField("repo", StringType), StructField("path", StringType), StructField("commit", StringType),
+    StructField("score_r", DoubleType, nullable = false)))
+
   /** Driver half: top k per query over the shard rows, ranks 1..k, plus the
     * already-final `fast` rows, as `(query_id, rank, repo, path, commit,
     * score_r)` sorted by (query_id, rank). Query ids compare as UTF-8 bytes
-    * too, the order a Spark sort on the column gives.
+    * too, the order a Spark sort on the column gives. The rows go into a
+    * local relation of the fixed [[ResultSchema]], so no request derives
+    * an encoder.
     */
   def finish(spark: SparkSession, rows: Seq[TailRow],
       fast: Seq[(String, Int, String, String, String, Double)]): DataFrame = {
-    import spark.implicits._
     def str(b: Array[Byte]) = new String(b, UTF_8)
     val ranked = rows.groupBy(_.queryId).map { case (q, rs) =>
       q -> rs.sorted(order).take(rs.head.k).zipWithIndex.map { case (r, i) =>
@@ -134,8 +145,9 @@ object ShardTail {
       }
     }
     val byQuery = ranked ++ fast.groupBy(_._1)
-    byQuery.keys.toSeq.sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
-      .flatMap(byQuery)
-      .toDF("query_id", "rank", "repo", "path", "commit", "score_r")
+    val out = byQuery.keys.toSeq
+      .sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+      .flatMap(byQuery).map(Row.fromTuple)
+    spark.createDataFrame(out.asJava, ResultSchema)
   }
 }

@@ -94,9 +94,11 @@ object Wand {
     * in one salt shard across layers and shard runs remain docId-disjoint.
     * Decoded postings are memoized in the shard that holds them
     * ([[SegmentShard.blocks]]), so a steady-state query stream decodes each
-    * hot sub-list once per pin, not per query. Per-term df comes from the
-    * reader's term-metadata cache — after warmup a request plans nothing
-    * but the shard job.
+    * hot sub-list once per pin, not per query. Per-term df and the fast
+    * lists are driver lookups in the reader ([[IndexReader.termMeta]],
+    * [[IndexReader.fastList]]), loaded at its first lookup: after that a
+    * fast or absent request runs no Spark job and any other runs only the
+    * shard job.
     */
   def topKAt(
       spark: SparkSession,
@@ -155,12 +157,6 @@ object Wand {
     val metaAll = reader.termMeta(querySet.flatMap(_.terms).distinct)
     def presentOf(q: Query): Seq[String] = q.terms.distinct.filter(metaAll.contains)
     val routed = mode == Routed && repoScope.isEmpty
-    // warm the fast-list cache for the whole batch in ONE probe (the
-    // per-term path pays one Spark job per cold term; termMeta above already
-    // settled dfs, so known-rare terms are skipped without any job)
-    if (routed)
-      reader.prefetchFastLists(
-        querySet.filter(_.k <= fastK).flatMap(_.terms).distinct.filter(metaAll.contains))
     def fastOf(q: Query): Seq[String] =
       if (routed && q.k <= fastK) presentOf(q).filter(t => reader.fastList(t).isDefined)
       else Nil
@@ -200,7 +196,7 @@ object Wand {
 
     val shardQs: Array[ShardQuery] = (hybridQs.map { q =>
       val hot = fastOf(q).head
-      ShardQuery(q.queryId, q.k, presentOf(q).toArray, hot, reader.fastList(hot).get.ids.sorted)
+      ShardQuery(q.queryId, q.k, presentOf(q).toArray, hot, reader.fastList(hot).get.sortedIds)
     } ++ shardWandQs.map(q => ShardQuery(q.queryId, q.k, presentOf(q).toArray, null, null))).toArray
     // only fast-single and/or all-terms-absent queries: answer from the
     // driver with ZERO Spark jobs (absent terms are the 404-with-null-results

@@ -4,6 +4,7 @@ import graft.engine.{IndexReader, NaiveSearch, QueryMetrics, Wand}
 import graft.index.{Incremental, IndexBuilder, IndexPaths, Postings}
 import graft.model.Query
 import graft.queries.QuerySet
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,9 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * evaluated every candidate with 0 skips). Pins: prefix existence +
   * boundary-tie capture, rank identity vs the naive oracle plan with the
   * fast route ENGAGED (candidate counter = prefix size, not df), and the
-  * fallbacks (rare term, absent term, k > FastK, scoped query). Also:
-  * concurrent routed, WAND and AND requests on one reader, racing on the
-  * segment shards' first decodes, answer exactly as sequential ones.
+  * fallbacks (rare term, absent term, k > FastK, scoped query, a sidecar
+  * without `_SUCCESS`). The fast lists and the term dictionary live on the
+  * driver: after a reader's first lookup, fast and absent requests run no
+  * job. Also: concurrent routed, WAND and AND requests on one reader,
+  * racing on the segment shards' first decodes or on a fresh reader's
+  * first load, answer exactly as sequential ones.
   */
 class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -130,31 +134,56 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("batched prefetch settles the fast-list cache: per-term probes run zero jobs after it") {
-    // a cold batch with T distinct hot terms must pay ONE probe job, not T:
-    // prefetchFastLists covers all missing terms in one bucket-pruned scan,
-    // and termMeta-known-rare terms are cached as absent without any job
+  test("fast lists are driver-resident: fastList runs no job after the first lookup") {
     IndexReader.invalidate(paths.root)
     val reader = IndexReader.get(spark, paths)
-    val terms = Seq("func", "handler_0_3", "zzznotfound")
-    reader.termMeta(terms) // settle dfs (separate one-time jobs)
-    reader.prefetchFastLists(terms)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      assert(reader.fastList("func").isDefined)
-      assert(reader.fastList("handler_0_3").isEmpty)
-      assert(reader.fastList("zzznotfound").isEmpty)
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-      assert(jobs.get === 0,
-        s"fastList after prefetch scheduled ${jobs.get} jobs; the batch probe must cover all terms")
-    } finally spark.sparkContext.removeSparkListener(l)
+    reader.termMeta(Seq("func")) // the first lookup loads the fast lists too
+    val (found, jobs, _, _) = SparkWork(spark)(
+      Seq("func", "handler_0_3", "zzznotfound").map(reader.fastList(_).isDefined))
+    assert(found === Seq(true, false, false), "hot, rare, absent")
+    assert(jobs === 0, s"fastList after the first lookup scheduled $jobs jobs")
+  }
+
+  test("a sidecar without _SUCCESS turns the fast route off: the shard job answers every query") {
+    val intact = Wand.topKAt(spark, paths, QuerySet.all).collect().toSeq
+    val copy = "target/graft-index/test-fast-no-success"
+    Bench.deleteTree(copy)
+    FileTrees.copy(paths.root, copy)
+    val copied = IndexPaths(copy)
+    Files.delete(Paths.get(s"${copied.fastDir}/_SUCCESS"))
+    val reader = IndexReader.get(spark, copied)
+    assert(reader.fastList("func").isEmpty, "a sidecar without _SUCCESS was served")
+    val m = QueryMetrics(spark)
+    val got = Wand.topKAt(spark, copied, QuerySet.all, Some(m)).collect().toSeq
+    assert(m.routedFast.value === 0L && m.routedHybrid.value === 0L, s"routes: ${m.snapshot}")
+    assert(got === intact, "the shard job answered differently from the fast route")
+    IndexReader.invalidate(copy)
+  }
+
+  test("a fresh layered reader after its first request: fast and absent run no job, a cold identifier one") {
+    IndexReader.invalidate(layered.root)
+    val reader = IndexReader.get(spark, layered)
+    assert(reader.layers.size === 2)
+    Wand.topKAt(spark, layered, Seq(Query("first", Seq("buffer"), 10))).collect()
+    // terms of the base layer only, the delta layer only, and both
+    def termsOf(l: graft.engine.IndexLayer) = l.shards.flatMap(_.entries.map(_._1)).distinct().collect().toSet
+    val Seq(base, delta) = reader.layers.map(termsOf)
+    val (baseOnly, deltaOnly, both) = ((base -- delta).min, (delta -- base).min, (base & delta).min)
+
+    val m = QueryMetrics(spark)
+    val (rows, jobs, _, sql) = SparkWork(spark)(Wand.topKAt(spark, layered, Seq(
+      Query("fast", Seq("func"), 10), Query("absent", Seq("zzznotfound"), 10)), Some(m)).collect())
+    assert(m.routedFast.value === 1L && m.routedAbsent.value === 1L, s"routes: ${m.snapshot}")
+    assert(rows.length === 10)
+    assert(jobs === 0 && sql === 0, s"fast + absent batch ran $jobs jobs, $sql SQL")
+
+    val (meta, metaJobs, _, _) = SparkWork(spark)(reader.termMeta(Seq(baseOnly, deltaOnly, both, "zzznotfound")))
+    assert(meta.keySet === Set(baseOnly, deltaOnly, both))
+    assert(metaJobs === 0, s"termMeta ran $metaJobs jobs")
+
+    val (_, coldJobs, _, _) = SparkWork(spark)(
+      Wand.topKAt(spark, layered, Seq(Query("cold", Seq(deltaOnly), 10))).collect())
+    assert(coldJobs === 1, s"a cold identifier ran $coldJobs jobs")
   }
 
   test("serving path (fast + WAND mix) is rank-identical to the naive oracle plan") {
@@ -261,15 +290,18 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
       val index = spark.read.schema(IndexBuilder.IndexSchema).parquet(l.paths.indexDir)
       assert(!cached(index), s"layer $li: index/ relation is pinned")
     }
-    // the reader's one cached relation is its fast sidecar
+    // the reader caches no relation: its fast lists live on the driver
     val entries = org.apache.spark.sql.GraftCacheBridge.cachedEntries(spark)
-    assert(reader.fast.isDefined)
     IndexReader.invalidate(layered.root)
-    assert(entries - org.apache.spark.sql.GraftCacheBridge.cachedEntries(spark) === 1,
-      "the layered reader cached more than its fast sidecar")
+    assert(entries - org.apache.spark.sql.GraftCacheBridge.cachedEntries(spark) === 0,
+      "the layered reader cached a relation")
   }
 
-  test("8 concurrent request threads on one reader answer as sequential requests do") {
+  /** Runs 8 request threads × 3 rounds of (WAND, hybrid, AND) batches on
+    * a fresh reader, warmed first by `warm`, and checks every answer against
+    * the sequential one. Returns the Spark jobs and SQL jobs the threads ran.
+    */
+  private def race(warm: IndexReader => Unit): (Int, Int) = {
     val hybrid = Seq(Query("hyb", Seq("func", "handler_0_3"), 10))
     def batches(): Seq[Array[Row]] = Seq(
       Wand.topKAt(spark, paths, QuerySet.all, mode = Wand.WandOnly).collect(),
@@ -280,13 +312,8 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.routedHybrid.value === 1L, s"fixture: not routed hybrid: ${m.snapshot}")
     val want = batches()
     assert(want.forall(_.nonEmpty))
-    // a fresh reader with its term metadata and fast lists warm but no
-    // block decoded yet, so the threads race on the shards' first decodes
     IndexReader.invalidate(paths.root)
-    val reader = IndexReader.get(spark, paths)
-    val terms = (QuerySet.all ++ QuerySet.conjunctive ++ hybrid).flatMap(_.terms).distinct
-    reader.termMeta(terms)
-    reader.prefetchFastLists(terms)
+    warm(IndexReader.get(spark, paths))
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = (0 until 8).map { _ =>
       new Thread(() => {
@@ -295,8 +322,23 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
         } catch { case t: Throwable => errors.add(t) }
       })
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
+    val (_, jobs, _, sql) = SparkWork(spark) { threads.foreach(_.start()); threads.foreach(_.join()) }
     assert(errors.isEmpty, s"a concurrent request diverged: ${Option(errors.peek()).map(_.toString)}")
+    (jobs, sql)
+  }
+
+  test("8 concurrent request threads on one reader answer as sequential requests do") {
+    // term metadata and fast lists warm but no block decoded yet, so the
+    // threads race on the shards' first decodes
+    race(_.prefetchFastLists(Nil))
+  }
+
+  test("8 concurrent first requests on a fresh reader load the dictionary and fast lists once") {
+    val (jobs, sql) = race(_ => ())
+    // every batch runs one shard job; beside them, one dictionary job and
+    // one sidecar read (the only SQL job)
+    assert(sql === 1, s"the fast sidecar was read by $sql SQL jobs")
+    assert(jobs - sql === 1 + 8 * 3 * 3, s"$jobs jobs: the dictionary was not loaded exactly once")
   }
 
   test("k > FastK falls back to the exact path (and still matches naive)") {

@@ -217,6 +217,8 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(reader.layers.size === 3)
     assert(reader.layers(0).boundScale > 1.0 && reader.layers(1).boundScale > 1.0)
     val meta = reader.termMeta(Seq("uno", "due", "tre"))
+    // one dictionary entry per distinct term of the three layers' union
+    assert(reader.termDict.size === corpusDf(corpusOf(base ++ add1 ++ add2)).size)
     assert(Seq("uno", "due", "tre").map(t => reader.layers.map(layerDf(_, t))) ===
       Seq(Seq(10L, 0L, 0L), Seq(10L, 5L, 0L), Seq(10L, 0L, 5L)))
     // df summed over every layer's salt rows == a full build's df, and the
@@ -245,29 +247,59 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(Wand.topKAt(spark, p2, tri, mode = Wand.Exhaustive)) === naive)
   }
 
-  test("cold termMeta runs one job over every layer's shards, and no SQL") {
+  /** A 2-layer root over [[baseDocs]] then [[deltaDocs]]. Built once, on
+    * first use.
+    */
+  private lazy val twoLayers: IndexPaths = {
     val basePaths = IndexPaths(s"$root/jobs-base")
     val outPaths = IndexPaths(s"$root/jobs-out")
     IndexBuilder.build(spark, corpusOf(baseDocs), basePaths, buildArgs = "layered-spec-jobs")
     Incremental.addBatch(spark, basePaths, corpusOf(baseDocs ++ deltaDocs), outPaths)
-    val reader = IndexReader.get(spark, outPaths)
+    outPaths
+  }
+
+  /** Brute-force df of every term of `corpus`, counted over its rows. */
+  private def corpusDf(corpus: DataFrame): Map[String, Long] =
+    graft.tokenize.Tokenizer.termFreqs(graft.corpus.Corpus.withDocId(corpus)).groupBy("term").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("after a reader's first lookup, termMeta runs no job for any term") {
+    IndexReader.invalidate(twoLayers.root)
+    val reader = IndexReader.get(spark, twoLayers)
     assert(reader.layers.size === 2)
-    reader.termMeta(Seq("common")) // builds the pins
-    // gamma3 is delta-only and alpha7 base-only: one job each
-    val (deltaOnly, deltaJobs, _, deltaSql) = SparkWork(spark)(reader.termMeta(Seq("gamma3")))
+    reader.termMeta(Seq("common")) // the first lookup loads the dictionary
+    // gamma3 is delta-only and alpha7 base-only
+    val (deltaOnly, deltaJobs, _, _) = SparkWork(spark)(reader.termMeta(Seq("gamma3")))
     assert(deltaOnly === Map("gamma3" -> 1L))
-    assert(deltaJobs === 1, s"a delta-only term ran $deltaJobs jobs")
-    val (baseOnly, baseJobs, _, baseSql) = SparkWork(spark)(reader.termMeta(Seq("alpha7")))
+    assert(deltaJobs === 0, s"a delta-only term ran $deltaJobs jobs")
+    val (baseOnly, baseJobs, _, _) = SparkWork(spark)(reader.termMeta(Seq("alpha7")))
     assert(baseOnly === Map("alpha7" -> 1L))
-    assert(baseJobs === 1, s"a base-only term ran $baseJobs jobs")
+    assert(baseJobs === 0, s"a base-only term ran $baseJobs jobs")
     // mix has lists in both layers (10 base + 4 delta docs), nosuch none
-    val (both, bothJobs, _, bothSql) = SparkWork(spark)(reader.termMeta(Seq("mix", "gamma5", "nosuch")))
+    val (both, bothJobs, _, _) = SparkWork(spark)(reader.termMeta(Seq("mix", "gamma5", "nosuch")))
     assert(both === Map("mix" -> 14L, "gamma5" -> 1L))
-    assert(bothJobs === 1, s"a batch of terms ran $bothJobs jobs")
-    assert(deltaSql + baseSql + bothSql === 0, "a termMeta lookup ran a SQL execution")
-    // warm: no job at all
-    assert(SparkWork(spark)(reader.termMeta(Seq("gamma3", "alpha7", "mix", "nosuch")))._2 === 0)
-    IndexReader.invalidate(outPaths.root)
+    assert(bothJobs === 0, s"a batch of terms ran $bothJobs jobs")
+    IndexReader.invalidate(twoLayers.root)
+  }
+
+  test("the dictionary is exact on a layered root: termMeta == brute-force corpus df") {
+    val reader = IndexReader.get(spark, twoLayers)
+    val want = corpusDf(corpusOf(baseDocs ++ deltaDocs))
+    // which salts hold each term's postings, over both layers
+    val salts = reader.shards.flatMap(sh => sh.entries.map(_._1 -> sh.salt)).collect()
+      .groupMapReduce(_._1)(e => Set(e._2))(_ ++ _)
+    // the most frequent term whose postings all sit in one salt
+    val singleSalt = want.keys.filter(salts(_).size == 1).toSeq.sortBy(t => (-want(t), t))
+    assert(singleSalt.nonEmpty, "fixture: some term sits in one salt")
+    assert(reader.layers.map(layerDf(_, "basetail")) === Seq(14L, 0L), "fixture: base-only")
+    assert(reader.layers.map(layerDf(_, "deltaword")) === Seq(0L, 10L), "fixture: delta-only")
+    assert(reader.layers.map(layerDf(_, "mix")) === Seq(10L, 4L), "fixture: in both layers")
+    val probes = Seq("basetail", "deltaword", "mix", singleSalt.head)
+    assert(reader.termMeta(probes :+ "nosuch") === probes.map(t => t -> want(t)).toMap)
+    // and every term of the corpus, with nothing else in the dictionary
+    assert(reader.termMeta(want.keys.toSeq) === want)
+    assert(reader.termDict.size === want.size)
+    IndexReader.invalidate(twoLayers.root)
   }
 
   test("addBatchCompacting bounds the layer count and keeps query identity") {
@@ -319,16 +351,6 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     IndexReader.invalidate(op.root)
   }
 
-  private def copyTree(from: String, to: String): Unit = {
-    val src = Paths.get(from)
-    scala.util.Using.resource(Files.walk(src)) { s =>
-      s.iterator().asScala.foreach { p =>
-        val t = Paths.get(to).resolve(src.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
-      }
-    }
-  }
-
   test("snapshot metadata stores relative layer roots: equal sizes under two root paths, a copied tree serves") {
     def buildAt(dir: String): Unit = {
       IndexBuilder.build(spark, corpusOf(baseDocs), IndexPaths(s"$dir/base"), buildArgs = "layered-spec-rel")
@@ -352,7 +374,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // move the tree: the copy resolves its own layers and serves
     val copy = s"$root/rel-copy"
-    copyTree(short, copy)
+    FileTrees.copy(short, copy)
     Bench.deleteTree(short)
     val out = IndexPaths(s"$copy/out")
     assert(Snapshots.read(out.root).get.layers === Seq(IndexPaths(s"$copy/base"), out))

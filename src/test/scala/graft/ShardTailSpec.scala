@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{IndexReader, NaiveSearch, QueryMetrics, Wand}
+import graft.engine.{IndexReader, NaiveSearch, QueryMetrics, ShardTail, Wand}
 import graft.index.{Incremental, IndexBuilder, IndexPaths}
 import graft.model.Query
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -102,6 +102,19 @@ class ShardTailSpec extends AnyFunSuite with BeforeAndAfterAll {
     val naive = rows(NaiveSearch.topK(spark, corpusOf(tieRows), queriesDf(Seq(q))))
     assert(served === naive)
     assert(served.map(_._4) === tieRows.map(_._1).take(3))
+  }
+
+  test("the result schema is the one toDF gives the result tuple") {
+    val s = spark
+    import s.implicits._
+    val tupleSchema = Seq.empty[(String, Int, String, String, String, Double)]
+      .toDF("query_id", "rank", "repo", "path", "commit", "score_r").schema
+    assert(ShardTail.ResultSchema === tupleSchema)
+    val paths = build("schema", Seq("a.go" -> "hot rare", "b.go" -> "hot"))
+    val served = Wand.topKAt(spark, paths, Seq(Query("s", Seq("hot", "rare"), 5)))
+    assert(served.schema === tupleSchema)
+    assert(rows(served).map(_._4) === Seq("a.go", "b.go"))
+    IndexReader.invalidate(paths.root)
   }
 
   test("invalidate releases every pin, key shards included (1 and 2 layers)") {
