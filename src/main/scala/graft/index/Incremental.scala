@@ -30,6 +30,11 @@ import org.apache.spark.sql.functions._
   * Every entry point opens its source through [[Snapshots.open]], so only
   * a published root can be added to, compacted or read merged.
   *
+  * An add's phases, tagged `add`: `stats` (one aggregate over the pinned
+  * fresh docs), then, unless the batch is a replay, the build's posting
+  * phases over the fresh docs' unpinned tf rows, `docs-write`,
+  * `edges-write` and `fast-lists`.
+  *
   * Stats semantics: nDocs/avgdl count TOKEN-BEARING docs only, matching
   * [[IndexBuilder]] (zero-token docs get a lineage row with dl=0 but no
   * postings — P7). The add's lists are encoded at the NEW avgdl, so their
@@ -72,93 +77,87 @@ object Incremental {
     val fresh = incoming.join(existingIds, Seq("doc_id"), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val tf = Tokenizer.termFreqsWithDl(fresh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // new global stats from the base stats plus the fresh docs alone: both
+      // count TOKEN-BEARING docs only (the docs sidecar's dl=0 lineage rows
+      // never count — DeadDocSpec), and avgdl = T / N is exactly the
+      // build's avg over integer dls
+      val (freshDocs, freshTokens, fp) = phase("stats")(summarize(fresh))
+      val nDocs = baseStats.nDocs + freshDocs
+      val totalTokens = baseStats.totalTokens + freshTokens
+      val newStats = IndexStats(IndexBuilder.FormatVersion, nDocs, totalTokens.toDouble / nDocs,
+        totalTokens, baseStats.numSalts, baseStats.numBuckets)
 
-    // new global stats from the base stats plus the fresh docs alone: both
-    // count TOKEN-BEARING docs only (a fresh doc without tokens has no tf
-    // row; the docs sidecar's dl=0 lineage rows never count — DeadDocSpec),
-    // and avgdl = T / N is exactly the build's avg over integer dls
-    val sRow = phase("stats")(tf.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head())
-    val nDocs = baseStats.nDocs + sRow.getLong(0)
-    val totalTokens = baseStats.totalTokens + sRow.getLong(1)
-    val newStats = IndexStats(IndexBuilder.FormatVersion, nDocs, totalTokens.toDouble / nDocs,
-      totalTokens, baseStats.numSalts, baseStats.numBuckets)
+      // Replay no-op: when the out root already publishes this exact (base
+      // layers, stats, fresh-set fingerprint) triple with every delta
+      // artifact, the rewrite would reproduce the same content, so only the
+      // snapshot/stats publish runs. Stats alone are not enough: two
+      // batches can collide on (nDocs, avgdl, totalTokens).
+      val publishArgs = s"incremental over ${Snapshots.relativize(outPaths.root, basePaths.root)} fp=$fp"
+      // In-flight marker: a crashed rewrite of a DIFFERENT batch leaves
+      // artifacts that no longer match the published stats (the _SUCCESS
+      // checks see presence, not correspondence). It is written before the
+      // first rewrite phase and removed after the publish, so the no-op is
+      // never taken over an interrupted rewrite.
+      val inflightMarker = java.nio.file.Paths.get(s"${outPaths.root}/add-inflight.json")
+      val replayNoOp = !java.nio.file.Files.exists(inflightMarker) &&
+        Snapshots.read(outPaths.root).exists(_.layers == layers) &&
+        IndexBuilder.readStats(outPaths).contains(newStats) &&
+        IndexBuilder.readJsonString(
+          java.nio.file.Paths.get(outPaths.statsPath), "build_args").contains(publishArgs) &&
+        Seq(outPaths.indexDir, outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir, outPaths.fastDir)
+          .forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/_SUCCESS")))
+      if (replayNoOp)
+        System.err.println(s"[add] replay no-op: ${outPaths.root} already carries this batch ($publishArgs)")
+      else {
+        java.nio.file.Files.createDirectories(inflightMarker.getParent)
+        java.nio.file.Files.writeString(inflightMarker, "in-flight: " + publishArgs)
+        addBatchRewrite(spark, base, basePaths, outPaths, fresh, newStats, publishArgs)
+      }
 
-    // Replay no-op detection (r6, VERDICT r5 #8): an addBatch is a pure
-    // replay iff the published snapshot at the out root already records this
-    // exact (base layers, resulting stats, fresh-set fingerprint) triple and
-    // every delta artifact is published — then every phase below rewrites
-    // byte-equivalent content (all derivations are deterministic in the
-    // fresh set + base), so the whole rewrite is skipped and only the
-    // snapshot/stats publish runs (same end state, version bumped exactly as
-    // before). The fingerprint ([[fingerprint]]) is order-independent and
-    // stored in the stats build_args at publish time;
-    // stats alone are NOT sufficient (two different batches could collide on
-    // (nDocs, avgdl, totalTokens)). `index_incremental`'s replay=true entry
-    // — the J1 idempotency exercise Verify pays every run — goes from a full
-    // delta rewrite to anti-join + stats + fingerprint.
-    val publishArgs = s"incremental over ${Snapshots.relativize(outPaths.root, basePaths.root)} fp=${fingerprint(fresh)}"
-    // In-flight rewrite marker: an addBatch of a DIFFERENT batch that
-    // crashed mid-rewrite leaves artifacts (e.g. an overwritten delta
-    // index) that no longer correspond to the still-published stats and
-    // snapshot — the _SUCCESS checks below validate artifact PRESENCE, not
-    // correspondence. The marker is written before the first rewrite phase
-    // and removed only after the snapshot publish, so the no-op is taken
-    // only when no rewrite was interrupted in between (the full rewrite is
-    // the self-healing path).
-    val inflightMarker = java.nio.file.Paths.get(s"${outPaths.root}/add-inflight.json")
-    val replayNoOp = !java.nio.file.Files.exists(inflightMarker) &&
-      Snapshots.read(outPaths.root).exists(_.layers == layers) &&
-      IndexBuilder.readStats(outPaths).contains(newStats) &&
-      IndexBuilder.readJsonString(
-        java.nio.file.Paths.get(outPaths.statsPath), "build_args").contains(publishArgs) &&
-      Seq(outPaths.indexDir, outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir, outPaths.fastDir)
-        .forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/_SUCCESS")))
-    if (replayNoOp)
-      System.err.println(s"[add] replay no-op: ${outPaths.root} already carries this batch ($publishArgs)")
-    else {
-      java.nio.file.Files.createDirectories(inflightMarker.getParent)
-      java.nio.file.Files.writeString(inflightMarker, "in-flight: " + publishArgs)
-      addBatchRewrite(spark, base, basePaths, outPaths, fresh, tf, newStats, publishArgs)
-    }
-    fresh.unpersist(); tf.unpersist()
-
-    // persist stats + the layered snapshot: the merged table is openable
-    // from outPaths alone.
-    IndexBuilder.writeStatsJson(outPaths.statsPath, newStats, publishArgs)
-    // version = strictly AFTER both the base chain and anything already
-    // published at the out root: republishing (e.g. replaying an add onto a
-    // root that was since compacted) must never move the hint BACKWARDS to
-    // an older view
-    val outVersion = math.max(base.snapshot.version,
-      Snapshots.currentVersion(outPaths.root).getOrElse(0)) + 1
-    Snapshots.write(outPaths.root, Snapshot(outVersion, layers, Some(basePaths.root)))
-    // a new snapshot invalidates any resident reader on this root
-    graft.engine.IndexReader.invalidate(outPaths.root)
-    // rewrite (if any) and publish both landed — clear the in-flight marker
-    java.nio.file.Files.deleteIfExists(inflightMarker)
-    newStats
+      // persist stats + the layered snapshot: the merged table is openable
+      // from outPaths alone.
+      IndexBuilder.writeStatsJson(outPaths.statsPath, newStats, publishArgs)
+      // version = strictly AFTER both the base chain and anything already
+      // published at the out root: republishing (e.g. replaying an add onto a
+      // root that was since compacted) must never move the hint BACKWARDS to
+      // an older view
+      val outVersion = math.max(base.snapshot.version,
+        Snapshots.currentVersion(outPaths.root).getOrElse(0)) + 1
+      Snapshots.write(outPaths.root, Snapshot(outVersion, layers, Some(basePaths.root)))
+      // a new snapshot invalidates any resident reader on this root
+      graft.engine.IndexReader.invalidate(outPaths.root)
+      // rewrite (if any) and publish both landed — clear the in-flight marker
+      java.nio.file.Files.deleteIfExists(inflightMarker)
+      newStats
+    } finally fresh.unpersist()
   }
 
-  /** Order-independent fingerprint of a batch's corpus rows: the count,
-    * the XOR and the exact (decimal) SUM of a row hash. XOR alone cancels
-    * equal pairs, so {A, A, B} and {C, C, B} would collide; the sum does
-    * not. The row hash takes each field as its own column plus a NULL flag:
-    * joining the fields into one string aliases rows whose values shift
-    * across a separator inside a value, or across a NULL field (which
-    * `concat_ws` skips).
+  /** A batch's token-bearing doc count and token sum, and its fingerprint,
+    * in one aggregate over its rows.
+    *
+    * The fingerprint is order-independent: the count, the XOR and the exact
+    * (decimal) SUM of a row hash. XOR alone cancels equal pairs, so
+    * {A, A, B} and {C, C, B} would collide; the sum does not. The row hash
+    * takes each field as its own column plus a NULL flag: joining the
+    * fields into one string aliases rows whose values shift across a
+    * separator inside a value, or across a NULL field (which `concat_ws`
+    * skips).
     */
-  private[graft] def fingerprint(rows: DataFrame): String = {
+  private def summarize(rows: DataFrame): (Long, Long, String) = {
     val fields = Seq("repo", "path", "commit", "lang", "content").map(col)
     val h = xxhash64(fields.map(coalesce(_, lit(""))) ++ fields.map(_.isNull): _*)
-    val r = rows.select(h.as("h"))
-      .agg(count(lit(1)), expr("bit_xor(h)"), sum(col("h").cast("decimal(20,0)"))).head()
-    val xor = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val total = if (r.isNullAt(2)) "0" else r.getDecimal(2).toPlainString
-    s"${r.getLong(0)}:$xor:$total"
+    val r = rows.select(Tokenizer.tokenCountCol(col("content")).as("dl"), h.as("h"))
+      .agg(count(when(col("dl") > 0, 1)), coalesce(sum("dl"), lit(0L)),
+        count(lit(1)), bit_xor(col("h")), sum(col("h").cast("decimal(20,0)")))
+      .head()
+    val xor = if (r.isNullAt(3)) 0L else r.getLong(3)
+    val total = if (r.isNullAt(4)) "0" else r.getDecimal(4).toPlainString
+    (r.getLong(0), r.getLong(1), s"${r.getLong(2)}:$xor:$total")
   }
+
+  /** [[summarize]]'s fingerprint of a batch's corpus rows. */
+  private[graft] def fingerprint(rows: DataFrame): String = summarize(rows)._3
 
   /** The rewrite half of [[addBatch]] — the fresh docs' postings, docs
     * and edges, and the fast-sidecar re-rank. Skipped entirely on a
@@ -170,7 +169,6 @@ object Incremental {
       basePaths: IndexPaths,
       outPaths: IndexPaths,
       fresh: DataFrame,
-      tf: DataFrame,
       newStats: IndexStats,
       buildArgs: String): Unit = {
     def phase[A](name: String)(f: => A): A = IndexBuilder.phase(name, tag = "add")(f)
@@ -178,64 +176,48 @@ object Incremental {
     // posting phases: salted segments, manifests and the layer's index. A
     // batch written here before (a replaced batch) is cleared first, so
     // every salt is rebuilt; the live fast sidecar is left to the staged
-    // swap below.
+    // swap below. As in the build, the tf relation is not persisted: the
+    // segments phase is its one consumer.
     Seq(outPaths.segmentsDir, outPaths.manifestsDir, outPaths.indexDir)
       .foreach(d => IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d)))
-    IndexBuilder.buildPostingsPhases(spark, tf, newStats, outPaths, buildArgs)
+    IndexBuilder.buildPostingsPhases(spark, Tokenizer.termFreqsWithDl(fresh), newStats, outPaths,
+      buildArgs, tag = "add")
 
-    // docs delta: fresh docs ONLY (base sidecar is referenced, not copied).
-    // LEFT join: zero-token fresh docs keep their dl=0 lineage row — same
-    // invariant as IndexBuilder's sidecar write (P7). batch_id stamps the
-    // layer's ingest lineage (per-doc provenance, the reference's StartUrl
-    // analog page.go:83) — deterministic per (base, out) pair, so a
-    // replayed batch reproduces the identical sidecar, and, like the stats'
-    // build_args, free of where the tree lives.
+    // docs delta: fresh docs ONLY (base sidecar is referenced, not copied),
+    // through the build's own one-pass docs rows, so zero-token fresh docs
+    // keep their dl=0 lineage row (P7). batch_id stamps the layer's ingest
+    // lineage (per-doc provenance, the reference's StartUrl analog
+    // page.go:83) — deterministic per (base, out) pair, so a replayed batch
+    // reproduces the identical sidecar, and, like the stats' build_args,
+    // free of where the tree lives.
     val batchId = s"add:${Snapshots.relativize(outPaths.root, basePaths.root)}->" +
       java.nio.file.Paths.get(outPaths.root).getFileName
-    val dl = tf.select(col("doc_id"), col("dl")).distinct()
-    phase("docs-write")(fresh.join(dl, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("repo"), col("path"), col("commit"), col("lang"),
-        coalesce(col("dl"), lit(0L)).as("dl"), sha2(col("content"), 256).as("content_sha"),
-        lit(batchId).as("batch_id"),
-        LinkIndex.custCol(col("content")).as("cust"))
+    phase("docs-write")(IndexBuilder.docsRows(fresh, batchId)
       .write.mode("overwrite").parquet(outPaths.docsDir))
 
     // Stored link graph, delta layer (v7): fresh docs' edges + re-derived
-    // edges for existing docs whose target's canonical provider this batch
-    // changed — readers resolve newest-wins per src_id. A batch that adds
-    // nothing writes a valid EMPTY layer (schema-pinned read).
-    phase("edges-write") {
-      val baseNodes = LinkIndex.nodesOf(mergedDocs(spark, base.snapshot.layers))
-      val freshNodes = LinkIndex.nodesOf(
-        spark.read.schema(IndexBuilder.DocsSchema).parquet(outPaths.docsDir))
-      LinkIndex.writeEdges(spark,
-        LinkIndex.deltaEdges(baseNodes, freshNodes), outPaths.edgesDir)
-    }
+    // edges for existing docs whose target module's canon set this batch
+    // changed ([[LinkIndex.deltaEdges]]) — readers resolve newest-wins per
+    // src_id. A batch that adds nothing writes a valid EMPTY layer
+    // (schema-pinned read).
+    phase("edges-write")(LinkIndex.writeEdges(spark, LinkIndex.deltaEdges(
+      LinkIndex.nodesOf(mergedDocs(spark, base.snapshot.layers)),
+      LinkIndex.nodesOf(spark.read.schema(IndexBuilder.DocsSchema).parquet(outPaths.docsDir))),
+      outPaths.edgesDir))
 
-    // v7: rebuild the impact-ordered fast sidecar for the LAYERED root at
-    // the NEW avgdl, from every layer's lists — whole-sidecar, not
-    // delta-touched-terms-only, because tfNorm ORDER is not avgdl-stable:
-    // every hot term's prefix ranking moves when avgdl moves, not just the
-    // terms this batch touched. Hot terms are few by definition (df ≥
-    // FastMinDf), so the re-rank is the same small decode+TopK pass the
-    // full build pays. Without this, hot single-term queries between an
-    // addBatch and the next compact fell back to full WAND at O(df≈N)
-    // with no block skips.
-    //
-    // Staged swap, NOT an in-place rebuild: on a non-no-op replay (same
-    // batch path, changed content) the live snapshot's newest layer
-    // references THIS fastDir, so deleting it for the duration of the
-    // rebuild would leave the published root without its sidecar for the
-    // whole decode+TopK pass (and a crash inside would make that permanent
-    // until the next publish). Build beside it, then two renames: the
-    // no-sidecar window shrinks to the rename itself, and a crash inside
-    // that window degrades to the fast-route-off fallback ([[graft.engine.IndexReader]]
-    // fastFor: no _SUCCESS → WAND route — never a stale order), self-healed
-    // by the next add/compact.
+    // Re-rank the fast sidecar for the LAYERED root at the NEW avgdl, from
+    // every layer's lists: tfNorm ORDER is not avgdl-stable, so every hot
+    // term's prefix moves, not just the terms this batch touched (hot terms
+    // are few: df ≥ FastMinDf). Staged swap, not an in-place rebuild: the
+    // live snapshot may reference THIS fastDir (a replaced batch), so the
+    // new sidecar is built beside it and renamed in; a crash in the rename
+    // window turns the fast route off ([[graft.engine.IndexReader]]: no
+    // _SUCCESS → WAND, never a stale order) until the next add or compact.
     val fastFinal = java.nio.file.Paths.get(outPaths.fastDir)
     val fastStage = java.nio.file.Paths.get(outPaths.fastDir + ".next")
     IndexBuilder.deleteRecursively(fastStage)
-    IndexBuilder.buildFastSidecar(spark, base.layers :+ (outPaths -> newStats), newStats, fastStage.toString)
+    IndexBuilder.buildFastSidecar(spark, base.layers :+ (outPaths -> newStats), newStats, fastStage.toString,
+      tag = "add")
     IndexBuilder.deleteRecursively(fastFinal)
     java.nio.file.Files.move(fastStage, fastFinal,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -313,8 +295,9 @@ object Incremental {
         Iterator.range(0, ids.length).map(i => (ids(i), term, tfs(i).toLong, ls(i)))
       }
       .toDF("doc_id", "term", "tf", "dl")
-    IndexBuilder.buildPostingsPhases(spark, tfd, stats, inner, s"compact v$publishVersion of $root")
-    IndexBuilder.buildFastSidecar(spark, Seq(inner -> stats), stats, inner.fastDir)
+    IndexBuilder.buildPostingsPhases(spark, tfd, stats, inner, s"compact v$publishVersion of $root",
+      tag = "compact")
+    IndexBuilder.buildFastSidecar(spark, Seq(inner -> stats), stats, inner.fastDir, tag = "compact")
 
     // record the SOURCE's identity (its build_args carries the batch
     // fingerprint for incremental roots) so fixture-reuse guards can check

@@ -351,25 +351,8 @@ object IndexBuilder {
     // (TokenizerSpec pins split-semantics equality of the two paths).
     val c0 = Corpus.withDocId(corpus)
     val c = if (persistCorpus) c0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else c0
-    // token COUNT via the single-scan expression — size(tokensCol) built and
-    // discarded a full token array per doc just to count it (~13 s of the
-    // sf0.1 docs-sidecar phase; TokenizerSpec pins count equality)
-    val dlCol = Tokenizer.tokenCountCol(col("content")).cast("long")
-
-    // Docs sidecar: natural keys, doc length, the sha256 per-row invariant
-    // captured at index time (BASELINE.json input_hint), and the
-    // content-derived link attribute (v7) — extracted in the SAME pass that
-    // already reads every byte of content for the sha, like the reference
-    // parsing links out of the page it just fetched (pkg/crawl/crawl.go:148-166).
-    // Zero-token docs still get a docId + lineage row with dl=0 but
-    // contribute no postings — the analog of the reference persisting
-    // 404 nodes without descending them (pkg/crawl/crawl.go:109-118, P7).
     if (!Files.exists(Paths.get(s"${paths.docsDir}/_SUCCESS"))) phase("docs-sidecar") {
-      c.select(col("doc_id"), col("repo"), col("path"), col("commit"), col("lang"),
-          dlCol.as("dl"), sha2(col("content"), 256).as("content_sha"),
-          lit(s"build:$buildArgs").as("batch_id"),
-          LinkIndex.custCol(col("content")).as("cust"))
-        .write.mode("overwrite").parquet(paths.docsDir)
+      docsRows(c, s"build:$buildArgs").write.mode("overwrite").parquet(paths.docsDir)
     }
     val docsSidecar = spark.read.schema(DocsSchema).parquet(paths.docsDir)
 
@@ -401,9 +384,9 @@ object IndexBuilder {
     // A rebuilt merge invalidates the fast lists ranked from it.
     if (completedSalts(paths).size < numSalts || !Files.exists(Paths.get(s"${paths.indexDir}/_SUCCESS")))
       deleteRecursively(Paths.get(paths.fastDir))
-    buildPostingsPhases(spark, Tokenizer.termFreqsWithDl(c), stats, paths, buildArgs)
+    buildPostingsPhases(spark, Tokenizer.termFreqsWithDl(c), stats, paths, buildArgs, tag = "build")
     if (!Files.exists(Paths.get(s"${paths.fastDir}/_SUCCESS")))
-      buildFastSidecar(spark, Seq(paths -> stats), stats, paths.fastDir)
+      buildFastSidecar(spark, Seq(paths -> stats), stats, paths.fastDir, tag = "build")
 
     if (persistCorpus) c.unpersist()
     // a (re)build invalidates any resident reader on this root
@@ -416,20 +399,40 @@ object IndexBuilder {
     stats
   }
 
+  /** The docs-sidecar rows of a `doc_id`-keyed corpus, written by the full
+    * build and by an add (its fresh docs): natural keys, doc length (the
+    * single-scan token count; TokenizerSpec pins its equality with the
+    * tokenizer's dl), the sha256 per-row invariant (BASELINE.json
+    * input_hint), the layer's `batch_id`, and the content-derived link
+    * attribute (v7) — all in ONE pass over the content, like the reference
+    * parsing links out of the page it just fetched
+    * (pkg/crawl/crawl.go:148-166). Zero-token docs get a lineage row with
+    * dl=0 but contribute no postings — the analog of the reference
+    * persisting 404 nodes without descending them
+    * (pkg/crawl/crawl.go:109-118, P7).
+    */
+  private[index] def docsRows(corpus: DataFrame, batchId: String): DataFrame =
+    corpus.select(col("doc_id"), col("repo"), col("path"), col("commit"), col("lang"),
+      Tokenizer.tokenCountCol(col("content")).cast("long").as("dl"),
+      sha2(col("content"), 256).as("content_sha"), lit(batchId).as("batch_id"),
+      LinkIndex.custCol(col("content")).as("cust"))
+
   /** Salted segments + per-salt manifests + bucket-partitioned global merge
     * from a `(doc_id, term, tf, dl)` relation — the one posting-write path,
     * shared by the full build (tokenizer output), [[Incremental.addBatch]]
     * (the fresh docs' rows) and [[Incremental.compact]] (the decoded merged
     * index). Resumable per salt; any rebuilt salt invalidates the previous
     * merge. The fast sidecar is the caller's: an add must not touch the
-    * live one of a published layer.
+    * live one of a published layer. Its phases report under the caller's
+    * `tag` (`build`, `add` or `compact`).
     */
   private[index] def buildPostingsPhases(
       spark: SparkSession,
       termFreqs: => DataFrame,
       stats: IndexStats,
       paths: IndexPaths,
-      buildArgs: String): Unit = {
+      buildArgs: String,
+      tag: String): Unit = {
     val numSalts = stats.numSalts
     val numBuckets = stats.numBuckets
     val done = completedSalts(paths)
@@ -447,7 +450,7 @@ object IndexBuilder {
       // tasks — hot terms are already spread across salts, and every core
       // gets work (an explicit repartition(numSalts) capped parallelism at
       // numSalts tasks and left half the cluster idle).
-      withHashAggFallbackRaised(spark)(phase("segments") {
+      withHashAggFallbackRaised(spark)(phase("segments", tag) {
         tfd
           .groupBy("salt", "term")
           .agg(PostingAggExprs.buildPostings(stats.avgdl, col("doc_id"), col("tf"), col("dl")).as("p"))
@@ -467,7 +470,7 @@ object IndexBuilder {
       // shard (the reference's @count index analog, dgraph.go:45) — at 100 TB
       // the ratio max_term_df/posting_count is the stop-list / extra-salting
       // trigger.
-      val perSalt = phase("manifests")(spark.read.schema(SegmentsSchema).parquet(paths.segmentsDir)
+      val perSalt = phase("manifests", tag)(spark.read.schema(SegmentsSchema).parquet(paths.segmentsDir)
         .filter(col("salt").isin(missing: _*))
         .groupBy("salt")
         .agg(count(lit(1)).as("terms"), sum("sum_tf").as("tokens"), sum("df").as("postings"),
@@ -501,7 +504,7 @@ object IndexBuilder {
     if (missing.nonEmpty) deleteRecursively(Paths.get(paths.indexDir))
     if (!Files.exists(Paths.get(s"${paths.indexDir}/_SUCCESS"))) {
       val segs = spark.read.schema(SegmentsSchema).parquet(paths.segmentsDir)
-      withHashAggFallbackRaised(spark)(phase("merge") {
+      withHashAggFallbackRaised(spark)(phase("merge", tag) {
         segs
           .groupBy("term")
           .agg(PostingAggExprs.mergePostings(stats.avgdl, col("postings"), col("dls")).as("p"))
@@ -535,17 +538,18 @@ object IndexBuilder {
     * term is hot when its global df — the sum over its doc-disjoint layer
     * lists — reaches [[FastMinDf]]. Each of its lists contributes its own
     * top candidates, scored with the global idf, and their union holds
-    * the term's top FastK.
+    * the term's top FastK. The phase reports under the caller's `tag`.
     */
   private[index] def buildFastSidecar(
       spark: SparkSession,
       layers: Seq[(IndexPaths, IndexStats)],
       stats: IndexStats,
-      fastDir: String): Unit = {
+      fastDir: String,
+      tag: String): Unit = {
     import spark.implicits._
     val n = stats.nDocs
     val avgdl = stats.avgdl
-    phase("fast-lists") {
+    phase("fast-lists", tag) {
       // each layer's rows with its bound scale: block maxima encoded at an
       // older (smaller) avgdl are widened by max(1, avgdl / layer avgdl)
       // (tfNorm grows with avgdl; see [[Incremental]]'s monotonicity proof)

@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   *    scan the artifact — O(edge scan), not O(corpus tokenize);
   *  - incremental adds maintain it LSM-style like postings: a delta layer
   *    carries the edges of the fresh docs plus re-derived edges for
-  *    existing docs whose target's canonical provider changed; readers
-  *    resolve newest-wins per `src_id` ([[readMergedEdges]]).
+  *    existing docs whose target module's canon set gained a fresh doc
+  *    ([[deltaEdges]]); readers resolve newest-wins per `src_id`
+  *    ([[readMergedEdges]]).
   *
   * Link semantics (single definition — the content-derived path in
   * [[graft.ops.Graph]] delegates here, so the two can never drift): each
@@ -31,8 +32,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale: nodes/edges are doc-METADATA-sized relations (16 B per edge), so
   * every derivation here is a metadata job — group-min + two hash joins —
-  * independent of content volume; the delta path touches only
-  * O(|fresh| + |rewritten groups|) rows.
+  * independent of content volume. The delta path still scans every base
+  * node (the canon of base ∪ fresh reads them all); what it writes is
+  * O(|fresh| + |rewritten sources|) edges.
   */
 object LinkIndex {
 
@@ -84,37 +86,42 @@ object LinkIndex {
     */
   def edgesFrom(nodes: DataFrame, canon: DataFrame): DataFrame =
     nodes.join(
-      canon.withColumn("prev_cust", (col("cust") + lit(CustModulus) - 1) % CustModulus)
-        .select(col("repo"), col("prev_cust").as("cust"), col("canon_id")),
+      canon.select(col("repo"), linkingCust(col("cust")).as("cust"), col("canon_id")),
       Seq("repo", "cust"))
       .select(col("doc_id").as("src_id"), col("canon_id").as("dst_id"))
+
+  /** The module whose docs link to module `cust`: `(cust - 1) mod M`. */
+  private def linkingCust(cust: Column): Column = (cust + lit(CustModulus) - 1) % CustModulus
 
   /** The full edge relation of a node set. */
   def edgesOf(nodes: DataFrame): DataFrame = edgesFrom(nodes, canonOf(nodes))
 
-  /** The DELTA edge layer for an incremental add: edges of the fresh docs,
-    * plus re-derived edges for every EXISTING doc in a (repo, cust) group
-    * whose target module's canonical provider changed (a fresh doc with a
-    * smaller path than the incumbent canon re-points every doc linking to
-    * that module — the newest layer must carry those rewrites so
-    * newest-wins-per-src resolution serves the new targets). Cost is
-    * O(|fresh| + |rewritten groups|) metadata rows, never O(all docs).
+  /** The DELTA edge layer for an incremental add: the fresh docs' edges,
+    * plus the re-derived edges of every EXISTING doc whose target module's
+    * canon set changed, so newest-wins-per-src resolution serves the new
+    * targets. A batch only ADDS docs, so a canon set (the module's docs at
+    * its min path) changes iff a fresh doc joined it: by a smaller path (a
+    * steal), the same path (a tie) or a brand-new module. So no old canon
+    * is derived, and a tie the batch does not join is not rewritten.
+    *
+    * One canon derivation over base ∪ fresh — [[canonOf]]'s group-min and
+    * join back — also yields each module's changed flag: the group-min
+    * takes `min(struct(path, !fresh))`, whose second field is false iff a
+    * fresh doc sits at the min path. One join ([[edgesFrom]]'s) then keeps
+    * every fresh source and every base source whose target changed. The
+    * layers are doc-disjoint, so no source is counted twice.
     */
   def deltaEdges(baseNodes: DataFrame, freshNodes: DataFrame): DataFrame = {
-    val allNodes = baseNodes.unionByName(freshNodes)
-    val newCanon = canonOf(allNodes)
-    val oldCanon = canonOf(baseNodes)
-      .select(col("repo"), col("cust"), col("canon_id").as("old_canon_id"))
-    // target modules whose canon changed (or is brand new) -> the SOURCE
-    // module that links to them is (cust - 1) mod M
-    val rewriteGroups = newCanon
-      .join(oldCanon, Seq("repo", "cust"), "left")
-      .filter(col("old_canon_id").isNull || col("old_canon_id") =!= col("canon_id"))
-      .select(col("repo"),
-        ((col("cust") + lit(CustModulus) - 1) % CustModulus).as("cust"))
-    val rewriteSrcs = allNodes.join(rewriteGroups, Seq("repo", "cust"), "left_semi")
-    val srcs = freshNodes.unionByName(rewriteSrcs).dropDuplicates("doc_id")
-    edgesFrom(srcs, newCanon)
+    val nodes = baseNodes.withColumn("fresh", lit(false))
+      .unionByName(freshNodes.withColumn("fresh", lit(true)))
+    val mins = nodes.groupBy("repo", "cust")
+      .agg(min(struct(col("path"), (!col("fresh")).as("base"))).as("m"))
+      .select(col("repo"), col("cust"), col("m.path").as("path"), (!col("m.base")).as("changed"))
+    val canon = mins.join(nodes, Seq("repo", "cust", "path"))
+      .select(col("repo"), linkingCust(col("cust")).as("cust"), col("doc_id").as("dst_id"), col("changed"))
+    nodes.join(canon, Seq("repo", "cust"))
+      .filter(col("fresh") || col("changed"))
+      .select(col("doc_id").as("src_id"), col("dst_id"))
   }
 
   /** Persist one edges layer (creates `_SUCCESS`; an empty relation writes

@@ -17,10 +17,13 @@ import scala.jdk.CollectionConverters._
   *     doc ids decoded from its segments and index, and its Σ df;
   *  3. the layered read-back (the J2 merge) equals a from-scratch full
   *     build, and the stats equal the full build's exactly (token-bearing
-  *     docs only, dead docs excluded — P7);
+  *     docs only, dead docs excluded — P7); the delta docs sidecar's dl
+  *     agrees with its postings' dl;
   *  4. replaying the same batch on the merged root is a no-op delta
   *     (J1 idempotency, incl. zero-token docs' dl=0 lineage rows);
-  *  5. a root whose layers record an older format is refused, and the
+  *  5. a failed add (a duplicate key) names the fault and releases what
+  *     it persisted;
+  *  6. a root whose layers record an older format is refused, and the
   *     base rebuild plus a re-add serve it again.
   */
 class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -130,6 +133,20 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("path") === "dead2.go").select("dl").collect()
     assert(deadRows.map(_.getLong(0)).toSeq === Seq(0L))
 
+    // 3d. each fresh doc's sidecar dl is the dl its postings carry (the
+    // sidecar counts tokens in its own pass over the content), and the
+    // zero-token doc, which has no postings, keeps dl = 0
+    val sidecarDl = spark.read.schema(IndexBuilder.DocsSchema).parquet(outPaths.docsDir)
+      .select("doc_id", "dl").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val postingDl = index.select("postings", "dls").collect().toSeq.flatMap { r =>
+      val (ids, _, dls) = graft.index.Postings.decode(r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1))
+      ids.toSeq.zip(dls.toSeq)
+    }.toMap
+    assert(sidecarDl.keySet === freshIds)
+    assert(postingDl.nonEmpty && postingDl.forall { case (id, dl) => sidecarDl(id) == dl },
+      s"sidecar dl $sidecarDl disagrees with the postings' dl $postingDl")
+    assert((freshIds -- postingDl.keySet).map(sidecarDl) === Set(0L))
+
     // 4. replay the same batch against the merged root: no fresh docs
     // (dead2.go's dl=0 lineage row blocks re-admission), empty delta,
     // unchanged stats.
@@ -141,13 +158,16 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Snapshots.read(out2.root).get.version === 3)
 
     // 5. a batch with two rows of one (repo, path, commit) key: the error
-    // that reaches the caller, through Spark's wrapping, names the fault
+    // that reaches the caller, through Spark's wrapping, names the fault,
+    // and the failed add releases every relation it persisted
+    val pinned = spark.sparkContext.getPersistentRDDs.size
     val dup = intercept[Exception](Incremental.addBatch(spark, basePaths,
       corpusOf(base ++ Seq(doc("e.go", "beta zeta"), doc("e.go", "beta eta"))), IndexPaths(s"$root/dup")))
     val messages = Iterator.iterate[Throwable](dup)(_.getCause).takeWhile(_ != null)
       .flatMap(e => Option(e.getMessage)).toSeq
     assert(messages.exists(m => m.contains("duplicate doc_id") &&
       m.contains("two input rows share one (repo, path, commit) key")), messages.mkString("\n"))
+    assert(spark.sparkContext.getPersistentRDDs.size === pinned, "the failed add leaked persisted relations")
   }
 
   test("a layered root of an older format is refused, then rebuilt and served") {
