@@ -147,21 +147,13 @@ object SparkEntry {
     // §7 Step 1: naive full-scoring BM25 top-k over the reference query set.
     "bm25_naive_topk" -> ((s, dir) => bm25Naive(s, dir)),
 
-    // A6+F12: build the salted-segment index, globally merge, then decode
-    // every posting list back from its delta+varint bytes and recount —
-    // a full cross-engine codec/build roundtrip check.
+    // A6+F12: build the salted-segment index, merge its sub-lists per term
+    // (the merged view), then decode every posting list back from its
+    // delta+varint bytes and recount — a full cross-engine codec/build
+    // roundtrip check.
     "index_postings_stats" -> ((s, dir) => {
-      import s.implicits._
       val (paths, _) = graft.index.IndexBuilder.ensure(s, dir)
-      s.read.parquet(paths.indexDir)
-        .select("term", "postings", "dls")
-        .as[(String, Array[Byte], Array[Byte])]
-        .map { case (term, p, d) =>
-          val (docIds, tfs, _) = graft.index.Postings.decode(p, d)
-          (term, docIds.length.toLong, tfs.map(_.toLong).sum)
-        }
-        .toDF("term", "df", "sum_tf")
-        .orderBy("term")
+      decodeRecount(s, graft.index.Incremental.readMergedIndex(s, paths.root))
     }),
 
     // S4 segment sink totals: what landed in the salted segments equals the
@@ -254,9 +246,9 @@ object SparkEntry {
     // J1+J2: build on 80% of the corpus, then incrementally add the full
     // corpus — anti-join keeps only the new 20%, which alone is indexed
     // into a delta layer (base files are referenced through the snapshot,
-    // never rewritten). The layered read-back — the sort-merge full_outer
-    // merge of the layers — must equal the single-shot full build (oracle
-    // = full-corpus tf aggregate).
+    // never rewritten). The layered read-back — the merge aggregate over
+    // every layer's salted sub-lists — must equal the single-shot full
+    // build (oracle = full-corpus tf aggregate).
     "index_incremental" -> ((s, dir) => {
       val outPaths = ensureIncr(s, dir, replay = true)
       decodeRecount(s, graft.index.Incremental.readMergedIndex(s, outPaths.root))
@@ -350,8 +342,7 @@ object SparkEntry {
         graft.index.Incremental.compact(s, out.root, Some(cRoot))
       val snap = graft.index.Snapshots.read(cRoot).get
       require(snap.layers.size == 1, "compacted root must be single-layer")
-      decodeRecount(s,
-        s.read.schema(graft.index.IndexBuilder.IndexSchema).parquet(snap.layers.head.indexDir))
+      decodeRecount(s, graft.index.Incremental.readMergedIndex(s, cRoot))
     }),
 
     // ST1/ST2: streamed tokenize+tf must equal the batch aggregation.

@@ -12,16 +12,18 @@ import org.apache.spark.sql.functions._
   *    insert iff absent) → `left_anti` join of the incoming batch against
   *    the already-indexed docIds: only genuinely new docs produce postings;
   *  - J2 `CheckOrCreatePredicate` (`dgraph.go:148-176`, merge edge into
-  *    existing edge list) → a Catalyst-planned **sort-merge full_outer
-  *    join** on `term` (`hint("merge")`), folded over the layers where a
-  *    merge is needed: the merged view ([[readMergedIndex]]) and
-  *    [[compact]].
+  *    existing edge list) → the merge aggregate
+  *    ([[PostingAggExprs.mergePostings]]) grouping every layer's salted
+  *    sub-lists by `term`: the merged view ([[readMergedIndex]]). The
+  *    layers are doc-disjoint, so a layer's list is one more sub-list of
+  *    the term, and [[compact]] needs no merge at all: it decodes every
+  *    sub-list and regroups by `(salt, term)`.
   *
   * Delta layout (LSM-style, like Lucene's append-only segments): an add
   * indexes ONLY its fresh docs, through the same posting phases as the
   * full build ([[IndexBuilder.buildPostingsPhases]]), into its own layer
-  * root (an [[IndexPaths]]: the fresh docs' salted segments and index,
-  * their docs sidecar and edges, the fast sidecar, the stats), and
+  * root (an [[IndexPaths]]: the fresh docs' salted segments, their docs
+  * sidecar and edges, the fast sidecar, the stats), and
   * publishes a snapshot whose layer roots are `base layers ++ [out]`.
   * Base files are referenced through the snapshot ([[Snapshots]]), never
   * decoded, re-encoded or rewritten. Layers are doc-disjoint (J1): a
@@ -105,7 +107,7 @@ object Incremental {
         IndexBuilder.readStats(outPaths).contains(newStats) &&
         IndexBuilder.readJsonString(
           java.nio.file.Paths.get(outPaths.statsPath), "build_args").contains(publishArgs) &&
-        Seq(outPaths.indexDir, outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir, outPaths.fastDir)
+        Seq(outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir, outPaths.fastDir)
           .forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/_SUCCESS")))
       if (replayNoOp)
         System.err.println(s"[add] replay no-op: ${outPaths.root} already carries this batch ($publishArgs)")
@@ -173,12 +175,12 @@ object Incremental {
       buildArgs: String): Unit = {
     def phase[A](name: String)(f: => A): A = IndexBuilder.phase(name, tag = "add")(f)
     // the fresh docs' (doc_id, term, tf, dl) rows through the build's own
-    // posting phases: salted segments, manifests and the layer's index. A
-    // batch written here before (a replaced batch) is cleared first, so
-    // every salt is rebuilt; the live fast sidecar is left to the staged
-    // swap below. As in the build, the tf relation is not persisted: the
-    // segments phase is its one consumer.
-    Seq(outPaths.segmentsDir, outPaths.manifestsDir, outPaths.indexDir)
+    // posting phases: salted segments and manifests. A batch written here
+    // before (a replaced batch) is cleared first, so every salt is rebuilt;
+    // the live fast sidecar is left to the staged swap below. As in the
+    // build, the tf relation is not persisted: the segments phase is its
+    // one consumer.
+    Seq(outPaths.segmentsDir, outPaths.manifestsDir)
       .foreach(d => IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d)))
     IndexBuilder.buildPostingsPhases(spark, Tokenizer.termFreqsWithDl(fresh), newStats, outPaths,
       buildArgs, tag = "add")
@@ -247,11 +249,14 @@ object Incremental {
     * design promises; reference analog: Dgraph's periodic LSM compaction
     * behind the live store, `pkg/database/relationship/dgraph.go`).
     *
-    * Decodes the J2-merged view ([[readMergedIndex]]: the sort-merge
-    * full_outer fold over the layers), rebuilds salted segments + global
-    * index + manifests through the SAME phases as a from-scratch build
-    * ([[IndexBuilder.buildPostingsPhases]]), writes the docs union and the
-    * fast sidecar, and publishes a single-layer snapshot. With
+    * Decodes every layer's salted segments straight into
+    * `(doc_id, term, tf, dl)` rows — the layers are doc-disjoint, so no
+    * merge is needed — and rebuilds salted segments + manifests through the
+    * SAME phases as a from-scratch build
+    * ([[IndexBuilder.buildPostingsPhases]], which regroups by
+    * `(salt, term)`), so the compacted segments equal a from-scratch
+    * build's row for row. Writes the docs union and the fast sidecar, and
+    * publishes a single-layer snapshot. With
     * `toRoot = None` the snapshot is published in place at `root`
     * (version+1, data under `root/compact-v<N>/`); old layer files become
     * unreferenced (kept on disk — time travel / concurrent readers,
@@ -269,7 +274,7 @@ object Incremental {
       case Some(r) => (IndexPaths(r), r, 1)
       case None => (IndexPaths(s"$root/compact-v${snap.version + 1}"), root, snap.version + 1)
     }
-    Seq(inner.indexDir, inner.segmentsDir, inner.docsDir, inner.manifestsDir, inner.edgesDir, inner.fastDir)
+    Seq(inner.segmentsDir, inner.docsDir, inner.manifestsDir, inner.edgesDir, inner.fastDir)
       .foreach(d => IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d)))
 
     // docs union: per-layer docId sets are disjoint (J1), content_sha,
@@ -283,11 +288,11 @@ object Incremental {
         spark.read.schema(IndexBuilder.DocsSchema).parquet(inner.docsDir))),
       inner.edgesDir)
 
-    // (doc_id, term, tf, dl) relation from the merged index — decode is
-    // distributed (one task per merged row group), then the shared posting
-    // phases re-encode everything at stats.avgdl.
+    // (doc_id, term, tf, dl) relation from every layer's sub-lists —
+    // decode is distributed (one task per segments row group), then the
+    // shared posting phases re-encode everything at stats.avgdl.
     import spark.implicits._
-    val tfd = mergedIndex(spark, src)
+    val tfd = segments(spark, snap.layers)
       .select("term", "postings", "dls")
       .as[(String, Array[Byte], Array[Byte])]
       .flatMap { case (term, p, d) =>
@@ -313,31 +318,13 @@ object Incremental {
     stats
   }
 
-  /** The J2 merge over a published root's layers (oldest → newest): a
-    * fold of Catalyst-planned sort-merge full_outer joins on term
-    * (`hint("merge")`, at most one row per term on each side), whose rows
-    * [[mergePair]] merges — the layers are doc-disjoint — and re-encodes at
-    * the current avgdl. One layer is read as it is. The schema is pinned:
-    * an empty layer (replayed batch) has no parquet files to infer from.
+  /** Union of the layers' salted segments (doc-disjoint sub-lists). The
+    * schema is pinned: an empty layer (replayed batch) has no parquet files
+    * to infer from.
     */
-  private def mergedIndex(spark: SparkSession, root: PublishedRoot): DataFrame = {
-    import spark.implicits._
-    val avgdl = root.stats.avgdl
-    root.snapshot.layers
-      .map(l => spark.read.schema(IndexBuilder.IndexSchema).parquet(l.indexDir).drop("bucket"))
-      .reduceLeft { (older, newer) =>
-        older.select(col("term"), col("postings").as("pa"), col("dls").as("da")).hint("merge")
-          .join(newer.select(col("term"), col("postings").as("pb"), col("dls").as("db")), Seq("term"), "full_outer")
-          .as[(String, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-          .map { case (term, pa, da, pb, db) =>
-            val (ids, tfs, dls) = mergePair(pa, da, pb, db)
-            val e = Postings.encode(term, ids, tfs, dls, avgdl)
-            (term, e.df, e.sumTf, e.postings, e.dls, e.blockMax, e.blockDir)
-          }
-          .toDF("term", "df", "sum_tf", "postings", "dls", "block_max", "block_dir")
-      }
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(root.stats.numBuckets)).cast("int"))
-  }
+  private def segments(spark: SparkSession, layers: Seq[IndexPaths]): DataFrame =
+    layers.map(l => spark.read.schema(IndexBuilder.SegmentsSchema).parquet(l.segmentsDir))
+      .reduce(_ unionByName _)
 
   /** Union of the layers' docs sidecars (disjoint docId sets, J1). */
   private[graft] def mergedDocs(spark: SparkSession, layers: Seq[IndexPaths]): DataFrame =
@@ -346,37 +333,24 @@ object Incremental {
 
   /** The logical merged index at the published `root` (term, df, sum_tf,
     * postings, dls, block_max, block_dir, bucket): one row per term, the
-    * J2 merge of its layers' lists. Base FILES are read as they are — never
-    * rewritten by [[addBatch]].
+    * J2 merge of every layer's salted sub-lists, re-encoded at the root's
+    * avgdl — one aggregate over the segments, no join. It is a view: no
+    * build, add or compaction writes it. Base FILES are read as they
+    * are — never rewritten by [[addBatch]].
     */
-  def readMergedIndex(spark: SparkSession, root: String): DataFrame =
-    mergedIndex(spark, Snapshots.open(root))
+  def readMergedIndex(spark: SparkSession, root: String): DataFrame = {
+    val src = Snapshots.open(root)
+    segments(spark, src.snapshot.layers)
+      .groupBy("term")
+      .agg(PostingAggExprs.mergePostings(src.stats.avgdl, col("postings"), col("dls")).as("p"))
+      .select(col("term"), col("p.df"), col("p.sum_tf"), col("p.postings"), col("p.dls"),
+        col("p.block_max"), col("p.block_dir"),
+        pmod(xxhash64(col("term")), lit(src.stats.numBuckets)).cast("int").as("bucket"))
+  }
 
   /** The logical docs sidecar at the published `root`: union of disjoint
     * per-layer docs.
     */
   def readMergedDocs(spark: SparkSession, root: String): DataFrame =
     mergedDocs(spark, Snapshots.open(root).snapshot.layers)
-
-  /** Merge two (possibly null) encoded posting lists into sorted parallel
-    * arrays — disjoint docId sets (J1 guarantees it), classic 2-way merge.
-    */
-  private[index] def mergePair(
-      pa: Array[Byte], da: Array[Byte],
-      pb: Array[Byte], db: Array[Byte]): (Array[Long], Array[Int], Array[Long]) = {
-    if (pa == null) return Postings.decode(pb, db)
-    if (pb == null) return Postings.decode(pa, da)
-    val (ia, ta, la) = Postings.decode(pa, da)
-    val (ib, tb, lb) = Postings.decode(pb, db)
-    val n = ia.length + ib.length
-    val ids = new Array[Long](n); val tfs = new Array[Int](n); val dls = new Array[Long](n)
-    var a = 0; var b = 0; var o = 0
-    while (a < ia.length || b < ib.length) {
-      val takeA = b >= ib.length || (a < ia.length && ia(a) < ib(b))
-      if (takeA) { ids(o) = ia(a); tfs(o) = ta(a); dls(o) = la(a); a += 1 }
-      else { ids(o) = ib(b); tfs(o) = tb(b); dls(o) = lb(b); b += 1 }
-      o += 1
-    }
-    (ids, tfs, dls)
-  }
 }

@@ -14,8 +14,8 @@ final case class IndexStats(version: Int, nDocs: Long, avgdl: Double, totalToken
   * ([[Snapshot]]): every artifact is a fixed child of `root`.
   */
 final case class IndexPaths(root: String) {
-  val segmentsDir: String = s"$root/segments"   // (term, df, sum_tf, postings, dls, block_max) partitioned by salt
-  val indexDir: String = s"$root/index"         // the layer's salts merged per term, partitioned by term-hash bucket
+  val segmentsDir: String = s"$root/segments"   // (term, df, sum_tf, postings, dls, block_max, block_dir) partitioned by salt, bucket
+  val indexDir: String = s"$root/index"         // never written (the merged view is Incremental.readMergedIndex); perfbench still sizes it
   val docsDir: String = s"$root/docs"           // (doc_id, repo, path, commit, lang, dl, content_sha, batch_id, cust)
   val fastDir: String = s"$root/fast"           // impact-ordered top-FastK prefixes of hot terms (v6)
   val edgesDir: String = s"$root/edges"         // stored link graph (src_id, dst_id), layered newest-wins per src (v7)
@@ -26,11 +26,14 @@ final case class IndexPaths(root: String) {
 /** The index build pipeline — SURVEY.md §3.2's engine equivalent of the
   * reference crawl loop, and §7 Step 2/3.
   *
-  * Stages (each boundary is exactly one shuffle):
-  *   corpus scan → docId assign → tokenize/tf groupBy → salted
-  *   repartition-by-term → per-(term,salt) posting build (Aggregator) →
-  *   segment write + per-salt manifest → global merge (Aggregator) →
-  *   bucket-partitioned global index + stats.
+  * Stages:
+  *   corpus scan → docId assign → docs sidecar (stats and edges from it) →
+  *   tokenize/tf → per-(salt, term) posting build (Aggregator, one
+  *   shuffle) → segment write + per-salt manifest → fast lists → stats +
+  *   snapshot publish.
+  * The salted segments are the layer's one posting copy. The global
+  * per-term index is a view, not an artifact: [[Incremental.readMergedIndex]]
+  * groups the sub-lists by term through the merge Aggregator.
   *
   * Salting (north rule): sub-postings are built per `(term, salt)` where
   * `salt = pmod(xxhash64(doc_id), numSalts)`, so a hot term's postings are
@@ -116,21 +119,6 @@ object IndexBuilder {
       StructField("repos", ArrayType(StringType, containsNull = false)),
       StructField("paths", ArrayType(StringType, containsNull = false)),
       StructField("commits", ArrayType(StringType, containsNull = false)),
-      StructField("bucket", IntegerType)))
-  }
-
-  /** On-disk schema of a global-index layer (incl. the bucket partition
-    * column). Layered reads specify it explicitly: an EMPTY delta layer (a
-    * replayed batch) has no files to infer from.
-    */
-  val IndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("term", StringType), StructField("df", LongType),
-      StructField("sum_tf", LongType), StructField("postings", BinaryType),
-      StructField("dls", BinaryType),
-      StructField("block_max", ArrayType(DoubleType, containsNull = false)),
-      StructField("block_dir", BinaryType),
       StructField("bucket", IntegerType)))
   }
 
@@ -282,7 +270,7 @@ object IndexBuilder {
 
   private val HashAggFallback = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
 
-  /** Run `f` (a posting build or merge) with ObjectHashAggregate's
+  /** Run `f` (a posting build) with ObjectHashAggregate's
     * fallback-to-sort threshold raised to 10^7 groups, restoring the
     * session's previous value after. Those aggregations hold ~10^4+ groups
     * per task, far past the default 128; the hash path with the
@@ -379,11 +367,10 @@ object IndexBuilder {
       LinkIndex.writeEdges(spark, LinkIndex.edgesOf(LinkIndex.nodesOf(docsSidecar)), paths.edgesDir)
     }
 
-    // Salted segment build + global merge, resumable per salt — the
-    // tokenizer feeds the salted groupBy directly, no intermediate persist.
-    // A rebuilt merge invalidates the fast lists ranked from it.
-    if (completedSalts(paths).size < numSalts || !Files.exists(Paths.get(s"${paths.indexDir}/_SUCCESS")))
-      deleteRecursively(Paths.get(paths.fastDir))
+    // Salted segment build, resumable per salt — the tokenizer feeds the
+    // salted groupBy directly, no intermediate persist. A rebuilt salt
+    // invalidates the fast lists ranked from the segments.
+    if (completedSalts(paths).size < numSalts) deleteRecursively(Paths.get(paths.fastDir))
     buildPostingsPhases(spark, Tokenizer.termFreqsWithDl(c), stats, paths, buildArgs, tag = "build")
     if (!Files.exists(Paths.get(s"${paths.fastDir}/_SUCCESS")))
       buildFastSidecar(spark, Seq(paths -> stats), stats, paths.fastDir, tag = "build")
@@ -417,14 +404,14 @@ object IndexBuilder {
       sha2(col("content"), 256).as("content_sha"), lit(batchId).as("batch_id"),
       LinkIndex.custCol(col("content")).as("cust"))
 
-  /** Salted segments + per-salt manifests + bucket-partitioned global merge
-    * from a `(doc_id, term, tf, dl)` relation — the one posting-write path,
-    * shared by the full build (tokenizer output), [[Incremental.addBatch]]
-    * (the fresh docs' rows) and [[Incremental.compact]] (the decoded merged
-    * index). Resumable per salt; any rebuilt salt invalidates the previous
-    * merge. The fast sidecar is the caller's: an add must not touch the
-    * live one of a published layer. Its phases report under the caller's
-    * `tag` (`build`, `add` or `compact`).
+  /** Salted segments + per-salt manifests from a `(doc_id, term, tf, dl)`
+    * relation — the one posting-write path, shared by the full build
+    * (tokenizer output), [[Incremental.addBatch]] (the fresh docs' rows)
+    * and [[Incremental.compact]] (every layer's decoded segments).
+    * Resumable per salt. The fast sidecar is the caller's: an add must not
+    * touch the live one of a published layer. Its phases (`segments`,
+    * `manifests`) report under the caller's `tag` (`build`, `add` or
+    * `compact`).
     */
   private[index] def buildPostingsPhases(
       spark: SparkSession,
@@ -497,24 +484,6 @@ object IndexBuilder {
           "build_args" -> buildArgs, "wall_clock_ms" -> wallMs))
       }
     }
-
-    // Global merge: per-salt sub-postings → one posting list per term,
-    // bucket-partitioned by term hash for query-time partition pruning.
-    // Any rebuilt salt invalidates the previous merge.
-    if (missing.nonEmpty) deleteRecursively(Paths.get(paths.indexDir))
-    if (!Files.exists(Paths.get(s"${paths.indexDir}/_SUCCESS"))) {
-      val segs = spark.read.schema(SegmentsSchema).parquet(paths.segmentsDir)
-      withHashAggFallbackRaised(spark)(phase("merge", tag) {
-        segs
-          .groupBy("term")
-          .agg(PostingAggExprs.mergePostings(stats.avgdl, col("postings"), col("dls")).as("p"))
-          .select(col("term"),
-            pmod(xxhash64(col("term")), lit(numBuckets)).cast("int").as("bucket"),
-            col("p.df"), col("p.sum_tf"), col("p.postings"), col("p.dls"), col("p.block_max"), col("p.block_dir"))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(paths.indexDir)
-      })
-    }
   }
 
   /** Impact-ordered fast lists (v6): one distributed pass extracts each
@@ -534,11 +503,13 @@ object IndexBuilder {
     * sidecar is ranked at the current `stats`. The full build and
     * compaction pass their one layer. [[Incremental.addBatch]] passes every
     * layer and rebuilds the sidecar whole on each add: tfNorm ORDER is not
-    * avgdl-stable, so every hot term's prefix moves when avgdl moves. A
-    * term is hot when its global df — the sum over its doc-disjoint layer
-    * lists — reaches [[FastMinDf]]. Each of its lists contributes its own
-    * top candidates, scored with the global idf, and their union holds
-    * the term's top FastK. The phase reports under the caller's `tag`.
+    * avgdl-stable, so every hot term's prefix moves when avgdl moves. The
+    * lists read are every layer's salted segments: a term's postings are
+    * the union of its doc-disjoint (layer, salt) sub-lists, and it is hot
+    * when its global df — their summed df — reaches [[FastMinDf]]. Each
+    * sub-list contributes its own top candidates, scored with the global
+    * idf, and their union holds the term's top FastK. The phase reports
+    * under the caller's `tag`.
     */
   private[index] def buildFastSidecar(
       spark: SparkSession,
@@ -554,15 +525,13 @@ object IndexBuilder {
       // older (smaller) avgdl are widened by max(1, avgdl / layer avgdl)
       // (tfNorm grows with avgdl; see [[Incremental]]'s monotonicity proof)
       val rows = layers.map { case (l, ls) =>
-        spark.read.schema(IndexSchema).parquet(l.indexDir)
+        spark.read.schema(SegmentsSchema).parquet(l.segmentsDir).drop("salt")
           .withColumn("scale", lit(math.max(1.0, avgdl / ls.avgdl)))
       }.reduce(_ unionByName _)
-      // one layer's df is the global df; over several layers, the hot
-      // terms' summed df (few rows) is broadcast back onto their lists
-      val withDf =
-        if (layers.size == 1) rows.filter(col("df") >= FastMinDf).withColumn("global_df", col("df"))
-        else rows.join(broadcast(rows.groupBy("term").agg(sum("df").as("global_df"))
-          .filter(col("global_df") >= FastMinDf)), "term")
+      // the hot terms' summed df (few rows) is broadcast back onto their
+      // sub-lists
+      val withDf = rows.join(broadcast(rows.groupBy("term").agg(sum("df").as("global_df"))
+        .filter(col("global_df") >= FastMinDf)), "term")
       // Block-max-pruned candidate selection (r6, VERDICT r5 #2): instead of
       // full-decoding every hot list, emit only the postings whose quantized
       // score can still make (or tie) the term's top-FastK — blocks visited

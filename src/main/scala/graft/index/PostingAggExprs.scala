@@ -114,8 +114,9 @@ case class BuildPostings(
 }
 
 /** groupBy(term) aggregate over already-encoded sub-postings (disjoint
-  * docId salt shards) → the merged global posting list, re-encoded with the
-  * (possibly new) avgdl.
+  * docId (layer, salt) shards) → the merged global posting list,
+  * re-encoded with the (possibly new) avgdl — the merged view
+  * [[Incremental.readMergedIndex]].
   */
 case class MergePostings(
     postings: Expression, dls: Expression, avgdl: Double,

@@ -68,7 +68,7 @@ object PostingBuf {
     * (insertion sort under 32 elements, median-of-three pivot) — replaces
     * the boxed `Array.range(n).sortBy(docIds(_))` index sort in the posting
     * aggregates' eval, which paid a boxed comparator call per comparison
-    * across every (term) group of the segments and merge phases.
+    * across every (term) group of the segments phase and the merged view.
     */
   def sortByDocId(ids: Array[Long], tfs: Array[Int], dls: Array[Long], size: Int): Unit =
     qsort(ids, tfs, dls, 0, size - 1)

@@ -3,7 +3,7 @@ package graft.index
 import graft.score.BM25
 import scala.collection.mutable.ArrayBuffer
 
-/** One encoded posting list as stored in a segment / the global index.
+/** One encoded posting list as stored in a segment / the merged view.
   *
   * The engine analog of the reference's `links: [uid] @count @reverse`
   * predicate (`pkg/database/relationship/dgraph.go:45`): a term's edge list
@@ -331,12 +331,6 @@ object Postings {
         b += 1
       }
       new PostingsBlocks(n, firstIds, gapOffs, tfOffs, dlOffs, postings, dls)
-    }
-
-    /** Eager view over plain arrays (tests, tiny lists). */
-    def fromArrays(ids: Array[Long], tfs: Array[Int], dls: Array[Long]): PostingsBlocks = {
-      val e = encode("", ids, tfs, dls, avgdl = 1.0) // blockMax unused here
-      fromEncoded(ids.length.toLong, e.postings, e.dls, e.blockDir)
     }
   }
 }

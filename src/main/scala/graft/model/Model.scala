@@ -1,43 +1,6 @@
 package graft.model
 
-/** Core data model of the engine.
-  *
-  * Mirrors the reference's single logical entity — a url-keyed document node
-  * (`pkg/page/page.go:22-31`) — re-expressed as a source-code corpus row per
-  * BASELINE.json `input_hint`: `(repo, path, commit, lang, content)`.
-  */
-final case class Doc(repo: String, path: String, commit: String, lang: String, content: String)
-
-/** One term occurrence aggregated per document — the analog of the reference's
-  * per-page deduped link set (`pkg/page/page.go:71-78`), except we keep the
-  * term frequency (needed for BM25, which the north rule mandates).
-  */
-final case class TermFreq(docId: Long, term: String, tf: Int)
-
-/** A decoded posting: one document in a term's posting list. */
-final case class Posting(docId: Long, tf: Int)
-
 /** A query from the reference query set fixture. `k` plays the role of the
   * reference's `display_depth` result bound (`pkg/query/query.go:40-52`).
   */
 final case class Query(queryId: String, terms: Seq[String], k: Int)
-
-/** A scored hit returned by the engine. */
-final case class Hit(queryId: String, rank: Int, docId: Long, score: Double)
-
-/** Per-partition segment manifest — the engine's checkpoint unit.
-  * Analog of the reference's depth-completeness validation + idempotent
-  * upserts (`pkg/database/relationship/dgraph.go:86-90, 110, 162`): a build
-  * is complete iff every expected partition has a manifest; re-running a
-  * completed partition is a no-op.
-  */
-final case class SegmentManifest(
-    partitionId: Int,
-    segmentPath: String,
-    termCount: Long,
-    tokenCount: Long,
-    postingCount: Long,
-    minDocId: Long,
-    maxDocId: Long,
-    buildArgs: String,
-    wallClockMs: Long)

@@ -147,9 +147,6 @@ object Dedup {
     * functions": min over sha256(k + ":" + shingle) hex strings — a
     * lexicographic min of hex IS a numeric min of the 256-bit hash).
     */
-  def minhashSignatures(docs: DataFrame): DataFrame =
-    minhashSignaturesOf(shingles(docs))
-
   private def minhashSignaturesOf(ex: DataFrame): DataFrame = {
     val aggs = (0 until MinhashK).map(k =>
       min(sha2(concat(lit(s"$k:"), col("shingle")), 256)).as(s"mh$k"))

@@ -66,12 +66,6 @@ object Graph {
   def canonicalProviders(nodes: DataFrame): DataFrame =
     graft.index.LinkIndex.canonOf(nodes)
 
-  /** The intra-repo link relation: (src_id, dst_id) — every doc links to
-    * the canonical provider of the next cust-module in its repo.
-    */
-  def linkEdges(corpus: DataFrame): DataFrame =
-    graft.index.LinkIndex.edgesOf(docNodes(corpus))
-
   /** Depth-bounded BFS from `roots` (root_id, doc_id) over `edges`
     * (src_id, dst_id): returns (root_id, doc_id, depth) for every node
     * within `maxDepth` hops, depth = minimum distance (first discovery —

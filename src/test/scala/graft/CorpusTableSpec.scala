@@ -95,7 +95,7 @@ class CorpusTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     def content(p: graft.index.IndexPaths) = {
       val sp = spark
       import sp.implicits._
-      sp.read.parquet(p.indexDir).select("term", "df", "sum_tf")
+      graft.index.Incremental.readMergedIndex(sp, p.root).select("term", "df", "sum_tf")
         .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
     }
     assert(content(ixA) == content(ixB),

@@ -46,7 +46,7 @@ class DeadDocSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // no posting anywhere references the dead doc
     val deadId = docs.keySet // sanity
-    val postings = sp.read.parquet(paths.indexDir).select("term").as[String].collect()
+    val postings = sp.read.parquet(paths.segmentsDir).select("term").as[String].collect()
     assert(postings.nonEmpty && !postings.exists(_.isEmpty))
     val hits = graft.engine.Wand.topKAt(sp, paths, Seq(graft.model.Query("q1", Seq("bravo"), 10)),
       mode = graft.engine.Wand.Exhaustive)

@@ -269,7 +269,8 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("layered reader pins one shard RDD per layer: no segments/ or index/ relation cached after every route") {
     // every route and termMeta read the layers' pinned segment shards, so
-    // no relation over a layer's segments/ or index/ is ever cached
+    // no relation over a layer's segments/ is ever cached (no layer has an
+    // index/)
     val reader = IndexReader.get(spark, layered)
     assert(reader.layers.size === 2)
     val m = QueryMetrics(spark)
@@ -287,8 +288,6 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(persistent.contains(l.shards.id), s"layer $li: segment shards not pinned")
       val segments = spark.read.schema(IndexBuilder.SegmentsSchema).parquet(l.paths.segmentsDir)
       assert(!cached(segments), s"layer $li: segments/ relation is pinned")
-      val index = spark.read.schema(IndexBuilder.IndexSchema).parquet(l.paths.indexDir)
-      assert(!cached(index), s"layer $li: index/ relation is pinned")
     }
     // the reader caches no relation: its fast lists live on the driver
     val entries = org.apache.spark.sql.GraftCacheBridge.cachedEntries(spark)

@@ -11,12 +11,13 @@ import scala.jdk.CollectionConverters._
 /** Delta-layer invariants of the incremental add (SURVEY.md §2.4 J1/J2 +
   * the LSM layout):
   *
-  *  1. base index FILES are byte-identical after an add — a delta never
-  *     rewrites, decodes, or re-encodes base postings;
+  *  1. base segments FILES are byte-identical after an add — a delta
+  *     never rewrites, decodes, or re-encodes base postings;
   *  2. the delta layer holds ONLY the fresh docs' postings: its terms, the
-  *     doc ids decoded from its segments and index, and its Σ df;
-  *  3. the layered read-back (the J2 merge) equals a from-scratch full
-  *     build, and the stats equal the full build's exactly (token-bearing
+  *     doc ids decoded from its segments, and its Σ df;
+  *  3. the layered read-back (the J2 merge view) equals a from-scratch
+  *     full build's byte for byte, no root holds a materialized `index/`,
+  *     and the stats equal the full build's exactly (token-bearing
   *     docs only, dead docs excluded — P7); the delta docs sidecar's dl
   *     agrees with its postings' dl;
   *  4. replaying the same batch on the merged root is a no-op delta
@@ -85,23 +86,23 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val basePaths = IndexPaths(s"$root/base")
     val outPaths = IndexPaths(s"$root/out")
     IndexBuilder.build(spark, corpusOf(base), basePaths, buildArgs = "delta-spec-base")
-    val baseShas = fileSha(basePaths.indexDir)
+    val baseShas = fileSha(basePaths.segmentsDir)
 
     // (base ++ add).distinct: the engine contract is a key-deduped corpus
     // (Corpus.corpus dedups upstream); the a.go overlap still exercises J1.
     val stats = Incremental.addBatch(spark, basePaths, corpusOf((base ++ add).distinct), outPaths)
 
     // 1. untouched base files byte-identical
-    assert(fileSha(basePaths.indexDir) === baseShas)
+    assert(fileSha(basePaths.segmentsDir) === baseShas)
 
     // 2. delta layer holds only the fresh docs' terms
-    val deltaTerms = spark.read.parquet(outPaths.indexDir).select("term")
+    val deltaTerms = spark.read.parquet(outPaths.segmentsDir).select("term")
       .collect().map(_.getString(0)).toSet
     assert(deltaTerms === Set("beta", "epsilon"))
 
     // 2b. ... and only the fresh docs' postings: every doc id decoded from
-    // its segments and its index is a fresh doc, and the segments' Σ df is
-    // the number of fresh (doc, term) pairs
+    // its segments is a fresh doc, and the segments' Σ df is the number of
+    // fresh (doc, term) pairs
     val freshDocs = graft.corpus.Corpus.withDocId(corpusOf(add))
       .filter(col("path").isin("c.go", "dead2.go"))
     val freshIds = freshDocs.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -109,18 +110,23 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.index.Postings.decode(r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1))._1.toSeq
     }
     val segments = spark.read.schema(IndexBuilder.SegmentsSchema).parquet(outPaths.segmentsDir)
-    val index = spark.read.schema(IndexBuilder.IndexSchema).parquet(outPaths.indexDir)
     assert(decodedIds(segments).nonEmpty && decodedIds(segments).forall(freshIds))
-    assert(decodedIds(index).nonEmpty && decodedIds(index).forall(freshIds))
     assert(segments.agg(sum("df")).head().getLong(0) ===
       graft.tokenize.Tokenizer.termFreqsWithDl(freshDocs).count())
 
-    // 3a. merged view == from-scratch full build (decode-level equality)
+    // 3a. merged view == the from-scratch full build's view, decoded and
+    // byte for byte; the view is computed, so no layer root holds index/
     val fullPaths = IndexPaths(s"$root/full")
     IndexBuilder.build(spark, corpusOf((base ++ add).distinct), fullPaths, buildArgs = "delta-spec-full")
-    val merged = decodeCounts(Incremental.readMergedIndex(spark, outPaths.root))
-    val full = decodeCounts(spark.read.parquet(fullPaths.indexDir))
-    assert(merged === full)
+    val mergedView = Incremental.readMergedIndex(spark, outPaths.root)
+    val fullView = Incremental.readMergedIndex(spark, fullPaths.root)
+    val full = decodeCounts(fullView)
+    assert(decodeCounts(mergedView) === full)
+    val differing = PostingRows.differingKeys(PostingRows.of(mergedView, Seq("term"), PostingRows.Columns),
+      PostingRows.of(fullView, Seq("term"), PostingRows.Columns))
+    assert(differing.isEmpty, s"${differing.size} terms' rows differ from the full build's view: $differing")
+    Seq(basePaths, outPaths, fullPaths).foreach(p =>
+      assert(!Files.exists(Paths.get(p.indexDir)), s"${p.root} holds an index/ dir"))
 
     // 3b. stats count token-bearing docs only (2 base + 1 fresh; dead docs
     // excluded), and equal the full build's exactly
@@ -138,7 +144,7 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     // zero-token doc, which has no postings, keeps dl = 0
     val sidecarDl = spark.read.schema(IndexBuilder.DocsSchema).parquet(outPaths.docsDir)
       .select("doc_id", "dl").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val postingDl = index.select("postings", "dls").collect().toSeq.flatMap { r =>
+    val postingDl = segments.select("postings", "dls").collect().toSeq.flatMap { r =>
       val (ids, _, dls) = graft.index.Postings.decode(r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1))
       ids.toSeq.zip(dls.toSeq)
     }.toMap
@@ -153,7 +159,7 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out2 = IndexPaths(s"$root/out2")
     val stats2 = Incremental.addBatch(spark, outPaths, corpusOf((base ++ add).distinct), out2)
     assert(stats2 === stats.copy(version = stats2.version))
-    assert(spark.read.schema(IndexBuilder.IndexSchema).parquet(out2.indexDir).count() === 0)
+    assert(spark.read.schema(IndexBuilder.SegmentsSchema).parquet(out2.segmentsDir).count() === 0)
     assert(decodeCounts(Incremental.readMergedIndex(spark, out2.root)) === full)
     assert(Snapshots.read(out2.root).get.version === 3)
 
@@ -237,7 +243,7 @@ class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
   }
 
   private def artifactShas(paths: IndexPaths): Map[String, String] =
-    Seq(paths.indexDir, paths.segmentsDir, paths.docsDir, paths.edgesDir, paths.fastDir)
+    Seq(paths.segmentsDir, paths.docsDir, paths.edgesDir, paths.fastDir)
       .flatMap { d =>
         Files.walk(Paths.get(d)).iterator().asScala
           .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
@@ -256,7 +262,7 @@ class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
     Incremental.addBatch(spark, basePaths, corpusOf(add1), outPaths)
     val v1 = Snapshots.read(outPaths.root).get.version
     val sha1 = artifactShas(outPaths)
-    val mtimes1 = Files.walk(Paths.get(outPaths.indexDir)).iterator().asScala
+    val mtimes1 = Files.walk(Paths.get(outPaths.segmentsDir)).iterator().asScala
       .filter(Files.isRegularFile(_)).map(p => p.toString -> Files.getLastModifiedTime(p)).toMap
 
     // identical replay → rewrite skipped: same artifact bytes AND same file
@@ -265,9 +271,9 @@ class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
     val snap2 = Snapshots.read(outPaths.root).get
     assert(snap2.version == v1 + 1, "replay must still publish a new snapshot version")
     assert(artifactShas(outPaths) == sha1, "replay no-op must leave artifact bytes identical")
-    val mtimes2 = Files.walk(Paths.get(outPaths.indexDir)).iterator().asScala
+    val mtimes2 = Files.walk(Paths.get(outPaths.segmentsDir)).iterator().asScala
       .filter(Files.isRegularFile(_)).map(p => p.toString -> Files.getLastModifiedTime(p)).toMap
-    assert(mtimes2 == mtimes1, "replay no-op must not rewrite the delta index files")
+    assert(mtimes2 == mtimes1, "replay no-op must not rewrite the delta segments files")
 
     // a DIFFERENT batch over the same (base, out) pair must not be skipped —
     // and the served content must reflect the new batch. The published

@@ -30,11 +30,11 @@ class IndexResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  /** Decoded logical content of the global index, canonically ordered. */
+  /** Decoded logical content of the merged view, canonically ordered. */
   private def indexContent(paths: IndexPaths): Seq[(String, Seq[(Long, Int, Long)])] = {
     val sp = spark
     import sp.implicits._
-    sp.read.parquet(paths.indexDir)
+    Incremental.readMergedIndex(sp, paths.root)
       .select("term", "postings", "dls")
       .as[(String, Array[Byte], Array[Byte])]
       .collect()

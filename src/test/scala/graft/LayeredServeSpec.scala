@@ -23,8 +23,8 @@ import scala.jdk.CollectionConverters._
   *     true hits without it;
   *  3. an EMPTY replay layer (no parquet files) is servable;
   *  4. compaction folds the snapshot back to ONE layer with exact bounds
-  *     (boundScale == 1), identical query results, and decode-level
-  *     equality with a from-scratch rebuild;
+  *     (boundScale == 1), identical query results, and segments equal to
+  *     a from-scratch rebuild's row for row, byte for byte;
   *  5. per-query metrics (candidates / blocks decoded) populate;
   *  6. a term hot only across layers gets a fast list ranked by its
   *     global df;
@@ -116,13 +116,6 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def layerDf(layer: graft.engine.IndexLayer, term: String): Long =
     layer.shards.map { sh => val i = sh.indexOf(term); if (i >= 0) sh.count(i) else 0L }.sum().toLong
 
-  private def decodeCounts(df: DataFrame): Map[String, (Long, Long)] =
-    df.select("term", "postings", "dls").collect().map { r =>
-      val (ids, tfs, _) = graft.index.Postings.decode(
-        r.getAs[Array[Byte]]("postings"), r.getAs[Array[Byte]]("dls"))
-      r.getString(0) -> ((ids.length.toLong, tfs.map(_.toLong).sum))
-    }.toMap
-
   test("layered root serves: index + WAND rank/score-identical to naive; empty layer ok; compaction exact") {
     val all = baseDocs ++ deltaDocs
     val basePaths = IndexPaths(s"$root/base")
@@ -169,8 +162,8 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.candidates.value > 0, "no candidates counted")
     assert(m.blocksDecoded.value > 0, "cold pass decoded no blocks")
 
-    // in-place compaction: single exact layer, same results, decode-level
-    // identity with a from-scratch rebuild, old layers unreferenced
+    // in-place compaction: single exact layer, same results, segments
+    // byte-identical to a from-scratch rebuild's, old layers unreferenced
     Incremental.compact(spark, outPaths.root)
     val snap = Snapshots.read(outPaths.root).get
     assert(snap.version === 3)
@@ -184,8 +177,14 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val fullPaths = IndexPaths(s"$root/full")
     IndexBuilder.build(spark, corpusOf(all), fullPaths, buildArgs = "layered-spec-full")
-    assert(decodeCounts(spark.read.parquet(cReader.newest.paths.indexDir)) ===
-      decodeCounts(spark.read.parquet(fullPaths.indexDir)))
+    def segmentRows(p: IndexPaths) = PostingRows.of(
+      spark.read.schema(IndexBuilder.SegmentsSchema).parquet(p.segmentsDir), Seq("salt", "term"), PostingRows.Columns)
+    val compacted = segmentRows(cReader.newest.paths)
+    val differing = PostingRows.differingKeys(compacted, segmentRows(fullPaths))
+    assert(compacted.nonEmpty && differing.isEmpty,
+      s"${differing.size} (salt, term) rows differ from the full build's, e.g. ${differing.take(3)}")
+    Seq(basePaths, outPaths, out2, cReader.newest.paths, fullPaths).foreach(p =>
+      assert(!Files.exists(Paths.get(p.indexDir)), s"${p.root} holds an index/ dir"))
   }
 
   test("3-layer root: terms winning in three layers zip into one WAND shard run, identical to naive") {
@@ -226,7 +225,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pf = IndexPaths(s"$root/tri-full")
     val fullStats = IndexBuilder.build(spark, corpusOf(base ++ add1 ++ add2), pf, buildArgs = "layered-spec-tri-full")
     assert(chainStats.copy(version = 0) === fullStats.copy(version = 0))
-    val fullDf = spark.read.parquet(pf.indexDir).filter(col("term").isin("uno", "due", "tre"))
+    val fullDf = Incremental.readMergedIndex(spark, pf.root).filter(col("term").isin("uno", "due", "tre"))
       .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(fullDf.size === 3 && meta === fullDf)
 

@@ -11,11 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * bring-up") — the plans the engine relies on at 100 TB must actually be
   * the plans Catalyst picks at test scale:
   *
-  *  - query-term filters reach the index parquet scan (PushedFilters) and
-  *    the bucket partition column prunes directories (PartitionFilters);
+  *  - query-term filters reach the segments parquet scan (PushedFilters)
+  *    and the bucket partition column prunes directories (PartitionFilters);
   *  - the tiny query set broadcasts (BroadcastHashJoin), never shuffles
   *    the big tf relation on term at query time;
-  *  - the incremental index merge is a SortMergeJoin on term;
+  *  - the merged view of a layered index is one aggregate over every
+  *    layer's segments, with no join;
   *  - the corpus scan prunes lineitem to only the synthesis columns.
   */
 class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -44,7 +45,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
     // the cold-start plan (what a fresh executor scan runs): filters must
     // reach the parquet source
-    val cold = spark.read.parquet(paths.indexDir)
+    val cold = spark.read.parquet(paths.segmentsDir)
       .filter(col("bucket").isin(0, 1, 2))
       .filter(col("term").isin("func", "buffer"))
       .select("term", "df", "postings")
@@ -276,11 +277,16 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bench.deleteTree(root)
   }
 
-  test("incremental merge is a SortMergeJoin (full_outer on term)") {
-    // the J2 merge lives in the merged view (and so in compaction): on a
-    // 2-layer root, the executed plan of Incremental.readMergedIndex must
-    // be a sort-merge full_outer join on term
+  test("merged view is one aggregate over both layers' segments, no join") {
+    // the J2 merge lives only in the merged view: on a 2-layer root, the
+    // executed plan of Incremental.readMergedIndex scans both layers'
+    // segments and merges their sub-lists in one merge_postings aggregate
     import graft.index.{Incremental, IndexBuilder, IndexPaths}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
     val s = spark
     import s.implicits._
     def corpus(docs: Seq[(String, String)]) =
@@ -288,17 +294,27 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toDF("repo", "path", "commit", "lang", "content")
     val base = (0 until 20).map(i => (f"base$i%02d.go", s"common alpha$i"))
     val delta = (0 until 10).map(i => (f"delta$i%02d.go", s"common gamma$i"))
-    val root = java.nio.file.Files.createTempDirectory("graft-plan-smj").toString
+    val root = java.nio.file.Files.createTempDirectory("graft-plan-view").toString
     val basePaths = IndexPaths(s"$root/base")
     val outPaths = IndexPaths(s"$root/out")
-    IndexBuilder.build(spark, corpus(base), basePaths, buildArgs = "plan-spec-smj")
+    IndexBuilder.build(spark, corpus(base), basePaths, buildArgs = "plan-spec-view")
     Incremental.addBatch(spark, basePaths, corpus(base ++ delta), outPaths)
     val merged = Incremental.readMergedIndex(spark, outPaths.root)
     // collect runs this Dataset's own plan, so the executed plan is final
     assert(merged.collect().length === 31, "merged view: one row per distinct term")
-    val p = merged.queryExecution.executedPlan.toString
-    assert(p.contains("SortMergeJoin") && p.contains("FullOuter"),
-      s"merged view is not a sort-merge full_outer join:\n$p")
+    val p = merged.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(p) { case j: BaseJoinExec => j }.isEmpty, s"merged view joins:\n$p")
+    val finals = helper.collect(p) {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.mode == Final) => a
+    }
+    assert(finals.size === 1 && finals.head.aggregateExpressions.map(_.aggregateFunction.prettyName) ===
+      Seq("merge_postings"), s"merged view is not one merge_postings aggregate:\n$p")
+    def dir(d: String) = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
+    val scanned = helper.collect(p) { case f: FileSourceScanExec => f.relation.location.rootPaths }
+      .flatten.map(_.toUri.getPath.stripSuffix("/")).toSet
+    assert(scanned === Set(dir(basePaths.segmentsDir), dir(outPaths.segmentsDir)),
+      s"merged view scans $scanned, not both layers' segments")
     Bench.deleteTree(root)
   }
 
