@@ -269,8 +269,8 @@ object SparkEntry {
     "bm25_wand_incr_topk" -> ((s, dir) =>
       graft.engine.Wand.topKAt(s, ensureIncr(s, dir), QuerySet.all)),
 
-    // v7 fast lists over the LAYERED root: addBatch re-ranks the whole fast
-    // sidecar at the post-add stats (tfNorm ORDER is not avgdl-stable), so
+    // v7 fast lists over the LAYERED root: the reader ranks every fast list
+    // at the post-add stats (tfNorm ORDER is not avgdl-stable), so
     // hot single-term queries stay O(k) between an add and the next compact —
     // the steady state at 100 TB, where the layered window never closes.
     // Route engagement is asserted in-line: rank identity alone could come

@@ -1,7 +1,8 @@
 package graft.engine
 
-import graft.index.{Incremental, IndexBuilder, IndexPaths, IndexStats, Snapshots, TermHash}
-import java.nio.file.{Files, Paths}
+import graft.index.{Incremental, IndexBuilder, IndexPaths, IndexStats, Postings, Snapshots, TermHash}
+import graft.score.BM25
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -39,8 +40,9 @@ final case class IndexLayer(
   * published snapshot is refused.
   *
   * What a lookup needs lives on the driver: an exact [[TermDict]] of every
-  * term's global df and the newest layer's fast lists, both loaded once at
-  * the reader's first lookup ([[termMeta]], [[fastList]]). After that a
+  * term's global df and every hot term's fast list, both loaded once at
+  * the reader's first lookup ([[termMeta]], [[fastList]]); the fast lists
+  * are ranked from the pins, built where they are read. After that a
   * fast or absent request runs no Spark job and every other request runs
   * exactly one, the shard job ([[Wand.topKAt]]) — the reference's
   * cache-or-404 lifecycle (`api/http.go:87-91`).
@@ -57,7 +59,9 @@ final case class IndexLayer(
   *
   * At 10^12-doc scale you would pin only the term metadata and let posting
   * blocks stream from storage; at bench scale the whole index fits and the
-  * pins model the steady-state service.
+  * pins model the steady-state service. The fast lists are ranked once
+  * per reader open, not once per publish: every serving process pays the
+  * ranking job once per snapshot it opens, and no write pays it.
   */
 final case class IndexReader(
     spark: SparkSession, paths: IndexPaths, stats: IndexStats, snapshotVersion: Int,
@@ -65,9 +69,6 @@ final case class IndexReader(
 
   /** True once the session this reader was opened in has stopped. */
   def stopped: Boolean = spark.sparkContext.isStopped
-
-  /** Newest layer (a single-layer root's only layer). */
-  def newest: IndexLayer = layers.last
 
   /** Every layer's segment shards zipped partition by partition: partition
     * i yields each layer's shard of salt i, oldest layer first. Both the
@@ -78,13 +79,19 @@ final case class IndexReader(
   /** The term dictionary and the fast lists, loaded together at the first
     * lookup: one job over [[shards]] (it also materializes the layer pins)
     * returns each salt's terms and sub-list counts merged over its layers,
-    * and the driver merges the salts; then the newest layer's fast sidecar
-    * is read ([[IndexReader.fastFor]]). A lazy val, so concurrent first
-    * requests wait for one load rather than each running it.
+    * and the driver merges the salts; then one job over [[shards]] zipped
+    * with [[keys]] (it also materializes the key shards) ranks the hot
+    * terms' fast lists ([[IndexReader.rankFastLists]]). A lazy val, so
+    * concurrent first requests wait for one load rather than each running it.
     */
   private lazy val lookups: (TermDict, Map[String, FastList]) = {
-    val perSalt = shards.mapPartitions(it => Iterator(TermDict(it.flatMap(_.entries)))).collect()
-    (perSalt.reduce(TermDict.merge), IndexReader.fastFor(spark, newest.paths))
+    val sc = spark.sparkContext
+    val perSalt = IndexReader.described(sc, IndexReader.DictionaryJob)(
+      shards.mapPartitions(it => Iterator(TermDict(it.flatMap(_.entries)))).collect())
+    val dict = perSalt.reduce(TermDict.merge)
+    val hot = dict.withDfAtLeast(IndexBuilder.FastMinDf).toArray
+    (dict, IndexReader.described(sc, IndexReader.RankingJob)(
+      IndexReader.rankFastLists(shards, keys, hot, layers.map(_.boundScale).toArray, stats)))
   }
 
   /** Global df per term for query planning (idf is a per-term constant
@@ -99,12 +106,12 @@ final case class IndexReader(
   /** The reader's term dictionary, loaded at its first lookup. */
   def termDict: TermDict = lookups._1
 
-  /** The impact-ordered top-k prefix of one term (`fast/` sidecar): parallel
-    * arrays in the FINAL total order, v7 including the natural doc keys —
-    * present only for hot terms (df ≥ [[IndexBuilder.FastMinDf]]). Layered
-    * roots serve the sidecar rebuilt at the CURRENT avgdl by the last
-    * addBatch/compact. A driver lookup: only the reader's first lookup runs
-    * a job (the load).
+  /** The impact-ordered top-[[IndexBuilder.FastK]] prefix of one term:
+    * parallel arrays in the FINAL total order, including the natural doc
+    * keys — present only for hot terms (df ≥ [[IndexBuilder.FastMinDf]]).
+    * Ranked by the reader itself at the root's CURRENT stats from every
+    * layer's lists, so a layered root's prefixes are never stale. A driver
+    * lookup: only the reader's first lookup runs jobs (the load).
     */
   def fastList(term: String): Option[FastList] = lookups._2.get(term)
 
@@ -115,10 +122,10 @@ final case class IndexReader(
   def prefetchFastLists(terms: Seq[String]): Unit = { lookups; () }
 }
 
-/** One term's driver-resident impact-ordered prefix (v7 fast sidecar):
-  * parallel arrays, already in the final (score_r desc, key asc) order.
-  * `sortedIds` is the prefix's ids in ascending order, the hybrid route's
-  * candidate scope.
+/** One term's driver-resident impact-ordered prefix, ranked at the
+  * reader's first lookup ([[IndexReader.fastList]]): parallel arrays,
+  * already in the final (score_r desc, key asc) order. `sortedIds` is the
+  * prefix's ids in ascending order, the hybrid route's candidate scope.
   */
 final case class FastList(
     df: Long, ids: Array[Long], tfs: Array[Int], dls: Array[Long],
@@ -250,28 +257,65 @@ object IndexReader {
     }
   }
 
-  /** The NEWEST layer's fast lists, read into a driver map by term. v7
-    * invariant: every publish path writes (or rebuilds) the newest layer's
-    * sidecar at the CURRENT stats from every layer's lists — full build and
-    * compact through `IndexBuilder.buildFastSidecar`, incremental adds
-    * through the [[graft.index.Incremental.addBatch]] whole-sidecar re-rank
-    * (tfNorm ORDER is not avgdl-stable, so prefixes ranked at an older
-    * avgdl must never be served). Absent `_SUCCESS` (a pre-v7 or
-    * hand-assembled root) disables the fast route rather than serving a
-    * stale order.
+  /** Job descriptions of the load's two jobs, which tell them apart. */
+  private[graft] val DictionaryJob = "graft: term dictionary"
+  private[graft] val RankingJob = "graft: fast-list ranking"
+
+  /** Run `f` under the Spark job description `what`. */
+  private def described[A](sc: org.apache.spark.SparkContext, what: String)(f: => A): A = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try f finally sc.setJobDescription(prev)
+  }
+
+  /** A fast-list entry: its final-order row (keyed by term) and doc_id, tf, dl. */
+  private type FastRow = (TailRow, Long, Int, Long)
+  private val fastOrder: Ordering[FastRow] = ShardTail.order.on(_._1)
+
+  /** Every `hot` term's fast list (`(term, global df)` pairs) ranked at
+    * `stats`, in one job over the zipped layer shards and key shards.
+    * Salt shards are doc-disjoint, so a term's top FastK lies inside the
+    * union of the salts' top FastK in the final order ([[ShardTail.order]],
+    * the partial-then-merge top-k every shard request relies on). Each
+    * task ranks its salt: each layer's sub-list gives its exact top FastK
+    * plus boundary ties ([[SegmentShard.topCandidates]]: block-max pruned,
+    * bounds widened by the layer's bound scale, decoded outside the block
+    * memo), a candidate without a key row is dropped (as in
+    * [[ShardTail.select]]), and the salt's top FastK of their union leaves
+    * the task. The driver merges the salts' lists. Scores are
+    * [[Postings.idf]] × [[Postings.tfNorm]] at the current n and avgdl,
+    * quantized, as on every route.
     */
-  private def fastFor(spark: SparkSession, newest: IndexPaths): Map[String, FastList] =
-    if (!Files.exists(Paths.get(s"${newest.fastDir}/_SUCCESS"))) Map.empty
-    else {
-      import spark.implicits._
-      spark.read.schema(IndexBuilder.FastSchema).parquet(newest.fastDir)
-        .select("term", "df", "doc_ids", "tfs", "dls", "repos", "paths", "commits")
-        .as[(String, Long, Array[Long], Array[Int], Array[Long], Array[String], Array[String], Array[String])]
-        .collect()
-        .map { case (t, df, ids, tfs, dls, repos, paths, commits) =>
-          t -> FastList(df, ids, tfs, dls, repos, paths, commits)
-        }.toMap
-    }
+  private def rankFastLists(
+      shards: RDD[SegmentShard], keys: RDD[DocKeyShard], hot: Array[(String, Long)],
+      scales: Array[Double], stats: IndexStats): Map[String, FastList] = {
+    val (n, avgdl, k) = (stats.nDocs, stats.avgdl, IndexBuilder.FastK)
+    val perSalt = shards.zipPartitions(keys) { (segs, ks) =>
+      val keyShard = ks.next()
+      val layerShards = segs.toArray
+      layerShards.foreach(s => keyShard.requireSalt(s.salt))
+      hot.iterator.map { case (term, df) =>
+        val idf = Postings.idf(df, n)
+        val rows = layerShards.indices.iterator.flatMap { li =>
+          val i = layerShards(li).indexOf(term)
+          if (i < 0) Iterator.empty else layerShards(li).topCandidates(i, df, n, avgdl, k, scales(li))
+        }.flatMap { case (id, tf, dl) =>
+          val pos = keyShard.indexOf(id)
+          if (pos < 0) None
+          else Some((TailRow(term, k, BM25.quantize(idf * Postings.tfNorm(tf, dl, avgdl)),
+            keyShard.field(pos, 0), keyShard.field(pos, 1), keyShard.field(pos, 2)), id, tf, dl))
+        }.toArray
+        term -> rows.sorted(fastOrder).take(k)
+      }
+    }.collect()
+    val dfOf = hot.toMap
+    perSalt.groupBy(_._1).map { case (term, parts) =>
+      val top = parts.flatMap(_._2).sorted(fastOrder).take(k)
+      def str(key: TailRow => Array[Byte]) = top.map(r => new String(key(r._1), UTF_8))
+      term -> FastList(dfOf(term), top.map(_._2), top.map(_._3), top.map(_._4),
+        str(_.repo), str(_.path), str(_.commit))
+    }.filter(_._2.ids.nonEmpty)
+  }
 
   /** Drop cached readers for a root (used after rebuilds that invalidate it),
     * across all sessions: every pin (segment shards with their decoded

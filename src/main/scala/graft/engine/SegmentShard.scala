@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.index.Postings
 import graft.index.Postings.PostingsBlocks
 import java.util.Arrays
 import java.util.concurrent.atomic.AtomicReferenceArray
@@ -42,6 +43,21 @@ final class SegmentShard private (
 
   /** Block maxima of the sub-list at position `i`. */
   def blockMax(i: Int): Array[Double] = blockMaxes(i)
+
+  /** The exact top-`k` candidates of the sub-list at position `i`, plus
+    * their quantized-score boundary ties, as `(doc_id, tf, dl)`
+    * ([[Postings.topCandidatesByScore]]: `df` is the term's global df, `n`
+    * and `avgdl` the scoring stats, `boundScale` the layer's bound scale).
+    * Decoded from the encoded arrays, outside the block memo, so a caller
+    * that ranks every hot sub-list once pins none of its blocks.
+    */
+  def topCandidates(i: Int, df: Long, n: Long, avgdl: Double, k: Int,
+      boundScale: Double): Iterator[(Long, Int, Long)] =
+    Postings.topCandidatesByScore(counts(i), postings(i), dls(i), blockMaxes(i), blockDirs(i),
+      df, n, avgdl, k, boundScale)
+
+  /** Number of sub-lists whose block-lazy handle is memoized. */
+  private[graft] def memoized: Int = (0 until memo.length).count(memo.get(_) != null)
 
   /** The memoized block-lazy handle of the sub-list at position `i`: every
     * caller gets the same handle.

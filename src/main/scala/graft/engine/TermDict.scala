@@ -38,6 +38,11 @@ final class TermDict private (
     }
     0L
   }
+
+  /** Every term whose df is at least `minDf`, with its df, in byte order. */
+  def withDfAtLeast(minDf: Long): Iterator[(String, Long)] =
+    Iterator.range(0, size).filter(dfs(_) >= minDf)
+      .map(i => new String(bytes, offsets(i), offsets(i + 1) - offsets(i), UTF_8) -> dfs(i))
 }
 
 object TermDict {

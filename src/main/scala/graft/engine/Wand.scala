@@ -175,7 +175,7 @@ object Wand {
       m.routedAbsent.add(absentQs.size.toLong)
     }
 
-    // FAST SINGLE — entirely driver-local, ZERO Spark jobs (v7): the stored
+    // FAST SINGLE — entirely driver-local, ZERO Spark jobs (v7): the
     // prefix carries (repo, path, commit) and is already in the final
     // (score_r desc, key asc) order, so the answer is take(k) + scalar
     // re-scoring ([[Postings.idf]]/[[Postings.tfNorm]] mirror the Column

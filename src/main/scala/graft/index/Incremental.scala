@@ -23,8 +23,11 @@ import org.apache.spark.sql.functions._
   * indexes ONLY its fresh docs, through the same posting phases as the
   * full build ([[IndexBuilder.buildPostingsPhases]]), into its own layer
   * root (an [[IndexPaths]]: the fresh docs' salted segments, their docs
-  * sidecar and edges, the fast sidecar, the stats), and
-  * publishes a snapshot whose layer roots are `base layers ++ [out]`.
+  * sidecar and edges, the stats), and publishes a snapshot whose layer
+  * roots are `base layers ++ [out]`. An add writes no fast lists: a
+  * reader of the new root ranks them at the new stats from every layer
+  * ([[graft.engine.IndexReader.fastList]]), so an add pays for its batch,
+  * not for the whole index.
   * Base files are referenced through the snapshot ([[Snapshots]]), never
   * decoded, re-encoded or rewritten. Layers are doc-disjoint (J1): a
   * term's postings are the union of its layers' lists, its df their sum,
@@ -34,8 +37,8 @@ import org.apache.spark.sql.functions._
   *
   * An add's phases, tagged `add`: `stats` (one aggregate over the pinned
   * fresh docs), then, unless the batch is a replay, the build's posting
-  * phases over the fresh docs' unpinned tf rows, `docs-write`,
-  * `edges-write` and `fast-lists`.
+  * phases over the fresh docs' unpinned tf rows, `docs-write` and
+  * `edges-write`.
   *
   * Stats semantics: nDocs/avgdl count TOKEN-BEARING docs only, matching
   * [[IndexBuilder]] (zero-token docs get a lineage row with dl=0 but no
@@ -107,7 +110,7 @@ object Incremental {
         IndexBuilder.readStats(outPaths).contains(newStats) &&
         IndexBuilder.readJsonString(
           java.nio.file.Paths.get(outPaths.statsPath), "build_args").contains(publishArgs) &&
-        Seq(outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir, outPaths.fastDir)
+        Seq(outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir)
           .forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/_SUCCESS")))
       if (replayNoOp)
         System.err.println(s"[add] replay no-op: ${outPaths.root} already carries this batch ($publishArgs)")
@@ -162,8 +165,7 @@ object Incremental {
   private[graft] def fingerprint(rows: DataFrame): String = summarize(rows)._3
 
   /** The rewrite half of [[addBatch]] — the fresh docs' postings, docs
-    * and edges, and the fast-sidecar re-rank. Skipped entirely on a
-    * detected replay no-op.
+    * and edges. Skipped entirely on a detected replay no-op.
     */
   private def addBatchRewrite(
       spark: SparkSession,
@@ -176,10 +178,9 @@ object Incremental {
     def phase[A](name: String)(f: => A): A = IndexBuilder.phase(name, tag = "add")(f)
     // the fresh docs' (doc_id, term, tf, dl) rows through the build's own
     // posting phases: salted segments and manifests. A batch written here
-    // before (a replaced batch) is cleared first, so every salt is rebuilt;
-    // the live fast sidecar is left to the staged swap below. As in the
-    // build, the tf relation is not persisted: the segments phase is its
-    // one consumer.
+    // before (a replaced batch) is cleared first, so every salt is rebuilt.
+    // As in the build, the tf relation is not persisted: the segments phase
+    // is its one consumer.
     Seq(outPaths.segmentsDir, outPaths.manifestsDir)
       .foreach(d => IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d)))
     IndexBuilder.buildPostingsPhases(spark, Tokenizer.termFreqsWithDl(fresh), newStats, outPaths,
@@ -206,23 +207,6 @@ object Incremental {
       LinkIndex.nodesOf(mergedDocs(spark, base.snapshot.layers)),
       LinkIndex.nodesOf(spark.read.schema(IndexBuilder.DocsSchema).parquet(outPaths.docsDir))),
       outPaths.edgesDir))
-
-    // Re-rank the fast sidecar for the LAYERED root at the NEW avgdl, from
-    // every layer's lists: tfNorm ORDER is not avgdl-stable, so every hot
-    // term's prefix moves, not just the terms this batch touched (hot terms
-    // are few: df ≥ FastMinDf). Staged swap, not an in-place rebuild: the
-    // live snapshot may reference THIS fastDir (a replaced batch), so the
-    // new sidecar is built beside it and renamed in; a crash in the rename
-    // window turns the fast route off ([[graft.engine.IndexReader]]: no
-    // _SUCCESS → WAND, never a stale order) until the next add or compact.
-    val fastFinal = java.nio.file.Paths.get(outPaths.fastDir)
-    val fastStage = java.nio.file.Paths.get(outPaths.fastDir + ".next")
-    IndexBuilder.deleteRecursively(fastStage)
-    IndexBuilder.buildFastSidecar(spark, base.layers :+ (outPaths -> newStats), newStats, fastStage.toString,
-      tag = "add")
-    IndexBuilder.deleteRecursively(fastFinal)
-    java.nio.file.Files.move(fastStage, fastFinal,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** [[addBatch]] + automatic LSM housekeeping: when the resulting snapshot
@@ -255,8 +239,9 @@ object Incremental {
     * SAME phases as a from-scratch build
     * ([[IndexBuilder.buildPostingsPhases]], which regroups by
     * `(salt, term)`), so the compacted segments equal a from-scratch
-    * build's row for row. Writes the docs union and the fast sidecar, and
-    * publishes a single-layer snapshot. With
+    * build's row for row. Writes the docs union and the edges, and
+    * publishes a single-layer snapshot (its readers rank the fast lists,
+    * as for any root). With
     * `toRoot = None` the snapshot is published in place at `root`
     * (version+1, data under `root/compact-v<N>/`); old layer files become
     * unreferenced (kept on disk — time travel / concurrent readers,
@@ -274,7 +259,7 @@ object Incremental {
       case Some(r) => (IndexPaths(r), r, 1)
       case None => (IndexPaths(s"$root/compact-v${snap.version + 1}"), root, snap.version + 1)
     }
-    Seq(inner.segmentsDir, inner.docsDir, inner.manifestsDir, inner.edgesDir, inner.fastDir)
+    Seq(inner.segmentsDir, inner.docsDir, inner.manifestsDir, inner.edgesDir)
       .foreach(d => IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d)))
 
     // docs union: per-layer docId sets are disjoint (J1), content_sha,
@@ -302,7 +287,6 @@ object Incremental {
       .toDF("doc_id", "term", "tf", "dl")
     IndexBuilder.buildPostingsPhases(spark, tfd, stats, inner, s"compact v$publishVersion of $root",
       tag = "compact")
-    IndexBuilder.buildFastSidecar(spark, Seq(inner -> stats), stats, inner.fastDir, tag = "compact")
 
     // record the SOURCE's identity (its build_args carries the batch
     // fingerprint for incremental roots) so fixture-reuse guards can check

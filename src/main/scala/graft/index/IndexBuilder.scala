@@ -17,7 +17,7 @@ final case class IndexPaths(root: String) {
   val segmentsDir: String = s"$root/segments"   // (term, df, sum_tf, postings, dls, block_max, block_dir) partitioned by salt, bucket
   val indexDir: String = s"$root/index"         // never written (the merged view is Incremental.readMergedIndex); perfbench still sizes it
   val docsDir: String = s"$root/docs"           // (doc_id, repo, path, commit, lang, dl, content_sha, batch_id, cust)
-  val fastDir: String = s"$root/fast"           // impact-ordered top-FastK prefixes of hot terms (v6)
+  val fastDir: String = s"$root/fast"           // never written (fast lists are ranked by IndexReader); perfbench still sizes it
   val edgesDir: String = s"$root/edges"         // stored link graph (src_id, dst_id), layered newest-wins per src (v7)
   val manifestsDir: String = s"$root/manifests" // one JSON per salt partition (the checkpoint unit)
   val statsPath: String = s"$root/stats.json"
@@ -29,11 +29,13 @@ final case class IndexPaths(root: String) {
   * Stages:
   *   corpus scan → docId assign → docs sidecar (stats and edges from it) →
   *   tokenize/tf → per-(salt, term) posting build (Aggregator, one
-  *   shuffle) → segment write + per-salt manifest → fast lists → stats +
-  *   snapshot publish.
+  *   shuffle) → segment write + per-salt manifest → stats + snapshot
+  *   publish.
   * The salted segments are the layer's one posting copy. The global
   * per-term index is a view, not an artifact: [[Incremental.readMergedIndex]]
-  * groups the sub-lists by term through the merge Aggregator.
+  * groups the sub-lists by term through the merge Aggregator. The fast
+  * lists are not an artifact either: a reader ranks them from the segments
+  * and doc keys it pins ([[graft.engine.IndexReader.fastList]]).
   *
   * Salting (north rule): sub-postings are built per `(term, salt)` where
   * `salt = pmod(xxhash64(doc_id), numSalts)`, so a hot term's postings are
@@ -86,7 +88,12 @@ object IndexBuilder {
     * merged list, which a summed df would count twice, so v8 roots are
     * refused and rebuilt. Snapshot metadata stores layer roots relative to
     * the snapshot's root, and the fast sidecar stores each term's global
-    * df.
+    * df. Later v9 roots carry no `fast/` at all: the reader ranks every fast
+    * list at its first lookup ([[graft.engine.IndexReader.fastList]]), so
+    * no build, add or compaction writes one. The version stays 9: no reader
+    * reads `fast/`, so an older v9 root that still holds one serves exactly
+    * as a new one, and a binary that still required `fast/_SUCCESS` sees a
+    * new root as incomplete and rebuilds it.
     */
   val FormatVersion: Int = 9
 
@@ -98,29 +105,10 @@ object IndexBuilder {
   val FastK: Int = 300
 
   /** Only terms with df ≥ this get a fast list — shorter lists are cheap
-    * to evaluate in full, and the sidecar stays a small fraction of the
-    * index (hot terms only).
+    * to evaluate in full, and the driver-resident lists stay few (hot
+    * terms only).
     */
   val FastMinDf: Long = 4096L
-
-  /** On-disk schema of the fast sidecar (bucket is the partition column).
-    * v7 adds the natural doc keys per prefix entry: the arrays are parallel
-    * and already in the FINAL total order (score_r desc, key asc), so a
-    * single-fast-term query is `take(k)` + driver-side scoring — no index
-    * job, no docs join.
-    */
-  val FastSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("term", StringType), StructField("df", LongType),
-      StructField("doc_ids", ArrayType(LongType, containsNull = false)),
-      StructField("tfs", ArrayType(IntegerType, containsNull = false)),
-      StructField("dls", ArrayType(LongType, containsNull = false)),
-      StructField("repos", ArrayType(StringType, containsNull = false)),
-      StructField("paths", ArrayType(StringType, containsNull = false)),
-      StructField("commits", ArrayType(StringType, containsNull = false)),
-      StructField("bucket", IntegerType)))
-  }
 
   /** On-disk schema of a segments layer (salt + bucket are partition dirs).
     * Layered WAND reads specify it explicitly: an empty delta layer has no
@@ -225,8 +213,8 @@ object IndexBuilder {
   }
 
   /** A build is complete iff stats exist at the current format version,
-    * every salt has its manifest, the v7 sidecar artifacts (fast prefixes,
-    * stored edges) are written, and a snapshot is published — the one
+    * every salt has its manifest, the stored edges are written, and a
+    * snapshot is published — the one
     * completeness watermark (ST5): complete and published mean the same
     * thing. Each build phase is individually `_SUCCESS`-guarded, so a root
     * failing only some checks (a crash between the stats write and the
@@ -236,7 +224,6 @@ object IndexBuilder {
   def isComplete(paths: IndexPaths, numSalts: Int = DefaultNumSalts): Boolean =
     readStats(paths).exists(s => s.version == FormatVersion && s.numSalts == numSalts) &&
       completedSalts(paths) == (0 until numSalts).toSet &&
-      Files.exists(Paths.get(s"${paths.fastDir}/_SUCCESS")) &&
       Files.exists(Paths.get(s"${paths.edgesDir}/_SUCCESS")) &&
       Snapshots.read(paths.root).isDefined
 
@@ -368,12 +355,8 @@ object IndexBuilder {
     }
 
     // Salted segment build, resumable per salt — the tokenizer feeds the
-    // salted groupBy directly, no intermediate persist. A rebuilt salt
-    // invalidates the fast lists ranked from the segments.
-    if (completedSalts(paths).size < numSalts) deleteRecursively(Paths.get(paths.fastDir))
+    // salted groupBy directly, no intermediate persist.
     buildPostingsPhases(spark, Tokenizer.termFreqsWithDl(c), stats, paths, buildArgs, tag = "build")
-    if (!Files.exists(Paths.get(s"${paths.fastDir}/_SUCCESS")))
-      buildFastSidecar(spark, Seq(paths -> stats), stats, paths.fastDir, tag = "build")
 
     if (persistCorpus) c.unpersist()
     // a (re)build invalidates any resident reader on this root
@@ -408,10 +391,8 @@ object IndexBuilder {
     * relation — the one posting-write path, shared by the full build
     * (tokenizer output), [[Incremental.addBatch]] (the fresh docs' rows)
     * and [[Incremental.compact]] (every layer's decoded segments).
-    * Resumable per salt. The fast sidecar is the caller's: an add must not
-    * touch the live one of a published layer. Its phases (`segments`,
-    * `manifests`) report under the caller's `tag` (`build`, `add` or
-    * `compact`).
+    * Resumable per salt. Its phases (`segments`, `manifests`) report under
+    * the caller's `tag` (`build`, `add` or `compact`).
     */
   private[index] def buildPostingsPhases(
       spark: SparkSession,
@@ -483,89 +464,6 @@ object IndexBuilder {
           "term_count" -> 0, "token_count" -> 0, "posting_count" -> 0,
           "build_args" -> buildArgs, "wall_clock_ms" -> wallMs))
       }
-    }
-  }
-
-  /** Impact-ordered fast lists (v6): one distributed pass extracts each
-    * hot term's top-[[FastK]] postings BY THE FINAL TOTAL ORDER —
-    * (quantized score desc, natural key asc), the same [[graft.engine.TopKAggExprs]]
-    * heap aggregate + the same BM25 Column expressions as every query
-    * path — so the stored prefix IS the term's final top-FastK, ties
-    * resolved identically by construction. (A raw-score boundary cut is
-    * NOT viable here: an ultra-hot term's idf ≈ ln(1 + 0.5/(N+0.5)) makes
-    * its whole score range narrower than any epsilon at large N — the
-    * tie-dominated case must be broken by natural keys, exactly like the
-    * final ranking.) Single-term queries then serve in O(k) instead of
-    * O(df): block-max pruning cannot fire on a flat score distribution,
-    * and at 10^12 docs an O(N) hot-term query is not servable.
-    *
-    * `layers` are a root's layers with the stats each was encoded at; the
-    * sidecar is ranked at the current `stats`. The full build and
-    * compaction pass their one layer. [[Incremental.addBatch]] passes every
-    * layer and rebuilds the sidecar whole on each add: tfNorm ORDER is not
-    * avgdl-stable, so every hot term's prefix moves when avgdl moves. The
-    * lists read are every layer's salted segments: a term's postings are
-    * the union of its doc-disjoint (layer, salt) sub-lists, and it is hot
-    * when its global df — their summed df — reaches [[FastMinDf]]. Each
-    * sub-list contributes its own top candidates, scored with the global
-    * idf, and their union holds the term's top FastK. The phase reports
-    * under the caller's `tag`.
-    */
-  private[index] def buildFastSidecar(
-      spark: SparkSession,
-      layers: Seq[(IndexPaths, IndexStats)],
-      stats: IndexStats,
-      fastDir: String,
-      tag: String): Unit = {
-    import spark.implicits._
-    val n = stats.nDocs
-    val avgdl = stats.avgdl
-    phase("fast-lists", tag) {
-      // each layer's rows with its bound scale: block maxima encoded at an
-      // older (smaller) avgdl are widened by max(1, avgdl / layer avgdl)
-      // (tfNorm grows with avgdl; see [[Incremental]]'s monotonicity proof)
-      val rows = layers.map { case (l, ls) =>
-        spark.read.schema(SegmentsSchema).parquet(l.segmentsDir).drop("salt")
-          .withColumn("scale", lit(math.max(1.0, avgdl / ls.avgdl)))
-      }.reduce(_ unionByName _)
-      // the hot terms' summed df (few rows) is broadcast back onto their
-      // sub-lists
-      val withDf = rows.join(broadcast(rows.groupBy("term").agg(sum("df").as("global_df"))
-        .filter(col("global_df") >= FastMinDf)), "term")
-      // Block-max-pruned candidate selection (r6, VERDICT r5 #2): instead of
-      // full-decoding every hot list, emit only the postings whose quantized
-      // score can still make (or tie) the term's top-FastK — blocks visited
-      // in descending blockMax order, pruned with the same idf×blockMax
-      // bound WAND uses ([[Postings.topCandidatesByScore]]; exact, ties
-      // included, no new metadata). The downstream docKeys join + key-asc
-      // tiebreak heap then see candidate-sized input, not Σ df_hot rows.
-      val fastK = FastK
-      val hot = withDf
-        .select("term", "df", "global_df", "postings", "dls", "block_max", "block_dir", "bucket", "scale")
-        .as[(String, Long, Long, Array[Byte], Array[Byte], Seq[Double], Array[Byte], Int, Double)]
-        .flatMap { case (term, count, df, p, d, bm, dir, bucket, scale) =>
-          Postings.topCandidatesByScore(count, p, d, bm.toArray, dir, df, n, avgdl, fastK, scale)
-            .map { case (id, tf, dl) => (term, df, bucket, id, tf, dl) }
-        }
-        .toDF("term", "df", "bucket", "doc_id", "tf", "dl")
-      val docKeys = Incremental.mergedDocs(spark, layers.map(_._1)).select("doc_id", "repo", "path", "commit")
-      val scoreR = graft.score.BM25.quantize(graft.score.BM25.score(
-        col("tf"), col("df"), col("dl"), lit(n), lit(avgdl)))
-      hot.join(docKeys, "doc_id")
-        .groupBy("term", "df", "bucket")
-        .agg(graft.engine.TopKAggExprs.topK(lit(FastK), scoreR,
-          struct(col("repo"), col("path"), col("commit"),
-            col("doc_id"), col("tf"), col("dl"))).as("hits"))
-        .select(col("term"), col("df"),
-          transform(col("hits"), h => h.getField("doc_id")).as("doc_ids"),
-          transform(col("hits"), h => h.getField("tf")).as("tfs"),
-          transform(col("hits"), h => h.getField("dl")).as("dls"),
-          transform(col("hits"), h => h.getField("repo")).as("repos"),
-          transform(col("hits"), h => h.getField("path")).as("paths"),
-          transform(col("hits"), h => h.getField("commit")).as("commits"),
-          col("bucket"))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(fastDir)
     }
   }
 

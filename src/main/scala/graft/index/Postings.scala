@@ -86,11 +86,12 @@ object Postings {
     * given n/avgdl) is ≥ the k-th best quantized score — i.e. the final
     * top-k PLUS all boundary ties, so a downstream (score desc, key asc)
     * selection over the emitted rows equals the same selection over the
-    * full list. Used by the fast-sidecar build (VERDICT r5 "what's wrong
-    * #2"): blocks are visited in descending block-max order and pruned with
-    * the same `idf × blockMax` bound WAND uses — a block whose quantized
-    * bound cannot reach the current k-th best is skipped WITHOUT decoding
-    * (pass 1) / emitting (pass 2). No new metadata, exact result.
+    * full list. Used by the reader's fast-list ranking
+    * ([[graft.engine.SegmentShard.topCandidates]]): blocks are visited in
+    * descending block-max order and pruned with the same `idf × blockMax`
+    * bound WAND uses — a block whose quantized bound cannot reach the
+    * current k-th best is skipped WITHOUT decoding (pass 1) / emitting
+    * (pass 2). No new metadata, exact result.
     *
     * `count` is the list's length and `df` the term's global df, which
     * sets the idf: a layered root's term holds one list per layer, each

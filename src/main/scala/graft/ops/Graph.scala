@@ -73,15 +73,29 @@ object Graph {
     * Iteration stops EARLY when a frontier empties (all reachable found).
     */
   def reach(edges: DataFrame, roots: DataFrame, maxDepth: Int): DataFrame = {
+    validateDepth(maxDepth)
+    val level0 = rootLevel(roots)
+    try reachFrom(edges, level0, maxDepth) finally level0.unpersist()
+  }
+
+  private def validateDepth(maxDepth: Int): Unit =
     if (maxDepth < 1 || maxDepth > MaxDepth)
       throw new IllegalArgumentException(
         s"reach: depth must be in [1, $MaxDepth], got $maxDepth " +
           "(the reference's depth-validation analog, dgraph.go:86-90)")
+
+  /** Level 0 from `roots`, persisted: the caller releases it. */
+  private def rootLevel(roots: DataFrame): DataFrame =
+    roots.select(col("root_id"), col("doc_id")).distinct()
+      .withColumn("depth", lit(0)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** [[reach]]'s BFS from a `level0` the caller owns: it releases only the
+    * levels it persisted, so two traversals can share one level 0.
+    */
+  private def reachFrom(edges: DataFrame, level0: DataFrame, maxDepth: Int): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val handles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var visited = roots.select(col("root_id"), col("doc_id")).distinct()
-      .withColumn("depth", lit(0)).persist(lvl)
-    handles += visited
+    var visited = level0
     var frontier = visited
     var d = 1
     var exhausted = false
@@ -181,7 +195,6 @@ object Graph {
     // The reverse direction gets its own dst-keyed copy — the stored-graph
     // equivalent of the reference's materialized `@reverse` index
     // (dgraph.go:45) — instead of column-flipping one artifact per hop.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // persistPartitioned: cached partitioning must be STATICALLY visible or
     // every hop join re-exchanges the cached side anyway (see the helper's
     // doc in [[graft.engine.IndexReader]])
@@ -195,16 +208,18 @@ object Graph {
     // (per-hop count + persist on frontier-sized data), so their wall cost
     // is action-latency-bound, not data-bound — overlap them (guide §2.6:
     // concurrent independent jobs back-fill each other's stragglers; FIFO
-    // scheduling keeps both progressing). `roots` is persisted first so the
-    // racing level-0 materializations don't duplicate its derivation.
-    val rootsP = roots.persist(lvl)
-    phase("edges-pin+roots") { fwdEdges.count(); revEdges.count(); rootsP.count() }
+    // scheduling keeps both progressing). Both directions share ONE
+    // persisted level 0, released after both finish (each persisting its
+    // own cached the same plan twice).
+    validateDepth(maxDepth)
+    val level0 = rootLevel(roots)
+    phase("edges-pin+roots") { fwdEdges.count(); revEdges.count(); level0.count() }
     val (fwdReach, revReach) = phase("bfs-both-directions") {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      val f = Future(reach(fwdEdges, rootsP, maxDepth))
-      val r = Future(reach(revEdges, rootsP, maxDepth))
+      val f = Future(reachFrom(fwdEdges, level0, maxDepth))
+      val r = Future(reachFrom(revEdges, level0, maxDepth))
       (Await.result(f, Duration.Inf), Await.result(r, Duration.Inf))
     }
     val fwd = fwdReach.withColumn("direction", lit("out"))
@@ -233,8 +248,15 @@ object Graph {
     val out = phase("label+sort-tail")(
       joined.orderBy("direction", "root_repo", "root_path", "path")
         .localCheckpoint(true))
-    joined.unpersist(); fwdReach.unpersist(); revReach.unpersist()
-    fwdEdges.unpersist(); revEdges.unpersist(); rootsP.unpersist()
+    joined.unpersist(); release(fwdReach); release(revReach)
+    fwdEdges.unpersist(); revEdges.unpersist(); level0.unpersist()
     out
   }
+
+  /** Drops a traversal result's `localCheckpoint` blocks, which
+    * `Dataset.unpersist` does not reach.
+    */
+  private[graft] def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collect { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 }

@@ -4,10 +4,10 @@ import graft.engine.{IndexReader, NaiveSearch, QueryMetrics, Wand}
 import graft.index.{Incremental, IndexBuilder, IndexPaths, Postings}
 import graft.model.Query
 import graft.queries.QuerySet
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The v6 impact-ordered fast path: hot single-term queries serve from the
   * per-term top-FastK prefix in O(k) — the fix for the bench finding that
@@ -15,10 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * evaluated every candidate with 0 skips). Pins: prefix existence +
   * boundary-tie capture, rank identity vs the naive oracle plan with the
   * fast route ENGAGED (candidate counter = prefix size, not df), and the
-  * fallbacks (rare term, absent term, k > FastK, scoped query, a sidecar
-  * without `_SUCCESS`). The fast lists and the term dictionary live on the
-  * driver: after a reader's first lookup, fast and absent requests run no
-  * job. Also: concurrent routed, WAND and AND requests on one reader,
+  * fallbacks (rare term, absent term, k > FastK, scoped query). The fast
+  * lists and the term dictionary live on the driver, loaded by the
+  * reader's first lookup: after it, fast and absent requests run no job.
+  * Also: concurrent routed, WAND and AND requests on one reader,
   * racing on the segment shards' first decodes or on a fresh reader's
   * first load, answer exactly as sequential ones.
   */
@@ -144,22 +144,6 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs === 0, s"fastList after the first lookup scheduled $jobs jobs")
   }
 
-  test("a sidecar without _SUCCESS turns the fast route off: the shard job answers every query") {
-    val intact = Wand.topKAt(spark, paths, QuerySet.all).collect().toSeq
-    val copy = "target/graft-index/test-fast-no-success"
-    Bench.deleteTree(copy)
-    FileTrees.copy(paths.root, copy)
-    val copied = IndexPaths(copy)
-    Files.delete(Paths.get(s"${copied.fastDir}/_SUCCESS"))
-    val reader = IndexReader.get(spark, copied)
-    assert(reader.fastList("func").isEmpty, "a sidecar without _SUCCESS was served")
-    val m = QueryMetrics(spark)
-    val got = Wand.topKAt(spark, copied, QuerySet.all, Some(m)).collect().toSeq
-    assert(m.routedFast.value === 0L && m.routedHybrid.value === 0L, s"routes: ${m.snapshot}")
-    assert(got === intact, "the shard job answered differently from the fast route")
-    IndexReader.invalidate(copy)
-  }
-
   test("a fresh layered reader after its first request: fast and absent run no job, a cold identifier one") {
     IndexReader.invalidate(layered.root)
     val reader = IndexReader.get(spark, layered)
@@ -241,11 +225,11 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.map(key).toSeq === want.map(key).toSeq, "hybrid answer diverged from the oracle plan")
   }
 
-  test("layered root: addBatch re-ranks the sidecar, fast route engages at the new avgdl") {
+  test("layered root: the reader ranks fast lists at the new avgdl, fast route engages") {
     // the steady state at scale: between an add and the next compact the
     // root is layered, and hot single-term queries must STILL be O(k) —
-    // the sidecar is whole-re-ranked at the post-add stats by addBatch
-    // (tfNorm order is not avgdl-stable, so the base build's prefixes
+    // the reader ranks every fast list at the post-add stats from every
+    // layer (tfNorm order is not avgdl-stable, so the base's prefixes
     // cannot be reused)
     val outPaths = layered
     val full = graft.corpus.Corpus.corpus(spark, sfDir)
@@ -298,9 +282,10 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Runs 8 request threads × 3 rounds of (WAND, hybrid, AND) batches on
     * a fresh reader, warmed first by `warm`, and checks every answer against
-    * the sequential one. Returns the Spark jobs and SQL jobs the threads ran.
+    * the sequential one. Returns the Spark jobs and SQL jobs the threads
+    * ran, and the descriptions of those jobs that carry one.
     */
-  private def race(warm: IndexReader => Unit): (Int, Int) = {
+  private def race(warm: IndexReader => Unit): (Int, Int, Seq[String]) = {
     val hybrid = Seq(Query("hyb", Seq("func", "handler_0_3"), 10))
     def batches(): Seq[Array[Row]] = Seq(
       Wand.topKAt(spark, paths, QuerySet.all, mode = Wand.WandOnly).collect(),
@@ -321,9 +306,18 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
         } catch { case t: Throwable => errors.add(t) }
       })
     }
-    val (_, jobs, _, sql) = SparkWork(spark) { threads.foreach(_.start()); threads.foreach(_.join()) }
+    val described = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(d => described.add(d))
+    }
+    spark.sparkContext.addSparkListener(l)
+    val (_, jobs, _, sql) =
+      try SparkWork(spark) { threads.foreach(_.start()); threads.foreach(_.join()) }
+      finally spark.sparkContext.removeSparkListener(l)
     assert(errors.isEmpty, s"a concurrent request diverged: ${Option(errors.peek()).map(_.toString)}")
-    (jobs, sql)
+    (jobs, sql, described.asScala.toSeq)
   }
 
   test("8 concurrent request threads on one reader answer as sequential requests do") {
@@ -333,11 +327,13 @@ class FastPathSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("8 concurrent first requests on a fresh reader load the dictionary and fast lists once") {
-    val (jobs, sql) = race(_ => ())
-    // every batch runs one shard job; beside them, one dictionary job and
-    // one sidecar read (the only SQL job)
-    assert(sql === 1, s"the fast sidecar was read by $sql SQL jobs")
-    assert(jobs - sql === 1 + 8 * 3 * 3, s"$jobs jobs: the dictionary was not loaded exactly once")
+    val (jobs, sql, described) = race(_ => ())
+    // every batch runs one shard job; beside them, the load's two jobs ran
+    // once each: the dictionary job and the fast-list ranking job
+    assert(described.sorted === Seq(IndexReader.DictionaryJob, IndexReader.RankingJob).sorted,
+      s"the load ran the jobs $described")
+    assert(jobs === 2 + 8 * 3 * 3, s"$jobs jobs: the load did not run exactly once")
+    assert(sql === 0, s"the load ran $sql SQL jobs")
   }
 
   test("k > FastK falls back to the exact path (and still matches naive)") {

@@ -96,4 +96,48 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     // depth 0 rows are the roots themselves in BOTH directions
     out.filter(_.getInt(4) == 0).foreach(r => assert(r.getString(2) === r.getString(3)))
   }
+
+  test("stored and corpus traversals cache each plan once and release every pin") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // two docs per (root repo, module): module n imports module n + 1
+    val s = spark
+    import s.implicits._
+    val corpus = (for {
+      repo <- Graph.RootRepos; n <- 0 until Graph.CustModulus; copy <- 0 until 2
+    } yield (repo, f"m$n%02d-$copy.go", "c0ffee000000", "go", s"cust_$n func body$copy"))
+      .toDF("repo", "path", "commit", "lang", "content")
+    val root = java.nio.file.Files.createTempDirectory("graft-graph").toString
+    graft.index.IndexBuilder.build(spark, corpus, graft.index.IndexPaths(root), numSalts = 4, numBuckets = 4)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graph-cache-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = { warnings.add(e.getMessage.getFormattedMessage); () }
+    }
+    appender.start()
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger("org.apache.spark.sql.execution.CacheManager")
+    val prevLevel = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    val sc = spark.sparkContext
+    try {
+      val baseline = sc.getPersistentRDDs.keySet
+      Seq(Graph.reachStored(spark, root), Graph.reachBfs(spark, corpus)).foreach { out =>
+        assert(out.collect().nonEmpty)
+        Graph.release(out)
+      }
+      val cached = warnings.toArray.map(_.toString).filter(_.contains("already"))
+      assert(cached.isEmpty, s"a traversal cached one plan twice: ${cached.toSeq}")
+      assert(sc.getPersistentRDDs.keySet === baseline,
+        s"a traversal left persisted RDDs: ${(sc.getPersistentRDDs.keySet -- baseline).toSeq}")
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(prevLevel)
+      appender.stop()
+      graft.engine.IndexReader.invalidate(root)
+      Bench.deleteTree(root)
+    }
+  }
 }

@@ -16,7 +16,8 @@ import scala.jdk.CollectionConverters._
   *  2. the delta layer holds ONLY the fresh docs' postings: its terms, the
   *     doc ids decoded from its segments, and its Σ df;
   *  3. the layered read-back (the J2 merge view) equals a from-scratch
-  *     full build's byte for byte, no root holds a materialized `index/`,
+  *     full build's byte for byte, no root (a compacted one included)
+  *     holds a materialized `index/` or a `fast/`,
   *     and the stats equal the full build's exactly (token-bearing
   *     docs only, dead docs excluded — P7); the delta docs sidecar's dl
   *     agrees with its postings' dl;
@@ -115,7 +116,9 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.tokenize.Tokenizer.termFreqsWithDl(freshDocs).count())
 
     // 3a. merged view == the from-scratch full build's view, decoded and
-    // byte for byte; the view is computed, so no layer root holds index/
+    // byte for byte; the view is computed, so no layer root holds index/.
+    // Fast lists are ranked by the reader, so no build, add or compaction
+    // root holds fast/ either
     val fullPaths = IndexPaths(s"$root/full")
     IndexBuilder.build(spark, corpusOf((base ++ add).distinct), fullPaths, buildArgs = "delta-spec-full")
     val mergedView = Incremental.readMergedIndex(spark, outPaths.root)
@@ -125,8 +128,12 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val differing = PostingRows.differingKeys(PostingRows.of(mergedView, Seq("term"), PostingRows.Columns),
       PostingRows.of(fullView, Seq("term"), PostingRows.Columns))
     assert(differing.isEmpty, s"${differing.size} terms' rows differ from the full build's view: $differing")
-    Seq(basePaths, outPaths, fullPaths).foreach(p =>
-      assert(!Files.exists(Paths.get(p.indexDir)), s"${p.root} holds an index/ dir"))
+    val compacted = IndexPaths(s"$root/compacted")
+    Incremental.compact(spark, outPaths.root, Some(compacted.root))
+    Seq(basePaths, outPaths, fullPaths, compacted).foreach { p =>
+      assert(!Files.exists(Paths.get(p.indexDir)), s"${p.root} holds an index/ dir")
+      assert(!Files.exists(Paths.get(p.fastDir)), s"${p.root} holds a fast/ dir")
+    }
 
     // 3b. stats count token-bearing docs only (2 base + 1 fresh; dead docs
     // excluded), and equal the full build's exactly
@@ -243,7 +250,7 @@ class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
   }
 
   private def artifactShas(paths: IndexPaths): Map[String, String] =
-    Seq(paths.segmentsDir, paths.docsDir, paths.edgesDir, paths.fastDir)
+    Seq(paths.segmentsDir, paths.docsDir, paths.edgesDir)
       .flatMap { d =>
         Files.walk(Paths.get(d)).iterator().asScala
           .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
@@ -276,18 +283,9 @@ class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
     assert(mtimes2 == mtimes1, "replay no-op must not rewrite the delta segments files")
 
     // a DIFFERENT batch over the same (base, out) pair must not be skipped —
-    // and the served content must reflect the new batch. The published
-    // layer keeps its fast sidecar through every phase of the rewrite: the
-    // new one is staged beside it and swapped in after the last phase
+    // and the served content must reflect the new batch
     val add2 = base ++ Seq("c.go" -> "zeta eta theta alpha", "d.go" -> "iota kappa")
-    val fastSeen = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-    val prevHook = IndexBuilder.phaseHook
-    IndexBuilder.phaseHook = (_, name, _) =>
-      fastSeen += name -> Files.exists(Paths.get(s"${outPaths.fastDir}/_SUCCESS"))
-    try Incremental.addBatch(spark, basePaths, corpusOf(add2), outPaths)
-    finally IndexBuilder.phaseHook = prevHook
-    assert(fastSeen.map(_._1).contains("segments") && fastSeen.forall(_._2),
-      s"the live fast sidecar was missing after a phase: $fastSeen")
+    Incremental.addBatch(spark, basePaths, corpusOf(add2), outPaths)
     val docs = Incremental.readMergedDocs(spark, outPaths.root)
       .select("path").collect().map(_.getString(0)).toSet
     assert(docs == Set("a.go", "b.go", "c.go", "d.go"),

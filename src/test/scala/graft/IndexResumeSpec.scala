@@ -150,12 +150,14 @@ class IndexResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(IndexBuilder.isComplete(p))
     assert(IndexBuilder.readStats(p).get.version == IndexBuilder.FormatVersion)
     assert(indexContent(p) == single, "format-wiped rebuild differs from clean build")
-    // the v7 sidecars must be real, not empty re-stamps: edges non-empty and
-    // the fast sidecar readable through the CURRENT schema with doc keys
+    // the rebuilt root must be real, not an empty re-stamp: edges non-empty
+    // and its reader's fast lists carrying doc keys
     assert(spark.read.parquet(p.edgesDir).count() > 0)
-    val fastRow = spark.read.schema(IndexBuilder.FastSchema).parquet(p.fastDir)
-      .filter(org.apache.spark.sql.functions.col("repos").isNotNull)
-    assert(fastRow.count() > 0, "rebuilt fast sidecar lacks v7 doc-key columns")
+    val fast = IndexReader.get(spark, p).fastList("func")
+    assert(fast.exists(f => f.ids.nonEmpty && Seq(f.repos, f.paths, f.commits).forall(a =>
+      a.length == f.ids.length && a.forall(k => k != null && k.nonEmpty))),
+      "the rebuilt root's fast list of func lacks doc keys")
+    IndexReader.invalidate(root)
     deleteTree(root)
   }
 

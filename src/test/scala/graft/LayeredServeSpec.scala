@@ -171,7 +171,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!snap.layers.contains(basePaths),
       "compacted snapshot still references the base layer")
     val cReader = IndexReader.get(spark, outPaths)
-    assert(cReader.layers.size === 1 && cReader.newest.boundScale === 1.0)
+    assert(cReader.layers.size === 1 && cReader.layers.last.boundScale === 1.0)
     assert(rows(Wand.topKAt(spark, outPaths, queries, mode = Wand.Exhaustive)) === naive)
     assert(rows(Wand.topKAt(spark, outPaths, queries)) === naive)
 
@@ -179,11 +179,11 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     IndexBuilder.build(spark, corpusOf(all), fullPaths, buildArgs = "layered-spec-full")
     def segmentRows(p: IndexPaths) = PostingRows.of(
       spark.read.schema(IndexBuilder.SegmentsSchema).parquet(p.segmentsDir), Seq("salt", "term"), PostingRows.Columns)
-    val compacted = segmentRows(cReader.newest.paths)
+    val compacted = segmentRows(cReader.layers.last.paths)
     val differing = PostingRows.differingKeys(compacted, segmentRows(fullPaths))
     assert(compacted.nonEmpty && differing.isEmpty,
       s"${differing.size} (salt, term) rows differ from the full build's, e.g. ${differing.take(3)}")
-    Seq(basePaths, outPaths, out2, cReader.newest.paths, fullPaths).foreach(p =>
+    Seq(basePaths, outPaths, out2, cReader.layers.last.paths, fullPaths).foreach(p =>
       assert(!Files.exists(Paths.get(p.indexDir)), s"${p.root} holds an index/ dir"))
   }
 
@@ -316,7 +316,7 @@ class LayeredServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(Wand.topKAt(spark, o2, queries)) === naive)
   }
 
-  test("fast sidecar of a layered root ranks by the global df: a term hot only across layers gets a prefix") {
+  test("fast lists rank by the global df: a term hot only across layers gets one") {
     // each layer's "hotw" list is below FastMinDf, their sum is above it;
     // the delta's docs are longer, so the base layer's bounds are rescaled
     val per = 2100

@@ -4,7 +4,7 @@ import graft.index.Postings
 import graft.score.BM25
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r6: the block-max-pruned fast-sidecar candidate selection
+/** r6: the block-max-pruned fast-list candidate selection
   * ([[Postings.topCandidatesByScore]]) must be EXACT — equal to the
   * brute-force "every posting whose quantized score ≥ the k-th best
   * quantized score" set, ties included — across flat (tie-dominated),
