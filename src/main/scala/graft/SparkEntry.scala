@@ -407,19 +407,20 @@ object SparkEntry {
     // recursive CTE with min(depth).
     "graph_reach_bfs" -> ((s, dir) => graft.ops.Graph.reachBfs(s, Corpus.corpus(s, dir))),
 
-    // The SAME traversal served from the STORED graph artifacts of the
-    // LAYERED incremental root — nodes from the docs sidecar, edges from
-    // the persisted newest-wins `edges/` layers (v7): no content scan, no
-    // per-query edge re-derivation (the reference traverses its stored
+    // The SAME traversal over the STORED docs of the LAYERED incremental
+    // root: each doc's link was extracted once at ingest (the docs' `cust`
+    // column), and the traversal resolves it against the canon of the
+    // merged docs — no content scan (the reference traverses its stored
     // `links` relation, dgraph.go:62-92). Matching the from-scratch oracle
-    // proves the stored graph survived an addBatch intact.
+    // proves the stored links survived an addBatch intact.
     "graph_reach_stored" -> ((s, dir) =>
       graft.ops.Graph.reachStored(s, ensureIncr(s, dir).root)),
 
-    // The stored edge relation itself after an incremental add, key-labeled:
-    // base edges built on the 80% slice, delta layer carrying the fresh
-    // docs' edges + canon-change rewrites, resolved newest-wins per src —
-    // must equal DuckDB's from-scratch derivation over the FULL corpus.
+    // The edge relation itself after an incremental add, key-labeled: the
+    // view over the merged docs of the base (the 80% slice) and the delta
+    // layer, so a fresh doc that takes over a module's canon retargets the
+    // base docs that link to it — must equal DuckDB's from-scratch
+    // derivation over the FULL corpus.
     "graph_edges_incr" -> ((s, dir) => {
       val out = ensureIncr(s, dir)
       val docs = graft.index.Incremental.readMergedDocs(s, out.root)

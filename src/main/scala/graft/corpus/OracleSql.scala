@@ -163,9 +163,10 @@ object OracleSql {
   }
 
   /** The full link-edge relation over the corpus, key-labeled — the oracle
-    * for the STORED `edges/` artifact (built at index time, maintained
-    * LSM-style by addBatch, resolved newest-wins per src): the stored
-    * relation must equal this from-scratch derivation exactly.
+    * for the edge relation of a layered root
+    * ([[graft.index.LinkIndex.readMergedEdges]], a view over the links its
+    * docs layers store): it must equal this from-scratch derivation
+    * exactly.
     */
   def graphEdges(custModulus: Int): String =
     s"""WITH $corpusCte,

@@ -23,11 +23,13 @@ import org.apache.spark.sql.functions._
   * indexes ONLY its fresh docs, through the same posting phases as the
   * full build ([[IndexBuilder.buildPostingsPhases]]), into its own layer
   * root (an [[IndexPaths]]: the fresh docs' salted segments, their docs
-  * sidecar and edges, the stats), and publishes a snapshot whose layer
-  * roots are `base layers ++ [out]`. An add writes no fast lists: a
-  * reader of the new root ranks them at the new stats from every layer
-  * ([[graft.engine.IndexReader.fastList]]), so an add pays for its batch,
-  * not for the whole index.
+  * sidecar, the stats), and publishes a snapshot whose layer roots are
+  * `base layers ++ [out]`. An add writes no fast lists: a reader of the
+  * new root ranks them at the new stats from every layer
+  * ([[graft.engine.IndexReader.fastList]]). Nor does it write edges: the
+  * fresh docs carry their links (`cust`), and the link graph is derived
+  * from the merged docs at read time ([[LinkIndex.readMergedEdges]]). So
+  * an add pays for its batch, not for the whole index.
   * Base files are referenced through the snapshot ([[Snapshots]]), never
   * decoded, re-encoded or rewritten. Layers are doc-disjoint (J1): a
   * term's postings are the union of its layers' lists, its df their sum,
@@ -37,8 +39,7 @@ import org.apache.spark.sql.functions._
   *
   * An add's phases, tagged `add`: `stats` (one aggregate over the pinned
   * fresh docs), then, unless the batch is a replay, the build's posting
-  * phases over the fresh docs' unpinned tf rows, `docs-write` and
-  * `edges-write`.
+  * phases over the fresh docs' unpinned tf rows and `docs-write`.
   *
   * Stats semantics: nDocs/avgdl count TOKEN-BEARING docs only, matching
   * [[IndexBuilder]] (zero-token docs get a lineage row with dl=0 but no
@@ -110,14 +111,14 @@ object Incremental {
         IndexBuilder.readStats(outPaths).contains(newStats) &&
         IndexBuilder.readJsonString(
           java.nio.file.Paths.get(outPaths.statsPath), "build_args").contains(publishArgs) &&
-        Seq(outPaths.segmentsDir, outPaths.docsDir, outPaths.edgesDir)
+        Seq(outPaths.segmentsDir, outPaths.docsDir)
           .forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/_SUCCESS")))
       if (replayNoOp)
         System.err.println(s"[add] replay no-op: ${outPaths.root} already carries this batch ($publishArgs)")
       else {
         java.nio.file.Files.createDirectories(inflightMarker.getParent)
         java.nio.file.Files.writeString(inflightMarker, "in-flight: " + publishArgs)
-        addBatchRewrite(spark, base, basePaths, outPaths, fresh, newStats, publishArgs)
+        addBatchRewrite(spark, basePaths, outPaths, fresh, newStats, publishArgs)
       }
 
       // persist stats + the layered snapshot: the merged table is openable
@@ -164,12 +165,11 @@ object Incremental {
   /** [[summarize]]'s fingerprint of a batch's corpus rows. */
   private[graft] def fingerprint(rows: DataFrame): String = summarize(rows)._3
 
-  /** The rewrite half of [[addBatch]] — the fresh docs' postings, docs
-    * and edges. Skipped entirely on a detected replay no-op.
+  /** The rewrite half of [[addBatch]] — the fresh docs' postings and
+    * docs. Skipped entirely on a detected replay no-op.
     */
   private def addBatchRewrite(
       spark: SparkSession,
-      base: PublishedRoot,
       basePaths: IndexPaths,
       outPaths: IndexPaths,
       fresh: DataFrame,
@@ -197,16 +197,6 @@ object Incremental {
       java.nio.file.Paths.get(outPaths.root).getFileName
     phase("docs-write")(IndexBuilder.docsRows(fresh, batchId)
       .write.mode("overwrite").parquet(outPaths.docsDir))
-
-    // Stored link graph, delta layer (v7): fresh docs' edges + re-derived
-    // edges for existing docs whose target module's canon set this batch
-    // changed ([[LinkIndex.deltaEdges]]) — readers resolve newest-wins per
-    // src_id. A batch that adds nothing writes a valid EMPTY layer
-    // (schema-pinned read).
-    phase("edges-write")(LinkIndex.writeEdges(spark, LinkIndex.deltaEdges(
-      LinkIndex.nodesOf(mergedDocs(spark, base.snapshot.layers)),
-      LinkIndex.nodesOf(spark.read.schema(IndexBuilder.DocsSchema).parquet(outPaths.docsDir))),
-      outPaths.edgesDir))
   }
 
   /** [[addBatch]] + automatic LSM housekeeping: when the resulting snapshot
@@ -239,9 +229,9 @@ object Incremental {
     * SAME phases as a from-scratch build
     * ([[IndexBuilder.buildPostingsPhases]], which regroups by
     * `(salt, term)`), so the compacted segments equal a from-scratch
-    * build's row for row. Writes the docs union and the edges, and
-    * publishes a single-layer snapshot (its readers rank the fast lists,
-    * as for any root). With
+    * build's row for row. Writes the docs union and publishes a
+    * single-layer snapshot (its readers rank the fast lists and derive the
+    * link graph from the docs, as for any root). With
     * `toRoot = None` the snapshot is published in place at `root`
     * (version+1, data under `root/compact-v<N>/`); old layer files become
     * unreferenced (kept on disk — time travel / concurrent readers,
@@ -259,19 +249,12 @@ object Incremental {
       case Some(r) => (IndexPaths(r), r, 1)
       case None => (IndexPaths(s"$root/compact-v${snap.version + 1}"), root, snap.version + 1)
     }
-    Seq(inner.segmentsDir, inner.docsDir, inner.manifestsDir, inner.edgesDir)
+    Seq(inner.segmentsDir, inner.docsDir, inner.manifestsDir)
       .foreach(d => IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d)))
 
     // docs union: per-layer docId sets are disjoint (J1), content_sha,
     // cust, and dl=0 lineage rows carry over unchanged.
     mergedDocs(spark, snap.layers).write.mode("overwrite").parquet(inner.docsDir)
-
-    // edges fold back to ONE exact layer, like everything else compaction
-    // touches (re-derived whole from the compacted sidecar — a metadata job)
-    LinkIndex.writeEdges(spark,
-      LinkIndex.edgesOf(LinkIndex.nodesOf(
-        spark.read.schema(IndexBuilder.DocsSchema).parquet(inner.docsDir))),
-      inner.edgesDir)
 
     // (doc_id, term, tf, dl) relation from every layer's sub-lists —
     // decode is distributed (one task per segments row group), then the

@@ -18,7 +18,7 @@ final case class IndexPaths(root: String) {
   val indexDir: String = s"$root/index"         // never written (the merged view is Incremental.readMergedIndex); perfbench still sizes it
   val docsDir: String = s"$root/docs"           // (doc_id, repo, path, commit, lang, dl, content_sha, batch_id, cust)
   val fastDir: String = s"$root/fast"           // never written (fast lists are ranked by IndexReader); perfbench still sizes it
-  val edgesDir: String = s"$root/edges"         // stored link graph (src_id, dst_id), layered newest-wins per src (v7)
+  val edgesDir: String = s"$root/edges"         // never written (the link graph is LinkIndex.readMergedEdges); perfbench still sizes it
   val manifestsDir: String = s"$root/manifests" // one JSON per salt partition (the checkpoint unit)
   val statsPath: String = s"$root/stats.json"
 }
@@ -27,7 +27,7 @@ final case class IndexPaths(root: String) {
   * reference crawl loop, and §7 Step 2/3.
   *
   * Stages:
-  *   corpus scan → docId assign → docs sidecar (stats and edges from it) →
+  *   corpus scan → docId assign → docs sidecar (stats from it) →
   *   tokenize/tf → per-(salt, term) posting build (Aggregator, one
   *   shuffle) → segment write + per-salt manifest → stats + snapshot
   *   publish.
@@ -35,7 +35,8 @@ final case class IndexPaths(root: String) {
   * per-term index is a view, not an artifact: [[Incremental.readMergedIndex]]
   * groups the sub-lists by term through the merge Aggregator. The fast
   * lists are not an artifact either: a reader ranks them from the segments
-  * and doc keys it pins ([[graft.engine.IndexReader.fastList]]).
+  * and doc keys it pins ([[graft.engine.IndexReader.fastList]]). Nor is the
+  * link graph: [[LinkIndex.readMergedEdges]] derives it from the docs.
   *
   * Salting (north rule): sub-postings are built per `(term, salt)` where
   * `salt = pmod(xxhash64(doc_id), numSalts)`, so a hot term's postings are
@@ -93,7 +94,13 @@ object IndexBuilder {
     * no build, add or compaction writes one. The version stays 9: no reader
     * reads `fast/`, so an older v9 root that still holds one serves exactly
     * as a new one, and a binary that still required `fast/_SUCCESS` sees a
-    * new root as incomplete and rebuilds it.
+    * new root as incomplete and rebuilds it. Later still, no root carries
+    * `edges/`: every docs layer already stores each doc's extracted link
+    * (`cust`), and the edge relation is derived from the merged docs at
+    * read time ([[LinkIndex.readMergedEdges]]). The same argument holds: no
+    * reader reads `edges/`, so an older v9 root that still holds one serves
+    * exactly as a new one, and a binary that still required
+    * `edges/_SUCCESS` sees a new root as incomplete and rebuilds it.
     */
   val FormatVersion: Int = 9
 
@@ -213,8 +220,7 @@ object IndexBuilder {
   }
 
   /** A build is complete iff stats exist at the current format version,
-    * every salt has its manifest, the stored edges are written, and a
-    * snapshot is published — the one
+    * every salt has its manifest, and a snapshot is published — the one
     * completeness watermark (ST5): complete and published mean the same
     * thing. Each build phase is individually `_SUCCESS`-guarded, so a root
     * failing only some checks (a crash between the stats write and the
@@ -224,7 +230,6 @@ object IndexBuilder {
   def isComplete(paths: IndexPaths, numSalts: Int = DefaultNumSalts): Boolean =
     readStats(paths).exists(s => s.version == FormatVersion && s.numSalts == numSalts) &&
       completedSalts(paths) == (0 until numSalts).toSet &&
-      Files.exists(Paths.get(s"${paths.edgesDir}/_SUCCESS")) &&
       Snapshots.read(paths.root).isDefined
 
   /** The ONE recursive-delete helper — Bench.deleteTree and the streaming
@@ -343,16 +348,6 @@ object IndexBuilder {
         avg(col("dl").cast("double")).as("avgdl"),
         sum("dl").as("total")).head())
     val stats = IndexStats(FormatVersion, statsRow.getLong(0), statsRow.getDouble(1), statsRow.getLong(2), numSalts, numBuckets)
-
-    // Stored link graph (v7): derive the edge relation from the sidecar's
-    // doc metadata — NOT from content (that read happened exactly once,
-    // above) — and persist it beside the index. Traversals serve from the
-    // store (the reference stores `links: [uid] @count @reverse` and
-    // traverses the stored relation, pkg/database/relationship/dgraph.go:45,
-    // 62-92); v6 re-derived edges from raw content on every traversal.
-    if (!Files.exists(Paths.get(s"${paths.edgesDir}/_SUCCESS"))) phase("edges") {
-      LinkIndex.writeEdges(spark, LinkIndex.edgesOf(LinkIndex.nodesOf(docsSidecar)), paths.edgesDir)
-    }
 
     // Salted segment build, resumable per salt — the tokenizer feeds the
     // salted groupBy directly, no intermediate persist.

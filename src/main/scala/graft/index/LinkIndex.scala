@@ -3,25 +3,20 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The STORED link graph (v7) — the engine analog of the reference's
-  * persisted edge relation: Dgraph stores `links: [uid] @count @reverse`
-  * (`/root/reference/pkg/database/relationship/dgraph.go:45`) and every
-  * traversal walks the stored relation (`dgraph.go:62-92`); it never
-  * re-parses page content to find links at query time. Accordingly:
+/** The link graph of an index root, as a view over its stored docs.
   *
-  *  - link EXTRACTION happens once at ingest — [[custCol]] runs inside the
+  *  - Link EXTRACTION happens once, at ingest: [[custCol]] runs inside the
   *    docs-sidecar write, the same pass that already reads every content
   *    byte for the sha256 invariant (the reference parses links out of the
-  *    page it just fetched, `pkg/crawl/crawl.go:148-166`);
-  *  - the edge relation `(src_id, dst_id)` is DERIVED from stored doc
-  *    metadata (never from content) and persisted beside the index
-  *    ([[IndexPaths.edgesDir]]); traversals ([[graft.ops.Graph.reachStored]])
-  *    scan the artifact — O(edge scan), not O(corpus tokenize);
-  *  - incremental adds maintain it LSM-style like postings: a delta layer
-  *    carries the edges of the fresh docs plus re-derived edges for
-  *    existing docs whose target module's canon set gained a fresh doc
-  *    ([[deltaEdges]]); readers resolve newest-wins per `src_id`
-  *    ([[readMergedEdges]]).
+  *    page it just fetched, `pkg/crawl/crawl.go:148-166`). Every docs layer
+  *    stores the extracted link as its `cust` column.
+  *  - RESOLUTION happens at read time. The reference resolves a link to a
+  *    node uid at upsert time (`pkg/database/relationship/dgraph.go:45`,
+  *    `:148-176`); here a link resolves to its target module's canonical
+  *    doc, which can change with every add, so [[readMergedEdges]] derives
+  *    the edge relation `(src_id, dst_id)` from the root's merged docs. It
+  *    reads stored doc metadata only, never content, and no build, add or
+  *    compaction writes an edge artifact.
   *
   * Link semantics (single definition — the content-derived path in
   * [[graft.ops.Graph]] delegates here, so the two can never drift): each
@@ -32,9 +27,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale: nodes/edges are doc-METADATA-sized relations (16 B per edge), so
   * every derivation here is a metadata job — group-min + two hash joins —
-  * independent of content volume. The delta path still scans every base
-  * node (the canon of base ∪ fresh reads them all); what it writes is
-  * O(|fresh| + |rewritten sources|) edges.
+  * independent of content volume.
   */
 object LinkIndex {
 
@@ -52,16 +45,6 @@ object LinkIndex {
     when(m =!= "", m.cast("int"))
   }
 
-  /** On-disk schema of an edges layer. Pinned explicitly on read: an empty
-    * delta layer (no fresh docs, no canon changes) has no files to infer
-    * from.
-    */
-  val EdgesSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("src_id", LongType), StructField("dst_id", LongType)))
-  }
-
   /** Node view of a docs-sidecar relation: `(doc_id, repo, path, cust)`
     * for link-bearing docs (null-cust docs are leaf nodes — they can be
     * edge TARGETS only via canon, which requires a cust, so they simply
@@ -72,7 +55,8 @@ object LinkIndex {
 
   /** Canonical provider per (repo, cust): the doc with the MIN path —
     * groupBy + join back (no window; the same funnel-avoidance shape as
-    * exact dedup). Returns `(repo, cust, canon_id, canon_path)`.
+    * exact dedup). Ties are kept: every doc at the min path is a provider.
+    * Returns `(repo, cust, canon_id, canon_path)`.
     */
   def canonOf(nodes: DataFrame): DataFrame = {
     val mins = nodes.groupBy("repo", "cust").agg(min("path").as("path"))
@@ -81,8 +65,8 @@ object LinkIndex {
   }
 
   /** The edge join against an EXPLICIT canon relation — the one definition
-    * of the link semantics ([[edgesOf]] and the delta maintenance both go
-    * through here).
+    * of the link semantics, for callers that derive the canon once and use
+    * it twice ([[graft.ops.Graph]]'s roots and edges).
     */
   def edgesFrom(nodes: DataFrame, canon: DataFrame): DataFrame =
     nodes.join(
@@ -96,54 +80,10 @@ object LinkIndex {
   /** The full edge relation of a node set. */
   def edgesOf(nodes: DataFrame): DataFrame = edgesFrom(nodes, canonOf(nodes))
 
-  /** The DELTA edge layer for an incremental add: the fresh docs' edges,
-    * plus the re-derived edges of every EXISTING doc whose target module's
-    * canon set changed, so newest-wins-per-src resolution serves the new
-    * targets. A batch only ADDS docs, so a canon set (the module's docs at
-    * its min path) changes iff a fresh doc joined it: by a smaller path (a
-    * steal), the same path (a tie) or a brand-new module. So no old canon
-    * is derived, and a tie the batch does not join is not rewritten.
-    *
-    * One canon derivation over base ∪ fresh — [[canonOf]]'s group-min and
-    * join back — also yields each module's changed flag: the group-min
-    * takes `min(struct(path, !fresh))`, whose second field is false iff a
-    * fresh doc sits at the min path. One join ([[edgesFrom]]'s) then keeps
-    * every fresh source and every base source whose target changed. The
-    * layers are doc-disjoint, so no source is counted twice.
-    */
-  def deltaEdges(baseNodes: DataFrame, freshNodes: DataFrame): DataFrame = {
-    val nodes = baseNodes.withColumn("fresh", lit(false))
-      .unionByName(freshNodes.withColumn("fresh", lit(true)))
-    val mins = nodes.groupBy("repo", "cust")
-      .agg(min(struct(col("path"), (!col("fresh")).as("base"))).as("m"))
-      .select(col("repo"), col("cust"), col("m.path").as("path"), (!col("m.base")).as("changed"))
-    val canon = mins.join(nodes, Seq("repo", "cust", "path"))
-      .select(col("repo"), linkingCust(col("cust")).as("cust"), col("doc_id").as("dst_id"), col("changed"))
-    nodes.join(canon, Seq("repo", "cust"))
-      .filter(col("fresh") || col("changed"))
-      .select(col("doc_id").as("src_id"), col("dst_id"))
-  }
-
-  /** Persist one edges layer (creates `_SUCCESS`; an empty relation writes
-    * a valid empty layer).
-    */
-  def writeEdges(spark: SparkSession, edges: DataFrame, dir: String): Unit =
-    edges.select(col("src_id").cast("long"), col("dst_id").cast("long"))
-      .write.mode("overwrite").parquet(dir)
-
-  /** One layer's stored edges (schema pinned — empty layers have no files
-    * to infer from).
-    */
-  def readLayerEdges(spark: SparkSession, edgesDir: String): DataFrame =
-    spark.read.schema(EdgesSchema).parquet(edgesDir)
-
-  /** The logical edge relation at the published `root`: newest layer wins
-    * per `src_id`, over each layer's [[IndexPaths.edgesDir]] (an add
-    * re-derives the edges of existing docs whose target it changed).
+  /** The edge relation at the published `root`: [[edgesOf]] over the nodes
+    * of its merged docs ([[Incremental.readMergedDocs]]), so every layer's
+    * docs resolve against the canon of the whole root.
     */
   def readMergedEdges(spark: SparkSession, root: String): DataFrame =
-    Snapshots.open(root).snapshot.layers
-      .map(l => readLayerEdges(spark, l.edgesDir))
-      .reduceRight((older, newer) =>
-        older.join(newer.select("src_id"), Seq("src_id"), "left_anti").unionByName(newer))
+    edgesOf(nodesOf(Incremental.readMergedDocs(spark, root)))
 }

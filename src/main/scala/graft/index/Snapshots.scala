@@ -9,8 +9,8 @@ import java.nio.file.{Files, Paths}
   * current-snapshot protocol Iceberg's HadoopCatalog uses.
   *
   * A snapshot is the ordered list of the table's LSM layers, oldest →
-  * newest, and each layer is a whole build root ([[IndexPaths]]: its index,
-  * segments, docs, fast and edges dirs and its stats). A full build is one
+  * newest, and each layer is a whole build root ([[IndexPaths]]: its
+  * segments, docs and manifests dirs and its stats). A full build is one
   * layer; an incremental add appends its delta root to its parent's layers,
   * so base files are referenced, never rewritten. Layers are doc-disjoint;
   * a term's postings are the union of its layers' lists, and the docs are

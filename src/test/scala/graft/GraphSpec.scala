@@ -80,6 +80,30 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException](Graph.reach(e, rootsDf(1L), Graph.MaxDepth + 1))
   }
 
+  test("a traversal whose hop fails rethrows and releases every persist") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // the edge filter passes in the first task stage that evaluates it (the
+    // first hop's job) and throws in every later one, so the first hop
+    // persists its level and the second hop's job fails; evaluations the
+    // optimizer makes on the driver pass
+    val failing = udf { (src: Long) =>
+      Option(org.apache.spark.TaskContext.get()).foreach { tc =>
+        GraphSpec.firstEdgeStage.compareAndSet(-1, tc.stageId())
+        if (tc.stageId() != GraphSpec.firstEdgeStage.get()) throw new IllegalStateException("injected hop failure")
+      }
+      src >= 0L
+    }
+    GraphSpec.firstEdgeStage.set(-1)
+    val edges = edgesDf(1L -> 2L, 2L -> 3L, 3L -> 4L).repartition(2).filter(failing(col("src_id")))
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    val e = intercept[Exception](Graph.reach(edges, rootsDf(1L), 3))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("injected hop failure")), s"not the injected failure: $e")
+    assert(sc.getPersistentRDDs.keySet === baseline,
+      s"a failed traversal left persisted RDDs: ${(sc.getPersistentRDDs.keySet -- baseline).toSeq}")
+  }
+
   test("corpus link graph: reachBfs emits both directions with sane shapes") {
     val corpus = graft.corpus.Corpus.corpus(spark, "/root/testdata/sf0.001")
     val out = Graph.reachBfs(spark, corpus, maxDepth = 2).collect()
@@ -140,4 +164,12 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       Bench.deleteTree(root)
     }
   }
+}
+
+object GraphSpec {
+
+  /** The first task stage that evaluated the failing edge filter:
+    * JVM-static, so local-mode tasks and the spec share it.
+    */
+  val firstEdgeStage = new java.util.concurrent.atomic.AtomicInteger(-1)
 }

@@ -117,8 +117,9 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // 3a. merged view == the from-scratch full build's view, decoded and
     // byte for byte; the view is computed, so no layer root holds index/.
-    // Fast lists are ranked by the reader, so no build, add or compaction
-    // root holds fast/ either
+    // Fast lists are ranked by the reader and the link graph is a view over
+    // the docs, so no build, add or compaction root holds fast/ or edges/
+    // either
     val fullPaths = IndexPaths(s"$root/full")
     IndexBuilder.build(spark, corpusOf((base ++ add).distinct), fullPaths, buildArgs = "delta-spec-full")
     val mergedView = Incremental.readMergedIndex(spark, outPaths.root)
@@ -133,6 +134,7 @@ class IncrementalDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(basePaths, outPaths, fullPaths, compacted).foreach { p =>
       assert(!Files.exists(Paths.get(p.indexDir)), s"${p.root} holds an index/ dir")
       assert(!Files.exists(Paths.get(p.fastDir)), s"${p.root} holds a fast/ dir")
+      assert(!Files.exists(Paths.get(p.edgesDir)), s"${p.root} holds an edges/ dir")
     }
 
     // 3b. stats count token-bearing docs only (2 base + 1 fresh; dead docs
@@ -250,7 +252,7 @@ class ReplayNoOpSpec extends org.scalatest.funsuite.AnyFunSuite
   }
 
   private def artifactShas(paths: IndexPaths): Map[String, String] =
-    Seq(paths.segmentsDir, paths.docsDir, paths.edgesDir)
+    Seq(paths.segmentsDir, paths.docsDir)
       .flatMap { d =>
         Files.walk(Paths.get(d)).iterator().asScala
           .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))

@@ -150,9 +150,9 @@ class IndexResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(IndexBuilder.isComplete(p))
     assert(IndexBuilder.readStats(p).get.version == IndexBuilder.FormatVersion)
     assert(indexContent(p) == single, "format-wiped rebuild differs from clean build")
-    // the rebuilt root must be real, not an empty re-stamp: edges non-empty
-    // and its reader's fast lists carrying doc keys
-    assert(spark.read.parquet(p.edgesDir).count() > 0)
+    // the rebuilt root must be real, not an empty re-stamp: its edge view
+    // non-empty and its reader's fast lists carrying doc keys
+    assert(graft.index.LinkIndex.readMergedEdges(spark, p.root).count() > 0)
     val fast = IndexReader.get(spark, p).fastList("func")
     assert(fast.exists(f => f.ids.nonEmpty && Seq(f.repos, f.paths, f.commits).forall(a =>
       a.length == f.ids.length && a.forall(k => k != null && k.nonEmpty))),

@@ -6,18 +6,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Stored link-graph invariants (v7 — the reference stores `links: [uid]
-  * @count @reverse` and traverses the store, dgraph.go:45/62-92):
+/** Link-graph invariants: the edge relation of a root is a view over its
+  * stored docs ([[LinkIndex.readMergedEdges]]), never a stored artifact.
   *
-  *  1. a full build persists `edges/` derived from the docs sidecar;
-  *  2. an addBatch's DELTA layer carries exactly the fresh docs' edges plus
-  *     the edges of the sources whose target module's canon set gained a
-  *     fresh doc — sources whose target canon is untouched, a tie included,
-  *     are NOT rewritten (also as a seeded property over 3 repos);
-  *  3. the newest-wins merged relation equals a from-scratch derivation
-  *     over the merged docs;
-  *  4. a replayed batch writes a valid EMPTY delta layer;
-  *  5. compaction folds edges back to one exact layer.
+  *  1. no build, add or compaction writes `edges/`;
+  *  2. on a layered root, a fresh doc that takes a module's canon (by a
+  *     smaller path, or as a brand-new module) retargets the base docs
+  *     that link to it;
+  *  3. compaction keeps the relation;
+  *  4. a seeded property pins the view to a brute force computed here, on
+  *     base, layered (a later batch ties an earlier layer's canon path),
+  *     replayed and compacted roots.
   */
 class LinkIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -68,51 +67,30 @@ class LinkIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => docs(r.getLong(0)) -> docs(r.getLong(1))).toSet
   }
 
-  test("full build persists the edge relation beside the index") {
+  /** No layer of the root at `root` holds an `edges/` dir. */
+  private def assertNoEdgesDir(root: String): Unit =
+    Snapshots.read(root).get.layers.foreach { l =>
+      assert(!Files.exists(Paths.get(l.edgesDir)), s"${l.root} holds an edges/ dir")
+    }
+
+  test("a full build writes no edges/; its edge view derives the links from the docs") {
     IndexBuilder.build(spark, corpusOf(base), basePaths, buildArgs = "link-spec-base")
-    assert(Files.exists(Paths.get(s"${basePaths.edgesDir}/_SUCCESS")))
+    assertNoEdgesDir(basePaths.root)
     val got = pathEdges(LinkIndex.readMergedEdges(spark, basePaths.root), basePaths.root)
     assert(got === Set(
       "m0/b.go" -> "m1/b.go",   // cust_0 -> canon(cust_1)
       "m1/b.go" -> "m2/a.go"))  // cust_1 -> canon(cust_2); m2 has no target yet
   }
 
-  test("delta layer: fresh edges + canon-change rewrites ONLY") {
+  test("layered edge view: a canon steal and a new module retarget base sources") {
     Incremental.addBatch(spark, basePaths, corpusOf(add), outPaths)
-    val docs = Incremental.readMergedDocs(spark, outPaths.root)
-      .select("doc_id", "path").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val delta = LinkIndex.readLayerEdges(spark, outPaths.edgesDir)
-      .collect().map(r => docs(r.getLong(0)) -> docs(r.getLong(1))).toSet
-    assert(delta === Set(
-      "m1/a.go" -> "m2/a.go",   // fresh doc's own edge
-      "m0/b.go" -> "m1/a.go",   // rewrite: module-1 canon changed
-      "m2/a.go" -> "m3/a.go"),  // rewrite: module 3 is brand new
-      "delta layer must hold exactly fresh edges + canon-change rewrites")
-    assert(!delta.exists(_._1 == "m1/b.go"),
-      "m1/b.go's target canon is untouched — it must NOT be rewritten")
-  }
-
-  test("newest-wins merged relation == from-scratch derivation over merged docs") {
+    assertNoEdgesDir(outPaths.root)
     val merged = pathEdges(LinkIndex.readMergedEdges(spark, outPaths.root), outPaths.root)
     assert(merged === Set(
-      "m0/b.go" -> "m1/a.go",   // delta wins over the base row
-      "m1/b.go" -> "m2/a.go",   // base row survives untouched
-      "m1/a.go" -> "m2/a.go",
-      "m2/a.go" -> "m3/a.go"))
-    val scratch = pathEdges(
-      LinkIndex.edgesOf(LinkIndex.nodesOf(Incremental.readMergedDocs(spark, outPaths.root))),
-      outPaths.root)
-    assert(merged === scratch, "stored newest-wins drifted from the from-scratch derivation")
-  }
-
-  test("replayed batch writes a valid empty delta layer") {
-    val replay = IndexPaths(s"$root/replay")
-    Incremental.addBatch(spark, outPaths, corpusOf(add), replay)
-    assert(Files.exists(Paths.get(s"${replay.edgesDir}/_SUCCESS")))
-    assert(LinkIndex.readLayerEdges(spark, replay.edgesDir).count() === 0L)
-    val merged = pathEdges(LinkIndex.readMergedEdges(spark, replay.root), replay.root)
-    assert(merged.size === 4, s"replay changed the merged relation: $merged")
+      "m0/b.go" -> "m1/a.go",   // module-1 canon stolen by the fresh m1/a.go
+      "m1/b.go" -> "m2/a.go",   // target canon untouched
+      "m1/a.go" -> "m2/a.go",   // the fresh doc's own edge
+      "m2/a.go" -> "m3/a.go"))  // module 3 is brand new
   }
 
   /** A node's natural key, so ties (one path, two commits) stay apart. */
@@ -125,46 +103,10 @@ class LinkIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.select("src_id", "dst_id").collect().map(r => keys(r.getLong(0)) -> keys(r.getLong(1))).toSet
   }
 
-  /** The delta layer of `out`, and checks that its newest-wins merged
-    * relation equals the from-scratch `edgesOf` over the merged docs.
-    */
-  private def deltaOf(out: IndexPaths): Set[(Key, Key)] = {
-    val merged = keyed(LinkIndex.readMergedEdges(spark, out.root), out.root)
-    val scratch = keyed(LinkIndex.edgesOf(LinkIndex.nodesOf(Incremental.readMergedDocs(spark, out.root))), out.root)
-    assert(merged === scratch, s"${out.root}: stored newest-wins drifted from the from-scratch derivation")
-    keyed(LinkIndex.readLayerEdges(spark, out.edgesDir), out.root)
-  }
-
   private def row(repo: String, path: String, commit: String, content: String) =
     (repo, path, commit, "go", content)
 
-  test("a canon tie is rewritten only when the batch joins it") {
-    // module 5's canon set is a tie: two commits of m5/a.go; m4/a.go links
-    // to both. The first batch only touches module 7.
-    val tie = Seq(row("repo-t", "m5/a.go", "c1", "five cust_5"), row("repo-t", "m5/a.go", "c2", "five cust_5"))
-    val src = ("repo-t", "m4/a.go", "c1")
-    val base = tie ++ Seq(row("repo-t", "m4/a.go", "c1", "four cust_4"), row("repo-t", "m6/a.go", "c1", "six cust_6"))
-    val tieBase = IndexPaths(s"$root/tie-base")
-    IndexBuilder.build(spark, corpusOf(base), tieBase, buildArgs = "link-spec-tie")
-    val untouched = IndexPaths(s"$root/tie-untouched")
-    Incremental.addBatch(spark, tieBase, corpusOf(base :+ row("repo-t", "m7/a.go", "c1", "seven cust_7")), untouched)
-    val d1 = deltaOf(untouched)
-    assert(d1 === Set(("repo-t", "m6/a.go", "c1") -> (("repo-t", "m7/a.go", "c1"))),
-      "only module 6 links to the new module 7; the untouched tie's sources must not be rewritten")
-    assert(!d1.exists(_._1 == src))
-
-    // a third commit at the tie path joins the canon set: m4/a.go is
-    // rewritten to all three
-    val joined = IndexPaths(s"$root/tie-joined")
-    Incremental.addBatch(spark, tieBase, corpusOf(base :+ row("repo-t", "m5/a.go", "c3", "five cust_5")), joined)
-    val d2 = deltaOf(joined)
-    assert(d2.filter(_._1 == src).map(_._2) ===
-      Set("c1", "c2", "c3").map(c => ("repo-t", "m5/a.go", c)))
-    assert(d2.filter(_._1 == (("repo-t", "m5/a.go", "c3"))).map(_._2) === Set(("repo-t", "m6/a.go", "c1")))
-    assert(d2.size === 4)
-  }
-
-  test("seeded property: the delta is the fresh edges plus the sources of changed canon sets") {
+  test("seeded property: the edge view equals a brute force on base, chained, replayed and compacted roots") {
     val M = LinkIndex.CustModulus
     val repos = Seq("repo-a", "repo-b", "repo-c")
     for (seed <- Seq(7, 8)) {
@@ -183,42 +125,69 @@ class LinkIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       def canonPath(r: String, c: Int): Option[String] =
         base.filter(d => d._1 == r && d._5.endsWith(s"cust_$c")).map(_._2).minOption
-      // the batch: per repo a canon steal, a brand-new module, a tie with
-      // the incumbent canon and a doc that does not reach the canon, plus
-      // a slice of the base again (J1-filtered)
-      val batch = repos.flatMap { r =>
+      // the first batch: per repo a canon steal, a brand-new module, a tie
+      // with the incumbent canon and a doc that does not reach the canon,
+      // plus a slice of the base again (J1-filtered)
+      val steals = repos.map { r =>
         val present = (0 until M).filter(c => canonPath(r, c).isDefined)
         val absent = (0 until M).filterNot(present.contains)
         val Seq(steal, tie, late) = rnd.shuffle(present).take(3)
         val stealK = canonPath(r, steal).get.stripPrefix(f"m$steal%02d/p").stripSuffix(".go").toInt - 1
-        Seq(row(r, f"m$steal%02d/p$stealK.go", "c1", s"steal cust_$steal"),
+        val stealPath = f"m$steal%02d/p$stealK.go"
+        (r, steal, stealPath, Seq(row(r, stealPath, "c1", s"steal cust_$steal"),
           row(r, canonPath(r, tie).get, "c9", s"tie cust_$tie"),
           row(r, f"m$late%02d/z.go", "c1", s"late cust_$late")) ++
-          absent.headOption.map(c => row(r, f"m$c%02d/p5.go", "c1", s"new cust_$c"))
-      } ++ rnd.shuffle(base).take(base.size / 3)
+          absent.headOption.map(c => row(r, f"m$c%02d/p5.go", "c1", s"new cust_$c")))
+      }
+      val batch1 = (steals.flatMap(_._4) ++ rnd.shuffle(base).take(base.size / 3)).distinct
+      // the second batch ties the canon path the first batch stole, so a
+      // module's canon set spans two layers, adds a source that links to
+      // it, and repeats a slice of batch 1
+      val batch2 = (steals.flatMap { case (r, steal, stealPath, _) =>
+        val from = (steal + M - 1) % M
+        Seq(row(r, stealPath, "c8", s"tie2 cust_$steal"), row(r, f"m$from%02d/q.go", "c1", s"src cust_$from"))
+      } ++ rnd.shuffle(batch1).take(batch1.size / 2)).distinct
 
       val b = IndexPaths(s"$root/prop-$seed/base")
-      val o = IndexPaths(s"$root/prop-$seed/out")
+      val l1 = IndexPaths(s"$root/prop-$seed/l1")
+      val l2 = IndexPaths(s"$root/prop-$seed/l2")
+      val replay = IndexPaths(s"$root/prop-$seed/replay")
+      val compacted = s"$root/prop-$seed/compacted"
       IndexBuilder.build(spark, corpusOf(base), b, buildArgs = s"link-spec-prop-$seed")
-      Incremental.addBatch(spark, b, corpusOf(batch.distinct), o)
+      Incremental.addBatch(spark, b, corpusOf(batch1), l1)
+      Incremental.addBatch(spark, l1, corpusOf(batch2), l2)
+      Incremental.addBatch(spark, l2, corpusOf(batch2), replay)
+      Incremental.compact(spark, replay.root, Some(compacted))
+      assert(Snapshots.read(l2.root).get.layers.size === 3)
+      assert(Snapshots.read(replay.root).get.layers.size === 4)
 
-      // the expectation, derived here: nodes as (key, repo, cust, path)
-      def nodes(rows: Seq[(String, String, String, String, String)]) = rows.flatMap { d =>
-        "cust_([0-9]+)".r.findFirstMatchIn(d._5).map(m => ((d._1, d._2, d._3), d._1, m.group(1).toInt, d._2))
+      // the expectation, derived here without LinkIndex: nodes as (key,
+      // repo, cust, path), each link resolved to every doc at the min path
+      // of the next module in its repo
+      def expected(rows: Seq[(String, String, String, String, String)]): Set[(Key, Key)] = {
+        val nodes = rows.groupBy(d => (d._1, d._2, d._3)).values.map(_.head).toSeq.flatMap { d =>
+          "cust_([0-9]+)".r.findFirstMatchIn(d._5).map(m => ((d._1, d._2, d._3), d._1, m.group(1).toInt, d._2))
+        }
+        val canon = nodes.groupBy(n => (n._2, n._3)).map { case (g, ns) =>
+          val p = ns.map(_._4).min
+          g -> ns.filter(_._4 == p).map(_._1).toSet
+        }
+        nodes.flatMap(n => canon.getOrElse((n._2, (n._3 + 1) % M), Set.empty[Key]).map(n._1 -> _)).toSet
       }
-      val baseNodes = nodes(base)
-      val freshNodes = nodes(batch.distinct).filterNot(n => baseNodes.exists(_._1 == n._1))
-      val all = baseNodes ++ freshNodes
-      val canon = all.groupBy(n => (n._2, n._3)).map { case (g, ns) =>
-        val p = ns.map(_._4).min
-        g -> ns.filter(_._4 == p).map(_._1).toSet
+      val all = base ++ batch1 ++ batch2
+      val full = expected(all)
+      // fixture: in every repo the stolen canon is a tie across layers 1
+      // and 2, and some source links to both of its docs
+      steals.foreach { case (r, steal, stealPath, _) =>
+        val targets = full.filter(e => e._2._1 == r && e._2._2 == stealPath).map(_._2)
+        assert(targets === Set((r, stealPath, "c1"), (r, stealPath, "c8")),
+          s"seed $seed: module $steal of $r is not a linked cross-layer tie: $targets")
       }
-      val freshKeys = freshNodes.map(_._1).toSet
-      val changed = canon.filter(_._2.exists(freshKeys)).keySet
-      assert(changed.size >= 3 * repos.size, s"fixture: too few changed canon sets $changed")
-      val sources = freshNodes ++ baseNodes.filter(n => changed((n._2, (n._3 + 1) % M)))
-      val expected = sources.flatMap(n => canon.getOrElse((n._2, (n._3 + 1) % M), Set.empty[Key]).map(n._1 -> _)).toSet
-      assert(deltaOf(o) === expected, s"seed $seed")
+      Seq(b.root -> expected(base), l1.root -> expected(base ++ batch1), l2.root -> full,
+        replay.root -> full, compacted -> full).foreach { case (r, want) =>
+        assertNoEdgesDir(r)
+        assert(keyed(LinkIndex.readMergedEdges(spark, r), r) === want, s"seed $seed: $r")
+      }
     }
   }
 

@@ -318,18 +318,39 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     Bench.deleteTree(root)
   }
 
-  test("stored graph traversal scans the edges artifact, never the corpus source") {
+  test("stored graph traversal scans only the layers' docs, never edges/ or the corpus source") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     val (paths, _) = graft.index.IndexBuilder.ensure(spark, sfDir)
-    val e = graft.index.LinkIndex.readMergedEdges(spark, paths.root)
-    val pe = plan(e)
-    assert(pe.contains("/edges"), s"edges read does not scan the stored artifact:\n$pe")
-    assert(!pe.contains("lineitem"), "stored edges must not derive from the corpus source")
-    // the traversal itself must never touch the synthesis source: nodes come
-    // from the docs sidecar, edges from the stored relation (the v6 shape
-    // re-tokenized the corpus per invocation)
-    val out = graft.ops.Graph.reachStored(spark, paths.root)
-    val po = plan(out)
-    assert(!po.contains("lineitem"), s"stored traversal re-derives from the corpus source:\n$po")
+    // every file scan of every query the traversal runs, the cached
+    // relations' own plans included (the nodes are read once, into a cache)
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scans(p: SparkPlan): Seq[String] = helper.collect(p) {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toUri.getPath.stripSuffix("/"))
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+    }.flatten
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        scans(qe.executedPlan).foreach(scanned.add)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try {
+      val o = graft.ops.Graph.reachStored(spark, paths.root)
+      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+      o
+    } finally spark.listenerManager.unregister(listener)
+    def dir(d: String) = java.nio.file.Paths.get(d).toAbsolutePath.normalize.toString
+    val docsDirs = graft.index.Snapshots.read(paths.root).get.layers.map(l => dir(l.docsDir)).toSet
+    val seen = scanned.asScala.toSet
+    assert(!seen.exists(_.contains("lineitem")), s"stored traversal re-derives from the corpus source: $seen")
+    assert(!seen.exists(_.endsWith("/edges")), s"stored traversal reads an edges/ dir: $seen")
+    assert(seen === docsDirs, s"stored traversal scans $seen, not the layers' docs $docsDirs")
     assert(out.count() > 0, "stored traversal returned no rows")
+    graft.ops.Graph.release(out)
   }
 }
